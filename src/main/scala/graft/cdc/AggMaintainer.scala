@@ -1,6 +1,5 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,12 +12,10 @@ import org.apache.spark.sql.functions._
   * groupCols` continuously up to date for O(|batch| + touched groups)
   * per micro-batch:
   *
-  *  1. read the LIVE pre-fold snapshot rows of the batch's keys (only
-  *     their pk-hash buckets are listed — [[SnapshotMaintainer]]'s
-  *     layout);
-  *  2. fold the batch into the snapshot (delegated);
-  *  3. read the same keys' post-fold rows;
-  *  4. the per-group DELTA (post minus pre, counts and decimal sums) is
+  *  1. fold the batch into the snapshot, reading its keys' LIVE rows
+  *     before and after ([[SnapshotMaintainer.foldWithLiveRows]]: only
+  *     their pk buckets are listed);
+  *  2. the per-group DELTA (post minus pre, counts and decimal sums) is
   *     applied to the aggregate store — itself hash-bucketed by group,
   *     so only the buckets of touched groups are read and swapped.
   *
@@ -76,56 +73,11 @@ object AggMaintainer {
                       actionCol: String = "action",
                       snapshotBuckets: Int = SnapshotMaintainer.DefaultBuckets,
                       aggBuckets: Int = DefaultBuckets): Unit = {
-    // keys persists LAZILY (its lineage — the batch frame — is stable
-    // for the whole trigger, so an evicted block recomputes correctly);
-    // the ONE touched-bucket collect below materializes it and serves
-    // the pre read, the snapshot fold, and the post read (previously
-    // three identical per-fold driver actions — guide §5, the fold path
-    // is barrier-latency-bound at micro-batch sizes)
-    val keys = batch.select(pk.map(col): _*).distinct().persist()
-    try {
-      val empty = batch.limit(0) // full projected schema for the no-snapshot case
-      val touchedPk = keys
-        .select(pmod(hash(pk.map(col): _*), lit(snapshotBuckets)).as("__b"))
-        .distinct().collect().map(_.getInt(0)).sorted.toSeq
-      val pre = liveRowsForKeys(spark, warehouseDir, table, keys, empty, pk,
-          actionCol, snapshotBuckets, touchedPk)
-        .localCheckpoint(true) // MUST materialize before the fold overwrites it
-      SnapshotMaintainer.updateTouched(spark, warehouseDir, table, batch, pk,
-        touchedPk, versionCol, actionCol, snapshotBuckets)
-      // post stays LAZY: its lineage reads the post-fold snapshot
-      // buckets, which nothing rewrites again this trigger, so the
-      // delta computation materializes it inside its own action instead
-      // of paying a separate eager-checkpoint barrier (persist makes it
-      // compute-once across multiple specs)
-      val post = liveRowsForKeys(spark, warehouseDir, table, keys, empty, pk,
-          actionCol, snapshotBuckets, touchedPk)
-        .persist()
-      try specs.foreach { spec =>
-        applyDelta(spark, warehouseDir, table, spec, pre, post, aggBuckets)
-      } finally post.unpersist(false)
-    } finally keys.unpersist(false)
-  }
-
-  /** The LIVE (non-tombstone) snapshot rows of exactly `keys`, touching
-    * only the pk-hash buckets those keys occupy (`touchedPk`, collected
-    * once by the caller). Empty frame with the batch's schema when the
-    * snapshot doesn't exist yet. */
-  private def liveRowsForKeys(spark: SparkSession, warehouseDir: String,
-                              table: String, keys: DataFrame, empty: DataFrame,
-                              pk: Seq[String], actionCol: String,
-                              snapshotBuckets: Int,
-                              touchedPk: Seq[Int]): DataFrame = {
-    val dir = SnapshotMaintainer.snapshotDir(warehouseDir, table)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return empty
-    val dirs = touchedPk.map(b => s"$dir/__bucket=$b")
-      .filter(p => fs.exists(new Path(p)))
-    if (dirs.isEmpty) return empty
-    spark.read.option("basePath", dir).parquet(dirs.toIndexedSeq: _*)
-      .filter(col(actionCol) =!= Versioned.DeleteAction)
-      .join(keys, pk, "left_semi")
+    val live = SnapshotMaintainer.foldWithLiveRows(spark, warehouseDir, table,
+      batch, pk, versionCol, actionCol, snapshotBuckets)
+    try specs.foreach { spec =>
+      applyDelta(spark, warehouseDir, table, spec, live.pre, live.post, aggBuckets)
+    } finally live.release()
   }
 
   private def applyDelta(spark: SparkSession, warehouseDir: String,
@@ -144,18 +96,17 @@ object AggMaintainer {
       spec.sumCols.map(c => col(s"sum_$c").as(s"__pre_$c")): _*)
     val deltaCond = gcols.map(c => col(c) <=> col(s"__g_$c"))
       .reduce(_ && _)
-    val delta = postG.join(preR, deltaCond, "full_outer")
+    val diff = postG.join(preR, deltaCond, "full_outer")
       .select((gcols.map(c => coalesce(col(c), col(s"__g_$c")).as(c)) :+
         (coalesce(col("n_rows"), lit(0L)) - coalesce(col("__n_pre"), lit(0L)))
           .as("n_rows")) ++
         spec.sumCols.map(c =>
           dec(coalesce(col(s"sum_$c"), lit(0)) - coalesce(col(s"__pre_$c"), lit(0)))
             .as(s"sum_$c")): _*)
-      .withColumn(BucketCol, pmod(hash(gcols.map(col): _*), lit(aggBuckets)))
-      // persist, not eager checkpoint: the touched collect right below
-      // materializes it, and its lineage (pre checkpointed, post over
-      // the stable post-fold snapshot) recomputes correctly if evicted
-      .persist()
+    // persist, not eager checkpoint: the touched collect right below
+    // materializes it, and its lineage (pre checkpointed, post over
+    // the stable post-fold snapshot) recomputes correctly if evicted
+    val delta = BucketStore.bucketed(diff, gcols, aggBuckets, BucketCol).persist()
 
     val dir = aggDir(warehouseDir, table, spec.name)
     try {
@@ -205,9 +156,9 @@ object AggMaintainer {
   def rebuild(spark: SparkSession, warehouseDir: String, table: String,
               spec: AggSpec, actionCol: String = "action",
               aggBuckets: Int = DefaultBuckets): Unit = {
-    val full = grouped(
-        SnapshotMaintainer.read(spark, warehouseDir, table, actionCol), spec)
-      .withColumn(BucketCol, pmod(hash(effCols(spec).map(col): _*), lit(aggBuckets)))
+    val full = BucketStore.bucketed(grouped(
+        SnapshotMaintainer.read(spark, warehouseDir, table, actionCol), spec),
+      effCols(spec), aggBuckets, BucketCol)
     full.write.mode("overwrite").partitionBy(BucketCol)
       .parquet(aggDir(warehouseDir, table, spec.name))
   }

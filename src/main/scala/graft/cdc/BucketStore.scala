@@ -2,11 +2,12 @@ package graft.cdc
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
 /** The shared bucket-partitioned store protocol behind every
   * incrementally-maintained table ([[SnapshotMaintainer]],
-  * [[Scd2Maintainer]], [[graft.streaming.DedupStream]]): a store laid
+  * [[Scd2Maintainer]], [[AggMaintainer]], [[JoinMaintainer]],
+  * [[graft.streaming.DedupStream]]): a store laid
   * out as `<dir>/__bucket=<n>/`, where a fold reads ONLY the buckets a
   * batch touches, re-derives their contents, stages the result, and
   * swaps each touched bucket individually — untouched buckets' files
@@ -20,6 +21,15 @@ import org.apache.spark.sql.functions.col
 object BucketStore {
 
   val BucketCol = "__bucket"
+
+  /** `df` with `bucketCol = pmod(hash(cols), n)` — THE bucket function of
+    * every store laid out here (the snapshot and SCD2 pk buckets, the
+    * join-key buckets, the aggregate group buckets). Bucket ids are a
+    * storage format: a touched set computed any other way would stage
+    * rows into buckets the swap never publishes. */
+  def bucketed(df: DataFrame, cols: Seq[String], n: Int,
+               bucketCol: String = BucketCol): DataFrame =
+    df.withColumn(bucketCol, pmod(hash(cols.map(col): _*), lit(n)))
 
   /** The distinct bucket ids a keyed batch touches — ≤ the bucket
     * count by construction, so the collect is driver-bounded. `keyed`
@@ -102,17 +112,32 @@ object BucketStore {
           require(fs.rename(dst, aside), s"bucket rename-aside failed: $dst")
         require(fs.rename(src, dst), s"bucket swap failed: $dst")
         fs.delete(aside, true)
-      } else if (deleteMissingTouched && fs.exists(dst)) {
-        // a touched bucket the fold emitted NO rows for (every group
-        // went to zero / the join went empty) is deleted — through the
-        // same aside so a crash mid-delete stays recoverable; a replay
-        // re-derives the empty fold and deletes again (idempotent)
-        if (fs.exists(aside)) fs.delete(aside, true)
-        require(fs.rename(dst, aside), s"bucket rename-aside failed: $dst")
-        fs.delete(aside, true)
-      }
+      } else if (deleteMissingTouched) deleteBucket(fs, dir, b, bucketCol)
     }
     fs.delete(tmp, true)
+  }
+
+  /** Delete the `touched` buckets: the swap of a fold that emitted no
+    * rows for any of them. */
+  def deleteTouched(spark: SparkSession, dir: String, touched: Seq[Int],
+                    bucketCol: String = BucketCol): Unit = {
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    touched.foreach(b => deleteBucket(fs, dir, b, bucketCol))
+  }
+
+  /** A touched bucket the fold emitted NO rows for (every group went to
+    * zero / the join went empty) is deleted — through the same aside so
+    * a crash mid-delete stays recoverable; a replay re-derives the empty
+    * fold and deletes again (idempotent). */
+  private def deleteBucket(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                           b: Int, bucketCol: String): Unit = {
+    val dst = new Path(dir, s"$bucketCol=$b")
+    val aside = asidePath(dir, b)
+    if (fs.exists(dst)) {
+      if (fs.exists(aside)) fs.delete(aside, true)
+      require(fs.rename(dst, aside), s"bucket rename-aside failed: $dst")
+      fs.delete(aside, true)
+    }
   }
 
   /** Crash-safe single-directory replace for non-bucketed stores (the

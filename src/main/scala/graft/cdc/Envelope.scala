@@ -44,6 +44,16 @@ object Envelope {
         col("_env.payload").as("payload"),
         col("value").as("_raw"))
 
+  /** Event-time date partition column name for versioned tables. */
+  val DtCol = "_dt"
+
+  /** The schema [[project]] emits for `spec` (without [[DtCol]]): the
+    * declared payload fields, then `action` and `update_date`. */
+  def projectedSchema(spec: TableSpec): StructType =
+    StructType(spec.payloadSchema.fields.toSeq :+
+      StructField("action", StringType) :+
+      StructField("update_date", spec.updateDateType))
+
   /** Registry-driven projection of parsed envelopes to one table's rows:
     * payload fields with declared types + the two synthetic columns
     * (`action`, `update_date` — reference `dataflow-cdc-stream.py:66-67`).
@@ -51,9 +61,6 @@ object Envelope {
     * (the reference registry declares STRING for one table and TIMESTAMP
     * for another — `data-stream.json:17,31`).
     */
-  /** Event-time date partition column name for versioned tables. */
-  val DtCol = "_dt"
-
   def project(parsed: DataFrame, spec: TableSpec, withDatePartition: Boolean = false): DataFrame = {
     val updateDate: Column = spec.updateDateType match {
       case TimestampType => col("source_timestamp").cast(TimestampType)

@@ -1,6 +1,5 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * up to date for O(|batch| + touched-jk buckets) per micro-batch.
   *
   * Layout: each side keeps a LIVE-ROW STORE hash-bucketed by the JOIN
-  * key (`__jbucket = pmod(hash(jk), buckets)`), and the view itself is
+  * key (`__jbucket`, [[BucketStore.bucketed]] over jk), and the view is
   * bucketed the same way. Because both side stores and the view share
   * one bucketing, a view bucket is exactly the join of the two
   * same-numbered side buckets — the maintenance join is BUCKET-LOCAL
@@ -20,18 +19,16 @@ import org.apache.spark.sql.functions._
   * same argument as `core.Bucketing`, applied to view maintenance).
   *
   * Per micro-batch and side:
-  *  1. read the PRE-fold live rows of the batch's pks from the side's
-  *     main pk-bucketed snapshot (bounded — only their pk buckets are
-  *     listed): these carry the OLD join-key values, which is what
-  *     makes a jk-changing UPDATE leave no stale row behind;
-  *  2. fold the batch into the main snapshot (delegated to
-  *     [[SnapshotMaintainer.update]] — the maintainer composes with,
-  *     never replaces, the snapshot discipline);
-  *  3. read the POST-fold rows of the same pks (new jk values);
-  *  4. touched jk buckets = hash(old ∪ new jk); rebuild each touched
+  *  1. fold the batch into the side's main pk-bucketed snapshot,
+  *     reading the batch pks' live rows before and after
+  *     ([[SnapshotMaintainer.foldWithLiveRows]] — the maintainer
+  *     composes with, never replaces, the snapshot discipline): the
+  *     PRE-fold rows carry the OLD join-key values, which is what makes
+  *     a jk-changing UPDATE leave no stale row behind;
+  *  2. touched jk buckets = hash(old ∪ new jk); rebuild each touched
   *     side-store bucket as (current rows minus the batch's pks) ∪ the
   *     batch pks' post-fold live rows;
-  *  5. re-join the touched bucket pairs and swap the view buckets
+  *  3. re-join the touched bucket pairs and swap the view buckets
   *     (staged `_tmp` + per-bucket rename; a bucket whose join went
   *     empty is deleted, not left stale).
   *
@@ -66,41 +63,20 @@ object JoinMaintainer {
                       snapshotBuckets: Int = SnapshotMaintainer.DefaultBuckets,
                       joinBuckets: Int = DefaultBuckets): Unit = {
     require(joinBuckets > 0)
-    val fs = new Path(warehouseDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    def jkBucketed(df: DataFrame) =
+      BucketStore.bucketed(df, Seq(jk), joinBuckets, BucketCol)
 
-    // fold each side and collect (postRowsOfBatchPks, batchPkFrame,
-    // touched jk bucket ids); persisted frames are released by the
-    // caller after the side-store rebuilds consumed them
-    def foldSide(s: Side): (Option[(DataFrame, DataFrame)], Array[Int]) =
-      s.batch match {
-        case None => (None, Array.empty[Int])
-        case Some(batch) =>
-          // keys persists LAZILY (lineage = the stable batch frame);
-          // the ONE touched-pk-bucket collect materializes it and
-          // serves the pre read, the snapshot fold, and the post read
-          // (previously three identical per-fold driver actions)
-          val keys = batch.select(s.pk.map(col): _*).distinct().persist()
-          val empty = batch.limit(0)
-          val touchedPk = keys
-            .select(pmod(hash(s.pk.map(col): _*), lit(snapshotBuckets)).as("__b"))
-            .distinct().collect().map(_.getInt(0)).sorted.toSeq
-          val pre = liveRowsForKeys(spark, warehouseDir, s.table, keys, empty,
-              s.pk, actionCol, snapshotBuckets, touchedPk)
-            .localCheckpoint(true) // materialize BEFORE the fold overwrites
-          SnapshotMaintainer.updateTouched(spark, warehouseDir, s.table, batch,
-            s.pk, touchedPk, versionCol, actionCol, snapshotBuckets)
-          // post stays LAZY (persist for compute-once): it reads the
-          // post-fold snapshot buckets, which nothing rewrites again
-          // this trigger — the touched-jk collect below materializes it
-          // inside its own action instead of paying an extra barrier
-          val post = liveRowsForKeys(spark, warehouseDir, s.table, keys, empty,
-              s.pk, actionCol, snapshotBuckets, touchedPk)
-            .persist()
-          val touched = pre.select(col(jk)).unionByName(post.select(col(jk)))
-            .select(pmod(hash(col(jk)), lit(joinBuckets)).as("__tb"))
-            .distinct().collect().map(_.getInt(0)) // ≤ joinBuckets values
-          (Some((post, keys)), touched)
+    // fold a side and collect its touched jk buckets: hash(old ∪ new jk),
+    // so a jk-moving update leaves no stale row in its old bucket. The
+    // collect materializes the persisted post rows; the caller releases
+    // them after the side-store rebuilds consumed them
+    def foldSide(s: Side): Option[(SnapshotMaintainer.LiveRows, Seq[Int])] =
+      s.batch.map { batch =>
+        val live = SnapshotMaintainer.foldWithLiveRows(spark, warehouseDir,
+          s.table, batch, s.pk, versionCol, actionCol, snapshotBuckets)
+        (live, BucketStore.touchedBuckets(jkBucketed(
+          live.pre.select(col(jk)).unionByName(live.post.select(col(jk)))),
+          BucketCol))
       }
 
     // the two sides fold CONCURRENTLY (guide §2.6): different tables,
@@ -109,60 +85,45 @@ object JoinMaintainer {
     // back-fills the cores the other leaves idle. A self-join view
     // (both sides the same table) folds the same store twice, so it
     // stays sequential.
-    val ((foldedA, touchedA), (foldedB, touchedB)) =
-      if (a.table == b.table) (foldSide(a), foldSide(b))
-      else graft.core.Par.both(foldSide(a), foldSide(b))
+    def sides[T](fa: => T, fb: => T): (T, T) =
+      if (a.table == b.table) (fa, fb) else graft.core.Par.both(fa, fb)
+    val (foldedA, foldedB) = sides(foldSide(a), foldSide(b))
     try {
-    val touched = (touchedA ++ touchedB).distinct.sorted
-    if (touched.isEmpty) return
+      val touched = (foldedA ++ foldedB).flatMap(_._2).toSeq.distinct.sorted
+      if (touched.isEmpty) return
 
-    // rebuild a side's touched store buckets: current minus batch pks,
-    // plus the batch pks' post-fold live rows
-    def rebuildSide(sideName: String, s: Side,
-                    folded: Option[(DataFrame, DataFrame)]): Unit = {
-      val dir = sideDir(warehouseDir, view, sideName)
-      val current = readBuckets(spark, dir, touched)
-      val kept = (current, folded) match {
-        case (_, None) => return // this side unchanged: buckets stand
-        case (cur, Some((post, keys))) =>
-          val fresh = post
-            .withColumn(BucketCol, pmod(hash(col(jk)), lit(joinBuckets)))
-          val base = cur match {
-            case None      => fresh.limit(0)
-            case Some(c)   => c.join(keys, s.pk, "left_anti")
-          }
-          base.unionByName(fresh)
-      }
-      swapBuckets(spark, fs, dir, kept, touched)
-    }
-    // side dirs are disjoint ("a"/"b" under the view dir) and both read
-    // the already-computed `touched` array: same §2.6 overlap as the
-    // folds (same-table views stay sequential for the same reason)
-    if (a.table == b.table) {
-      rebuildSide("a", a, foldedA)
-      rebuildSide("b", b, foldedB)
-    } else
-      graft.core.Par.both(
-        rebuildSide("a", a, foldedA), rebuildSide("b", b, foldedB)): Unit
+      // rebuild a side's touched store buckets: current minus batch pks,
+      // plus the batch pks' post-fold live rows (an unchanged side's
+      // buckets stand)
+      def rebuildSide(name: String, s: Side,
+                      folded: Option[(SnapshotMaintainer.LiveRows, Seq[Int])]): Unit =
+        folded.foreach { case (live, _) =>
+          val dir = sideDir(warehouseDir, view, name)
+          val fresh = jkBucketed(live.post)
+          // allowMissingColumns: after a registry column add/remove the
+          // stored buckets can be narrower or wider than the fresh rows
+          val kept = BucketStore.readTouched(spark, dir, touched, BucketCol)
+            .fold(fresh)(_.join(live.keys, s.pk, "left_anti")
+              .unionByName(fresh, allowMissingColumns = true))
+          BucketStore.stageAndSwap(spark, dir, kept, touched,
+            deleteMissingTouched = true, bucketCol = BucketCol)
+        }
+      // side dirs are disjoint ("a"/"b" under the view dir) and both read
+      // the already-computed `touched`: same §2.6 overlap as the folds
+      sides(rebuildSide("a", a, foldedA), rebuildSide("b", b, foldedB))
 
-    // re-join the touched bucket pairs — bucket-local by construction
-    val av = readBuckets(spark, sideDir(warehouseDir, view, "a"), touched)
-    val bv = readBuckets(spark, sideDir(warehouseDir, view, "b"), touched)
-    val joined = (av, bv) match {
-      case (Some(l), Some(r)) => Some(joinSides(l, r, jk))
-      case _                  => None // one side still empty ⇒ empty view
-    }
-    joined match {
-      case Some(j) => swapBuckets(spark, fs, viewDir(warehouseDir, view),
-        j, touched)
-      case None => touched.foreach { bk =>
-        val dst = new Path(s"${viewDir(warehouseDir, view)}/$BucketCol=$bk")
-        if (fs.exists(dst)) fs.delete(dst, true)
+      // re-join the touched bucket pairs — bucket-local by construction
+      def sideRows(name: String) = BucketStore.readTouched(spark,
+        sideDir(warehouseDir, view, name), touched, BucketCol)
+      val vdir = viewDir(warehouseDir, view)
+      (sideRows("a"), sideRows("b")) match {
+        case (Some(l), Some(r)) => BucketStore.stageAndSwap(spark, vdir,
+          joinSides(l, r, jk), touched, deleteMissingTouched = true,
+          bucketCol = BucketCol)
+        // a side with no rows there leaves every touched view bucket empty
+        case _ => BucketStore.deleteTouched(spark, vdir, touched, BucketCol)
       }
-    }
-    } finally Seq(foldedA, foldedB).flatten.foreach { case (post, keys) =>
-      post.unpersist(false); keys.unpersist(false)
-    }
+    } finally (foldedA ++ foldedB).foreach(_._1.release())
   }
 
   /** The maintained view (a_/b_-prefixed payloads around the join key). */
@@ -185,47 +146,5 @@ object JoinMaintainer {
         if (c == jk || c == BucketCol) d else d.withColumnRenamed(c, s"${p}_$c")
       }
     prefixed(l, "a").join(prefixed(r, "b").drop(BucketCol), jk)
-  }
-
-  private def readBuckets(spark: SparkSession, dir: String,
-                          touched: Array[Int]): Option[DataFrame] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val dirs = touched.map(bk => s"$dir/$BucketCol=$bk")
-      .filter(p => fs.exists(new Path(p)))
-    if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", dir).parquet(dirs.toIndexedSeq: _*))
-  }
-
-  /** Stage `rows` (which must carry [[BucketCol]]) and swap exactly the
-    * `touched` buckets — a touched bucket absent from the staged output
-    * is DELETED (its content legitimately went empty). */
-  private def swapBuckets(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                          dir: String, rows: DataFrame,
-                          touched: Array[Int]): Unit =
-    // shared rename-aside protocol; a touched bucket whose join went
-    // empty is deleted (the staged fold emitted no rows for it)
-    BucketStore.stageAndSwap(spark, dir, rows, touched.toSeq,
-      deleteMissingTouched = true, bucketCol = BucketCol)
-
-  /** The LIVE (non-tombstone) snapshot rows of exactly `keys` — the
-    * same bounded pk-bucket read as [[AggMaintainer]]'s (`touchedPk` is
-    * the caller's one-shot collect of the keys' bucket ids). */
-  private def liveRowsForKeys(spark: SparkSession, warehouseDir: String,
-                              table: String, keys: DataFrame, empty: DataFrame,
-                              pk: Seq[String], actionCol: String,
-                              snapshotBuckets: Int,
-                              touchedPk: Seq[Int]): DataFrame = {
-    val dir = SnapshotMaintainer.snapshotDir(warehouseDir, table)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return empty
-    val dirs = touchedPk.map(bk => s"$dir/__bucket=$bk")
-      .filter(p => fs.exists(new Path(p)))
-    if (dirs.isEmpty) return empty
-    spark.read.option("basePath", dir).parquet(dirs.toIndexedSeq: _*)
-      .filter(col(actionCol) =!= Versioned.DeleteAction)
-      .join(keys, pk, "left_semi")
   }
 }

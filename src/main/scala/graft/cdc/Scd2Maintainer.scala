@@ -1,8 +1,6 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained SCD2 (slowly-changing-dimension type 2)
   * tables — the interval sibling of [[SnapshotMaintainer]]: where the
@@ -24,7 +22,7 @@ import org.apache.spark.sql.functions._
   * scalachecks maintained ≡ batch over random batch splits and orders).
   *
   * Scale shape — [[SnapshotMaintainer]]'s discipline: the store is
-  * partitioned by `__bucket = pmod(hash(pk), buckets)`; a micro-batch
+  * partitioned by the pk's `__bucket` ([[BucketStore.bucketed]]); a micro-batch
   * folds ONLY its touched buckets (per-trigger cost O(touched keys'
   * versions + batch), never O(table)); staged writes swap per-bucket
   * through the Hadoop FileSystem API (file:/, HDFS, object stores). */
@@ -48,9 +46,7 @@ object Scd2Maintainer {
              buckets: Int = DefaultBuckets): Unit = {
     require(buckets > 0)
     val dir = scd2Dir(warehouseDir, table)
-    val keyed = batch
-      .withColumn(BucketCol, pmod(hash(pk.map(col): _*), lit(buckets)))
-      .persist()
+    val keyed = BucketStore.bucketed(batch, pk, buckets).persist()
     try {
       val touched = BucketStore.touchedBuckets(keyed)
       if (touched.isEmpty) return

@@ -1,6 +1,5 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,9 +12,10 @@ import org.apache.spark.sql.functions._
   * versioned history; the snapshot serves the hot "current state" path.
   *
   * Scale design (the round-1 version was the named scale-killer):
-  *  - the snapshot is partitioned by `__bucket = pmod(hash(pk), buckets)`;
-  *    a micro-batch folds ONLY the buckets its keys hash into, so the
-  *    per-trigger cost is O(|touched buckets| + |batch|), not O(|snapshot|).
+  *  - the snapshot is partitioned by the pk's `__bucket`
+  *    ([[BucketStore.bucketed]]); a micro-batch folds ONLY the buckets its
+  *    keys hash into, so the per-trigger cost is O(|touched buckets| +
+  *    |batch|), not O(|snapshot|).
   *    A 10⁹-key table with a 10⁴-row trigger rewrites ≤10⁴ buckets of
   *    ~10⁵ keys each — bounded regardless of total snapshot size.
   *  - all directory manipulation goes through the Hadoop FileSystem API,
@@ -35,7 +35,7 @@ object SnapshotMaintainer {
     * rows per bucket; a large deployment picks buckets ≈ |keys| / 10⁵. */
   val DefaultBuckets = 64
 
-  private val BucketCol = "__bucket"
+  private val BucketCol = BucketStore.BucketCol
 
   def snapshotDir(warehouseDir: String, table: String): String =
     s"$warehouseDir/_snapshot/$table"
@@ -59,32 +59,53 @@ object SnapshotMaintainer {
     } finally tsBatch.unpersist(false)
   }
 
-  /** [[update]] with the batch's touched pk-hash bucket ids supplied by
-    * the caller — the composed maintainers (Agg/Join) already collect
-    * exactly this set for their own bounded pre/post reads, so passing
-    * it here removes a per-fold driver action (guide §5: the fold path
-    * is barrier-latency-bound at small triggers). `touched` MUST cover
-    * every bucket the batch's pks hash into (same pk column order, same
-    * hash, same bucket count): an under-covering hint would stage rows
-    * into buckets the swap never publishes, silently dropping them. The
-    * batch frame is consumed exactly once here, so the persist the
-    * collect needed is skipped too. */
-  private[cdc] def updateTouched(spark: SparkSession, warehouseDir: String,
-                                 table: String, batch: DataFrame,
-                                 pk: Seq[String], touched: Seq[Int],
-                                 versionCol: String = "update_date",
-                                 actionCol: String = "action",
-                                 buckets: Int = DefaultBuckets): Unit = {
+  /** The batch's distinct pks and their LIVE (non-tombstone) snapshot
+    * rows before and after one fold — what the composed maintainers
+    * (Agg/Join) derive their deltas from. `keys` and `post` are
+    * persisted: [[release]] them once the deltas are applied. */
+  private[cdc] final case class LiveRows(keys: DataFrame, pre: DataFrame,
+                                         post: DataFrame) {
+    def release(): Unit = { post.unpersist(false); keys.unpersist(false) }
+  }
+
+  /** [[update]], returning the batch pks' live rows around the fold.
+    * ONE collect of the pks' touched buckets serves the pre read, the
+    * fold and the post read (guide §5: the fold path is barrier-latency-
+    * bound at micro-batch sizes), and both reads go through
+    * [[BucketStore.readTouched]], so a bucket a crashed swap left aside
+    * is recovered BEFORE the pre-fold state is taken from it. */
+  private[cdc] def foldWithLiveRows(spark: SparkSession, warehouseDir: String,
+                                    table: String, batch: DataFrame,
+                                    pk: Seq[String], versionCol: String,
+                                    actionCol: String, buckets: Int): LiveRows = {
     require(buckets > 0)
-    if (touched.isEmpty) return
-    foldInto(spark, snapshotDir(warehouseDir, table),
-      keyed(batch, pk, versionCol, buckets), touched, pk, versionCol, actionCol)
+    val dir = snapshotDir(warehouseDir, table)
+    // keys persists LAZILY (its lineage — the batch frame — is stable for
+    // the whole trigger, so an evicted block recomputes correctly); the
+    // touched collect materializes it
+    val keys = batch.select(pk.map(col): _*).distinct().persist()
+    try {
+      val touched = BucketStore.touchedBuckets(
+        BucketStore.bucketed(keys, pk, buckets))
+      // the batch's schema stands in for a snapshot with no touched rows
+      def live(): DataFrame = BucketStore.readTouched(spark, dir, touched)
+        .map(_.drop(BucketCol).filter(col(actionCol) =!= Versioned.DeleteAction)
+          .join(keys, pk, "left_semi"))
+        .getOrElse(batch.limit(0))
+      val pre = live().localCheckpoint(true) // MUST materialize before the fold overwrites it
+      if (touched.nonEmpty)
+        foldInto(spark, dir, keyed(batch, pk, versionCol, buckets), touched,
+          pk, versionCol, actionCol)
+      // post stays LAZY: its lineage reads the post-fold buckets, which
+      // nothing rewrites again this trigger, so the caller's first action
+      // over it materializes it instead of a separate eager barrier
+      LiveRows(keys, pre, live().persist())
+    } catch { case e: Throwable => keys.unpersist(false); throw e }
   }
 
   private def keyed(batch: DataFrame, pk: Seq[String], versionCol: String,
-                    buckets: Int): DataFrame = batch
-    .withColumn("__v", col(versionCol).cast("timestamp"))
-    .withColumn(BucketCol, pmod(hash(pk.map(col): _*), lit(buckets)))
+                    buckets: Int): DataFrame = BucketStore.bucketed(
+    batch.withColumn("__v", col(versionCol).cast("timestamp")), pk, buckets)
 
   private def foldInto(spark: SparkSession, dir: String, tsBatch: DataFrame,
                        touched: Seq[Int], pk: Seq[String],

@@ -258,57 +258,40 @@ object CdcStream {
         val df = batch.toDF()
         Ingest.appendBatch(df, registry, cfg.warehouseDir, batchId,
           partitionByDate = cfg.partitionByDate)
+        val sess = df.sparkSession
+        // each maintained table's batch dir, read ONCE per trigger with the
+        // schema the registry declares (what Envelope.project wrote) — every
+        // fold below takes this frame, and a dir written with no rows (only
+        // `_SUCCESS`, e.g. under partitionByDate) reads as an empty frame
+        // instead of failing schema inference. Folding from these COLUMNAR
+        // rows, not re-projecting `df`, avoids re-scanning and re-parsing
+        // the JSON source (appendBatch released its cache).
+        val appended = (cfg.snapshotKeys.keySet ++ cfg.scd2Keys.keySet)
+          .flatMap(t => registry.get(t).map(spec => t ->
+            sess.read.schema(Envelope.projectedSchema(spec))
+              .parquet(s"${cfg.warehouseDir}/${spec.physicalName}/batch=$batchId")
+              .drop(Envelope.DtCol)))
+          .toMap
         val joinTables = cfg.joinViews
           .flatMap(v => Seq(v.tableA, v.tableB)).toSet
-        def snapshotFolds(): Unit =
-          cfg.snapshotKeys.filterNot(kv => joinTables(kv._1))
-          .foreach { case (table, pk) =>
-          registry.get(table).foreach { spec =>
-            // fold from the COLUMNAR rows appendBatch just wrote (the
-            // same projection) — re-projecting `df` here would re-scan
-            // and re-parse the gz JSON source a second time per trigger
-            // (appendBatch released its cache), which measurably caps
-            // end-to-end ingest+fold throughput
-            val batchDir = s"${cfg.warehouseDir}/${spec.physicalName}/batch=$batchId"
-            // a batch can carry zero rows for this table (no dir written):
-            // skip the fold, nothing to do. The existence check is
-            // EXPLICIT — a blanket Try(read) would also swallow transient
-            // FS errors / corrupt part files and let the maintained
-            // snapshot silently diverge from the changelog; a real read
-            // failure must fail the micro-batch so the checkpoint retries.
-            val sess = df.sparkSession
-            val p = new org.apache.hadoop.fs.Path(batchDir)
-            val fs = p.getFileSystem(sess.sparkContext.hadoopConfiguration)
-            if (fs.exists(p)) {
-              val appended = sess.read.parquet(batchDir)
-                .drop(graft.cdc.Envelope.DtCol)
-              cfg.aggSpecs.get(table) match {
-                case Some(specs) if specs.nonEmpty =>
-                  // fold + per-group aggregate deltas in one coupled pass
-                  graft.cdc.AggMaintainer.foldAndMaintain(sess,
-                    cfg.warehouseDir, table, appended, pk, specs,
-                    snapshotBuckets = cfg.snapshotBuckets)
-                case _ =>
-                  graft.cdc.SnapshotMaintainer.update(sess, cfg.warehouseDir,
-                    table, appended, pk, buckets = cfg.snapshotBuckets)
-              }
-            } else {
-              org.apache.log4j.Logger.getLogger(getClass).info(
-                s"[graft-cdc] no rows for '$table' in batch $batchId — fold skipped")
+        def snapshotFolds(): Unit = cfg.snapshotKeys.foreach { case (table, pk) =>
+          // a join-view member folds inside its view's maintainer
+          if (!joinTables(table)) appended.get(table).foreach { batch =>
+            cfg.aggSpecs.get(table) match {
+              case Some(specs) if specs.nonEmpty =>
+                // fold + per-group aggregate deltas in one coupled pass
+                graft.cdc.AggMaintainer.foldAndMaintain(sess, cfg.warehouseDir,
+                  table, batch, pk, specs, snapshotBuckets = cfg.snapshotBuckets)
+              case _ =>
+                graft.cdc.SnapshotMaintainer.update(sess, cfg.warehouseDir,
+                  table, batch, pk, buckets = cfg.snapshotBuckets)
             }
           }
         }
         def scd2Folds(): Unit = cfg.scd2Keys.foreach { case (table, pk) =>
-          registry.get(table).foreach { spec =>
-            val sess = df.sparkSession
-            val batchDir = s"${cfg.warehouseDir}/${spec.physicalName}/batch=$batchId"
-            val p = new org.apache.hadoop.fs.Path(batchDir)
-            val fs = p.getFileSystem(sess.sparkContext.hadoopConfiguration)
-            if (fs.exists(p))
-              graft.cdc.Scd2Maintainer.update(sess, cfg.warehouseDir, table,
-                sess.read.parquet(batchDir).drop(graft.cdc.Envelope.DtCol),
-                pk, buckets = cfg.snapshotBuckets)
-          }
+          appended.get(table).foreach(batch =>
+            graft.cdc.Scd2Maintainer.update(sess, cfg.warehouseDir, table,
+              batch, pk, buckets = cfg.snapshotBuckets))
         }
         // the snapshot/agg folds and the SCD2 folds are independent
         // maintainers over DISJOINT store dirs that both read only the
@@ -318,26 +301,14 @@ object CdcStream {
         // unchanged.
         graft.core.Par.both(snapshotFolds(), scd2Folds()): Unit
         cfg.joinViews.foreach { v =>
-          val sess = df.sparkSession
-          def sideOf(table: String): graft.cdc.JoinMaintainer.Side = {
-            val pk = cfg.snapshotKeys(table)
-            val b = registry.get(table).flatMap { spec =>
-              val dir = s"${cfg.warehouseDir}/${spec.physicalName}/batch=$batchId"
-              val p = new org.apache.hadoop.fs.Path(dir)
-              val fs = p.getFileSystem(sess.sparkContext.hadoopConfiguration)
-              if (fs.exists(p))
-                Some(sess.read.parquet(dir).drop(graft.cdc.Envelope.DtCol))
-              else None
-            }
-            graft.cdc.JoinMaintainer.Side(table, pk, b)
-          }
+          def side(t: String) =
+            graft.cdc.JoinMaintainer.Side(t, cfg.snapshotKeys(t), appended.get(t))
           graft.cdc.JoinMaintainer.foldAndMaintain(sess, cfg.warehouseDir,
-            v.view, v.jk, sideOf(v.tableA), sideOf(v.tableB),
+            v.view, v.jk, side(v.tableA), side(v.tableB),
             snapshotBuckets = cfg.snapshotBuckets)
         }
         if (cfg.compactEveryNBatches > 0 && batchId > 0 &&
             batchId % cfg.compactEveryNBatches == 0) {
-          val sess = df.sparkSession
           (registry.values.map(_.physicalName).toSeq :+ Ingest.UnknownTableDir)
             .foreach { phys =>
               Ingest.compactBatches(sess, cfg.warehouseDir, phys, batchId - 1)
@@ -345,7 +316,6 @@ object CdcStream {
         }
         if (cfg.expireEveryNBatches > 0 && batchId > 0 &&
             batchId % cfg.expireEveryNBatches == 0) {
-          val sess = df.sparkSession
           cfg.expire.foreach { case (table, pol) =>
             registry.get(table) match {
               case Some(spec) =>

@@ -185,4 +185,25 @@ class AggMaintainerSpec extends SparkTestBase {
     assert(g.map(_._1) == Seq(1L))
     assert(g.head._2 == new java.math.BigDecimal("10.00000000"))
   }
+
+  test("replay after a crash mid-swap reads the recovered bucket as the pre-fold state") {
+    val wh = "file:" + tmpDir("aggm-swapcrash")
+    AggMaintainer.foldAndMaintain(spark, wh, "t", batchDf(
+      (1L, "insert", "2026-01-01T10:00:00", "a", 1.0),
+      (2L, "insert", "2026-01-01T10:00:00", "a", 2.0)), pk, Seq(spec))
+    // a crash between a swap's rename-aside and rename-in leaves k1's
+    // snapshot bucket only as its `.__swap_<b>` sibling
+    val snap = SnapshotMaintainer.snapshotDir(wh, "t")
+    val b = spark.read.parquet(snap).filter($"id" === 1L)
+      .select("__bucket").as[Int].head()
+    val root = java.nio.file.Paths.get(new java.net.URI(snap))
+    java.nio.file.Files.move(root.resolve(s"__bucket=$b"), root.resolve(s".__swap_$b"))
+    // the replayed trigger moves k1 to group b
+    AggMaintainer.foldAndMaintain(spark, wh, "t", batchDf(
+      (1L, "update", "2026-01-01T11:00:00", "b", 1.0)), pk, Seq(spec))
+    check(wh, "after replay over a half-swapped snapshot")
+    val incremental = maintained(wh)
+    AggMaintainer.rebuild(spark, wh, "t", spec)
+    assert(maintained(wh) == incremental)
+  }
 }

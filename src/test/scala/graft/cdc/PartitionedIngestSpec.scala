@@ -51,12 +51,29 @@ class PartitionedIngestSpec extends SparkTestBase {
 
   test("streaming path honors partitionByDate") {
     val in = tmpDir("spd-in"); val wh = tmpDir("spd-wh"); val ck = tmpDir("spd-ck")
+    val pks = Map("products" -> Seq("product_id"), "users" -> Seq("user_id"))
+    val cfg = graft.streaming.CdcStreamConfig(in, wh, ck, Fixtures.registry,
+      partitionByDate = true, snapshotKeys = pks)
     Fixtures.writeLines(in, "log.jsonl", Fixtures.lines, gzip = false)
-    graft.streaming.CdcStream.runOnce(spark,
-      graft.streaming.CdcStreamConfig(in, wh, ck, Fixtures.registry, partitionByDate = true))
+    graft.streaming.CdcStream.runOnce(spark, cfg)
     val dirs = new java.io.File(s"$wh/${Fixtures.registry("products").physicalName}/batch=0").listFiles().map(_.getName)
     assert(dirs.exists(_.startsWith("_dt=")), dirs.mkString(","))
     assert(Ingest.readTable(spark, wh, Fixtures.registry("products")).count() == 4)
+    // users only: products' batch=1 dir is written with no `_dt` dirs
+    Fixtures.writeLines(in, "log-001.jsonl", Seq(
+      Fixtures.envelope("users", "2026-01-03T09:00:00.000Z", "update",
+        """{"user_id":7,"email":"c@x.io","balance":1.5}"""),
+      Fixtures.envelope("users", "2026-01-03T09:00:00.000Z", "insert",
+        """{"user_id":8,"email":"d@x.io","balance":2.0}""")), gzip = false)
+    graft.streaming.CdcStream.runOnce(spark, cfg)
+    pks.foreach { case (t, pk) =>
+      val want = Versioned.latestSnapshot(
+          Ingest.readTable(spark, wh, Fixtures.registry(t))
+            .withColumn("__v", col("update_date").cast("timestamp")),
+          pk, versionCol = "__v").drop("__v")
+      val got = SnapshotMaintainer.read(spark, wh, t).select(want.columns.toIndexedSeq.map(col): _*)
+      assert(got.collect().toSet == want.collect().toSet, t)
+    }
   }
 
   test("compact collapses batch dirs and preserves rows + partitioning") {

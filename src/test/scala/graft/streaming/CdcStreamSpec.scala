@@ -202,6 +202,23 @@ class CdcStreamSpec extends SparkTestBase {
       .select("cust", "a_order_id", "b_name")
       .as[(Long, Long, String)].collect().toSet
     assert(view() == oracle)
+    // trigger 3: orders only — the customers side folds an empty batch
+    Fixtures.writeLines(in, "log-002.jsonl", Seq(
+      env("orders", "2026-01-01T12:00:00.000Z", "insert",
+        """{"order_id":3,"cust":2,"amount":1.0}"""),
+      env("orders", "2026-01-01T12:00:00.000Z", "update",
+        """{"order_id":2,"cust":2,"amount":8.0}""")), gzip = false)
+    CdcStream.runOnce(spark, cfg)
+    val got = graft.cdc.JoinMaintainer.read(spark, wh, "ord_cust")
+    val want = graft.cdc.JoinMaintainer.rebuild(spark, wh, "ord_cust", "cust",
+      graft.cdc.JoinMaintainer.Side("orders", Seq("order_id"), None),
+      graft.cdc.JoinMaintainer.Side("customers", Seq("cust_id"), None))
+    assert(!got.columns.exists(_.endsWith("___bucket")), got.columns.mkString(","))
+    assert(got.columns.toSet == want.columns.toSet)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(want.columns.toIndexedSeq.map(col): _*).collect().map(_.toSeq).toSet
+    assert(rows(got) == rows(want))
+    assert(view() == Set((2L, 2L, "bob"), (2L, 3L, "bob")))
   }
 
   test("stream-static enrichment sees snapshot state as of EACH trigger") {
