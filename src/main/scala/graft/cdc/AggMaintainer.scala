@@ -12,19 +12,30 @@ import org.apache.spark.sql.functions._
   * groupCols` continuously up to date for O(|batch| + touched groups)
   * per micro-batch:
   *
-  *  1. fold the batch into the snapshot, reading its keys' LIVE rows
-  *     before and after ([[SnapshotMaintainer.foldWithLiveRows]]: only
-  *     their pk buckets are listed);
-  *  2. the per-group DELTA (post minus pre, counts and decimal sums) is
-  *     applied to the aggregate store — itself hash-bucketed by group,
-  *     so only the buckets of touched groups are read and swapped.
+  *  1. fold the batch into the snapshot, taking its keys' LIVE rows
+  *     before and after from the fold itself
+  *     ([[SnapshotMaintainer.foldWithLiveRows]]: only their pk buckets
+  *     are listed, and read once);
+  *  2. the per-group DELTA is the post rows as +1/+x united with the pre
+  *     rows as -1/-x, summed per group (zero deltas dropped); it is
+  *     merged into the aggregate store — itself hash-bucketed by group,
+  *     so only the buckets of touched groups are read and swapped — as
+  *     (store rows ∪ delta) summed per group, keeping groups with rows.
+  *     `groupBy` groups NULL keys together, so a nullable group column
+  *     needs no null-safe join condition.
   *
   * A pk whose UPDATE moves it between groups contributes -1/-x to its
   * old group and +1/+x to the new one; deletes contribute only the
   * negative side. Sums are maintained in DECIMAL — exact, associative
   * arithmetic — so the maintained table equals the from-scratch
   * aggregate bit-for-bit, not approximately ([[rebuild]] IS the spec's
-  * equality oracle).
+  * equality oracle). Negation is unary minus, which keeps the scale
+  * (`x * -1` on a DECIMAL(38,8) would round to scale 6).
+  *
+  * A spec added to a table whose snapshot already has rows starts from
+  * the post-fold snapshot: a store that does not exist yet is seeded
+  * from it ([[BucketStore.seedIfMissing]]) instead of receiving only
+  * this batch's delta.
   *
   * Replay: a re-delivered batch folds idempotently into the snapshot,
   * so its pre- and post-fold states match, every delta is zero, and the
@@ -50,19 +61,29 @@ object AggMaintainer {
 
   /** Internal constant group key standing in for an EMPTY groupCols list
     * (a global aggregate): keeps every code path — hash-bucketing and
-    * using-column joins — on the regular grouped shape. Stripped by
+    * the per-group sums — on the regular grouped shape. Stripped by
     * [[read]]. */
   private val AllCol = "__all"
 
   private def effCols(spec: AggSpec): Seq[String] =
     if (spec.groupCols.isEmpty) Seq(AllCol) else spec.groupCols
 
-  private def grouped(rows: DataFrame, spec: AggSpec): DataFrame = {
+  /** `rows` as signed per-row contributions: `n_rows` = `sign`, each
+    * `sum_<col>` = ±col in DECIMAL(38,8). */
+  private def signed(rows: DataFrame, spec: AggSpec, sign: Long): DataFrame = {
     val base = if (spec.groupCols.isEmpty) rows.withColumn(AllCol, lit(0)) else rows
-    base.groupBy(effCols(spec).map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
-        spec.sumCols.map(c => sum(dec(col(c))).as(s"sum_$c")): _*)
+    base.select((effCols(spec).map(col) :+ lit(sign).as("n_rows")) ++
+      spec.sumCols.map { c =>
+        val x = dec(col(c))
+        (if (sign < 0) -x else x).as(s"sum_$c")
+      }: _*)
   }
+
+  /** Contributions (or stored rows) summed per `keys`. */
+  private def summed(rows: DataFrame, spec: AggSpec, keys: Seq[String]): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(sum("n_rows").as("n_rows"),
+        spec.sumCols.map(c => sum(s"sum_$c").as(s"sum_$c")): _*)
 
   /** Fold `batch` into the snapshot AND maintain `specs` aggregates over
     * it. Same contract as [[SnapshotMaintainer.update]] plus the
@@ -75,74 +96,55 @@ object AggMaintainer {
                       aggBuckets: Int = DefaultBuckets): Unit = {
     val live = SnapshotMaintainer.foldWithLiveRows(spark, warehouseDir, table,
       batch, pk, versionCol, actionCol, snapshotBuckets)
-    try specs.foreach { spec =>
-      applyDelta(spark, warehouseDir, table, spec, live.pre, live.post, aggBuckets)
-    } finally live.release()
+    specs.foreach(spec => applyDelta(spark, warehouseDir, table, spec,
+      live.pre, live.post, actionCol, aggBuckets))
   }
 
   private def applyDelta(spark: SparkSession, warehouseDir: String,
                          table: String, spec: AggSpec,
-                         pre: DataFrame, post: DataFrame,
+                         pre: DataFrame, post: DataFrame, actionCol: String,
                          aggBuckets: Int): Unit = {
     val gcols = effCols(spec)
-    val preG = grouped(pre, spec)
-    val postG = grouped(post, spec)
-    // post minus pre, groups present on either side. The group-key join
-    // must be NULL-SAFE (<=>): a nullable group column (e.g. category
-    // NULL) must match itself across generations, where a using-column
-    // join would keep the two sides apart and emit duplicate group rows.
-    val preR = preG.select((gcols.map(c => col(c).as(s"__g_$c")) :+
-      col("n_rows").as("__n_pre")) ++
-      spec.sumCols.map(c => col(s"sum_$c").as(s"__pre_$c")): _*)
-    val deltaCond = gcols.map(c => col(c) <=> col(s"__g_$c"))
-      .reduce(_ && _)
-    val diff = postG.join(preR, deltaCond, "full_outer")
-      .select((gcols.map(c => coalesce(col(c), col(s"__g_$c")).as(c)) :+
-        (coalesce(col("n_rows"), lit(0L)) - coalesce(col("__n_pre"), lit(0L)))
-          .as("n_rows")) ++
-        spec.sumCols.map(c =>
-          dec(coalesce(col(s"sum_$c"), lit(0)) - coalesce(col(s"__pre_$c"), lit(0)))
-            .as(s"sum_$c")): _*)
+    val nonZero = spec.sumCols.map(c => col(s"sum_$c") =!= 0)
+      .foldLeft(col("n_rows") =!= 0L)(_ || _)
     // persist, not eager checkpoint: the touched collect right below
-    // materializes it, and its lineage (pre checkpointed, post over
-    // the stable post-fold snapshot) recomputes correctly if evicted
-    val delta = BucketStore.bucketed(diff, gcols, aggBuckets, BucketCol).persist()
+    // materializes it, and its lineage (projections of the fold's
+    // checkpoint) recomputes correctly if evicted
+    val delta = BucketStore.bucketed(
+      summed(signed(post, spec, 1L).unionByName(signed(pre, spec, -1L)), spec, gcols)
+        .filter(nonZero),
+      gcols, aggBuckets, BucketCol).persist()
 
     val dir = aggDir(warehouseDir, table, spec.name)
     try {
       val touched = BucketStore.touchedBuckets(delta, BucketCol)
       if (touched.isEmpty) return
-      val current = BucketStore.readTouched(spark, dir, touched, BucketCol)
-
-      val merged = current match {
-        case None => delta.filter(col("n_rows") =!= 0L ||
-          spec.sumCols.map(c => col(s"sum_$c") =!= 0).foldLeft(lit(false))(_ || _))
-        case Some(cur) =>
-          val deltaR = delta
-            .select((gcols.map(c => col(c).as(s"__g_$c")) :+
-              col("n_rows").as("__dn")) ++
-              (spec.sumCols.map(c => col(s"sum_$c").as(s"__d_$c")) :+
-                col(BucketCol).as("__db")): _*)
-          val mergeCond = gcols.map(c => col(c) <=> col(s"__g_$c"))
-            .reduce(_ && _) // null-safe, same reason as the delta join
-          cur.join(deltaR, mergeCond, "full_outer")
-            .select((gcols.map(c => coalesce(col(c), col(s"__g_$c")).as(c)) :+
-              (coalesce(col("n_rows"), lit(0L)) + coalesce(col("__dn"), lit(0L)))
-                .as("n_rows")) ++
-              (spec.sumCols.map(c =>
-                dec(coalesce(col(s"sum_$c"), lit(0)) + coalesce(col(s"__d_$c"), lit(0)))
-                  .as(s"sum_$c")) :+
-                coalesce(col(BucketCol), col("__db")).as(BucketCol)): _*)
-            .filter(col("n_rows") > 0L)
+      // the post-fold snapshot already holds this batch: a seeded store
+      // takes no delta
+      if (!BucketStore.seedIfMissing(spark, dir,
+            bucketedTotals(spark, warehouseDir, table, spec, actionCol, aggBuckets),
+            BucketCol)) {
+        val current = BucketStore.readTouched(spark, dir, touched, BucketCol,
+          schema = Some(delta.schema))
+        val merged = summed(current.fold(delta)(_.unionByName(delta)), spec,
+          gcols :+ BucketCol).filter(col("n_rows") > 0L)
+        // shared stage + per-bucket swap (rename-aside, crash-recoverable,
+        // and the load-bearing pre-write bucket repartition); a bucket
+        // whose groups all cancelled to zero is DELETED, not left stale
+        BucketStore.stageAndSwap(spark, dir, merged, touched,
+          deleteMissingTouched = true, bucketCol = BucketCol)
       }
-
-      // shared stage + per-bucket swap (rename-aside, crash-recoverable,
-      // and the load-bearing pre-write bucket repartition); a bucket
-      // whose groups all cancelled to zero is DELETED, not left stale
-      BucketStore.stageAndSwap(spark, dir, merged, touched,
-        deleteMissingTouched = true, bucketCol = BucketCol)
     } finally delta.unpersist(false)
   }
+
+  /** The aggregate of the current snapshot, bucketed as stored. */
+  private def bucketedTotals(spark: SparkSession, warehouseDir: String,
+                             table: String, spec: AggSpec, actionCol: String,
+                             aggBuckets: Int): DataFrame =
+    BucketStore.bucketed(summed(signed(
+        SnapshotMaintainer.read(spark, warehouseDir, table, actionCol), spec, 1L),
+        spec, effCols(spec)),
+      effCols(spec), aggBuckets, BucketCol)
 
   /** The maintained aggregate table. */
   def read(spark: SparkSession, warehouseDir: String, table: String,
@@ -155,11 +157,8 @@ object AggMaintainer {
     * the maintained table against. */
   def rebuild(spark: SparkSession, warehouseDir: String, table: String,
               spec: AggSpec, actionCol: String = "action",
-              aggBuckets: Int = DefaultBuckets): Unit = {
-    val full = BucketStore.bucketed(grouped(
-        SnapshotMaintainer.read(spark, warehouseDir, table, actionCol), spec),
-      effCols(spec), aggBuckets, BucketCol)
-    full.write.mode("overwrite").partitionBy(BucketCol)
+              aggBuckets: Int = DefaultBuckets): Unit =
+    bucketedTotals(spark, warehouseDir, table, spec, actionCol, aggBuckets)
+      .write.mode("overwrite").partitionBy(BucketCol)
       .parquet(aggDir(warehouseDir, table, spec.name))
-  }
 }

@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.types.StructType
 
 /** The shared bucket-partitioned store protocol behind every
   * incrementally-maintained table ([[SnapshotMaintainer]],
@@ -58,10 +59,15 @@ object BucketStore {
 
   /** Current contents of the touched buckets, if the store has any —
     * read through `basePath` so [[BucketCol]] comes back as a column.
-    * Runs crash recovery per touched bucket first. */
+    * Runs crash recovery per touched bucket first. With a declared
+    * `schema` the files are read as that schema (a column a bucket lacks
+    * reads as null); without one the bucket footers are merged
+    * (`mergeSchema`, one extra Spark job), for a fold that must keep
+    * stored columns its batch lacks. */
   def readTouched(spark: SparkSession, dir: String,
                   touched: Seq[Int],
-                  bucketCol: String = BucketCol): Option[DataFrame] = {
+                  bucketCol: String = BucketCol,
+                  schema: Option[StructType] = None): Option[DataFrame] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) None
@@ -70,11 +76,11 @@ object BucketStore {
       val dirs = touched.map(b => s"$dir/$bucketCol=$b")
         .filter(p => fs.exists(new Path(p)))
       if (dirs.isEmpty) None
-      // mergeSchema: after a registry column add/remove the buckets can
-      // legitimately carry different schemas (the fold rewrites only
-      // touched buckets) — a strict read would fail the micro-batch
-      else Some(spark.read.option("basePath", dir).option("mergeSchema", "true")
-        .parquet(dirs.toIndexedSeq: _*))
+      // after a registry column add/remove the buckets can legitimately
+      // carry different schemas (the fold rewrites only touched buckets)
+      // — a strict single-footer read would fail the micro-batch
+      else Some(schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
+        .option("basePath", dir).parquet(dirs.toIndexedSeq: _*))
     }
   }
 
@@ -115,6 +121,25 @@ object BucketStore {
       } else if (deleteMissingTouched) deleteBucket(fs, dir, b, bucketCol)
     }
     fs.delete(tmp, true)
+  }
+
+  /** Create the store at `dir` from `rows` (which must carry
+    * `bucketCol`) if it does not exist yet; true if it did. The rows are
+    * staged in a sibling dir and renamed in whole: a crash leaves either
+    * no store (the replay seeds again) or the complete one, never a
+    * partial store that a later fold would read as complete. */
+  def seedIfMissing(spark: SparkSession, dir: String, rows: => DataFrame,
+                    bucketCol: String = BucketCol): Boolean = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(root)) false
+    else {
+      val staged = new Path(root.getParent, s".__seed_${root.getName}")
+      rows.repartition(col(bucketCol))
+        .write.mode("overwrite").partitionBy(bucketCol).parquet(staged.toString)
+      require(fs.rename(staged, root), s"store seed failed: $root")
+      true
+    }
   }
 
   /** Delete the `touched` buckets: the swap of a fold that emitted no

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * Per micro-batch and side:
   *  1. fold the batch into the side's main pk-bucketed snapshot,
-  *     reading the batch pks' live rows before and after
-  *     ([[SnapshotMaintainer.foldWithLiveRows]] — the maintainer
+  *     taking the batch pks' live rows before and after from the fold
+  *     itself ([[SnapshotMaintainer.foldWithLiveRows]] — the maintainer
   *     composes with, never replaces, the snapshot discipline): the
   *     PRE-fold rows carry the OLD join-key values, which is what makes
   *     a jk-changing UPDATE leave no stale row behind;
@@ -31,6 +31,11 @@ import org.apache.spark.sql.functions._
   *  3. re-join the touched bucket pairs and swap the view buckets
   *     (staged `_tmp` + per-bucket rename; a bucket whose join went
   *     empty is deleted, not left stale).
+  *
+  * A side store that does not exist yet (a view added over snapshots
+  * that already hold rows) is seeded from its post-fold snapshot
+  * ([[BucketStore.seedIfMissing]]), and that trigger re-joins every
+  * view bucket.
   *
   * Replay: a re-delivered batch folds idempotently, so pre == post,
   * every side-store bucket rebuild reproduces itself, and the view is
@@ -67,9 +72,7 @@ object JoinMaintainer {
       BucketStore.bucketed(df, Seq(jk), joinBuckets, BucketCol)
 
     // fold a side and collect its touched jk buckets: hash(old ∪ new jk),
-    // so a jk-moving update leaves no stale row in its old bucket. The
-    // collect materializes the persisted post rows; the caller releases
-    // them after the side-store rebuilds consumed them
+    // so a jk-moving update leaves no stale row in its old bucket
     def foldSide(s: Side): Option[(SnapshotMaintainer.LiveRows, Seq[Int])] =
       s.batch.map { batch =>
         val live = SnapshotMaintainer.foldWithLiveRows(spark, warehouseDir,
@@ -88,42 +91,53 @@ object JoinMaintainer {
     def sides[T](fa: => T, fb: => T): (T, T) =
       if (a.table == b.table) (fa, fb) else graft.core.Par.both(fa, fb)
     val (foldedA, foldedB) = sides(foldSide(a), foldSide(b))
-    try {
-      val touched = (foldedA ++ foldedB).flatMap(_._2).toSeq.distinct.sorted
-      if (touched.isEmpty) return
+    val touched = (foldedA ++ foldedB).flatMap(_._2).toSeq.distinct.sorted
+    if (touched.isEmpty) return
 
-      // rebuild a side's touched store buckets: current minus batch pks,
-      // plus the batch pks' post-fold live rows (an unchanged side's
-      // buckets stand)
-      def rebuildSide(name: String, s: Side,
-                      folded: Option[(SnapshotMaintainer.LiveRows, Seq[Int])]): Unit =
-        folded.foreach { case (live, _) =>
-          val dir = sideDir(warehouseDir, view, name)
-          val fresh = jkBucketed(live.post)
-          // allowMissingColumns: after a registry column add/remove the
-          // stored buckets can be narrower or wider than the fresh rows
-          val kept = BucketStore.readTouched(spark, dir, touched, BucketCol)
-            .fold(fresh)(_.join(live.keys, s.pk, "left_anti")
-              .unionByName(fresh, allowMissingColumns = true))
-          BucketStore.stageAndSwap(spark, dir, kept, touched,
-            deleteMissingTouched = true, bucketCol = BucketCol)
-        }
-      // side dirs are disjoint ("a"/"b" under the view dir) and both read
-      // the already-computed `touched`: same §2.6 overlap as the folds
-      sides(rebuildSide("a", a, foldedA), rebuildSide("b", b, foldedB))
-
-      // re-join the touched bucket pairs — bucket-local by construction
-      def sideRows(name: String) = BucketStore.readTouched(spark,
-        sideDir(warehouseDir, view, name), touched, BucketCol)
-      val vdir = viewDir(warehouseDir, view)
-      (sideRows("a"), sideRows("b")) match {
-        case (Some(l), Some(r)) => BucketStore.stageAndSwap(spark, vdir,
-          joinSides(l, r, jk), touched, deleteMissingTouched = true,
-          bucketCol = BucketCol)
-        // a side with no rows there leaves every touched view bucket empty
-        case _ => BucketStore.deleteTouched(spark, vdir, touched, BucketCol)
+    // seed a missing side store from its post-fold snapshot (true if
+    // seeded); otherwise rebuild the side's touched store buckets:
+    // current minus batch pks, plus the batch pks' post-fold live rows
+    // (an unchanged side's buckets stand)
+    def rebuildSide(name: String, s: Side,
+                    folded: Option[(SnapshotMaintainer.LiveRows, Seq[Int])]): Boolean = {
+      val dir = sideDir(warehouseDir, view, name)
+      val snap = new org.apache.hadoop.fs.Path(
+        SnapshotMaintainer.snapshotDir(warehouseDir, s.table))
+      val seeded =
+        snap.getFileSystem(spark.sessionState.newHadoopConf()).exists(snap) &&
+          BucketStore.seedIfMissing(spark, dir,
+            jkBucketed(SnapshotMaintainer.read(spark, warehouseDir, s.table, actionCol)),
+            BucketCol)
+      if (!seeded) folded.foreach { case (live, _) =>
+        val fresh = jkBucketed(live.post)
+        // allowMissingColumns: after a registry column add/remove the
+        // stored buckets can be narrower or wider than the fresh rows
+        val kept = BucketStore.readTouched(spark, dir, touched, BucketCol)
+          .fold(fresh)(_.join(live.keys, s.pk, "left_anti")
+            .unionByName(fresh, allowMissingColumns = true))
+        BucketStore.stageAndSwap(spark, dir, kept, touched,
+          deleteMissingTouched = true, bucketCol = BucketCol)
       }
-    } finally (foldedA ++ foldedB).foreach(_._1.release())
+      seeded
+    }
+    // side dirs are disjoint ("a"/"b" under the view dir) and both read
+    // the already-computed `touched`: same §2.6 overlap as the folds
+    val (seededA, seededB) =
+      sides(rebuildSide("a", a, foldedA), rebuildSide("b", b, foldedB))
+    // a seeded side may hold rows in any bucket
+    val viewTouched = if (seededA || seededB) 0 until joinBuckets else touched
+
+    // re-join the touched bucket pairs — bucket-local by construction
+    def sideRows(name: String) = BucketStore.readTouched(spark,
+      sideDir(warehouseDir, view, name), viewTouched, BucketCol)
+    val vdir = viewDir(warehouseDir, view)
+    (sideRows("a"), sideRows("b")) match {
+      case (Some(l), Some(r)) => BucketStore.stageAndSwap(spark, vdir,
+        joinSides(l, r, jk), viewTouched, deleteMissingTouched = true,
+        bucketCol = BucketCol)
+      // a side with no rows there leaves every touched view bucket empty
+      case _ => BucketStore.deleteTouched(spark, vdir, viewTouched, BucketCol)
+    }
   }
 
   /** The maintained view (a_/b_-prefixed payloads around the join key). */

@@ -54,64 +54,88 @@ object SnapshotMaintainer {
     try {
       val touched = BucketStore.touchedBuckets(tsBatch)
       if (touched.isEmpty) return
-      foldInto(spark, snapshotDir(warehouseDir, table), tsBatch, touched,
-        pk, versionCol, actionCol)
+      val dir = snapshotDir(warehouseDir, table)
+      BucketStore.stageAndSwap(spark, dir,
+        stored(fold(spark, dir, tsBatch, touched, pk, versionCol, actionCol),
+          tsBatch, pk, "__best"), touched)
     } finally tsBatch.unpersist(false)
   }
 
   /** The batch's distinct pks and their LIVE (non-tombstone) snapshot
     * rows before and after one fold — what the composed maintainers
-    * (Agg/Join) derive their deltas from. `keys` and `post` are
-    * persisted: [[release]] them once the deltas are applied. */
+    * (Agg/Join) derive their deltas from. All three are projections of
+    * one checkpoint of the fold's batch-pk rows. */
   private[cdc] final case class LiveRows(keys: DataFrame, pre: DataFrame,
-                                         post: DataFrame) {
-    def release(): Unit = { post.unpersist(false); keys.unpersist(false) }
-  }
+                                         post: DataFrame)
 
   /** [[update]], returning the batch pks' live rows around the fold.
-    * ONE collect of the pks' touched buckets serves the pre read, the
-    * fold and the post read (guide §5: the fold path is barrier-latency-
-    * bound at micro-batch sizes), and both reads go through
-    * [[BucketStore.readTouched]], so a bucket a crashed swap left aside
-    * is recovered BEFORE the pre-fold state is taken from it. */
+    * The touched buckets are read ONCE (guide §5: the fold path is
+    * barrier-latency-bound at micro-batch sizes): the fold's own
+    * per-pk aggregate carries the stored row (`__pre`) next to the
+    * winning one (`__best`), so the pre- and post-fold rows need no read
+    * of their own. The read goes through [[BucketStore.readTouched]], so
+    * a bucket a crashed swap left aside is recovered BEFORE the pre-fold
+    * state is taken from it. */
   private[cdc] def foldWithLiveRows(spark: SparkSession, warehouseDir: String,
                                     table: String, batch: DataFrame,
                                     pk: Seq[String], versionCol: String,
                                     actionCol: String, buckets: Int): LiveRows = {
     require(buckets > 0)
     val dir = snapshotDir(warehouseDir, table)
-    // keys persists LAZILY (its lineage — the batch frame — is stable for
-    // the whole trigger, so an evicted block recomputes correctly); the
-    // touched collect materializes it
-    val keys = batch.select(pk.map(col): _*).distinct().persist()
+    val tsBatch = keyed(batch, pk, versionCol, buckets).persist()
     try {
-      val touched = BucketStore.touchedBuckets(
-        BucketStore.bucketed(keys, pk, buckets))
-      // the batch's schema stands in for a snapshot with no touched rows
-      def live(): DataFrame = BucketStore.readTouched(spark, dir, touched)
-        .map(_.drop(BucketCol).filter(col(actionCol) =!= Versioned.DeleteAction)
-          .join(keys, pk, "left_semi"))
-        .getOrElse(batch.limit(0))
-      val pre = live().localCheckpoint(true) // MUST materialize before the fold overwrites it
-      if (touched.nonEmpty)
-        foldInto(spark, dir, keyed(batch, pk, versionCol, buckets), touched,
-          pk, versionCol, actionCol)
-      // post stays LAZY: its lineage reads the post-fold buckets, which
-      // nothing rewrites again this trigger, so the caller's first action
-      // over it materializes it instead of a separate eager barrier
-      LiveRows(keys, pre, live().persist())
-    } catch { case e: Throwable => keys.unpersist(false); throw e }
+      val touched = BucketStore.touchedBuckets(tsBatch)
+      val folded = fold(spark, dir, tsBatch, touched, pk, versionCol, actionCol)
+      val hits =
+        if (touched.isEmpty) folded.limit(0)
+        else {
+          folded.persist()
+          try {
+            // MUST materialize before the swap overwrites the buckets the
+            // fold read (the persisted fold alone could be evicted and
+            // recompute from the post-swap store)
+            val h = folded.filter(col("__hit")).localCheckpoint(true)
+            BucketStore.stageAndSwap(spark, dir,
+              stored(folded, tsBatch, pk, "__best"), touched)
+            h
+          } finally folded.unpersist(false)
+        }
+      def live(row: String) = stored(
+        hits.filter(col(s"$row.$actionCol") =!= Versioned.DeleteAction),
+        tsBatch, pk, row).drop(BucketCol)
+      LiveRows(hits.select(pk.map(col): _*), live("__pre"), live("__best"))
+    } finally tsBatch.unpersist(false)
   }
 
   private def keyed(batch: DataFrame, pk: Seq[String], versionCol: String,
                     buckets: Int): DataFrame = BucketStore.bucketed(
     batch.withColumn("__v", col(versionCol).cast("timestamp")), pk, buckets)
 
-  private def foldInto(spark: SparkSession, dir: String, tsBatch: DataFrame,
-                       touched: Seq[Int], pk: Seq[String],
-                       versionCol: String, actionCol: String): Unit = {
-    val currentTouched = BucketStore.readTouched(spark, dir, touched)
-      .map(_.withColumn("__v", col(versionCol).cast("timestamp")))
+  /** The stored snapshot rows (pk, payload, [[BucketCol]]) of `folded`'s
+    * per-pk struct `row`. */
+  private def stored(folded: DataFrame, tsBatch: DataFrame, pk: Seq[String],
+                     row: String): DataFrame =
+    folded.select(tsBatch.drop("__v").columns.toIndexedSeq.map(c =>
+      if (pk.contains(c)) col(c) else col(s"$row.$c").as(c)): _*)
+
+  /** The fold of `tsBatch` over the touched buckets: one row per pk with
+    * `__best` (the payload the snapshot stores next), `__pre` (the
+    * stored payload before this batch; null if none) and `__hit` (the
+    * batch carries the pk). */
+  private def fold(spark: SparkSession, dir: String, tsBatch: DataFrame,
+                   touched: Seq[Int], pk: Seq[String],
+                   versionCol: String, actionCol: String): DataFrame = {
+    // read with the batch's schema: the fold emits exactly the batch's
+    // columns, so a stored column the registry dropped would be dropped
+    // anyway, and one it added reads as null — exactly what an old row
+    // knows about a new column. No footer-merging schema job runs.
+    val schema = tsBatch.drop("__v").schema
+    val outCols = schema.fieldNames
+    val fresh = tsBatch.withColumn("__in", lit(true))
+    val unioned = BucketStore.readTouched(spark, dir, touched, schema = Some(schema))
+      .map(_.withColumn("__v", col(versionCol).cast("timestamp"))
+        .withColumn("__in", lit(false)).unionByName(fresh))
+      .getOrElse(fresh)
 
     // Fold = argmax per key over (__v, action) — same pick as
     // latestSnapshotWithTombstones' row_number window (desc on both),
@@ -120,27 +144,15 @@ object SnapshotMaintainer {
     // collapses to one row per key per map task BEFORE the shuffle,
     // where the window form shuffles every input row to sort it.
     // (Exact ties on (version, action) pick an arbitrary row under
-    // both forms.)
-    // allowMissingColumns: a registry column add/remove (accepted by
-    // Registry.refreshCompatible) must not wedge the fold — missing
-    // sides fill with null, exactly what an old row knows about a new
-    // column
-    val unioned = currentTouched
-      .map(_.unionByName(tsBatch, allowMissingColumns = true))
-      .getOrElse(tsBatch)
-    val outCols = tsBatch.columns.filterNot(_ == "__v")
-    val payloadCols = outCols.filterNot(pk.contains)
-    val folded = unioned
-      .groupBy(pk.map(col): _*)
-      .agg(max_by(struct(payloadCols.map(col): _*),
-        struct(col("__v"), col(actionCol))).as("__best"))
-      .select(outCols.map(c =>
-        if (pk.contains(c)) col(c) else col(s"__best.$c").as(c)): _*)
-
-    // stage + touched-bucket swap via the shared protocol (the
-    // pre-write bucket repartition there is load-bearing — measured
-    // 2× on the ingest+fold bench at sf0.1)
-    BucketStore.stageAndSwap(spark, dir, folded, touched)
+    // both forms.) `__pre` orders batch rows as null, which max_by
+    // skips: it is the stored row, never a batch row. [[update]] reads
+    // only `__best`; column pruning drops the other two aggregates.
+    val payload = struct(outCols.filterNot(pk.contains).toIndexedSeq.map(col): _*)
+    val order = struct(col("__v"), col(actionCol))
+    unioned.groupBy(pk.map(col): _*).agg(
+      max_by(payload, order).as("__best"),
+      max_by(payload, when(!col("__in"), order)).as("__pre"),
+      max(col("__in")).as("__hit"))
   }
 
   /** Read the maintained current-state table (tombstones filtered). */

@@ -176,6 +176,13 @@ object CdcStream {
     }
     require(cfg.cleanSource != "archive" || cfg.sourceArchiveDir.nonEmpty,
       "cleanSource=archive requires sourceArchiveDir")
+    // a static registry never learns a table, so a policy naming one it
+    // lacks would never expire anything
+    if (cfg.registryPath.isEmpty) {
+      val unknown = cfg.expire.keySet -- cfg.registry.keySet
+      require(unknown.isEmpty, "expire policy for table(s) absent from the " +
+        s"static registry: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
     val lines = cfg.source.getOrElse(FileSource(cfg.inputDir)) match {
       case FileSource(dir) =>
         var rd = spark.readStream
@@ -332,8 +339,10 @@ object CdcStream {
                       lit(mx.getTimestamp(0)) - expr(s"INTERVAL ${pol.lag}"),
                       pol.pk)
                   })
+              // only a refreshing registry gets here (start() rejects a
+              // static one): the table may be registered by a later refresh
               case None => System.err.println(
-                s"[graft-cdc] expire policy for unregistered table '$table' ignored")
+                s"[graft-cdc] expire policy for table '$table' skipped: not registered yet")
             }
           }
         }

@@ -74,6 +74,55 @@ class JoinMaintainerSpec extends SparkTestBase {
     assert(readView(wh) == oracle(wh))
   }
 
+  test("multi-version batch: the pre-fold row is the stored row, never a batch row") {
+    val wh = "file:" + tmpDir("joinm-multiversion")
+    maintain(wh,
+      Some(batchA((1L, "insert", "2026-01-01T10:00:00", 100L, "a1"),
+        (2L, "insert", "2026-01-01T10:00:00", 100L, "a2"),
+        (3L, "insert", "2026-01-01T12:00:00", 200L, "a3"))),
+      Some(batchB((100L, "insert", "2026-01-01T10:00:00", 100L, "alice"),
+        (200L, "insert", "2026-01-01T10:00:00", 200L, "bob"),
+        (300L, "insert", "2026-01-01T10:00:00", 300L, "carol"))))
+    maintain(wh,
+      Some(batchA(
+        // insert, update and delete of one new pk
+        (5L, "insert", "2026-01-01T11:00:00", 100L, "a5"),
+        (5L, "update", "2026-01-01T11:10:00", 200L, "a5v2"),
+        (5L, "delete", "2026-01-01T11:20:00", 200L, "a5v2"),
+        // a stored pk moves join keys through two batch versions
+        (1L, "update", "2026-01-01T11:00:00", 200L, "a1v2"),
+        (1L, "update", "2026-01-01T11:30:00", 300L, "a1v3"),
+        // a version older than the stored row
+        (3L, "update", "2026-01-01T11:00:00", 100L, "stale"))),
+      None)
+    assert(readView(wh) == Set(
+      (100L, 2L, "a2", 100L, "alice"), (200L, 3L, "a3", 200L, "bob"),
+      (300L, 1L, "a1v3", 300L, "carol")))
+    assert(readView(wh) == oracle(wh))
+  }
+
+  test("a view added over snapshots that already hold rows starts from them") {
+    val wh = "file:" + tmpDir("joinm-seed")
+    // both snapshots are maintained before the view exists
+    SnapshotMaintainer.update(spark, wh, "ta", batchA(
+      (1L, "insert", "2026-01-01T10:00:00", 100L, "a1"),
+      (2L, "insert", "2026-01-01T10:00:00", 200L, "a2")), Seq("k"), buckets = 8)
+    SnapshotMaintainer.update(spark, wh, "tb", batchB(
+      (100L, "insert", "2026-01-01T10:00:00", 100L, "alice"),
+      (200L, "insert", "2026-01-01T10:00:00", 200L, "bob")), Seq("c"), buckets = 8)
+    // the first maintained trigger changes side A only
+    maintain(wh,
+      Some(batchA((3L, "insert", "2026-01-01T11:00:00", 100L, "a3"))), None)
+    assert(readView(wh) == Set(
+      (100L, 1L, "a1", 100L, "alice"), (200L, 2L, "a2", 200L, "bob"),
+      (100L, 3L, "a3", 100L, "alice")))
+    assert(readView(wh) == oracle(wh))
+    // the seeded side stores keep taking deltas
+    maintain(wh, None,
+      Some(batchB((200L, "update", "2026-01-01T12:00:00", 200L, "bobby"))))
+    assert(readView(wh) == oracle(wh))
+  }
+
   test("property: random batch sequences equal the from-scratch join") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val genOpA = for {

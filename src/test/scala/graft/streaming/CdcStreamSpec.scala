@@ -508,6 +508,16 @@ class CdcStreamSpec extends SparkTestBase {
     }
   }
 
+  test("expire policy for a table absent from a static registry fails start") {
+    val (in, wh, ck) = freshDirs()
+    val e = intercept[IllegalArgumentException] {
+      CdcStream.start(spark, CdcStreamConfig(in, wh, ck, Fixtures.registry,
+        expireEveryNBatches = 1,
+        expire = Map("no_such_table" -> ExpirePolicy("1 day", Seq("id")))))
+    }
+    assert(e.getMessage.contains("no_such_table"))
+  }
+
   test("full streaming loop: every maintainer engaged concurrently + archive, stores == from-scratch") {
     // the deployment shape: ONE stream with snapshot + aggregate + SCD2 +
     // join-view maintenance all on and the input-listing bound engaged.
