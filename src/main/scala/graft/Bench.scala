@@ -396,21 +396,21 @@ object Bench {
       import org.apache.spark.sql.functions.{avg, col, count, lit, sum, when}
       val docs = graft.core.Tables.documents(spark, sfDir)
       val eps = 1e-3 // q205's threshold (per-token nats; corpus-size-free)
-      val agg = graft.ext.NgramLM.knPruneEntries(docs, eps)
+      val agg = graft.ext.NgramLM.knPruneEntries(docs, 2, eps)
         .agg(count(lit(1)).as("total"),
           sum(when(col("kept"), 1L).otherwise(0L)).as("kept")).head()
-      val full = graft.ext.NgramLM.knLogLik(docs, docs)
+      val full = graft.ext.NgramLM.knLogLik(docs, docs, 2)
         .agg(avg("avg_lp")).head().getDouble(0)
-      val pruned = graft.ext.NgramLM.knPrunedLogLik(docs, docs, eps)
+      val pruned = graft.ext.NgramLM.knPrunedLogLik(docs, docs, 2, eps)
         .agg(avg("avg_lp")).head().getDouble(0)
       // the trigram order (q207's eps) on the same corpus
       val eps3 = 1e-4
-      val agg3 = graft.ext.NgramLM.kn3PruneEntries(docs, eps3)
+      val agg3 = graft.ext.NgramLM.knPruneEntries(docs, 3, eps3)
         .agg(count(lit(1)).as("total"),
           sum(when(col("kept"), 1L).otherwise(0L)).as("kept")).head()
-      val full3 = graft.ext.NgramLM.kn3LogLik(docs, docs)
+      val full3 = graft.ext.NgramLM.knLogLik(docs, docs, 3)
         .agg(avg("avg_lp")).head().getDouble(0)
-      val pruned3 = graft.ext.NgramLM.kn3PrunedLogLik(docs, docs, eps3)
+      val pruned3 = graft.ext.NgramLM.knPrunedLogLik(docs, docs, 3, eps3)
         .agg(avg("avg_lp")).head().getDouble(0)
       f""","kn_prune":{"eps":0.001,"entries_total":${agg.getLong(0)},"entries_kept":${agg.getLong(1)},"mean_avg_lp_full":$full%.4f,"mean_avg_lp_pruned":$pruned%.4f,"kn3_eps":0.0001,"kn3_entries_total":${agg3.getLong(0)},"kn3_entries_kept":${agg3.getLong(1)},"kn3_mean_avg_lp_full":$full3%.4f,"kn3_mean_avg_lp_pruned":$pruned3%.4f}"""
     } catch { case e: Throwable =>

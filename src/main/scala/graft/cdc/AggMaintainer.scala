@@ -47,7 +47,10 @@ import org.apache.spark.sql.functions._
 object AggMaintainer {
 
   /** `sumCols` are maintained as `sum_<col>` DECIMAL(38,8) plus an
-    * implicit live-row count `n_rows`. */
+    * implicit live-row count `n_rows`. The store also keeps a signed
+    * non-NULL count `nn_<col>` per sum column, so a group whose live
+    * values are all NULL reads a NULL sum (as a GROUP BY does) even
+    * after +x/−x contributions cancelled to 0; [[read]] drops it. */
   final case class AggSpec(name: String, groupCols: Seq[String],
                            sumCols: Seq[String] = Seq.empty)
 
@@ -68,22 +71,27 @@ object AggMaintainer {
   private def effCols(spec: AggSpec): Seq[String] =
     if (spec.groupCols.isEmpty) Seq(AllCol) else spec.groupCols
 
+  private def counted(spec: AggSpec): Seq[String] =
+    "n_rows" +: spec.sumCols.flatMap(c => Seq(s"sum_$c", s"nn_$c"))
+
   /** `rows` as signed per-row contributions: `n_rows` = `sign`, each
-    * `sum_<col>` = ±col in DECIMAL(38,8). */
+    * `sum_<col>` = ±col in DECIMAL(38,8), each `nn_<col>` = `sign` where
+    * col is not NULL, else 0. */
   private def signed(rows: DataFrame, spec: AggSpec, sign: Long): DataFrame = {
     val base = if (spec.groupCols.isEmpty) rows.withColumn(AllCol, lit(0)) else rows
     base.select((effCols(spec).map(col) :+ lit(sign).as("n_rows")) ++
-      spec.sumCols.map { c =>
+      spec.sumCols.flatMap { c =>
         val x = dec(col(c))
-        (if (sign < 0) -x else x).as(s"sum_$c")
+        Seq((if (sign < 0) -x else x).as(s"sum_$c"),
+          when(col(c).isNotNull, lit(sign)).otherwise(lit(0L)).as(s"nn_$c"))
       }: _*)
   }
 
   /** Contributions (or stored rows) summed per `keys`. */
-  private def summed(rows: DataFrame, spec: AggSpec, keys: Seq[String]): DataFrame =
-    rows.groupBy(keys.map(col): _*)
-      .agg(sum("n_rows").as("n_rows"),
-        spec.sumCols.map(c => sum(s"sum_$c").as(s"sum_$c")): _*)
+  private def summed(rows: DataFrame, spec: AggSpec, keys: Seq[String]): DataFrame = {
+    val sums = counted(spec).map(c => sum(c).as(c))
+    rows.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+  }
 
   /** Fold `batch` into the snapshot AND maintain `specs` aggregates over
     * it. Same contract as [[SnapshotMaintainer.update]] plus the
@@ -105,8 +113,7 @@ object AggMaintainer {
                          pre: DataFrame, post: DataFrame, actionCol: String,
                          aggBuckets: Int): Unit = {
     val gcols = effCols(spec)
-    val nonZero = spec.sumCols.map(c => col(s"sum_$c") =!= 0)
-      .foldLeft(col("n_rows") =!= 0L)(_ || _)
+    val nonZero = counted(spec).map(c => col(c) =!= 0).reduce(_ || _)
     // persist, not eager checkpoint: the touched collect right below
     // materializes it, and its lineage (projections of the fold's
     // checkpoint) recomputes correctly if evicted
@@ -146,11 +153,18 @@ object AggMaintainer {
         spec, effCols(spec)),
       effCols(spec), aggBuckets, BucketCol)
 
-  /** The maintained aggregate table. */
+  /** The maintained aggregate table: (groupCols, n_rows, sum_<col>...),
+    * a sum NULL where the group has no non-NULL value. */
   def read(spark: SparkSession, warehouseDir: String, table: String,
-           name: String): DataFrame =
-    spark.read.parquet(aggDir(warehouseDir, table, name))
-      .drop(BucketCol).drop(AllCol)
+           name: String): DataFrame = {
+    val stored = spark.read.parquet(aggDir(warehouseDir, table, name))
+    val sums = stored.columns.toSeq.filter(_.startsWith("sum_"))
+      .map(s => s -> ("nn_" + s.stripPrefix("sum_")))
+      .filter { case (_, nn) => stored.columns.contains(nn) }
+    sums.foldLeft(stored) { case (df, (s, nn)) =>
+      df.withColumn(s, when(col(nn) =!= 0L, col(s)))
+    }.drop(BucketCol +: AllCol +: sums.map(_._2): _*)
+  }
 
   /** From-scratch recomputation over the current snapshot — the recovery
     * path after a fold/apply crash, and the oracle the specs compare

@@ -308,27 +308,4 @@ object Ingest {
       finishCompaction(fs, dir, tmp)
     else fs.delete(tmp, true): Unit
   }
-
-  def compact(spark: SparkSession, warehouseDir: String, physicalName: String): Long = {
-    val dir = s"$warehouseDir/$physicalName"
-    val df = spark.read.parquet(dir)
-    val hasDt = df.columns.contains(Envelope.DtCol)
-    val tmp = s"$dir.__compact_tmp"
-    val out = df.drop("batch")
-      .withColumn("batch", org.apache.spark.sql.functions.lit(0L))
-    val writer = out.write.mode("overwrite")
-    (if (hasDt) writer.partitionBy("batch", Envelope.DtCol)
-     else writer.partitionBy("batch")).parquet(tmp)
-    val n = spark.read.parquet(tmp).count()
-    // Hadoop FileSystem, not java.io.File: identical code path on
-    // file:/, HDFS, and object stores (rename is the storage layer's
-    // contract; a local-only rename breaks exactly on the cluster
-    // this table layout is designed for)
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(target, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), target),
-      s"compact rename failed for $dir")
-    n
-  }
 }

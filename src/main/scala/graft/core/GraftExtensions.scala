@@ -176,9 +176,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectTableFunction((FunctionIdentifier("bfd_pack"), info("bfd_pack"),
       (es: Seq[Expression]) => graft.ext.DocSql.bfdPackPlan(es)))
     ext.injectTableFunction((FunctionIdentifier("kn_score"), info("kn_score"),
-      (es: Seq[Expression]) => graft.ext.DocSql.knScorePlan(es)))
+      (es: Seq[Expression]) => graft.ext.DocSql.knScorePlan(es, 2)))
     ext.injectTableFunction((FunctionIdentifier("kn3_score"), info("kn3_score"),
-      (es: Seq[Expression]) => graft.ext.DocSql.kn3ScorePlan(es)))
+      (es: Seq[Expression]) => graft.ext.DocSql.knScorePlan(es, 3)))
     ext.injectTableFunction((FunctionIdentifier("kn_pruned_score"), info("kn_pruned_score"),
       (es: Seq[Expression]) => graft.ext.DocSql.knPrunedScorePlan(es)))
     ext.injectTableFunction((FunctionIdentifier("kn_model_score"), info("kn_model_score"),

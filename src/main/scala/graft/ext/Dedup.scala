@@ -1133,7 +1133,7 @@ object Dedup {
       // null text → size(__toks) = -1 → a DESCENDING sequence(0, -1)
       // emitting phantom empty tiles whose shared digest would cross-
       // link every null-text doc in tileDupEdges — the same trap
-      // [[NgramLM.docBigrams]] guards with its size>=2 filter
+      // [[NgramLM.docNgrams]] guards with its size>=n filter
       .filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
       .select(col("doc_id"), explode(transform(sequence(lit(0), nTiles - 1),

@@ -601,20 +601,13 @@ object DocSql {
   private[graft] def wordPieceEncodePlan(es: Seq[Expression]): LogicalPlan =
     plan(WordPiece.encode(tableArg(es.head), wpVocabTableArg(es(1))))
 
-  /** `kn_score('docs')`: per-document average log-likelihood under the
-    * SELF-trained interpolated Kneser-Ney bigram LM (q201's operator,
-    * [[NgramLM.knLogLik]]) — (doc_id, n_bigrams, n_oov, avg_lp). */
-  private[graft] def knScorePlan(es: Seq[Expression]): LogicalPlan = {
+  /** `kn_score('docs')` / `kn3_score('docs')`: per-document average
+    * log-likelihood under the SELF-trained interpolated Kneser-Ney LM
+    * of `order` 2 / 3 (q201's / q203's operator, [[NgramLM.knLogLik]])
+    * — (doc_id, n_bigrams|n_trigrams, n_oov, avg_lp). */
+  private[graft] def knScorePlan(es: Seq[Expression], order: Int): LogicalPlan = {
     val docs = tableArg(es.head)
-    plan(NgramLM.knLogLik(docs, docs))
-  }
-
-  /** `kn3_score('docs')`: the trigram interpolated-KN sibling (q203's
-    * operator, [[NgramLM.kn3LogLik]]) — continuation-count middle
-    * order, self-trained. */
-  private[graft] def kn3ScorePlan(es: Seq[Expression]): LogicalPlan = {
-    val docs = tableArg(es.head)
-    plan(NgramLM.kn3LogLik(docs, docs))
+    plan(NgramLM.knLogLik(docs, docs, order))
   }
 
   /** `kn_pruned_score('docs', eps)`: scoring under the entropy-PRUNED
@@ -623,7 +616,7 @@ object DocSql {
     * weights renormalize over the survivors. */
   private[graft] def knPrunedScorePlan(es: Seq[Expression]): LogicalPlan = {
     val docs = tableArg(es.head)
-    plan(NgramLM.knPrunedLogLik(docs, docs, eps = dblArg(es(1))))
+    plan(NgramLM.knPrunedLogLik(docs, docs, 2, dblArg(es(1))))
   }
 
   /** `kn_model_score('docs', '/path/to/model')`: score every document

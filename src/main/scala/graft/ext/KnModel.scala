@@ -3,283 +3,101 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The pruned-KN SERVING artifact: the entropy-pruned interpolated-KN
-  * bigram model ([[NgramLM.knPrunedLogLik]], q205) exported as three
+  * model of order 2–4 ([[NgramLM.knPrunedLogLik]]) exported as 2n − 1
   * bounded parquet tables and scored back WITHOUT raw counts or model
-  * re-derivation — what a production deployment actually ships
-  * (KenLM writes an ARPA/binary file; the columnar equivalent here is
-  * three vocabulary-sized frames a cluster can broadcast or
-  * hash-join):
+  * re-derivation — what a production deployment actually ships (KenLM
+  * writes an ARPA/binary file; the columnar equivalent here is
+  * vocabulary-sized frames a cluster can broadcast or hash-join). The
+  * tables, in [[NgramLM.knPrunedModelFrames]] order, per order:
   *
-  *   dir/_kn_entries  (w1, w2, p)   kept explicit probabilities
-  *   dir/_kn_backoff  (w1, gamma)   renormalized back-off per history
-  *   dir/_kn_cont     (w2, pcont)   continuation distribution
+  *   2: _kn_entries (w1, w2, p), _kn_backoff (w1, gamma), _kn_cont (w2, pcont)
+  *   3: _kn3_entries, _kn3_backoff12, _kn3_mid (w2, w3, p),
+  *      _kn3_backoff2 (w2, bow), _kn3_cont
+  *   4: _kn4_entries, _kn4_backoff123, _kn4_mid3, _kn4_backoff23,
+  *      _kn4_mid2, _kn4_backoff2, _kn4_cont
   *
   * Fidelity contract: the stored doubles ARE the in-memory scorer's
-  * values (computed by the same column expressions over the same
-  * integer count frames — [[NgramLM.knPrunedModelFrames]]) and parquet
-  * round-trips IEEE doubles bit-for-bit, so [[score]] equals
-  * [[NgramLM.knPrunedLogLik]] EXACTLY — q209 drives the full
-  * export → load → score loop against q205's DuckDB oracle, which
-  * re-derives everything from raw text; any drift in the export, the
-  * file format round-trip, or the load-side arms hash-fails.
-  *
-  * Scale shape: export is the q205 model derivation plus three
-  * bounded writes; scoring is three equi-joins of vocabulary-sized
-  * frames onto the per-doc gram frame — at 100 TB the model tables
-  * broadcast and scoring is map-only per executor. */
+  * values and parquet round-trips IEEE doubles bit-for-bit, so [[score]]
+  * equals [[NgramLM.knPrunedLogLik]] EXACTLY — q209/q210/q218 drive the
+  * full export → load → score loop against the DuckDB oracles, which
+  * re-derive everything from raw text. */
 object KnModel {
 
-  val EntriesTable = "_kn_entries"
-  val BackoffTable = "_kn_backoff"
-  val ContTable = "_kn_cont"
+  /** The artifact's table names per order — the on-disk format. */
+  val Tables: Map[Int, Seq[String]] = Map(
+    2 -> Seq("_kn_entries", "_kn_backoff", "_kn_cont"),
+    3 -> Seq("_kn3_entries", "_kn3_backoff12", "_kn3_mid", "_kn3_backoff2",
+      "_kn3_cont"),
+    4 -> Seq("_kn4_entries", "_kn4_backoff123", "_kn4_mid3", "_kn4_backoff23",
+      "_kn4_mid2", "_kn4_backoff2", "_kn4_cont"))
 
-  /** Run the artifact-frame writes CONCURRENTLY from a small thread
-    * pool (guide §2.6: Spark happily runs several jobs at once; actions
-    * are only sequential because the driver calls them sequentially).
-    * The frames are independent writes to distinct directories that
-    * share the derivation's PERSISTED parents; those cached partitions
-    * are compute-once across the concurrent jobs (block-level locks
-    * make a racing first materialization compute-once, wait-and-read
-    * for the rest), while intermediates above the persist points are
-    * re-derived per write (bounded, model-sized work), and each
-    * write's plan, partitioning, and row values are
-    * exactly what the sequential loop produced: concurrency moves
-    * scheduling, never bytes. Sequentially, each frame's stage ladder
-    * left most of the 32-way pool idle (vocabulary-sized stages);
-    * overlapped, the ladders back-fill each other. The first failure
-    * rethrows (unwrapped) after all writes settle, so the caller's
-    * cache scope tears down exactly as in the sequential form. */
-  private def writeAll(writes: (() => Unit)*): Unit =
-    graft.core.Par.all(writes.toSeq)
-
-  /** Derive the pruned model from `train` and write the artifact. */
-  def export(train: DataFrame, eps: Double, dir: String,
+  /** Derive the pruned model of `order` from `train` and write the
+    * artifact. */
+  def export(train: DataFrame, order: Int, eps: Double, dir: String,
              textCol: String = "text"): Unit =
-    exportFromCounts(NgramLM.corpusBigrams(train, textCol), eps, dir)
+    exportFromCounts(NgramLM.corpusNgrams(train, order, textCol), eps, dir)
 
-  /** [[export]] from an aggregated (w1, w2, n) count frame — the
-    * maintained-store composition ([[graft.streaming.BigramStream
-    * .bigramCounts]] feeds it directly). */
+  /** [[export]] from an aggregated (w1..wn, n) count frame — the
+    * maintained-store composition ([[graft.streaming.NgramCountStream
+    * .counts]] feeds it directly). The frames are written inside the
+    * derivation's cache scope (the write IS the materialization), all at
+    * once from a small pool: they share the persisted type tables, whose
+    * partitions are compute-once across the concurrent jobs, and the
+    * first failure rethrows after every write settles. */
   def exportFromCounts(counts: DataFrame, eps: Double, dir: String): Unit =
-    // the parquet write IS the materialization: frames are written
-    // inside the derivation's cache scope, skipping the per-frame eager
-    // checkpoint the tuple API pays (r16; stored doubles unchanged —
-    // same expressions, same values)
-    NgramLM.withKnPrunedModelFrames(counts, eps) { (entries, backoff, contP) =>
-      writeAll( // concurrent independent writes (guide §2.6; see writeAll)
-        () => entries.write.mode("overwrite").parquet(s"$dir/$EntriesTable"),
-        () => backoff.write.mode("overwrite").parquet(s"$dir/$BackoffTable"),
-        () => contP.write.mode("overwrite").parquet(s"$dir/$ContTable"))
+    NgramLM.withKnPrunedModelFrames(counts, eps) { frames =>
+      graft.core.Par.all(frames.zip(Tables((frames.size + 1) / 2)).map {
+        case (f, t) => () => f.write.mode("overwrite").parquet(s"$dir/$t")
+      })
     }
 
-  /** Load the three model frames from an exported artifact. */
-  def frames(spark: SparkSession,
-             dir: String): (DataFrame, DataFrame, DataFrame) = (
-    spark.read.parquet(s"$dir/$EntriesTable"),
-    spark.read.parquet(s"$dir/$BackoffTable"),
-    spark.read.parquet(s"$dir/$ContTable"))
+  /** Load the model frames of an exported artifact. */
+  def frames(spark: SparkSession, dir: String): Seq[DataFrame] =
+    Tables(order(dir)).map(t => spark.read.parquet(s"$dir/$t"))
 
   /** Score documents against the loaded artifact — bit-identical to
     * [[NgramLM.knPrunedLogLik]] over the corpus the model was exported
-    * from (see the fidelity contract above). */
+    * from. Output: (doc_id, n_bigrams|n_trigrams|n_quadgrams, n_oov,
+    * avg_lp). */
   def score(spark: SparkSession, dir: String, docs: DataFrame,
             idCol: String = "doc_id", textCol: String = "text",
-            scale: Int = 4): DataFrame = {
-    val (entries, backoff, contP) = frames(spark, dir)
-    NgramLM.knScoreFromModel(docs, entries, backoff, contP,
-      idCol, textCol, scale)
-  }
+            scale: Int = 4): DataFrame =
+    NgramLM.knScoreFromModel(docs, frames(spark, dir), idCol, textCol, scale)
 
-  /** Artifact row counts (entries, histories, continuation words) —
-    * the bounded-size evidence a deployment checks before shipping. */
-  def sizes(spark: SparkSession, dir: String): (Long, Long, Long) = {
-    val (e, b, c) = frames(spark, dir)
-    (e.count(), b.count(), c.count())
-  }
+  /** Artifact row counts, table by table — the bounded-size evidence a
+    * deployment checks before shipping. */
+  def sizes(spark: SparkSession, dir: String): Seq[Long] =
+    frames(spark, dir).map(_.count())
 
-  // ---- the TRIGRAM artifact (q210): the q209 loop at q207's order ----
-  // Five bounded tables — the columnar equivalent of a pruned 3-gram
-  // ARPA file (trigram section: p only; bigram sections: the middle
-  // model + per-history back-off weights; unigram section: P_cont):
-  //
-  //   dir/_kn3_entries   (w1, w2, w3, p)  kept explicit probabilities
-  //   dir/_kn3_backoff12 (w1, w2, gamma)  renormalized γ3 per history
-  //   dir/_kn3_mid       (w2, w3, p)      middle model P̂(w3|w2)
-  //   dir/_kn3_backoff2  (w2, bow)        middle back-off weight
-  //   dir/_kn3_cont      (w3, pcont)      continuation distribution
-  //
-  // The q209 fidelity contract carries verbatim: stored doubles ARE the
-  // in-memory scorer's values ([[NgramLM.kn3PrunedModelFrames]]), so
-  // [[score3]] equals [[NgramLM.kn3PrunedLogLik]] EXACTLY — q210 drives
-  // export → load → score against q207's raw-text DuckDB oracle.
-
-  val Entries3Table = "_kn3_entries"
-  val Backoff12Table = "_kn3_backoff12"
-  val Mid3Table = "_kn3_mid"
-  val Backoff2Table = "_kn3_backoff2"
-  val Cont3Table = "_kn3_cont"
-
-  /** Derive the pruned TRIGRAM model from `train` and write the
-    * artifact — the deployment-grade model a production quality filter
-    * actually ships (CCNet filters on a KenLM model, not add-one
-    * smoothing). */
-  def export3(train: DataFrame, eps: Double, dir: String,
-              textCol: String = "text"): Unit =
-    export3FromCounts(NgramLM.corpusTrigrams(train, textCol), eps, dir)
-
-  /** [[export3]] from an aggregated (w1, w2, w3, n) count frame — the
-    * maintained-store composition ([[graft.streaming.TrigramStream
-    * .trigramCounts]] feeds it directly). */
-  def export3FromCounts(counts: DataFrame, eps: Double,
-                        dir: String): Unit =
-    // write-inside-the-scope, as [[exportFromCounts]] (r16)
-    NgramLM.withKn3PrunedModelFrames(counts, eps) {
-      (entries, backoff12, mid, backoff2, contP) =>
-        writeAll( // concurrent independent writes (guide §2.6; see writeAll)
-          () => entries.write.mode("overwrite").parquet(s"$dir/$Entries3Table"),
-          () => backoff12.write.mode("overwrite").parquet(s"$dir/$Backoff12Table"),
-          () => mid.write.mode("overwrite").parquet(s"$dir/$Mid3Table"),
-          () => backoff2.write.mode("overwrite").parquet(s"$dir/$Backoff2Table"),
-          () => contP.write.mode("overwrite").parquet(s"$dir/$Cont3Table"))
-    }
-
-  /** Load the five trigram model frames from an exported artifact. */
-  def frames3(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = (
-    spark.read.parquet(s"$dir/$Entries3Table"),
-    spark.read.parquet(s"$dir/$Backoff12Table"),
-    spark.read.parquet(s"$dir/$Mid3Table"),
-    spark.read.parquet(s"$dir/$Backoff2Table"),
-    spark.read.parquet(s"$dir/$Cont3Table"))
-
-  /** Score documents against the loaded trigram artifact —
-    * bit-identical to [[NgramLM.kn3PrunedLogLik]] over the corpus the
-    * model was exported from (the q209 fidelity contract at order 3). */
-  def score3(spark: SparkSession, dir: String, docs: DataFrame,
-             idCol: String = "doc_id", textCol: String = "text",
-             scale: Int = 4): DataFrame = {
-    val (entries, backoff12, mid, backoff2, contP) = frames3(spark, dir)
-    NgramLM.kn3ScoreFromModel(docs, entries, backoff12, mid, backoff2,
-      contP, idCol, textCol, scale)
-  }
-
-  /** Trigram-artifact row counts (entries, histories, mid entries,
-    * mid histories, continuation words). */
-  def sizes3(spark: SparkSession, dir: String)
-      : (Long, Long, Long, Long, Long) = {
-    val (e, b12, m, b2, c) = frames3(spark, dir)
-    (e.count(), b12.count(), m.count(), b2.count(), c.count())
-  }
-
-  // ---- the 4-GRAM artifact (q218): the q210 loop at q216's order ----
-  // Seven bounded tables — the columnar pruned 4-gram ARPA shape: the
-  // explicit 4-gram section (p only), the two intermediate
-  // continuation models with their per-history back-off weights, and
-  // the unigram continuation distribution.
-
-  val Entries4Table = "_kn4_entries"
-  val Backoff123Table = "_kn4_backoff123"
-  val Mid43Table = "_kn4_mid3"
-  val Backoff23Table = "_kn4_backoff23"
-  val Mid42Table = "_kn4_mid2"
-  val Backoff4_2Table = "_kn4_backoff2"
-  val Cont4Table = "_kn4_cont"
-
-  /** Derive the pruned 4-GRAM model from `train` and write the
-    * artifact. */
-  def export4(train: DataFrame, eps: Double, dir: String,
-              textCol: String = "text"): Unit =
-    export4FromCounts(NgramLM.corpusQuadgrams(train, textCol), eps, dir)
-
-  /** [[export4]] from an aggregated (w1..w4, n) count frame — the
-    * maintained-store composition ([[graft.streaming.QuadgramStream
-    * .quadgramCounts]] feeds it directly). */
-  def export4FromCounts(counts: DataFrame, eps: Double,
-                        dir: String): Unit =
-    // write-inside-the-scope, as [[exportFromCounts]] (r16)
-    NgramLM.withKn4PrunedModelFrames(counts, eps) {
-      (e, b123, m3, b23, m2, b2, c) =>
-        writeAll( // concurrent independent writes (guide §2.6; see writeAll)
-          () => e.write.mode("overwrite").parquet(s"$dir/$Entries4Table"),
-          () => b123.write.mode("overwrite").parquet(s"$dir/$Backoff123Table"),
-          () => m3.write.mode("overwrite").parquet(s"$dir/$Mid43Table"),
-          () => b23.write.mode("overwrite").parquet(s"$dir/$Backoff23Table"),
-          () => m2.write.mode("overwrite").parquet(s"$dir/$Mid42Table"),
-          () => b2.write.mode("overwrite").parquet(s"$dir/$Backoff4_2Table"),
-          () => c.write.mode("overwrite").parquet(s"$dir/$Cont4Table"))
-    }
-
-  /** Load the seven 4-gram model frames from an exported artifact. */
-  def frames4(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-         DataFrame, DataFrame) = (
-    spark.read.parquet(s"$dir/$Entries4Table"),
-    spark.read.parquet(s"$dir/$Backoff123Table"),
-    spark.read.parquet(s"$dir/$Mid43Table"),
-    spark.read.parquet(s"$dir/$Backoff23Table"),
-    spark.read.parquet(s"$dir/$Mid42Table"),
-    spark.read.parquet(s"$dir/$Backoff4_2Table"),
-    spark.read.parquet(s"$dir/$Cont4Table"))
-
-  /** Score documents against the loaded 4-gram artifact —
-    * bit-identical to [[NgramLM.kn4PrunedLogLik]] over the corpus the
-    * model was exported from (the q210 fidelity contract at order 4). */
-  def score4(spark: SparkSession, dir: String, docs: DataFrame,
-             idCol: String = "doc_id", textCol: String = "text",
-             scale: Int = 4): DataFrame = {
-    val (e, b123, m3, b23, m2, b2, c) = frames4(spark, dir)
-    NgramLM.kn4ScoreFromModel(docs, e, b123, m3, b23, m2, b2, c,
-      idCol, textCol, scale)
-  }
-
-  /** 4-gram-artifact row counts (entries, trigram histories, mid3
-    * entries, bigram histories, mid2 entries, unigram histories,
-    * continuation words). */
-  def sizes4(spark: SparkSession, dir: String)
-      : (Long, Long, Long, Long, Long, Long, Long) = {
-    val (e, b123, m3, b23, m2, b2, c) = frames4(spark, dir)
-    (e.count(), b123.count(), m3.count(), b23.count(), m2.count(),
-      b2.count(), c.count())
-  }
-
-  /** The n-gram order of a model artifact dir (4/3/2 by which entries
-    * table exists) — lets a caller holding only a model path (e.g.
-    * [[graft.tools.CuratePipeline]]'s `knModelDir`) score through the
-    * right seam without a format flag.
+  /** The n-gram order of a model artifact dir (by which entries table
+    * exists) — lets a caller holding only a model path (e.g.
+    * [[graft.tools.CuratePipeline]]'s `knModelDir`) score without a
+    * format flag.
     *
     * Existence resolves through the Hadoop FileSystem for the path —
     * the same API every other artifact access uses (ADVICE r15: a
-    * `java.io.File` probe is local-paths-only, so an artifact on
-    * hdfs:///object storage silently fell through to order 2 and then
-    * failed with a confusing parquet read error). A dir carrying NO
-    * entries table is a bad model path, not a bigram model: throw a
-    * typed error naming the dir instead of guessing. */
+    * `java.io.File` probe is local-paths-only). A dir carrying NO
+    * entries table is a bad model path: throw a typed error naming the
+    * dir instead of guessing. */
   def order(dir: String): Int = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
     def exists(table: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(dir, table)
       p.getFileSystem(conf).exists(p)
     }
-    if (exists(Entries4Table)) 4
-    else if (exists(Entries3Table)) 3
-    else if (exists(EntriesTable)) 2
-    else throw new IllegalArgumentException(
-      s"no KN model artifact at '$dir': none of $Entries4Table/" +
-        s"$Entries3Table/$EntriesTable exists — expected a dir written " +
-        "by KnModel.export/export3/export4")
+    Seq(4, 3, 2).find(n => exists(Tables(n).head)).getOrElse(
+      throw new IllegalArgumentException(
+        s"no KN model artifact at '$dir': none of " +
+          Seq(4, 3, 2).map(Tables(_).head).mkString("/") +
+          " exists — expected a dir written by KnModel.export"))
   }
 
-  /** Score through whichever order the artifact carries ([[order]]);
-    * output schema is normalized to (doc_id, n_grams, n_oov, avg_lp) so
-    * callers are order-agnostic. */
+  /** [[score]] with the gram-count column normalized to `n_grams`:
+    * (doc_id, n_grams, n_oov, avg_lp), so callers are order-agnostic. */
   def scoreAny(spark: SparkSession, dir: String, docs: DataFrame,
                idCol: String = "doc_id", textCol: String = "text",
-               scale: Int = 4): DataFrame = order(dir) match {
-    case 4 => score4(spark, dir, docs, idCol, textCol, scale)
-      .withColumnRenamed("n_quadgrams", "n_grams")
-    case 3 => score3(spark, dir, docs, idCol, textCol, scale)
-      .withColumnRenamed("n_trigrams", "n_grams")
-    case _ => score(spark, dir, docs, idCol, textCol, scale)
-      .withColumnRenamed("n_bigrams", "n_grams")
+               scale: Int = 4): DataFrame = {
+    val scored = score(spark, dir, docs, idCol, textCol, scale)
+    scored.withColumnRenamed(scored.columns(1), "n_grams")
   }
 }

@@ -9,11 +9,10 @@ import org.apache.spark.sql.functions._
   *  - '''perplexity filtering''' (CCNet, Wenzek et al. 2020,
   *    arXiv:1911.00359): score every document under an n-gram LM and
   *    drop the worst tail — the cheap proxy for "is this fluent text".
-  *    The reference pipeline uses KenLM; the model here is a
-  *    Laplace-smoothed bigram LM trained on the corpus itself, which
-  *    keeps the whole thing exactly recomputable by an independent
-  *    engine (the real-KenLM swap is a scoring-UDF seam, not a plan
-  *    change).
+  *    The reference pipeline uses KenLM; the models here are a
+  *    Laplace-smoothed bigram LM and the interpolated Kneser-Ney family
+  *    at orders 2–4, trained on the corpus itself, which keeps the whole
+  *    thing exactly recomputable by an independent engine.
   *  - '''importance resampling''' (DSIR, Xie et al. 2023,
   *    arXiv:2302.03169): weight every raw document by
   *    log p_target(d) − log p_raw(d) under two unigram feature LMs and
@@ -23,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    `hash(term) % B` swap on the group key).
   *
   * Scale shape: every model is a pre-aggregated count frame (vocab- or
-  * bigram-vocab-sized, map-side combinable), documents reduce to
+  * n-gram-vocab-sized, map-side combinable), documents reduce to
   * per-doc (gram, n) frames before any join, and count frames join
   * back by key — no per-row UDF, no driver-side model object, no
   * window over the corpus. Threshold selection (the filter quantile)
@@ -31,45 +30,52 @@ import org.apache.spark.sql.functions._
   */
 object NgramLM {
 
-  /** Per-document (w1, w2, n) adjacent-bigram counts from a
-    * space-tokenized text column. Derived with one `transform` over the
-    * token array — no self-join, no posexplode matching. */
-  def docBigrams(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame = {
+  /** The word columns w1..wn of an n-gram frame. */
+  private[graft] def words(n: Int): Seq[String] = (1 to n).map(i => s"w$i")
+
+  private def cols(names: Seq[String]): Seq[Column] = names.map(col)
+
+  /** The n-gram order of a frame carrying `w1..wn` columns. */
+  private def orderOf(df: DataFrame): Int = df.columns.count(_.matches("w\\d+"))
+
+  /** Adjacent n-gram counts from a space-tokenized text column, keyed
+    * by `doc_id` when `idCol` is given. One `transform` over the token
+    * array — no self-join, no posexplode matching. */
+  private def ngrams(docs: DataFrame, n: Int, idCol: Option[String],
+                     textCol: String): DataFrame = {
     // PROJECT the token array before indexing into it: inside the
     // transform lambda, an inline `split(...)` expression re-evaluates
     // for every element_at call — O(tokens²) splits per document
     // (measured 3 s for 270k bigrams at sf0.1). A bound column attribute
     // evaluates once per row, making the lambda O(tokens).
     val toks = col("__toks")
-    // size < 2 would make sequence(0, size-2) DESCEND ([0, -1]) and
-    // element_at(toks, 0) throw — single-token docs have no bigrams
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
-      .filter(size(toks) >= 2)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(toks) - 2),
-          i => struct(element_at(toks, i + 1).as("w1"),
-                      element_at(toks, i + 2).as("w2")))).as("g"))
-      .select(col("doc_id"), col("g.w1"), col("g.w2"))
-      .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("n"))
+    val key = idCol.toSeq.map(_ => "doc_id")
+    docs.select(idCol.toSeq.map(c => col(c).as("doc_id")) :+
+        split(col(textCol), " ").as("__toks"): _*)
+      // size < n would make sequence(0, size-n) DESCEND and
+      // element_at(toks, 0) throw — short docs have no n-grams
+      .filter(size(toks) >= n)
+      .select(cols(key) :+ explode(transform(sequence(lit(0), size(toks) - n),
+        i => struct(words(n).zipWithIndex.map { case (w, j) =>
+          element_at(toks, i + (j + 1)).as(w) }: _*))).as("g"): _*)
+      .select(cols(key) ++ words(n).map(w => col(s"g.$w")): _*)
+      .groupBy(cols(key ++ words(n)): _*).agg(count(lit(1)).as("n"))
   }
 
-  /** Corpus-level (w1, w2, n) bigram counts with NO per-document axis —
-    * the maintained-store partial ([[graft.streaming.BigramStream]]).
+  /** Per-document (doc_id, w1..wn, n) adjacent n-gram counts; docs with
+    * fewer than n tokens contribute nothing. */
+  def docNgrams(docs: DataFrame, n: Int, idCol: String = "doc_id",
+                textCol: String = "text"): DataFrame =
+    ngrams(docs, n, Some(idCol), textCol)
+
+  /** Corpus-level (w1..wn, n) n-gram counts with NO per-document axis —
+    * the maintained-store partial ([[graft.streaming.NgramCountStream]]).
     * The count multiset is invariant to how documents are keyed, so
     * this skips the per-doc grouping entirely: one explode, ONE shuffle
-    * on (w1, w2), and no dependence on any id column (ADVICE r13 — the
+    * on the n-gram, and no dependence on any id column (ADVICE r13 — the
     * store must ingest a corpus however, or whether, it is keyed). */
-  def corpusBigrams(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = col("__toks")
-    docs.select(split(col(textCol), " ").as("__toks"))
-      .filter(size(toks) >= 2)
-      .select(explode(transform(sequence(lit(0), size(toks) - 2),
-        i => struct(element_at(toks, i + 1).as("w1"),
-                    element_at(toks, i + 2).as("w2")))).as("g"))
-      .select(col("g.w1"), col("g.w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("n"))
-  }
+  def corpusNgrams(docs: DataFrame, n: Int, textCol: String = "text"): DataFrame =
+    ngrams(docs, n, None, textCol)
 
   /** Average bigram log-likelihood per document under a
     * Laplace-smoothed bigram LM trained on `train` (usually the corpus
@@ -98,9 +104,9 @@ object NgramLM {
     // counts derive from the SAME cached frame, so the corpus is
     // exploded exactly once. Spill-safe (MEMORY_AND_DISK): the frame is
     // (doc, w1, w2, n) — tokens-sized, never wider than the input text.
-    val grams = docBigrams(docs, idCol, textCol).persist()
+    val grams = docNgrams(docs, 2, idCol, textCol).persist()
     val trainGrams =
-      if (train eq docs) grams else docBigrams(train, idCol, textCol).persist()
+      if (train eq docs) grams else docNgrams(train, 2, idCol, textCol).persist()
     try {
     val c12 = trainGrams.groupBy("w1", "w2").agg(sum("n").as("c12"))
     val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))
@@ -128,1558 +134,425 @@ object NgramLM {
     }
   }
 
-  /** Average bigram log-likelihood per document under an INTERPOLATED
-    * KNESER-NEY bigram LM (Kneser & Ney 1995; the Chen & Goodman 1999
-    * interpolated form) trained on `train` — the smoothing KenLM (and
-    * therefore the CCNet reference pipeline) actually uses, upgrading
-    * [[bigramLogLik]]'s Laplace baseline:
+  // ---- interpolated Kneser-Ney, orders 2–4 ----
+
+  /** "w2", "w3" → "23": the suffix of a level's column names. */
+  private def indices(ws: Seq[String]): String = ws.map(_.tail).mkString
+
+  /** The gram-count column of the per-document KN output at each order. */
+  private val GramsCol = Map(2 -> "n_bigrams", 3 -> "n_trigrams", 4 -> "n_quadgrams")
+
+  /** One level of the interpolated-KN recursion over the word columns
+    * `ws`: its type table `types` (ws, c) — raw counts at the top
+    * order, continuation counts below — and its history totals `hist`
+    * (ws.init, cdot, nf). Column names carry the level's word indices
+    * (c12, c123, c23, …), so every level joins into one frame. */
+  private final case class Level(ws: Seq[String], types: DataFrame) {
+    private val tag = indices(ws)
+    val c = s"c$tag"
+    val cdot = s"cdot$tag"
+    val nf = s"nf$tag"
+    val n1 = s"n1_$tag"
+    val n2 = s"n2_$tag"
+    /** Σ c over a history's kept entries (the pruned γ telescope). */
+    val s = s"s$tag"
+
+    lazy val hist: DataFrame = types.groupBy(cols(ws.init): _*)
+      .agg(sum(c).as(cdot), count(lit(1)).as(nf))
+
+    def countOfCounts: Seq[Column] = Seq(
+      sum(when(col(c) === 1, 1L).otherwise(0L)).as(n1),
+      sum(when(col(c) === 2, 1L).otherwise(0L)).as(n2))
+
+    /** The count-of-counts discount D = n1 / (n1 + 2·n2), floored at 0.5
+      * when n1 = 0 (the degenerate-discount guard in [[knLogLik]]). */
+    val d: Column = when(col(n1) === 0, lit(0.5))
+      .otherwise(col(n1).cast("double") / (col(n1) + lit(2) * col(n2)))
+
+    /** The back-off weight D·N1+(h,·)/c(h·). */
+    val bow: Column = d * col(nf) / col(cdot)
+
+    /** max(c − D, 0)/c(h·) + bow·lower — the interpolation step. For an
+      * `explicit` entry (c ≥ 1 ≥ D) the max and the unseen-c default are
+      * identities and are left out, which keeps the generated code of
+      * the loss and kept arms small. */
+    def interp(lower: Column, explicit: Boolean = false): Column = {
+      val discounted =
+        if (explicit) col(c).cast("double") - d
+        else greatest(coalesce(col(c), lit(0L)).cast("double") - d, lit(0.0))
+      discounted / col(cdot) + bow * lower
+    }
+  }
+
+  /** The KN model of one order as its levels (top first), the
+    * continuation table `cont` (w_n, nb) and the one-row totals `tot`
+    * (every level's n1/n2, the top's token total `ntok`, the bottom's
+    * type total `b`). */
+  private final case class Model(levels: Seq[Level], cont: DataFrame,
+                                 tot: DataFrame) {
+    val n: Int = levels.size + 1
+    def top: Level = levels.head
+    private val last = s"w$n"
+
+    val pcont: Column = col("nb").cast("double") / col("b")
+
+    /** P at level `from` and below: each level interpolates with the one
+      * beneath it, an unseen history falls through to the lower level,
+      * and a w_n never seen as a continuation leaves NULL (OOV). */
+    def prob(from: Int): Column = levels.drop(from).foldRight(pcont)(fallThrough)
+
+    private def fallThrough(lv: Level, lower: Column): Column =
+      when(col(lv.cdot).isNotNull && lower.isNotNull, lv.interp(lower)).otherwise(lower)
+
+    /** `df` with column `name` = [[prob]](`from`), one level per
+      * projection: each level is computed once per row instead of once
+      * per reference. */
+    def withProb(df: DataFrame, from: Int, name: String): DataFrame =
+      levels.drop(from).foldRight(df.withColumn(name, pcont))((lv, acc) =>
+        acc.withColumn(name, fallThrough(lv, col(name))))
+
+    /** [[prob]] for a row that every level from `from` down has seen (an
+      * explicit entry): the same values without the fall-through arms,
+      * whose nested copies would grow the expression with the order. */
+    def seen(from: Int): Column =
+      levels.drop(from).foldRight(pcont)((lv, lower) => lv.interp(lower, explicit = true))
+
+    /** `base` joined with every level's types and history from `from`
+      * down, the continuation table and the broadcast totals row. */
+    def below(base: DataFrame, from: Int, how: String): DataFrame =
+      levels.drop(from).foldLeft(base)((df, lv) =>
+        df.join(lv.types, lv.ws, how).join(lv.hist, lv.ws.init, how))
+        .join(cont, Seq(last), how)
+        .crossJoin(broadcast(tot))
+
+    private def withHist(i: Int): DataFrame =
+      levels(i).types.join(levels(i).hist, levels(i).ws.init)
+
+    /** Stolcke's (1998) per-token loss of an explicit top entry:
+      * (c/N) · (ln P_seen − ln(bow · P_lower)). Rounded to 9 decimals so
+      * the threshold comparison is immune to cross-engine libm drift. */
+    def loss: Column = {
+      val lower = seen(1)
+      round((col(top.c).cast("double") / col("ntok")) *
+        (log(top.interp(lower, explicit = true)) - log(top.bow * lower)), 9)
+    }
+
+    /** The loss of every explicit top entry, over the fully joined model. */
+    def lossTable: DataFrame = below(withHist(0), 1, "inner").withColumn("loss", loss)
+
+    /** The entropy-pruned model as bounded frames, top first: entries
+      * (ws, p), backoff (ws.init, gamma), then per lower level mid
+      * (ws, p) and backoff (ws.init, bow), then cont (w_n, pcont). The
+      * frames are lazy over the model's persisted tables and `kept`. */
+    def prunedFrames[T](eps: Double)(use: Seq[DataFrame] => T): T = {
+      val kept = lossTable.filter(col("loss") >= eps).persist()
+      try {
+        val entries = kept.select(cols(top.ws) :+ seen(0).as("p"): _*)
+        val backoff = levels.tail
+          .foldLeft(top.hist.join(keptTotals(kept), top.ws.init, "left"))((df, lv) =>
+            df.join(lv.hist, lv.ws.init))
+          .crossJoin(broadcast(tot))
+          .select(cols(top.ws.init) :+ gamma.as("gamma"): _*)
+        val lower = levels.indices.tail.flatMap { i =>
+          val lv = levels(i)
+          Seq(below(withHist(i), i + 1, "inner")
+              .select(cols(lv.ws) :+ seen(i).as("p"): _*),
+            lv.hist.crossJoin(broadcast(tot))
+              .select(cols(lv.ws.init) :+ lv.bow.as("bow"): _*))
+        }
+        val contP = cont.crossJoin(broadcast(tot)).select(col(last), pcont.as("pcont"))
+        use(Seq(entries, backoff) ++ lower :+ contP)
+      } finally { kept.unpersist(false); () }
+    }
+
+    /** Per-document grams scored (n, lp) under the pruned model: a kept
+      * entry scores P_seen, a pruned or unseen w_n under a seen history
+      * γ·P_lower, an unseen history P_lower. The kept decision is the
+      * loss re-evaluated inline over the joined integer columns — the
+      * same expression, so the same decision — and `kept` itself only
+      * feeds the history-sized γ aggregate (no grams ⋈ kept join). */
+    def prunedScored(grams: DataFrame, eps: Double): DataFrame = {
+      val histG = top.hist.join(
+        keptTotals(lossTable.filter(col("loss") >= eps)), top.ws.init, "left")
+      val lower = col("__lower")
+      withProb(below(grams.join(top.types, top.ws, "left")
+          .join(histG, top.ws.init, "left"), 1, "left"), 1, "__lower")
+        .withColumn("p", when(loss >= eps, top.interp(lower, explicit = true))
+          .when(col(top.cdot).isNotNull && lower.isNotNull, gamma * lower)
+          .otherwise(lower))
+        .withColumn("lp", col("n") * log(col("p")))
+    }
+
+    /** Per-history integer aggregates over the kept entries: k entries,
+      * Σ c per level and Σ nb — γ derives from these in one expression. */
+    private def keptTotals(kept: DataFrame): DataFrame =
+      kept.groupBy(cols(top.ws.init): _*).agg(count(lit(1)).as("k"),
+        levels.map(lv => sum(lv.c).as(lv.s)) :+ sum("nb").as("snb"): _*)
+
+    /** The back-off weight of a top history renormalized over its kept
+      * entries: γ = (1 − Σ_kept P) / (1 − Σ_kept P_lower). Each Σ telescopes
+      * to the integer aggregates of [[keptTotals]] — every level below the top
+      * shares the history's denominators — so no floating-point
+      * accumulation order exists anywhere. */
+    private def gamma: Column = {
+      def kept(lv: Level, lower: Column): (Column, Column) =
+        ((col(lv.s).cast("double") - col("k") * lv.d) / col(lv.cdot), lv.bow * lower)
+      val sumLower = levels.tail.foldRight(col("snb").cast("double") / col("b")) {
+        (lv, lower) => val (a, b) = kept(lv, lower); a + b }
+      val (a, b) = kept(top, sumLower)
+      // order 2 subtracts the two terms one at a time, as the oracle does
+      val num = if (n == 2) lit(1.0) - a - b else lit(1.0) - (a + b)
+      val den = lit(1.0) - sumLower
+      // den = 0 ⟺ the kept set covers the whole continuation vocabulary
+      // of the history — γ is unreachable there; pin 1.0, never NaN
+      when(col("k").isNull, lit(1.0)).when(den <= 0.0, lit(1.0)).otherwise(num / den)
+    }
+  }
+
+  /** Derive the KN model from an aggregated (w1..wn, n) frame (a per-doc
+    * frame works too: the counts are summed per n-gram) and hand it to
+    * `f` while its type tables are persisted.
     *
-    *   P(w2|w1) = max(c(w1,w2) − D, 0)/c(w1·)
-    *              + (D · N1+(w1,·)/c(w1·)) · P_cont(w2)
-    *   P_cont(w2) = N1+(·,w2) / N1+(··)
-    *   D = n1 / (n1 + 2·n2)        (count-of-counts estimate)
+    * The whole model is a pure function of the n-gram count multiset:
+    * the top type table sums the counts, each lower level's continuation
+    * count ĉ(w_{i..n}) = N1+(·, w_{i..n}) is COUNT(*) over the type table
+    * one level up (Chen & Goodman 1999 §3 — marginalizing the TYPE table,
+    * not raw counts, keeps every level a type count), and every history
+    * total, continuation count and count-of-counts row is an aggregate
+    * of those tables. */
+  private def withModel[T](counts: DataFrame)(f: Model => T): T = {
+    val n = orderOf(counts)
+    require(GramsCol.contains(n), s"Kneser-Ney order must be 2–4, got $n")
+    val levels = (n to 2 by -1).foldLeft(Vector.empty[Level]) { (acc, k) =>
+      val ws = words(n).takeRight(k)
+      val c = s"c${indices(ws)}"
+      val types = acc.lastOption match {
+        case None => counts.groupBy(cols(ws): _*).agg(sum("n").as(c))
+        case Some(up) => up.types.groupBy(cols(ws): _*).agg(count(lit(1)).as(c))
+      }
+      acc :+ Level(ws, types.persist())
+    }
+    try {
+      val cont = levels.last.types.groupBy(s"w$n").agg(count(lit(1)).as("nb"))
+      val tot = levels.map { lv =>
+        val aggs = lv.countOfCounts ++
+          (if (lv eq levels.head) Seq(sum(lv.c).as("ntok")) else Nil) ++
+          (if (lv eq levels.last) Seq(count(lit(1)).as("b")) else Nil)
+        lv.types.agg(aggs.head, aggs.tail: _*)
+      }.reduce(_ crossJoin _)
+        // one row every model frame joins: computed once, not per frame
+        .localCheckpoint(true)
+      f(Model(levels, cont, tot))
+    } finally levels.foreach(_.types.unpersist(false))
+  }
+
+  /** Per-document (doc_id, n_<grams>, n_oov, avg_lp) from scored grams
+    * (n, lp): avg_lp over the SCORED grams rounded to `scale` decimals,
+    * 0.0 when everything was OOV. O(docs) rows: eager-materialized. */
+  private def perDoc(scored: DataFrame, n: Int, scale: Int): DataFrame =
+    scored.groupBy("doc_id")
+      .agg(sum("n").as(GramsCol(n)),
+        coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L)).as("n_oov"),
+        coalesce(round(sum("lp") / sum(when(col("lp").isNotNull, col("n"))), scale),
+          lit(0.0)).as("avg_lp"))
+      .localCheckpoint(true)
+
+  /** Run `f` over the persisted per-doc n-grams of `docs`. A training
+    * frame that reads the same data (self-scoring) builds the same plan,
+    * so its `docNgrams` is served from this cache: the corpus explodes
+    * once. */
+  private def withDocGrams[T](docs: DataFrame, n: Int, idCol: String,
+                              textCol: String)(f: DataFrame => T): T = {
+    val grams = docNgrams(docs, n, idCol, textCol).persist()
+    try f(grams) finally { grams.unpersist(false); () }
+  }
+
+  private def knScore(grams: DataFrame, counts: DataFrame, scale: Int): DataFrame =
+    withModel(counts) { m =>
+      perDoc(m.below(grams, 0, "left").withColumn("lp", col("n") * log(m.prob(0))),
+        m.n, scale)
+    }
+
+  /** Average n-gram log-likelihood per document under an INTERPOLATED
+    * KNESER-NEY LM of `order` 2–4 (Kneser & Ney 1995; the Chen & Goodman
+    * 1999 interpolated form — the smoothing KenLM, and therefore the
+    * CCNet reference pipeline, uses) trained on `train`:
     *
-    * Degenerate-discount guard (ADVICE r13): the count-of-counts
-    * estimate gives D = 0 whenever n1 = 0 with n2 > 0 (no singleton
-    * bigram types), and a zero discount leaves NO reserved mass — an
-    * unseen bigram with a seen history would score P = 0 and silently
-    * fall into the OOV tally, contradicting the documented rule that
-    * only an unseen-continuation w2 is OOV. So D floors at 0.5 whenever
-    * n1 = 0 (subsuming the empty count-of-counts case), in the engine
-    * AND every oracle replay. Only reachable in cross-scoring on a
-    * corpus with no singleton bigrams; self-scoring never produces an
-    * unseen gram.
+    *   P(w_n|h)  = max(c(h,w_n) − D, 0)/c(h·) + (D·N1+(h,·)/c(h·))·P̂(w_n|h')
+    *   P̂ below the top: the same step over continuation counts
+    *              ĉ = N1+(·, …), recursing to
+    *   P_cont(w_n) = N1+(·,w_n) / N1+(··)
+    *   D = n1 / (n1 + 2·n2) per level   (count-of-counts estimate)
     *
-    * where N1+(w1,·)/N1+(·,w2) are distinct right/left continuations,
-    * N1+(··) the distinct-bigram total, and n1/n2 the number of bigram
-    * types seen exactly once/twice. The continuation distribution is
+    * with h' = h minus its first word. The continuation distribution is
     * the whole point: a word that appears often but only after ONE
     * history ("Francisco") gets a LOW back-off weight — Laplace cannot
     * express this. Every model quantity is an integer count or a ratio
-    * of integers, so an independent engine replays the model exactly;
-    * D computes in-plan from the broadcast count-of-counts row.
+    * of integers, so an independent engine replays the model exactly.
+    * Every level telescopes to Σ P = 1 over the continuation vocabulary.
     *
-    * Back-off/OOV rule (pinned by spec): a bigram whose history is
-    * unseen backs off entirely to P_cont(w2); a bigram whose w2 was
-    * never seen as a continuation is OOV — excluded from the average
-    * and counted in `n_oov` (deterministic, engine-replayable; no
-    * arbitrary unseen-mass constant). Self-scoring (train = docs, the
-    * filter convention) never hits either arm.
+    * Degenerate-discount guard (ADVICE r13): the count-of-counts
+    * estimate gives D = 0 whenever n1 = 0 with n2 > 0, and a zero
+    * discount leaves NO reserved mass — an unseen n-gram with a seen
+    * history would score P = 0 and silently fall into the OOV tally. So
+    * D floors at 0.5 whenever n1 = 0, in the engine AND every oracle
+    * replay.
     *
-    * Scale shape: identical to [[bigramLogLik]] — the corpus explodes
-    * once (persisted, shared when train eq docs), model frames are
-    * bigram-vocab-sized with map-side partial aggregation, the
-    * count-of-counts row broadcasts, scoring is count-frame equi-joins
-    * back onto the per-doc gram frame. No UDF, no window, no driver
-    * model object.
+    * Back-off/OOV rule (pinned by spec): an unseen history falls through
+    * to the next lower level, down to P_cont(w_n); a w_n never seen as a
+    * continuation is OOV — excluded from the average and counted in
+    * `n_oov`. Self-scoring (train = docs, the filter convention) never
+    * hits either arm.
     *
-    * Output: (doc_id, n_bigrams, n_oov, avg_lp) — avg_lp over the
-    * SCORED bigrams, rounded to `scale` decimals (the q106 libm-drift
-    * argument), 0.0 when everything was OOV. */
-  def knLogLik(docs: DataFrame, train: DataFrame,
+    * Scale shape: the corpus explodes once (persisted, and shared with
+    * the training side when it reads the same data), model frames are n-gram-vocabulary-sized aggregations
+    * with map-side partials, the count-of-counts row broadcasts, scoring
+    * is count-frame equi-joins back onto the per-doc gram frame.
+    *
+    * Output: (doc_id, n_bigrams|n_trigrams|n_quadgrams, n_oov, avg_lp). */
+  def knLogLik(docs: DataFrame, train: DataFrame, order: Int,
                idCol: String = "doc_id", textCol: String = "text",
-               scale: Int = 4): DataFrame = {
-    val grams = docBigrams(docs, idCol, textCol).persist()
-    val trainGrams =
-      if (train eq docs) grams else docBigrams(train, idCol, textCol).persist()
-    try knScore(grams,
-      trainGrams.groupBy("w1", "w2").agg(sum("n").as("c12")), scale)
-    finally {
-      grams.unpersist(false)
-      if (!(train eq docs)) trainGrams.unpersist(false): Unit
-    }
-  }
+               scale: Int = 4): DataFrame =
+    withDocGrams(docs, order, idCol, textCol)(
+      knScore(_, docNgrams(train, order, idCol, textCol), scale))
 
-  /** [[knLogLik]] from an ALREADY-AGGREGATED (w1, w2, n) bigram-count
-    * frame — the seam a maintained store reads through (the
-    * `vocabFrameFromCounts` discipline): the ENTIRE Kneser-Ney model —
-    * raw counts, history totals, BOTH continuation-count tables, the
-    * count-of-counts discount — is a pure function of the bigram-count
-    * multiset, which is ADDITIVE, so identical maintained counts force
-    * bit-identical scores and the maintained path answers the one-shot
-    * oracle verbatim (q202 gates it against q201's). */
+  /** [[knLogLik]] from an ALREADY-AGGREGATED (w1..wn, n) count frame —
+    * the seam a maintained store reads through; the order is the
+    * frame's. The whole model is a pure function of the count multiset,
+    * which is ADDITIVE, so identical maintained counts force
+    * bit-identical scores (q202/q204/q215 gate it against the one-shot
+    * oracles). */
   def knLogLikFromCounts(docs: DataFrame, counts: DataFrame,
                          idCol: String = "doc_id", textCol: String = "text",
-                         scale: Int = 4): DataFrame = {
-    val grams = docBigrams(docs, idCol, textCol).persist()
-    try knScore(grams,
-      counts.groupBy("w1", "w2").agg(sum("n").as("c12")), scale)
-    finally { grams.unpersist(false); () }
-  }
-
-  /** The three aggregate frames of the bigram-KN model, all derived
-    * from the ONE persisted (w1, w2, c12) type table: per-history
-    * totals (c1, distinct right continuations nf), per-word distinct
-    * left continuations (nb), and the global count-of-counts row
-    * (type total b, singleton/doubleton type counts n1/n2). */
-  private def knModelFrames(c12: DataFrame): (DataFrame, DataFrame, DataFrame) = (
-    c12.groupBy("w1").agg(sum("c12").as("c1"), count(lit(1)).as("nf")),
-    c12.groupBy("w2").agg(count(lit(1)).as("nb")),
-    c12.agg(count(lit(1)).as("b"),
-      sum(when(col("c12") === 1, 1L).otherwise(0L)).as("n1"),
-      sum(when(col("c12") === 2, 1L).otherwise(0L)).as("n2"),
-      sum(col("c12")).as("ntok")))
-
-  /** The count-of-counts discount with the n1 = 0 floor — see the
-    * degenerate-discount guard in [[knLogLik]]'s scaladoc. */
-  private def knD: Column =
-    when(col("n1") === 0, lit(0.5))
-      .otherwise(col("n1").cast("double") / (col("n1") + lit(2) * col("n2")))
-
-  /** The shared KN scoring stage over a per-doc gram frame and the
-    * aggregated model counts (both callers manage `grams` persistence). */
-  private def knScore(grams: DataFrame, c12Raw: DataFrame,
-                      scale: Int): DataFrame = {
-    val c12 = c12Raw
-        .persist() // three model frames derive from it; aggregate once
-      try {
-        val (hist, cont, tot) = knModelFrames(c12)
-        val d = knD
-        val pcont = col("nb").cast("double") / col("b")
-        val pSeenHist =
-          greatest(coalesce(col("c12"), lit(0L)).cast("double") - d, lit(0.0)) /
-            col("c1") +
-          (d * col("nf") / col("c1")) * pcont
-        val p = when(col("nb").isNotNull && col("c1").isNotNull, pSeenHist)
-          .when(col("nb").isNotNull && col("c1").isNull, pcont)
-        grams
-          .join(c12, Seq("w1", "w2"), "left")
-          .join(hist, Seq("w1"), "left")
-          .join(cont, Seq("w2"), "left")
-          .crossJoin(broadcast(tot))
-          .withColumn("lp", col("n") * log(p))
-          .groupBy("doc_id")
-          .agg(sum("n").as("n_bigrams"),
-            coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-              .as("n_oov"),
-            coalesce(
-              round(sum("lp") /
-                sum(when(col("lp").isNotNull, col("n"))), scale),
-              lit(0.0)).as("avg_lp"))
-          .localCheckpoint(true)
-      } finally { c12.unpersist(false); () }
-  }
+                         scale: Int = 4): DataFrame =
+    withDocGrams(docs, orderOf(counts), idCol, textCol)(knScore(_, counts, scale))
 
   /** The explicit-entry loss table of an entropy-pruned KN model
-    * (Stolcke 1998's pruning criterion in its weighted-log-likelihood
-    * form — the deployment step SRILM's `-prune` and KenLM's `filter`
-    * perform before shipping a model): one row per bigram TYPE of the
-    * [[knLogLik]] model over `train`, with
+    * (Stolcke 1998's criterion in its weighted-log-likelihood form — the
+    * step SRILM's `-prune` and KenLM's `filter` perform before shipping
+    * a model): one row per top-order TYPE of the [[knLogLik]] model over
+    * `train`, with
     *
-    *   loss(w1,w2) = (c12 / N) · (ln pSeen − ln(bow(w1) · P_cont(w2)))
+    *   loss = (c / N) · (ln P_seen − ln(bow(h) · P̂(w_n|h')))
     *
-    * — the PER-TOKEN log-likelihood the corpus loses when the explicit
-    * entry is dropped and its occurrences score through the back-off
-    * arm instead (N = total training bigram tokens; normalizing makes
-    * `eps` a corpus-size-free threshold, the SRILM `-prune` convention
-    * — the same eps keeps the same meaning as the corpus grows 100×).
-    * Always ≥ 0: pSeen = discounted mass + bow·P_cont ≥ bow·P_cont.
-    * `kept` = round(loss, 9) ≥ eps; the rounding pins the threshold
-    * comparison against cross-engine libm 1-ulp drift (the q106
-    * argument — loss is a single composed term with absolute drift
-    * ~1e-16, nine decimals absorb it).
+    * — the PER-TOKEN log-likelihood the corpus loses when the entry is
+    * dropped and its occurrences score through the back-off arm instead
+    * (N = training tokens at the top order; normalizing makes `eps` a
+    * corpus-size-free threshold). Always ≥ 0. `kept` = loss ≥ eps.
     *
-    * Output: (w1, w2, c12, nb, loss, kept) — the model-size-vs-eps
-    * surface the bench artifact reads. */
-  def knPruneEntries(train: DataFrame, eps: Double,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    val grams = docBigrams(train, idCol, textCol)
-    knPruneEntriesFromCounts(
-      grams.groupBy("w1", "w2").agg(sum("n").as("c12")), eps)
-  }
-
-  /** [[knPruneEntries]] from the aggregated (w1, w2, c12) type table. */
-  private def knPruneEntriesFromCounts(c12Raw: DataFrame,
-                                       eps: Double): DataFrame = {
-    val c12 = c12Raw
-    val (hist, cont, tot) = knModelFrames(c12)
-    val d = knD
-    val pcont = col("nb").cast("double") / col("b")
-    val bow = d * col("nf") / col("c1")
-    val pSeen = (col("c12").cast("double") - d) / col("c1") + bow * pcont
-    c12.join(hist, Seq("w1")).join(cont, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .withColumn("loss", round((col("c12").cast("double") / col("ntok")) *
-        (log(pSeen) - log(bow * pcont)), 9))
-      .select(col("w1"), col("w2"), col("c12"), col("nb"), col("loss"),
-        (col("loss") >= eps).as("kept"))
-  }
-
-  /** Per-document scoring under the ENTROPY-PRUNED interpolated-KN
-    * bigram model — [[knLogLik]]'s deployment-shaped complement
-    * (Stolcke 1998; the KenLM/SRILM model-filtering step): the full
-    * model trains as usual, every explicit bigram entry whose removal
-    * costs < `eps` weighted log-likelihood ([[knPruneEntries]]) is
-    * DROPPED, and each history's back-off weight renormalizes over the
-    * surviving entries so the pruned model still sums to exactly 1:
-    *
-    *   γ(w1) = (1 − Σ_kept pSeen(w1,·)) / (1 − Σ_kept P_cont(·))
-    *
-    * — the standard back-off renormalization. With nothing pruned
-    * γ(w1) = bow(w1) and scores equal [[knLogLik]] verbatim; with
-    * nothing kept γ(w1) = 1 and the history scores pure P_cont
-    * (spec-pinned). Both γ sums reduce to INTEGER per-history
-    * aggregates over the kept set — Σ pSeen = (Σc12 − k·D)/c1 +
-    * bow·(Σnb)/b and Σ P_cont = (Σnb)/b with k, Σc12, Σnb integers —
-    * so no floating-point accumulation order can drift between the
-    * engine and an oracle replay; γ is one deterministic expression
-    * per history.
-    *
-    * Scoring rule: kept entry → pSeen; pruned or unseen w2 under a
-    * seen history → γ(w1)·P_cont(w2); unseen history → P_cont(w2);
-    * w2 never a continuation → OOV (the [[knLogLik]] rule). Unlike
-    * the unpruned model, SELF-scoring exercises the back-off arm —
-    * every pruned entry's occurrences route through γ — which is what
-    * puts the renormalization under the q205 hash gate.
-    *
-    * Scale shape: [[knLogLik]]'s exactly — one corpus explode, model
-    * frames bigram-vocabulary-sized, the kept set is a filter on the
-    * type table, γ one more vocabulary-sized aggregate, scoring stays
-    * count-frame equi-joins. The pruned model frame itself (kept
-    * entries + per-history γ rows) is the BOUNDED artifact a serving
-    * system ships.
-    *
-    * Output: (doc_id, n_bigrams, n_oov, avg_lp), the [[knLogLik]]
-    * shape. */
-  def knPrunedLogLik(docs: DataFrame, train: DataFrame, eps: Double,
-                     idCol: String = "doc_id", textCol: String = "text",
-                     scale: Int = 4): DataFrame = {
-    val grams = docBigrams(docs, idCol, textCol).persist()
-    val trainGrams =
-      if (train eq docs) grams else docBigrams(train, idCol, textCol).persist()
-    try knPrunedScore(grams,
-      trainGrams.groupBy("w1", "w2").agg(sum("n").as("c12")), eps, scale)
-    finally {
-      grams.unpersist(false)
-      if (!(train eq docs)) trainGrams.unpersist(false): Unit
+    * Output: (w1..wn, c1…n, nb, loss, kept). */
+  def knPruneEntries(train: DataFrame, order: Int, eps: Double,
+                     textCol: String = "text"): DataFrame =
+    withModel(corpusNgrams(train, order, textCol)) { m =>
+      m.lossTable
+        .select(cols(m.top.ws :+ m.top.c :+ "nb" :+ "loss") :+
+          (col("loss") >= eps).as("kept"): _*)
+        .localCheckpoint(true)
     }
-  }
 
-  /** [[knPrunedLogLik]] from an ALREADY-AGGREGATED (w1, w2, n)
-    * bigram-count frame — the maintained-store seam: the pruned model
-    * (loss table, kept set, renormalized γ) is a pure function of the
-    * additive count multiset exactly like the full model, so the
-    * store-derived pruned scores answer the one-shot pruned oracle
-    * verbatim (q206 gates it against q205's). */
+  /** Per-document scoring under the ENTROPY-PRUNED interpolated-KN model
+    * of `order` — [[knLogLik]]'s deployment-shaped complement: the full
+    * model trains as usual, every explicit top entry whose removal costs
+    * < `eps` ([[knPruneEntries]]) is DROPPED, and each top history's
+    * back-off weight renormalizes over the surviving entries so the
+    * pruned model still sums to exactly 1:
+    *
+    *   γ(h) = (1 − Σ_kept P(·|h)) / (1 − Σ_kept P̂(·|h'))
+    *
+    * With nothing pruned γ = bow and scores equal [[knLogLik]] verbatim;
+    * with nothing kept γ = 1 and the history scores the lower level.
+    *
+    * Scoring rule: kept entry → P_seen; pruned or unseen w_n under a seen
+    * history → γ·P̂; unseen history → P̂ directly; deeper fall-throughs
+    * and OOV as [[knLogLik]]. Self-scoring exercises the γ arm on every
+    * pruned entry, which puts the renormalization under the hash gate.
+    *
+    * Scoring through the pruned model frames instead gives the same
+    * values (the [[knPrunedModelFrames]] fidelity contract) but is
+    * slower — the trigram queries q207/q208 by about a third at sf0.1 —
+    * because the frames re-join the lower levels this scorer joins once.
+    *
+    * Output: the [[knLogLik]] shape. */
+  def knPrunedLogLik(docs: DataFrame, train: DataFrame, order: Int,
+                     eps: Double, idCol: String = "doc_id",
+                     textCol: String = "text", scale: Int = 4): DataFrame =
+    withDocGrams(docs, order, idCol, textCol)(
+      knPrunedScore(_, docNgrams(train, order, idCol, textCol), eps, scale))
+
+  /** [[knPrunedLogLik]] from an aggregated (w1..wn, n) count frame — the
+    * maintained-store seam: the pruned model is a pure function of the
+    * additive count multiset exactly like the full model (q206/q208/q217
+    * gate it against the one-shot pruned oracles). */
   def knPrunedLogLikFromCounts(docs: DataFrame, counts: DataFrame,
                                eps: Double, idCol: String = "doc_id",
                                textCol: String = "text",
-                               scale: Int = 4): DataFrame = {
-    val grams = docBigrams(docs, idCol, textCol).persist()
-    try knPrunedScore(grams,
-      counts.groupBy("w1", "w2").agg(sum("n").as("c12")), eps, scale)
-    finally { grams.unpersist(false); () }
-  }
+                               scale: Int = 4): DataFrame =
+    withDocGrams(docs, orderOf(counts), idCol, textCol)(
+      knPrunedScore(_, counts, eps, scale))
 
-  /** The shared pruned-KN scoring stage (callers manage `grams`). */
-  private def knPrunedScore(grams: DataFrame, c12Raw: DataFrame,
-                            eps: Double, scale: Int): DataFrame = {
-      val c12 = c12Raw.persist()
-      try {
-        val (hist, cont, tot) = knModelFrames(c12)
-        val d = knD
-        val pcont = col("nb").cast("double") / col("b")
-        // per-history integer aggregates over the kept set: k entries,
-        // Σ c12, Σ nb — γ derives from these in one expression. The kept
-        // frame is LAZY (r16): its only consumer is this model-sized
-        // aggregate — the scoring join no longer reads it (the kept
-        // decision re-evaluates INLINE per scored gram below), so the
-        // old kept persist and the grams⋈kept join both drop out.
-        val gam = knPruneEntriesFromCounts(c12, eps)
-          .filter(col("kept"))
-          .groupBy("w1").agg(count(lit(1)).as("k"),
-            sum("c12").as("s12"), sum("nb").as("snb"))
-        // γ rides on the history frame (same key), so the scoring chain
-        // pays ONE (w1) join instead of two (r16; guide §2.4 — two
-        // lookups keyed the same way share one join)
-        val histg = hist.join(gam, Seq("w1"), "left")
-        val bow = d * col("nf") / col("c1")
-        val pSeen = (col("c12").cast("double") - d) / col("c1") + bow * pcont
-        // the kept decision, inline: the SAME composed expression
-        // [[knPruneEntriesFromCounts]] evaluates over the same integer
-        // columns (joined here instead of there) ⇒ bit-identical loss,
-        // identical decision. A gram unseen in training nulls c12, the
-        // comparison, and the arm — exactly the old missed-join arm.
-        val loss = round((col("c12").cast("double") / col("ntok")) *
-          (log(pSeen) - log(bow * pcont)), 9)
-        val num = lit(1.0) -
-          (col("s12").cast("double") - col("k") * d) / col("c1") -
-          (d * col("nf") / col("c1")) *
-            (col("snb").cast("double") / col("b"))
-        val den = lit(1.0) - col("snb").cast("double") / col("b")
-        // den = 0 ⟺ the kept set covers the ENTIRE continuation
-        // vocabulary for this history — then no in-vocab w2 can reach
-        // the back-off arm, so γ is unreachable; pin 1.0 (num is 0 by
-        // the same telescope) rather than emit NaN
-        val gamma = when(col("k").isNull, lit(1.0))
-          .when(den <= 0.0, lit(1.0))
-          .otherwise(num / den)
-        grams
-          .join(c12, Seq("w1", "w2"), "left")
-          .join(histg, Seq("w1"), "left")
-          .join(cont, Seq("w2"), "left")
-          .crossJoin(broadcast(tot))
-          .withColumn("p",
-            when(loss >= eps, pSeen)
-              .when(col("c1").isNotNull && col("nb").isNotNull,
-                gamma * pcont)
-              .when(col("c1").isNull && col("nb").isNotNull, pcont))
-          .withColumn("lp", col("n") * log(col("p")))
-          .groupBy("doc_id")
-          .agg(sum("n").as("n_bigrams"),
-            coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-              .as("n_oov"),
-            coalesce(
-              round(sum("lp") /
-                sum(when(col("lp").isNotNull, col("n"))), scale),
-              lit(0.0)).as("avg_lp"))
-          .localCheckpoint(true)
-      } finally { c12.unpersist(false); () }
-  }
+  private def knPrunedScore(grams: DataFrame, counts: DataFrame, eps: Double,
+                            scale: Int): DataFrame =
+    withModel(counts)(m => perDoc(m.prunedScored(grams, eps), m.n, scale))
 
-  /** Per-document scoring under the entropy-pruned TRIGRAM
-    * interpolated-KN model — [[knPrunedLogLik]]'s criterion at
-    * [[kn3LogLik]]'s order (Stolcke 1998 at the highest level of the
-    * recursion): explicit TRIGRAM entries whose removal costs < `eps`
-    * per-token log-likelihood,
+  /** The entropy-pruned KN model of the count frame's order as 2n − 1
+    * BOUNDED frames — the serving artifact ([[KnModel]] writes/loads
+    * them; the columnar equivalent of a pruned ARPA file's sections):
     *
-    *   loss = (c123/N) · (ln pHi − ln(bow3(w1,w2) · P̂(w3|w2))),
+    *  - entries (w1..wn, p): the kept explicit probabilities;
+    *  - backoff (w1..w(n−1), gamma): the renormalized back-off weight of
+    *    EVERY seen top history (γ = 1 where nothing was kept);
+    *  - per lower level, top-down: mid (ws, p), the continuation model
+    *    P̂ for every seen continuation n-gram, and backoff (ws.init, bow),
+    *    its back-off weight D·N1+(h,·)/ĉ(h·);
+    *  - cont (w_n, pcont): the continuation distribution.
     *
-    * drop, and each (w1, w2) history's back-off weight renormalizes
-    * over the survivors:
-    *
-    *   γ3(w1,w2) = (1 − Σ_kept pHi) / (1 − Σ_kept P̂(·|w2))
-    *
-    * The telescope that made q205's γ integer-derivable survives one
-    * order up BECAUSE the history fixes w2: every kept continuation's
-    * mid-level probability shares the (chatdot, nfhat) denominators,
-    * so Σ_kept P̂ = ((Σĉ − k·D2) + D2·nfhat·(Σnb/b))/ĉ(w2,·) — the
-    * per-history sums are again integer aggregates (k, Σc123, Σĉ,
-    * Σnb) and no floating-point accumulation order exists anywhere.
-    * Scoring: kept entry → pHi; pruned or unseen w3 under a seen
-    * (w1,w2) → γ3·P̂(w3|w2) (with P̂'s own fall-throughs intact);
-    * unseen (w1,w2) → P̂(w3|w2) directly (the unpruned fall-through —
-    * a history with no explicit entries carries no γ, the q205
-    * convention); w3 never a continuation → OOV. Self-scoring
-    * exercises the γ3 arm on every pruned trigram.
-    *
-    * Output: (doc_id, n_trigrams, n_oov, avg_lp). */
-  def kn3PrunedLogLik(docs: DataFrame, train: DataFrame, eps: Double,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      scale: Int = 4): DataFrame = {
-    val grams = docTrigrams(docs, idCol, textCol).persist()
-    val trainGrams =
-      if (train eq docs) grams else docTrigrams(train, idCol, textCol).persist()
-    try kn3PrunedScore(grams,
-      trainGrams.groupBy("w1", "w2", "w3").agg(sum("n").as("c123")), eps, scale)
-    finally {
-      grams.unpersist(false)
-      if (!(train eq docs)) trainGrams.unpersist(false): Unit
-    }
-  }
+    * Fidelity contract: every stored double is computed by the SAME
+    * column expressions the scorer evaluates over the same integer
+    * frames, and every unseen arm reduces bit-exactly to bow·lower
+    * (greatest(0 − D, 0) = +0.0 and +0.0 + x = x in IEEE), so scoring
+    * the loaded artifact ([[knScoreFromModel]]) equals [[knPrunedLogLik]]
+    * bit-for-bit — q209/q210/q218 drive export → load → score against
+    * the raw-text DuckDB oracles. */
+  def knPrunedModelFrames(counts: DataFrame, eps: Double): Seq[DataFrame] =
+    // bounded frames: materialize before the caches underneath go
+    withKnPrunedModelFrames(counts, eps)(_.map(_.localCheckpoint(true)))
 
-  /** [[kn3PrunedLogLik]] from an aggregated (w1, w2, w3, n) frame —
-    * the maintained-store seam (q208 gates the store-derived pruned
-    * trigram model against q207's one-shot oracle verbatim). */
-  def kn3PrunedLogLikFromCounts(docs: DataFrame, counts: DataFrame,
-                                eps: Double, idCol: String = "doc_id",
-                                textCol: String = "text",
-                                scale: Int = 4): DataFrame = {
-    val grams = docTrigrams(docs, idCol, textCol).persist()
-    try kn3PrunedScore(grams,
-      counts.groupBy("w1", "w2", "w3").agg(sum("n").as("c123")), eps, scale)
-    finally { grams.unpersist(false); () }
-  }
-
-  /** The entropy-pruned KN bigram model as three BOUNDED frames — the
-    * serving artifact a deployment ships instead of re-deriving the
-    * model per query ([[graft.ext.KnModel]] writes/loads them):
-    *
-    *  - entries (w1, w2, p): the kept explicit probabilities;
-    *  - backoff (w1, gamma): the renormalized back-off weight of EVERY
-    *    seen history (γ = 1 where nothing was kept — the [[knPrunedLogLik]]
-    *    arms exactly);
-    *  - cont (w2, pcont): the continuation distribution.
-    *
-    * Every stored double is computed by the SAME column expressions
-    * the in-memory scorer evaluates over the same integer frames, so
-    * scoring from the loaded artifact ([[knScoreFromModel]]) equals
-    * [[knPrunedLogLik]] bit-for-bit — parquet round-trips IEEE doubles
-    * exactly (q209 pins the whole loop under q205's oracle). All three
-    * frames are at most bigram-vocabulary-sized. */
-  def knPrunedModelFrames(counts: DataFrame,
-                          eps: Double): (DataFrame, DataFrame, DataFrame) =
-    withKnPrunedModelFrames(counts, eps)((e, b, c) =>
-      // bounded frames: materialize before the caches underneath go
-      (e.localCheckpoint(true), b.localCheckpoint(true),
-        c.localCheckpoint(true)))
-
-  /** Derive the three pruned-model frames LAZILY and hand them to `use`
-    * while the internal caches are still alive — the export path writes
-    * them straight to parquet (the write IS the materialization),
-    * skipping the per-frame eager checkpoint the tuple-returning API
-    * pays to outlive the unpersist (r16; same doubles either way — the
-    * expressions are identical, only the materialization point moves). */
+  /** Derive the pruned-model frames LAZILY and hand them to `use` while
+    * the caches underneath are alive — the export path writes them
+    * straight to parquet (the write IS the materialization). */
   private[graft] def withKnPrunedModelFrames[T](counts: DataFrame, eps: Double)(
-      use: (DataFrame, DataFrame, DataFrame) => T): T = {
-    val c12 = counts.groupBy("w1", "w2").agg(sum("n").as("c12")).persist()
-    try {
-      val (hist, cont, tot) = knModelFrames(c12)
-      val d = knD
-      val pcont = col("nb").cast("double") / col("b")
-      val kept = knPruneEntriesFromCounts(c12, eps).filter(col("kept"))
-        .select("w1", "w2", "c12", "nb").persist()
-      try {
-        val pSeen = (col("c12").cast("double") - d) / col("c1") +
-          (d * col("nf") / col("c1")) * pcont
-        val entries = kept.join(hist, Seq("w1"))
-          .crossJoin(broadcast(tot))
-          .select(col("w1"), col("w2"), pSeen.as("p"))
-        val gam = kept.groupBy("w1").agg(count(lit(1)).as("k"),
-          sum("c12").as("s12"), sum("nb").as("snb"))
-        val num = lit(1.0) -
-          (col("s12").cast("double") - col("k") * d) / col("c1") -
-          (d * col("nf") / col("c1")) *
-            (col("snb").cast("double") / col("b"))
-        val den = lit(1.0) - col("snb").cast("double") / col("b")
-        val gamma = when(col("k").isNull, lit(1.0))
-          .when(den <= 0.0, lit(1.0))
-          .otherwise(num / den)
-        val backoff = hist.join(gam, Seq("w1"), "left")
-          .crossJoin(broadcast(tot))
-          .select(col("w1"), gamma.as("gamma"))
-        val contP = cont.crossJoin(broadcast(tot))
-          .select(col("w2"), pcont.as("pcont"))
-        use(entries, backoff, contP)
-      } finally { kept.unpersist(false); () }
-    } finally { c12.unpersist(false); () }
-  }
+      use: Seq[DataFrame] => T): T =
+    withModel(counts)(_.prunedFrames(eps)(use))
 
-  /** Score documents against a LOADED pruned-model artifact — no raw
-    * counts, no model derivation, three equi-joins against the bounded
-    * frames (the serving path; bit-identical to [[knPrunedLogLik]]
-    * because the stored doubles ARE the in-memory scorer's values):
-    * kept entry → p; pruned-or-unseen w2 under a seen history →
-    * γ(w1)·pcont; unseen history → pcont; w2 never a continuation →
-    * OOV. */
-  def knScoreFromModel(docs: DataFrame, entries: DataFrame,
-                       backoff: DataFrame, contP: DataFrame,
+  /** Score documents against pruned-model frames in the
+    * [[knPrunedModelFrames]] layout (e.g. a LOADED artifact) — no raw
+    * counts, no model derivation, 2n − 1 equi-joins against the bounded
+    * frames. Arms, bottom up: P_1 = pcont, NULL = OOV; at each level a
+    * stored p wins, else a stored back-off weight scales the level
+    * below, else the level below stands. */
+  def knScoreFromModel(docs: DataFrame, frames: Seq[DataFrame],
                        idCol: String = "doc_id", textCol: String = "text",
                        scale: Int = 4): DataFrame = {
-    val grams = docBigrams(docs, idCol, textCol).persist()
-    try {
-      grams
-        .join(entries.select(col("w1"), col("w2"), col("p").as("__pe")),
-          Seq("w1", "w2"), "left")
-        .join(backoff, Seq("w1"), "left")
-        .join(contP, Seq("w2"), "left")
-        .withColumn("__p",
-          when(col("__pe").isNotNull, col("__pe"))
-            .when(col("gamma").isNotNull && col("pcont").isNotNull,
-              col("gamma") * col("pcont"))
-            .when(col("gamma").isNull && col("pcont").isNotNull,
-              col("pcont")))
-        .withColumn("lp", col("n") * log(col("__p")))
-        .groupBy("doc_id")
-        .agg(sum("n").as("n_bigrams"),
-          coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-            .as("n_oov"),
-          coalesce(
-            round(sum("lp") /
-              sum(when(col("lp").isNotNull, col("n"))), scale),
-            lit(0.0)).as("avg_lp"))
-        .localCheckpoint(true)
-    } finally { grams.unpersist(false); () }
-  }
-
-  /** The entropy-pruned TRIGRAM KN model as five BOUNDED frames — the
-    * serving artifact at q207's order ([[graft.ext.KnModel]] writes and
-    * loads them; the columnar equivalent of a pruned 3-gram ARPA file's
-    * sections):
-    *
-    *  - entries  (w1, w2, w3, p): kept explicit trigram probabilities;
-    *  - backoff12 (w1, w2, gamma): the renormalized back-off weight γ3
-    *    of EVERY seen trigram history (γ3 = 1 where nothing was kept —
-    *    the [[kn3PrunedLogLik]] arms exactly);
-    *  - mid      (w2, w3, p): the continuation-count middle model
-    *    P̂(w3|w2) for every seen continuation bigram;
-    *  - backoff2 (w2, bow): the middle model's back-off weight
-    *    D2·N1+(w2,·)/ĉ(w2,·) per seen mid-level history;
-    *  - cont     (w3, pcont): the continuation distribution.
-    *
-    * Fidelity contract (the q209 discipline one order up): every stored
-    * double is computed by the SAME column expressions the in-memory
-    * scorer evaluates over the same integer count frames, and the
-    * middle model's unseen-(w2,w3) arm reduces bit-exactly to
-    * bow·pcont (greatest(0−D2, 0) = +0.0 and +0.0 + x = x in IEEE), so
-    * scoring from the loaded artifact ([[kn3ScoreFromModel]]) equals
-    * [[kn3PrunedLogLik]] bit-for-bit — q210 drives export → load →
-    * score against q207's DuckDB oracle. All five frames are at most
-    * trigram-vocabulary-sized; at 100 TB they broadcast and scoring is
-    * map-only per executor. */
-  def kn3PrunedModelFrames(counts: DataFrame, eps: Double)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    withKn3PrunedModelFrames(counts, eps)((e, b12, m, b2, c) =>
-      // bounded frames: materialize before the caches underneath go
-      (e.localCheckpoint(true), b12.localCheckpoint(true),
-        m.localCheckpoint(true), b2.localCheckpoint(true),
-        c.localCheckpoint(true)))
-
-  /** [[withKnPrunedModelFrames]] at order 3: lazy frames handed to `use`
-    * inside the cache scope — the export path's no-double-materialization
-    * seam (r16). */
-  private[graft] def withKn3PrunedModelFrames[T](counts: DataFrame, eps: Double)(
-      use: (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) => T): T = {
-    val c123 = counts.groupBy("w1", "w2", "w3").agg(sum("n").as("c123"))
-      .persist()
-    try {
-      val hist12 = c123.groupBy("w1", "w2")
-        .agg(sum("c123").as("c12dot"), count(lit(1)).as("nf12"))
-      val chat = c123.groupBy("w2", "w3").agg(count(lit(1)).as("chat"))
-        .persist()
-      try {
-        val histHat = chat.groupBy("w2")
-          .agg(sum("chat").as("chatdot"), count(lit(1)).as("nfhat"))
-        val cont = chat.groupBy("w3").agg(count(lit(1)).as("nb"))
-        val tot3 = c123.agg(
-          sum(when(col("c123") === 1, 1L).otherwise(0L)).as("t_n1"),
-          sum(when(col("c123") === 2, 1L).otherwise(0L)).as("t_n2"),
-          sum(col("c123")).as("n3tok"))
-        val totHat = chat.agg(count(lit(1)).as("b"),
-          sum(when(col("chat") === 1, 1L).otherwise(0L)).as("h_n1"),
-          sum(when(col("chat") === 2, 1L).otherwise(0L)).as("h_n2"))
-        val d3 = when(col("t_n1") === 0, lit(0.5))
-          .otherwise(col("t_n1").cast("double") /
-            (col("t_n1") + lit(2) * col("t_n2")))
-        val d2 = when(col("h_n1") === 0, lit(0.5))
-          .otherwise(col("h_n1").cast("double") /
-            (col("h_n1") + lit(2) * col("h_n2")))
-        val pcont = col("nb").cast("double") / col("b")
-        // the kept set via the ONE shared kn3Loss definition; keeps the
-        // full joined row (all model columns) for the frames below
-        val kept = c123.join(hist12, Seq("w1", "w2"))
-          .join(chat, Seq("w2", "w3"))
-          .join(histHat, Seq("w2")).join(cont, Seq("w3"))
-          .crossJoin(broadcast(tot3.crossJoin(totHat)))
-          .withColumn("loss", kn3Loss(d3, d2))
-          .filter(col("loss") >= eps)
-          .persist()
-        try {
-          // pMid over kept rows — chat non-null there, but keep the
-          // scorer's exact expression shape (greatest/coalesce included)
-          val pMid =
-            greatest(coalesce(col("chat"), lit(0L)).cast("double") - d2,
-                lit(0.0)) / col("chatdot") +
-              (d2 * col("nfhat") / col("chatdot")) * pcont
-          val pHiKept =
-            (col("c123").cast("double") - d3) / col("c12dot") +
-              (d3 * col("nf12") / col("c12dot")) * pMid
-          val entries = kept
-            .select(col("w1"), col("w2"), col("w3"), pHiKept.as("p"))
-          // per-history integer aggregates over the kept set (the
-          // kn3PrunedScore γ3 telescope verbatim)
-          val gam = kept.groupBy("w1", "w2").agg(count(lit(1)).as("k"),
-            sum("c123").as("s123"), sum("chat").as("schat"),
-            sum("nb").as("snb"))
-          val sumPLowKept =
-            (col("schat").cast("double") - col("k") * d2) / col("chatdot") +
-              (d2 * col("nfhat") / col("chatdot")) *
-                (col("snb").cast("double") / col("b"))
-          val sumPHiKept =
-            (col("s123").cast("double") - col("k") * d3) / col("c12dot") +
-              (d3 * col("nf12") / col("c12dot")) * sumPLowKept
-          val den3 = lit(1.0) - sumPLowKept
-          val gamma3 = when(col("k").isNull, lit(1.0))
-            .when(den3 <= 0.0, lit(1.0))
-            .otherwise((lit(1.0) - sumPHiKept) / den3)
-          // every seen (w1,w2) history appears in hist12; histHat always
-          // has its w2 (a trigram (w1,w2,w3) puts (w2,w3) into chat)
-          val backoff12 = hist12.join(gam, Seq("w1", "w2"), "left")
-            .join(histHat, Seq("w2"))
-            .crossJoin(broadcast(tot3.crossJoin(totHat)))
-            .select(col("w1"), col("w2"), gamma3.as("gamma"))
-          val mid = chat.join(histHat, Seq("w2")).join(cont, Seq("w3"))
-            .crossJoin(broadcast(totHat))
-            .select(col("w2"), col("w3"), pMid.as("p"))
-          val backoff2 = histHat.crossJoin(broadcast(totHat))
-            .select(col("w2"),
-              (d2 * col("nfhat") / col("chatdot")).as("bow"))
-          val contP = cont.crossJoin(broadcast(totHat))
-            .select(col("w3"), pcont.as("pcont"))
-          use(entries, backoff12, mid, backoff2, contP)
-        } finally { kept.unpersist(false); () }
-      } finally { chat.unpersist(false); () }
-    } finally { c123.unpersist(false); () }
-  }
-
-  /** Score documents against a LOADED pruned TRIGRAM model artifact —
-    * no raw counts, no model derivation, five equi-joins against the
-    * bounded frames (bit-identical to [[kn3PrunedLogLik]]; see the
-    * fidelity contract at [[kn3PrunedModelFrames]]). Arms: kept entry →
-    * p; otherwise pLow = mid p if (w2,w3) stored, else bow·pcont if w2
-    * stored, else pcont if w3 stored, else OOV; a seen (w1,w2) history
-    * (γ stored) scores γ·pLow, an unseen one scores pLow directly. */
-  def kn3ScoreFromModel(docs: DataFrame, entries: DataFrame,
-                        backoff12: DataFrame, mid: DataFrame,
-                        backoff2: DataFrame, contP: DataFrame,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        scale: Int = 4): DataFrame = {
-    val grams = docTrigrams(docs, idCol, textCol).persist()
-    try {
-      val plow = when(col("__pm").isNotNull, col("__pm"))
-        .when(col("bow").isNotNull && col("pcont").isNotNull,
-          col("bow") * col("pcont"))
-        .when(col("bow").isNull && col("pcont").isNotNull, col("pcont"))
-      grams
-        .join(entries.select(col("w1"), col("w2"), col("w3"),
-          col("p").as("__pe")), Seq("w1", "w2", "w3"), "left")
-        .join(backoff12.select(col("w1"), col("w2"), col("gamma")),
-          Seq("w1", "w2"), "left")
-        .join(mid.select(col("w2"), col("w3"), col("p").as("__pm")),
-          Seq("w2", "w3"), "left")
-        .join(backoff2, Seq("w2"), "left")
-        .join(contP, Seq("w3"), "left")
-        .withColumn("__plow", plow)
-        .withColumn("__p",
-          when(col("__pe").isNotNull, col("__pe"))
-            .when(col("gamma").isNotNull && col("__plow").isNotNull,
-              col("gamma") * col("__plow"))
-            .otherwise(col("__plow")))
-        .withColumn("lp", col("n") * log(col("__p")))
-        .groupBy("doc_id")
-        .agg(sum("n").as("n_trigrams"),
-          coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-            .as("n_oov"),
-          coalesce(
-            round(sum("lp") /
-              sum(when(col("lp").isNotNull, col("n"))), scale),
-            lit(0.0)).as("avg_lp"))
-        .localCheckpoint(true)
-    } finally { grams.unpersist(false); () }
-  }
-
-  /** The per-token loss of one explicit trigram entry (evaluated over
-    * a frame carrying c123/c12dot/nf12/chat/chatdot/nfhat/nb/b/n3tok)
-    * — ONE definition shared by the scoring prune and the public
-    * entries table so the two can never drift. */
-  private def kn3Loss(d3: Column, d2: Column): Column = {
-    val pcont = col("nb").cast("double") / col("b")
-    val pLowSeen = (col("chat").cast("double") - d2) / col("chatdot") +
-      (d2 * col("nfhat") / col("chatdot")) * pcont
-    val bow3 = d3 * col("nf12") / col("c12dot")
-    val pHiSeen = (col("c123").cast("double") - d3) / col("c12dot") +
-      bow3 * pLowSeen
-    round((col("c123").cast("double") / col("n3tok")) *
-      (log(pHiSeen) - log(bow3 * pLowSeen)), 9)
-  }
-
-  /** The explicit-entry loss table of the pruned TRIGRAM model —
-    * [[knPruneEntries]] one order up: (w1, w2, w3, c123, loss, kept)
-    * per trigram type of the [[kn3LogLik]] model over `train`. */
-  def kn3PruneEntries(train: DataFrame, eps: Double,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    val c123 = docTrigrams(train, idCol, textCol)
-      .groupBy("w1", "w2", "w3").agg(sum("n").as("c123")).persist()
-    try {
-      val hist12 = c123.groupBy("w1", "w2")
-        .agg(sum("c123").as("c12dot"), count(lit(1)).as("nf12"))
-      val chat = c123.groupBy("w2", "w3").agg(count(lit(1)).as("chat"))
-      val histHat = chat.groupBy("w2")
-        .agg(sum("chat").as("chatdot"), count(lit(1)).as("nfhat"))
-      val cont = chat.groupBy("w3").agg(count(lit(1)).as("nb"))
-      val tot3 = c123.agg(
-        sum(when(col("c123") === 1, 1L).otherwise(0L)).as("t_n1"),
-        sum(when(col("c123") === 2, 1L).otherwise(0L)).as("t_n2"),
-        sum(col("c123")).as("n3tok"))
-      val totHat = chat.agg(count(lit(1)).as("b"),
-        sum(when(col("chat") === 1, 1L).otherwise(0L)).as("h_n1"),
-        sum(when(col("chat") === 2, 1L).otherwise(0L)).as("h_n2"))
-      val d3 = when(col("t_n1") === 0, lit(0.5))
-        .otherwise(col("t_n1").cast("double") /
-          (col("t_n1") + lit(2) * col("t_n2")))
-      val d2 = when(col("h_n1") === 0, lit(0.5))
-        .otherwise(col("h_n1").cast("double") /
-          (col("h_n1") + lit(2) * col("h_n2")))
-      c123.join(hist12, Seq("w1", "w2")).join(chat, Seq("w2", "w3"))
-        .join(histHat, Seq("w2")).join(cont, Seq("w3"))
-        .crossJoin(broadcast(tot3.crossJoin(totHat)))
-        .withColumn("loss", kn3Loss(d3, d2))
-        .select(col("w1"), col("w2"), col("w3"), col("c123"), col("loss"),
-          (col("loss") >= eps).as("kept"))
-        .localCheckpoint(true)
-    } finally { c123.unpersist(false); () }
-  }
-
-  /** The shared pruned trigram-KN scoring stage. */
-  private def kn3PrunedScore(grams: DataFrame, c123Raw: DataFrame,
-                             eps: Double, scale: Int): DataFrame = {
-    val c123 = c123Raw.persist()
-    try {
-      val hist12 = c123.groupBy("w1", "w2")
-        .agg(sum("c123").as("c12dot"), count(lit(1)).as("nf12"))
-      val chat = c123.groupBy("w2", "w3").agg(count(lit(1)).as("chat"))
-        .persist()
-      try {
-        val histHat = chat.groupBy("w2")
-          .agg(sum("chat").as("chatdot"), count(lit(1)).as("nfhat"))
-        val cont = chat.groupBy("w3").agg(count(lit(1)).as("nb"))
-        val tot3 = c123.agg(
-          sum(when(col("c123") === 1, 1L).otherwise(0L)).as("t_n1"),
-          sum(when(col("c123") === 2, 1L).otherwise(0L)).as("t_n2"),
-          sum(col("c123")).as("n3tok"))
-        val totHat = chat.agg(count(lit(1)).as("b"),
-          sum(when(col("chat") === 1, 1L).otherwise(0L)).as("h_n1"),
-          sum(when(col("chat") === 2, 1L).otherwise(0L)).as("h_n2"))
-        val d3 = when(col("t_n1") === 0, lit(0.5))
-          .otherwise(col("t_n1").cast("double") /
-            (col("t_n1") + lit(2) * col("t_n2")))
-        val d2 = when(col("h_n1") === 0, lit(0.5))
-          .otherwise(col("h_n1").cast("double") /
-            (col("h_n1") + lit(2) * col("h_n2")))
-        val pcont = col("nb").cast("double") / col("b")
-        // the loss table over explicit entries (every joined quantity
-        // non-null there): the ONE shared kn3Loss definition. LAZY since
-        // r16 — its only consumer is the model-sized γ3 aggregate below;
-        // the scoring join re-evaluates the kept decision INLINE, so the
-        // old kept persist and the grams⋈kept join both drop out.
-        val kept = c123.join(hist12, Seq("w1", "w2"))
-          .join(chat, Seq("w2", "w3"))
-          .join(histHat, Seq("w2")).join(cont, Seq("w3"))
-          .crossJoin(broadcast(tot3.crossJoin(totHat)))
-          .withColumn("loss", kn3Loss(d3, d2))
-          .filter(col("loss") >= eps)
-        val gam = kept.groupBy("w1", "w2").agg(count(lit(1)).as("k"),
-          sum("c123").as("s123"), sum("chat").as("schat"),
-          sum("nb").as("snb"))
-        // γ3 rides on the trigram-history frame (same key): one (w1,w2)
-        // join in the scoring chain instead of two (guide §2.4)
-        val hist12g = hist12.join(gam, Seq("w1", "w2"), "left")
-        // scoring arms — the kn3Score expressions plus γ3
-        val pMid =
-          greatest(coalesce(col("chat"), lit(0L)).cast("double") - d2,
-              lit(0.0)) / col("chatdot") +
-            (d2 * col("nfhat") / col("chatdot")) * pcont
-        val pLow = when(col("nb").isNotNull && col("chatdot").isNotNull, pMid)
-          .when(col("nb").isNotNull && col("chatdot").isNull, pcont)
-        val sumPLowKept =
-          (col("schat").cast("double") - col("k") * d2) / col("chatdot") +
-            (d2 * col("nfhat") / col("chatdot")) *
-              (col("snb").cast("double") / col("b"))
-        val sumPHiKept =
-          (col("s123").cast("double") - col("k") * d3) / col("c12dot") +
-            (d3 * col("nf12") / col("c12dot")) * sumPLowKept
-        val den3 = lit(1.0) - sumPLowKept
-        val gamma3 = when(col("k").isNull, lit(1.0))
-          .when(den3 <= 0.0, lit(1.0))
-          .otherwise((lit(1.0) - sumPHiKept) / den3)
-        val pHiKept =
-          (col("c123").cast("double") - d3) / col("c12dot") +
-            (d3 * col("nf12") / col("c12dot")) * pLow
-        // the kept decision, inline: the SAME kn3Loss expression over
-        // the same joined integer columns ⇒ bit-identical loss, same
-        // decision; a gram with no explicit c123 entry nulls the
-        // comparison and skips the arm — the old missed-join behavior
-        val keptInline = kn3Loss(d3, d2) >= eps
-        grams
-          .join(c123, Seq("w1", "w2", "w3"), "left")
-          .join(hist12g, Seq("w1", "w2"), "left")
-          .join(chat, Seq("w2", "w3"), "left")
-          .join(histHat, Seq("w2"), "left")
-          .join(cont, Seq("w3"), "left")
-          .crossJoin(broadcast(tot3.crossJoin(totHat)))
-          .withColumn("p",
-            when(keptInline, pHiKept)
-              .when(col("c12dot").isNotNull && pLow.isNotNull,
-                gamma3 * pLow)
-              .otherwise(pLow))
-          .withColumn("lp", col("n") * log(col("p")))
-          .groupBy("doc_id")
-          .agg(sum("n").as("n_trigrams"),
-            coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-              .as("n_oov"),
-            coalesce(
-              round(sum("lp") /
-                sum(when(col("lp").isNotNull, col("n"))), scale),
-              lit(0.0)).as("avg_lp"))
-          .localCheckpoint(true)
-      } finally { chat.unpersist(false); () }
-    } finally { c123.unpersist(false); () }
-  }
-
-  /** Per-document (w1, w2, w3, n) adjacent-trigram counts — the
-    * three-token sibling of [[docBigrams]] (same bound-column
-    * discipline; <3-token docs contribute nothing). */
-  def docTrigrams(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame = {
-    val toks = col("__toks")
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
-      .filter(size(toks) >= 3)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(toks) - 3),
-          i => struct(element_at(toks, i + 1).as("w1"),
-                      element_at(toks, i + 2).as("w2"),
-                      element_at(toks, i + 3).as("w3")))).as("g"))
-      .select(col("doc_id"), col("g.w1"), col("g.w2"), col("g.w3"))
-      .groupBy("doc_id", "w1", "w2", "w3").agg(count(lit(1)).as("n"))
-  }
-
-  /** Corpus-level (w1, w2, w3, n) trigram counts with no document axis
-    * — the [[corpusBigrams]] shape one token wider, the partial
-    * [[graft.streaming.TrigramStream]] folds. */
-  def corpusTrigrams(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = col("__toks")
-    docs.select(split(col(textCol), " ").as("__toks"))
-      .filter(size(toks) >= 3)
-      .select(explode(transform(sequence(lit(0), size(toks) - 3),
-        i => struct(element_at(toks, i + 1).as("w1"),
-                    element_at(toks, i + 2).as("w2"),
-                    element_at(toks, i + 3).as("w3")))).as("g"))
-      .select(col("g.w1"), col("g.w2"), col("g.w3"))
-      .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("n"))
-  }
-
-  /** Average trigram log-likelihood under a TRIGRAM interpolated
-    * Kneser-Ney LM — the recursion [[knLogLik]] is the base case of,
-    * with the detail naive implementations get wrong: the MIDDLE order
-    * is estimated from CONTINUATION counts, not raw bigram counts
-    * (Chen & Goodman 1999 §3; ĉ(w2,w3) = N1+(·,w2,w3) = the number of
-    * distinct histories that precede the bigram — "how novel is this
-    * bigram as a continuation", not "how often did it occur"):
-    *
-    *   P(w3|w1w2)  = max(c(w1w2w3) − D3, 0)/c(w1w2·)
-    *                 + (D3 · N1+(w1w2,·)/c(w1w2·)) · P̂(w3|w2)
-    *   P̂(w3|w2)   = max(ĉ(w2,w3) − D2, 0)/ĉ(w2,·)
-    *                 + (D2 · N1+(w2,·)/ĉ(w2,·)) · P_cont(w3)
-    *   P_cont(w3)  = N1+(·,w3) / N1+(··)
-    *
-    * with every N1+ and ĉ read off the distinct-trigram type table
-    * (one source for the whole model — the oracle re-derives every
-    * frame from it), D3/D2 from the trigram / continuation-bigram
-    * count-of-counts. Every level telescopes to Σ P = 1 over the
-    * continuation vocabulary (spec-pinned at both orders).
-    *
-    * Back-off/OOV rule (the [[knLogLik]] discipline, one level
-    * deeper): unseen (w1,w2) history falls through to P̂(w3|w2);
-    * unseen w2 mid-history falls through to P_cont(w3); a w3 never
-    * seen as a continuation is OOV — excluded and counted.
-    * Self-scoring never hits any fall-through arm.
-    *
-    * Scale shape: model frames are trigram-type-table aggregations
-    * (map-side combinable, at most trigram-vocabulary-sized), scoring
-    * is count-frame equi-joins onto the per-doc trigram frame, the
-    * two count-of-counts rows broadcast. */
-  def kn3LogLik(docs: DataFrame, train: DataFrame,
-                idCol: String = "doc_id", textCol: String = "text",
-                scale: Int = 4): DataFrame = {
-    val grams = docTrigrams(docs, idCol, textCol).persist()
-    val trainGrams =
-      if (train eq docs) grams else docTrigrams(train, idCol, textCol).persist()
-    try kn3Score(grams,
-      trainGrams.groupBy("w1", "w2", "w3").agg(sum("n").as("c123")), scale)
-    finally {
-      grams.unpersist(false)
-      if (!(train eq docs)) trainGrams.unpersist(false): Unit
+    val n = (frames.size + 1) / 2
+    val levels = frames.init.grouped(2).toSeq.zipWithIndex
+    withDocGrams(docs, n, idCol, textCol) { grams =>
+      val joined = levels.foldLeft(grams) { case (df, (Seq(p, w), i)) =>
+        val ws = words(n).drop(i)
+        df.join(p.select(cols(ws) :+ col("p").as(s"__p$i"): _*), ws, "left")
+          .join(w.select(cols(ws.init) :+ col(w.columns.last).as(s"__w$i"): _*),
+            ws.init, "left")
+      }.join(frames.last, Seq(s"w$n"), "left")
+      // one level per projection, bottom up: each level is computed once
+      // per row instead of once per reference
+      val lower = col("__q")
+      val scored = levels.foldRight(joined.withColumn("__q", col("pcont"))) {
+        case ((_, i), df) =>
+          df.withColumn("__q", when(col(s"__p$i").isNotNull, col(s"__p$i"))
+            .when(col(s"__w$i").isNotNull && lower.isNotNull, col(s"__w$i") * lower)
+            .otherwise(lower))
+      }
+      perDoc(scored.withColumn("lp", col("n") * log(lower)), n, scale)
     }
-  }
-
-  /** [[kn3LogLik]] from an ALREADY-AGGREGATED (w1, w2, w3, n)
-    * trigram-count frame — [[knLogLikFromCounts]] one order higher, the
-    * seam the maintained store ([[graft.streaming.TrigramStream]])
-    * reads through: every frame of the two-level model — the trigram
-    * type table, both history totals, the continuation-bigram table,
-    * both count-of-counts discounts — is a pure function of the
-    * trigram-count multiset, which is ADDITIVE, so identical maintained
-    * counts force bit-identical scores and the maintained path answers
-    * the one-shot oracle verbatim (q204 gates it against q203's). */
-  def kn3LogLikFromCounts(docs: DataFrame, counts: DataFrame,
-                          idCol: String = "doc_id", textCol: String = "text",
-                          scale: Int = 4): DataFrame = {
-    val grams = docTrigrams(docs, idCol, textCol).persist()
-    try kn3Score(grams,
-      counts.groupBy("w1", "w2", "w3").agg(sum("n").as("c123")), scale)
-    finally { grams.unpersist(false); () }
-  }
-
-  /** The shared trigram-KN scoring stage over a per-doc trigram frame
-    * and the aggregated model counts (callers manage `grams`). */
-  private def kn3Score(grams: DataFrame, c123Raw: DataFrame,
-                       scale: Int): DataFrame = {
-    val c123 = c123Raw.persist()
-    try {
-        val hist12 = c123.groupBy("w1", "w2")
-          .agg(sum("c123").as("c12dot"), count(lit(1)).as("nf12"))
-        // the continuation-bigram table: ĉ(w2,w3) = distinct w1 count —
-        // one row per distinct (w1,w2,w3), so COUNT(*) per (w2,w3)
-        val chat = c123.groupBy("w2", "w3").agg(count(lit(1)).as("chat"))
-          .persist()
-        try {
-          val histHat = chat.groupBy("w2")
-            .agg(sum("chat").as("chatdot"), count(lit(1)).as("nfhat"))
-          val cont = chat.groupBy("w3").agg(count(lit(1)).as("nb"))
-          val tot3 = c123.agg(
-            sum(when(col("c123") === 1, 1L).otherwise(0L)).as("t_n1"),
-            sum(when(col("c123") === 2, 1L).otherwise(0L)).as("t_n2"))
-          val totHat = chat.agg(count(lit(1)).as("b"),
-            sum(when(col("chat") === 1, 1L).otherwise(0L)).as("h_n1"),
-            sum(when(col("chat") === 2, 1L).otherwise(0L)).as("h_n2"))
-          // n1 = 0 ⇒ D floors at 0.5 at BOTH levels (the [[knLogLik]]
-          // degenerate-discount guard)
-          val d3 = when(col("t_n1") === 0, lit(0.5))
-            .otherwise(col("t_n1").cast("double") /
-              (col("t_n1") + lit(2) * col("t_n2")))
-          val d2 = when(col("h_n1") === 0, lit(0.5))
-            .otherwise(col("h_n1").cast("double") /
-              (col("h_n1") + lit(2) * col("h_n2")))
-          val pcont = col("nb").cast("double") / col("b")
-          val pMid =
-            greatest(coalesce(col("chat"), lit(0L)).cast("double") - d2,
-                lit(0.0)) / col("chatdot") +
-              (d2 * col("nfhat") / col("chatdot")) * pcont
-          val pLow = when(col("nb").isNotNull && col("chatdot").isNotNull, pMid)
-            .when(col("nb").isNotNull && col("chatdot").isNull, pcont)
-          val pHi =
-            greatest(coalesce(col("c123"), lit(0L)).cast("double") - d3,
-                lit(0.0)) / col("c12dot") +
-              (d3 * col("nf12") / col("c12dot")) * pLow
-          val p = when(col("c12dot").isNotNull && pLow.isNotNull, pHi)
-            .otherwise(pLow) // unseen (w1,w2): full fall-through; OOV stays null
-          grams
-            .join(c123, Seq("w1", "w2", "w3"), "left")
-            .join(hist12, Seq("w1", "w2"), "left")
-            .join(chat, Seq("w2", "w3"), "left")
-            .join(histHat, Seq("w2"), "left")
-            .join(cont, Seq("w3"), "left")
-            .crossJoin(broadcast(tot3.crossJoin(totHat)))
-            .withColumn("lp", col("n") * log(p))
-            .groupBy("doc_id")
-            .agg(sum("n").as("n_trigrams"),
-              coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-                .as("n_oov"),
-              coalesce(
-                round(sum("lp") /
-                  sum(when(col("lp").isNotNull, col("n"))), scale),
-                lit(0.0)).as("avg_lp"))
-            .localCheckpoint(true)
-        } finally { chat.unpersist(false); () }
-    } finally { c123.unpersist(false); () }
-  }
-
-  /** Per-document (w1..w4, n) adjacent-4-gram counts — [[docTrigrams]]
-    * one token wider (<4-token docs contribute nothing). */
-  def docQuadgrams(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    val toks = col("__toks")
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
-      .filter(size(toks) >= 4)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(toks) - 4),
-          i => struct(element_at(toks, i + 1).as("w1"),
-                      element_at(toks, i + 2).as("w2"),
-                      element_at(toks, i + 3).as("w3"),
-                      element_at(toks, i + 4).as("w4")))).as("g"))
-      .select(col("doc_id"), col("g.w1"), col("g.w2"), col("g.w3"), col("g.w4"))
-      .groupBy("doc_id", "w1", "w2", "w3", "w4").agg(count(lit(1)).as("n"))
-  }
-
-  /** Corpus-level (w1..w4, n) 4-gram counts with no document axis —
-    * the additive sufficient statistic of the three-level model (the
-    * [[corpusTrigrams]] shape one token wider; a maintained store at
-    * this order would fold it exactly as [[graft.streaming
-    * .TrigramStream]] folds trigrams — the pattern carries verbatim). */
-  def corpusQuadgrams(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = col("__toks")
-    docs.select(split(col(textCol), " ").as("__toks"))
-      .filter(size(toks) >= 4)
-      .select(explode(transform(sequence(lit(0), size(toks) - 4),
-        i => struct(element_at(toks, i + 1).as("w1"),
-                    element_at(toks, i + 2).as("w2"),
-                    element_at(toks, i + 3).as("w3"),
-                    element_at(toks, i + 4).as("w4")))).as("g"))
-      .select(col("g.w1"), col("g.w2"), col("g.w3"), col("g.w4"))
-      .groupBy("w1", "w2", "w3", "w4").agg(count(lit(1)).as("n"))
-  }
-
-  /** Average 4-gram log-likelihood under a 4-GRAM interpolated
-    * Kneser-Ney LM — the [[kn3LogLik]] recursion instantiated one
-    * order higher (Chen & Goodman 1999 §3; production KenLM defaults
-    * to order 5, and this is the step that proves the engine's
-    * recursion generalizes — each added order contributes one more
-    * continuation-count table and one more discount, nothing else):
-    *
-    *   P(w4|w1w2w3) = max(c(w1..w4) − D4, 0)/c(w1w2w3·)
-    *                  + (D4 · N1+(w1w2w3,·)/c(w1w2w3·)) · P̂3(w4|w2w3)
-    *   P̂3(w4|w2w3) = max(ĉ3(w2w3w4) − D3, 0)/ĉ3(w2w3·)
-    *                  + (D3 · N1+(w2w3,·)/ĉ3(w2w3·)) · P̂2(w4|w3)
-    *   P̂2(w4|w3)   = max(ĉ2(w3w4) − D2, 0)/ĉ2(w3·)
-    *                  + (D2 · N1+(w3,·)/ĉ2(w3·)) · P_cont(w4)
-    *   P_cont(w4)   = N1+(·,w4) / N1+(··)
-    *
-    * with ĉ3(w2w3w4) = N1+(·,w2w3w4) read off the distinct-4-gram type
-    * table, ĉ2(w3w4) = N1+(·,·w3w4) read off the ĉ3 TYPE table (the
-    * continuation-of-continuations count — marginalizing the ĉ3 table,
-    * not the raw counts, is what keeps each level a type count), and
-    * D4/D3/D2 from the three tables' count-of-counts (each flooring at
-    * 0.5 when its n1 = 0, the [[knLogLik]] guard). Every level
-    * telescopes to Σ P = 1 over the continuation vocabulary
-    * (spec-pinned).
-    *
-    * Back-off/OOV rule (the [[kn3LogLik]] discipline, one level
-    * deeper): unseen (w1,w2,w3) falls through to P̂3; unseen (w2,w3)
-    * mid-history falls through to P̂2; unseen w3 falls through to
-    * P_cont; a w4 never seen as a continuation is OOV — excluded and
-    * counted. Self-scoring never hits any fall-through arm.
-    *
-    * Scale shape: [[kn3LogLik]]'s — every model frame is an
-    * aggregation of the 4-gram type table (map-side combinable, at
-    * most 4-gram-vocabulary-sized), scoring is count-frame equi-joins
-    * onto the per-doc 4-gram frame, the three count-of-counts rows
-    * broadcast. Output: (doc_id, n_quadgrams, n_oov, avg_lp). */
-  def kn4LogLik(docs: DataFrame, train: DataFrame,
-                idCol: String = "doc_id", textCol: String = "text",
-                scale: Int = 4): DataFrame = {
-    val grams = docQuadgrams(docs, idCol, textCol).persist()
-    val trainGrams =
-      if (train eq docs) grams else docQuadgrams(train, idCol, textCol).persist()
-    try kn4Score(grams, trainGrams.groupBy("w1", "w2", "w3", "w4")
-      .agg(sum("n").as("c1234")), scale)
-    finally {
-      grams.unpersist(false)
-      if (!(train eq docs)) trainGrams.unpersist(false): Unit
-    }
-  }
-
-  /** [[kn4LogLik]] from an ALREADY-AGGREGATED (w1..w4, n) count frame —
-    * the from-counts seam at order 4 (VERDICT r14 #6): the whole
-    * three-level model is a pure function of the 4-gram count multiset
-    * (every ĉ, every N1+, every count-of-counts derives from the type
-    * table), which is ADDITIVE, so a maintained store at this order
-    * reads through here exactly as [[kn3LogLikFromCounts]]'s does. */
-  def kn4LogLikFromCounts(docs: DataFrame, counts: DataFrame,
-                          idCol: String = "doc_id", textCol: String = "text",
-                          scale: Int = 4): DataFrame = {
-    val grams = docQuadgrams(docs, idCol, textCol).persist()
-    try kn4Score(grams, counts.groupBy("w1", "w2", "w3", "w4")
-      .agg(sum("n").as("c1234")), scale)
-    finally { grams.unpersist(false); () }
-  }
-
-  /** The per-token loss of one explicit 4-gram entry (evaluated over a
-    * frame carrying c1234/c123dot/nf123/c3/c3dot/nf23/c2/c2dot/nf3/nb/
-    * b/n4tok) — ONE definition shared by the scoring prune and the
-    * public entries table, the [[kn3Loss]] discipline one order up. */
-  private def kn4Loss(d4: Column, d3: Column, d2: Column): Column = {
-    val pcont = col("nb").cast("double") / col("b")
-    val pL2Seen = (col("c2").cast("double") - d2) / col("c2dot") +
-      (d2 * col("nf3") / col("c2dot")) * pcont
-    val pL3Seen = (col("c3").cast("double") - d3) / col("c3dot") +
-      (d3 * col("nf23") / col("c3dot")) * pL2Seen
-    val bow4 = d4 * col("nf123") / col("c123dot")
-    val pHiSeen = (col("c1234").cast("double") - d4) / col("c123dot") +
-      bow4 * pL3Seen
-    round((col("c1234").cast("double") / col("n4tok")) *
-      (log(pHiSeen) - log(bow4 * pL3Seen)), 9)
-  }
-
-  /** The explicit-entry loss table of the pruned 4-GRAM model —
-    * [[kn3PruneEntries]] one order up: (w1..w4, c1234, loss, kept) per
-    * 4-gram type of the [[kn4LogLik]] model over `train`. */
-  def kn4PruneEntries(train: DataFrame, eps: Double,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    val c1234 = docQuadgrams(train, idCol, textCol)
-      .groupBy("w1", "w2", "w3", "w4").agg(sum("n").as("c1234")).persist()
-    try {
-      val h123 = c1234.groupBy("w1", "w2", "w3")
-        .agg(sum("c1234").as("c123dot"), count(lit(1)).as("nf123"))
-      val c3 = c1234.groupBy("w2", "w3", "w4").agg(count(lit(1)).as("c3"))
-      val h23 = c3.groupBy("w2", "w3")
-        .agg(sum("c3").as("c3dot"), count(lit(1)).as("nf23"))
-      val c2 = c3.groupBy("w3", "w4").agg(count(lit(1)).as("c2"))
-      val h3 = c2.groupBy("w3")
-        .agg(sum("c2").as("c2dot"), count(lit(1)).as("nf3"))
-      val cont = c2.groupBy("w4").agg(count(lit(1)).as("nb"))
-      val tot4 = c1234.agg(
-        sum(when(col("c1234") === 1, 1L).otherwise(0L)).as("q_n1"),
-        sum(when(col("c1234") === 2, 1L).otherwise(0L)).as("q_n2"),
-        sum(col("c1234")).as("n4tok"))
-      val totC3 = c3.agg(
-        sum(when(col("c3") === 1, 1L).otherwise(0L)).as("r_n1"),
-        sum(when(col("c3") === 2, 1L).otherwise(0L)).as("r_n2"))
-      val totC2 = c2.agg(count(lit(1)).as("b"),
-        sum(when(col("c2") === 1, 1L).otherwise(0L)).as("s_n1"),
-        sum(when(col("c2") === 2, 1L).otherwise(0L)).as("s_n2"))
-      val d4 = when(col("q_n1") === 0, lit(0.5))
-        .otherwise(col("q_n1").cast("double") /
-          (col("q_n1") + lit(2) * col("q_n2")))
-      val d3 = when(col("r_n1") === 0, lit(0.5))
-        .otherwise(col("r_n1").cast("double") /
-          (col("r_n1") + lit(2) * col("r_n2")))
-      val d2 = when(col("s_n1") === 0, lit(0.5))
-        .otherwise(col("s_n1").cast("double") /
-          (col("s_n1") + lit(2) * col("s_n2")))
-      c1234.join(h123, Seq("w1", "w2", "w3")).join(c3, Seq("w2", "w3", "w4"))
-        .join(h23, Seq("w2", "w3")).join(c2, Seq("w3", "w4"))
-        .join(h3, Seq("w3")).join(cont, Seq("w4"))
-        .crossJoin(broadcast(tot4.crossJoin(totC3).crossJoin(totC2)))
-        .withColumn("loss", kn4Loss(d4, d3, d2))
-        .select(col("w1"), col("w2"), col("w3"), col("w4"), col("c1234"),
-          col("loss"), (col("loss") >= eps).as("kept"))
-        .localCheckpoint(true)
-    } finally { c1234.unpersist(false); () }
-  }
-
-  /** Per-document scoring under the entropy-pruned 4-GRAM
-    * interpolated-KN model — [[kn3PrunedLogLik]]'s criterion one order
-    * up (Stolcke 1998 at the top of the three-level recursion). The γ
-    * telescope stays integer-derivable because the (w1,w2,w3) history
-    * fixes BOTH lower histories (w2,w3) and w3: every kept
-    * continuation's P̂3 shares the (ĉ3(w2w3·), N1+(w2w3,·))
-    * denominators and its P̂2 the (ĉ2(w3·), N1+(w3,·)) ones, so
-    *
-    *   Σ_kept P̂2 = (Σĉ2 − k·D2)/ĉ2(w3·) + (D2·N1+(w3,·)/ĉ2(w3·))·(Σnb/b)
-    *   Σ_kept P̂3 = (Σĉ3 − k·D3)/ĉ3(w2w3·)
-    *                + (D3·N1+(w2w3,·)/ĉ3(w2w3·))·Σ_kept P̂2
-    *
-    * — per-history integer aggregates (k, Σc1234, Σĉ3, Σĉ2, Σnb) all
-    * the way down; no floating-point accumulation order exists
-    * anywhere. Scoring: kept entry → pHi; pruned or unseen w4 under a
-    * seen (w1,w2,w3) → γ4·P̂3 (with P̂3's own fall-throughs intact);
-    * unseen (w1,w2,w3) → P̂3 directly; deeper fall-throughs and OOV as
-    * [[kn4LogLik]]. Self-scoring exercises the γ4 arm on every pruned
-    * entry. Output: (doc_id, n_quadgrams, n_oov, avg_lp). */
-  def kn4PrunedLogLik(docs: DataFrame, train: DataFrame, eps: Double,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      scale: Int = 4): DataFrame = {
-    val grams = docQuadgrams(docs, idCol, textCol).persist()
-    val trainGrams =
-      if (train eq docs) grams else docQuadgrams(train, idCol, textCol).persist()
-    try kn4PrunedScore(grams, trainGrams.groupBy("w1", "w2", "w3", "w4")
-      .agg(sum("n").as("c1234")), eps, scale)
-    finally {
-      grams.unpersist(false)
-      if (!(train eq docs)) trainGrams.unpersist(false): Unit
-    }
-  }
-
-  /** [[kn4PrunedLogLik]] from an aggregated (w1..w4, n) frame — the
-    * maintained-store seam (q217 gates the store-derived pruned 4-gram
-    * model against q216's one-shot oracle verbatim). */
-  def kn4PrunedLogLikFromCounts(docs: DataFrame, counts: DataFrame,
-                                eps: Double, idCol: String = "doc_id",
-                                textCol: String = "text",
-                                scale: Int = 4): DataFrame = {
-    val grams = docQuadgrams(docs, idCol, textCol).persist()
-    try kn4PrunedScore(grams, counts.groupBy("w1", "w2", "w3", "w4")
-      .agg(sum("n").as("c1234")), eps, scale)
-    finally { grams.unpersist(false); () }
-  }
-
-  /** The shared pruned 4-gram-KN scoring stage. */
-  private def kn4PrunedScore(grams: DataFrame, c1234Raw: DataFrame,
-                             eps: Double, scale: Int): DataFrame = {
-    val c1234 = c1234Raw.persist()
-    try {
-      val h123 = c1234.groupBy("w1", "w2", "w3")
-        .agg(sum("c1234").as("c123dot"), count(lit(1)).as("nf123"))
-      val c3 = c1234.groupBy("w2", "w3", "w4").agg(count(lit(1)).as("c3"))
-        .persist()
-      try {
-        val h23 = c3.groupBy("w2", "w3")
-          .agg(sum("c3").as("c3dot"), count(lit(1)).as("nf23"))
-        val c2 = c3.groupBy("w3", "w4").agg(count(lit(1)).as("c2"))
-          .persist()
-        try {
-          val h3 = c2.groupBy("w3")
-            .agg(sum("c2").as("c2dot"), count(lit(1)).as("nf3"))
-          val cont = c2.groupBy("w4").agg(count(lit(1)).as("nb"))
-          val tot4 = c1234.agg(
-            sum(when(col("c1234") === 1, 1L).otherwise(0L)).as("q_n1"),
-            sum(when(col("c1234") === 2, 1L).otherwise(0L)).as("q_n2"),
-            sum(col("c1234")).as("n4tok"))
-          val totC3 = c3.agg(
-            sum(when(col("c3") === 1, 1L).otherwise(0L)).as("r_n1"),
-            sum(when(col("c3") === 2, 1L).otherwise(0L)).as("r_n2"))
-          val totC2 = c2.agg(count(lit(1)).as("b"),
-            sum(when(col("c2") === 1, 1L).otherwise(0L)).as("s_n1"),
-            sum(when(col("c2") === 2, 1L).otherwise(0L)).as("s_n2"))
-          val d4 = when(col("q_n1") === 0, lit(0.5))
-            .otherwise(col("q_n1").cast("double") /
-              (col("q_n1") + lit(2) * col("q_n2")))
-          val d3 = when(col("r_n1") === 0, lit(0.5))
-            .otherwise(col("r_n1").cast("double") /
-              (col("r_n1") + lit(2) * col("r_n2")))
-          val d2 = when(col("s_n1") === 0, lit(0.5))
-            .otherwise(col("s_n1").cast("double") /
-              (col("s_n1") + lit(2) * col("s_n2")))
-          val pcont = col("nb").cast("double") / col("b")
-          // the kept set via the ONE shared kn4Loss definition. LAZY
-          // since r16 — its only consumer is the model-sized γ4
-          // aggregate below; the scoring join re-evaluates the kept
-          // decision INLINE, so the old kept persist and the grams⋈kept
-          // join both drop out.
-          val kept = c1234.join(h123, Seq("w1", "w2", "w3"))
-            .join(c3, Seq("w2", "w3", "w4"))
-            .join(h23, Seq("w2", "w3")).join(c2, Seq("w3", "w4"))
-            .join(h3, Seq("w3")).join(cont, Seq("w4"))
-            .crossJoin(broadcast(tot4.crossJoin(totC3).crossJoin(totC2)))
-            .withColumn("loss", kn4Loss(d4, d3, d2))
-            .filter(col("loss") >= eps)
-          val gam = kept.groupBy("w1", "w2", "w3")
-            .agg(count(lit(1)).as("k"), sum("c1234").as("s1234"),
-              sum("c3").as("s3"), sum("c2").as("s2"),
-              sum("nb").as("snb"))
-          // γ4 rides on the (w1,w2,w3) history frame (same key): one
-          // history join in the scoring chain instead of two (guide §2.4)
-          val h123g = h123.join(gam, Seq("w1", "w2", "w3"), "left")
-          // scoring arms — the kn4Score expressions plus γ4
-          val pL2 =
-            greatest(coalesce(col("c2"), lit(0L)).cast("double") - d2,
-                lit(0.0)) / col("c2dot") +
-              (d2 * col("nf3") / col("c2dot")) * pcont
-          val pLow2 = when(col("nb").isNotNull && col("c2dot").isNotNull, pL2)
-            .when(col("nb").isNotNull && col("c2dot").isNull, pcont)
-          val pL3 =
-            greatest(coalesce(col("c3"), lit(0L)).cast("double") - d3,
-                lit(0.0)) / col("c3dot") +
-              (d3 * col("nf23") / col("c3dot")) * pLow2
-          val pLow3 = when(col("c3dot").isNotNull && pLow2.isNotNull, pL3)
-            .otherwise(pLow2)
-          val sumPL2Kept =
-            (col("s2").cast("double") - col("k") * d2) / col("c2dot") +
-              (d2 * col("nf3") / col("c2dot")) *
-                (col("snb").cast("double") / col("b"))
-          val sumPL3Kept =
-            (col("s3").cast("double") - col("k") * d3) / col("c3dot") +
-              (d3 * col("nf23") / col("c3dot")) * sumPL2Kept
-          val sumPHiKept =
-            (col("s1234").cast("double") - col("k") * d4) / col("c123dot") +
-              (d4 * col("nf123") / col("c123dot")) * sumPL3Kept
-          val den4 = lit(1.0) - sumPL3Kept
-          val gamma4 = when(col("k").isNull, lit(1.0))
-            .when(den4 <= 0.0, lit(1.0))
-            .otherwise((lit(1.0) - sumPHiKept) / den4)
-          val pHiKept =
-            (col("c1234").cast("double") - d4) / col("c123dot") +
-              (d4 * col("nf123") / col("c123dot")) * pLow3
-          // the kept decision, inline: the SAME kn4Loss expression over
-          // the same joined integer columns ⇒ bit-identical loss, same
-          // decision; a gram with no explicit c1234 entry nulls the
-          // comparison and skips the arm — the old missed-join behavior
-          val keptInline = kn4Loss(d4, d3, d2) >= eps
-          grams
-            .join(c1234, Seq("w1", "w2", "w3", "w4"), "left")
-            .join(h123g, Seq("w1", "w2", "w3"), "left")
-            .join(c3, Seq("w2", "w3", "w4"), "left")
-            .join(h23, Seq("w2", "w3"), "left")
-            .join(c2, Seq("w3", "w4"), "left")
-            .join(h3, Seq("w3"), "left")
-            .join(cont, Seq("w4"), "left")
-            .crossJoin(broadcast(tot4.crossJoin(totC3).crossJoin(totC2)))
-            .withColumn("p",
-              when(keptInline, pHiKept)
-                .when(col("c123dot").isNotNull && pLow3.isNotNull,
-                  gamma4 * pLow3)
-                .otherwise(pLow3))
-            .withColumn("lp", col("n") * log(col("p")))
-            .groupBy("doc_id")
-            .agg(sum("n").as("n_quadgrams"),
-              coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-                .as("n_oov"),
-              coalesce(
-                round(sum("lp") /
-                  sum(when(col("lp").isNotNull, col("n"))), scale),
-                lit(0.0)).as("avg_lp"))
-            .localCheckpoint(true)
-        } finally { c2.unpersist(false); () }
-      } finally { c3.unpersist(false); () }
-    } finally { c1234.unpersist(false); () }
-  }
-
-  /** The entropy-pruned 4-GRAM KN model as seven BOUNDED frames — the
-    * serving artifact at q216's order ([[graft.ext.KnModel]] writes and
-    * loads them; the columnar equivalent of a pruned 4-gram ARPA
-    * file's sections):
-    *
-    *  - entries    (w1..w4, p): kept explicit probabilities;
-    *  - backoff123 (w1,w2,w3, gamma): renormalized γ4 per seen trigram
-    *    history (1.0 where nothing was kept);
-    *  - mid3       (w2,w3,w4, p): the level-3 continuation model
-    *    P̂3(w4|w2w3) per seen ĉ3 row;
-    *  - backoff23  (w2,w3, bow): its back-off weight D3·N1+(w2w3,·)/ĉ3(w2w3·);
-    *  - mid2       (w3,w4, p): the level-2 model P̂2(w4|w3) per seen ĉ2 row;
-    *  - backoff2   (w3, bow): its back-off weight D2·N1+(w3,·)/ĉ2(w3·);
-    *  - cont       (w4, pcont): the continuation distribution.
-    *
-    * The q210 fidelity contract carries: every stored double is the
-    * in-memory scorer's value, every unseen arm reduces bit-exactly to
-    * bow·lower (+0.0 + x = x), so [[kn4ScoreFromModel]] equals
-    * [[kn4PrunedLogLik]] EXACTLY — q218 drives export → load → score
-    * against q216's raw-text oracle. All frames are at most
-    * 4-gram-vocabulary-sized. */
-  def kn4PrunedModelFrames(counts: DataFrame, eps: Double)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-         DataFrame, DataFrame) =
-    withKn4PrunedModelFrames(counts, eps)((e, b123, m3, b23, m2, b2, c) =>
-      (e.localCheckpoint(true), b123.localCheckpoint(true),
-        m3.localCheckpoint(true), b23.localCheckpoint(true),
-        m2.localCheckpoint(true), b2.localCheckpoint(true),
-        c.localCheckpoint(true)))
-
-  /** [[withKnPrunedModelFrames]] at order 4: lazy frames handed to `use`
-    * inside the cache scope — the export path's no-double-materialization
-    * seam (r16). */
-  private[graft] def withKn4PrunedModelFrames[T](counts: DataFrame, eps: Double)(
-      use: (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-            DataFrame, DataFrame) => T): T = {
-    val c1234 = counts.groupBy("w1", "w2", "w3", "w4")
-      .agg(sum("n").as("c1234")).persist()
-    try {
-      val h123 = c1234.groupBy("w1", "w2", "w3")
-        .agg(sum("c1234").as("c123dot"), count(lit(1)).as("nf123"))
-      val c3 = c1234.groupBy("w2", "w3", "w4").agg(count(lit(1)).as("c3"))
-        .persist()
-      try {
-        val h23 = c3.groupBy("w2", "w3")
-          .agg(sum("c3").as("c3dot"), count(lit(1)).as("nf23"))
-        val c2 = c3.groupBy("w3", "w4").agg(count(lit(1)).as("c2"))
-          .persist()
-        try {
-          val h3 = c2.groupBy("w3")
-            .agg(sum("c2").as("c2dot"), count(lit(1)).as("nf3"))
-          val cont = c2.groupBy("w4").agg(count(lit(1)).as("nb"))
-          val tot4 = c1234.agg(
-            sum(when(col("c1234") === 1, 1L).otherwise(0L)).as("q_n1"),
-            sum(when(col("c1234") === 2, 1L).otherwise(0L)).as("q_n2"),
-            sum(col("c1234")).as("n4tok"))
-          val totC3 = c3.agg(
-            sum(when(col("c3") === 1, 1L).otherwise(0L)).as("r_n1"),
-            sum(when(col("c3") === 2, 1L).otherwise(0L)).as("r_n2"))
-          val totC2 = c2.agg(count(lit(1)).as("b"),
-            sum(when(col("c2") === 1, 1L).otherwise(0L)).as("s_n1"),
-            sum(when(col("c2") === 2, 1L).otherwise(0L)).as("s_n2"))
-          val d4 = when(col("q_n1") === 0, lit(0.5))
-            .otherwise(col("q_n1").cast("double") /
-              (col("q_n1") + lit(2) * col("q_n2")))
-          val d3 = when(col("r_n1") === 0, lit(0.5))
-            .otherwise(col("r_n1").cast("double") /
-              (col("r_n1") + lit(2) * col("r_n2")))
-          val d2 = when(col("s_n1") === 0, lit(0.5))
-            .otherwise(col("s_n1").cast("double") /
-              (col("s_n1") + lit(2) * col("s_n2")))
-          val pcont = col("nb").cast("double") / col("b")
-          // the scorer's exact expression shapes (greatest/coalesce
-          // kept even where the joined rows make them identities)
-          val pL2 =
-            greatest(coalesce(col("c2"), lit(0L)).cast("double") - d2,
-                lit(0.0)) / col("c2dot") +
-              (d2 * col("nf3") / col("c2dot")) * pcont
-          val pL3 =
-            greatest(coalesce(col("c3"), lit(0L)).cast("double") - d3,
-                lit(0.0)) / col("c3dot") +
-              (d3 * col("nf23") / col("c3dot")) * pL2
-          val kept = c1234.join(h123, Seq("w1", "w2", "w3"))
-            .join(c3, Seq("w2", "w3", "w4"))
-            .join(h23, Seq("w2", "w3")).join(c2, Seq("w3", "w4"))
-            .join(h3, Seq("w3")).join(cont, Seq("w4"))
-            .crossJoin(broadcast(tot4.crossJoin(totC3).crossJoin(totC2)))
-            .withColumn("loss", kn4Loss(d4, d3, d2))
-            .filter(col("loss") >= eps)
-            .persist()
-          try {
-            val pHiKept =
-              (col("c1234").cast("double") - d4) / col("c123dot") +
-                (d4 * col("nf123") / col("c123dot")) * pL3
-            val entries = kept.select(col("w1"), col("w2"), col("w3"),
-              col("w4"), pHiKept.as("p"))
-            val gam = kept.groupBy("w1", "w2", "w3")
-              .agg(count(lit(1)).as("k"), sum("c1234").as("s1234"),
-                sum("c3").as("s3"), sum("c2").as("s2"),
-                sum("nb").as("snb"))
-            val sumPL2Kept =
-              (col("s2").cast("double") - col("k") * d2) / col("c2dot") +
-                (d2 * col("nf3") / col("c2dot")) *
-                  (col("snb").cast("double") / col("b"))
-            val sumPL3Kept =
-              (col("s3").cast("double") - col("k") * d3) / col("c3dot") +
-                (d3 * col("nf23") / col("c3dot")) * sumPL2Kept
-            val sumPHiKept =
-              (col("s1234").cast("double") - col("k") * d4) / col("c123dot") +
-                (d4 * col("nf123") / col("c123dot")) * sumPL3Kept
-            val den4 = lit(1.0) - sumPL3Kept
-            val gamma4 = when(col("k").isNull, lit(1.0))
-              .when(den4 <= 0.0, lit(1.0))
-              .otherwise((lit(1.0) - sumPHiKept) / den4)
-            // γ's sums reference the lower histories' denominators —
-            // every (w1,w2,w3) history reaches h23/h3 (its own (w2,w3)
-            // and w3 are seen by construction)
-            val backoff123 = h123
-              .join(gam, Seq("w1", "w2", "w3"), "left")
-              .join(h23, Seq("w2", "w3")).join(h3, Seq("w3"))
-              .crossJoin(broadcast(tot4.crossJoin(totC3).crossJoin(totC2)))
-              .select(col("w1"), col("w2"), col("w3"), gamma4.as("gamma"))
-            val mid3 = c3.join(h23, Seq("w2", "w3")).join(c2, Seq("w3", "w4"))
-              .join(h3, Seq("w3")).join(cont, Seq("w4"))
-              .crossJoin(broadcast(totC3)).crossJoin(broadcast(totC2))
-              .select(col("w2"), col("w3"), col("w4"), pL3.as("p"))
-            val backoff23 = h23.crossJoin(broadcast(totC3))
-              .select(col("w2"), col("w3"),
-                (d3 * col("nf23") / col("c3dot")).as("bow"))
-            val mid2 = c2.join(h3, Seq("w3")).join(cont, Seq("w4"))
-              .crossJoin(broadcast(totC2))
-              .select(col("w3"), col("w4"), pL2.as("p"))
-            val backoff2 = h3.crossJoin(broadcast(totC2))
-              .select(col("w3"),
-                (d2 * col("nf3") / col("c2dot")).as("bow"))
-            val contP = cont.crossJoin(broadcast(totC2))
-              .select(col("w4"), pcont.as("pcont"))
-            use(entries, backoff123, mid3, backoff23, mid2, backoff2, contP)
-          } finally { kept.unpersist(false); () }
-        } finally { c2.unpersist(false); () }
-      } finally { c3.unpersist(false); () }
-    } finally { c1234.unpersist(false); () }
-  }
-
-  /** Score documents against a LOADED pruned 4-GRAM model artifact —
-    * seven equi-joins against the bounded frames, bit-identical to
-    * [[kn4PrunedLogLik]] (the [[kn4PrunedModelFrames]] fidelity
-    * contract). Arms: kept entry → p; γ stored for the (w1,w2,w3)
-    * history → γ·pLow3, else pLow3; pLow3 = stored mid3 p if (w2,w3,w4)
-    * stored, else bow23·pLow2 if (w2,w3) stored, else pLow2; pLow2 =
-    * stored mid2 p if (w3,w4) stored, else bow2·pcont if w3 stored,
-    * else pcont if w4 stored, else OOV. */
-  def kn4ScoreFromModel(docs: DataFrame, entries: DataFrame,
-                        backoff123: DataFrame, mid3: DataFrame,
-                        backoff23: DataFrame, mid2: DataFrame,
-                        backoff2: DataFrame, contP: DataFrame,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        scale: Int = 4): DataFrame = {
-    val grams = docQuadgrams(docs, idCol, textCol).persist()
-    try {
-      val plow2 = when(col("__m2").isNotNull, col("__m2"))
-        .when(col("__b2").isNotNull && col("pcont").isNotNull,
-          col("__b2") * col("pcont"))
-        .when(col("__b2").isNull && col("pcont").isNotNull, col("pcont"))
-      val plow3 = when(col("__m3").isNotNull, col("__m3"))
-        .when(col("__b23").isNotNull && plow2.isNotNull,
-          col("__b23") * plow2)
-        .otherwise(plow2)
-      grams
-        .join(entries.select(col("w1"), col("w2"), col("w3"), col("w4"),
-          col("p").as("__pe")), Seq("w1", "w2", "w3", "w4"), "left")
-        .join(backoff123.select(col("w1"), col("w2"), col("w3"),
-          col("gamma")), Seq("w1", "w2", "w3"), "left")
-        .join(mid3.select(col("w2"), col("w3"), col("w4"),
-          col("p").as("__m3")), Seq("w2", "w3", "w4"), "left")
-        .join(backoff23.select(col("w2"), col("w3"),
-          col("bow").as("__b23")), Seq("w2", "w3"), "left")
-        .join(mid2.select(col("w3"), col("w4"), col("p").as("__m2")),
-          Seq("w3", "w4"), "left")
-        .join(backoff2.select(col("w3"), col("bow").as("__b2")),
-          Seq("w3"), "left")
-        .join(contP, Seq("w4"), "left")
-        .withColumn("__plow3", plow3)
-        .withColumn("__p",
-          when(col("__pe").isNotNull, col("__pe"))
-            .when(col("gamma").isNotNull && col("__plow3").isNotNull,
-              col("gamma") * col("__plow3"))
-            .otherwise(col("__plow3")))
-        .withColumn("lp", col("n") * log(col("__p")))
-        .groupBy("doc_id")
-        .agg(sum("n").as("n_quadgrams"),
-          coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-            .as("n_oov"),
-          coalesce(
-            round(sum("lp") /
-              sum(when(col("lp").isNotNull, col("n"))), scale),
-            lit(0.0)).as("avg_lp"))
-        .localCheckpoint(true)
-    } finally { grams.unpersist(false); () }
-  }
-
-  /** The shared 4-gram-KN scoring stage (callers manage `grams`). */
-  private def kn4Score(grams: DataFrame, c1234Raw: DataFrame,
-                       scale: Int): DataFrame = {
-    val c1234 = c1234Raw.persist()
-    try {
-      val h123 = c1234.groupBy("w1", "w2", "w3")
-        .agg(sum("c1234").as("c123dot"), count(lit(1)).as("nf123"))
-      // level-3 continuation table: ĉ3(w2,w3,w4) = distinct-w1 count =
-      // COUNT(*) per (w2,w3,w4) over the 4-gram TYPE table
-      val c3 = c1234.groupBy("w2", "w3", "w4").agg(count(lit(1)).as("c3"))
-        .persist()
-      try {
-        val h23 = c3.groupBy("w2", "w3")
-          .agg(sum("c3").as("c3dot"), count(lit(1)).as("nf23"))
-        // level-2: ĉ2(w3,w4) = distinct-w2 count over the ĉ3 TYPE table
-        val c2 = c3.groupBy("w3", "w4").agg(count(lit(1)).as("c2"))
-          .persist()
-        try {
-          val h3 = c2.groupBy("w3")
-            .agg(sum("c2").as("c2dot"), count(lit(1)).as("nf3"))
-          val cont = c2.groupBy("w4").agg(count(lit(1)).as("nb"))
-          val tot4 = c1234.agg(
-            sum(when(col("c1234") === 1, 1L).otherwise(0L)).as("q_n1"),
-            sum(when(col("c1234") === 2, 1L).otherwise(0L)).as("q_n2"))
-          val totC3 = c3.agg(
-            sum(when(col("c3") === 1, 1L).otherwise(0L)).as("r_n1"),
-            sum(when(col("c3") === 2, 1L).otherwise(0L)).as("r_n2"))
-          val totC2 = c2.agg(count(lit(1)).as("b"),
-            sum(when(col("c2") === 1, 1L).otherwise(0L)).as("s_n1"),
-            sum(when(col("c2") === 2, 1L).otherwise(0L)).as("s_n2"))
-          // n1 = 0 ⇒ D floors at 0.5 at ALL THREE levels (the
-          // [[knLogLik]] degenerate-discount guard)
-          val d4 = when(col("q_n1") === 0, lit(0.5))
-            .otherwise(col("q_n1").cast("double") /
-              (col("q_n1") + lit(2) * col("q_n2")))
-          val d3 = when(col("r_n1") === 0, lit(0.5))
-            .otherwise(col("r_n1").cast("double") /
-              (col("r_n1") + lit(2) * col("r_n2")))
-          val d2 = when(col("s_n1") === 0, lit(0.5))
-            .otherwise(col("s_n1").cast("double") /
-              (col("s_n1") + lit(2) * col("s_n2")))
-          val pcont = col("nb").cast("double") / col("b")
-          val pL2 =
-            greatest(coalesce(col("c2"), lit(0L)).cast("double") - d2,
-                lit(0.0)) / col("c2dot") +
-              (d2 * col("nf3") / col("c2dot")) * pcont
-          val pLow2 = when(col("nb").isNotNull && col("c2dot").isNotNull, pL2)
-            .when(col("nb").isNotNull && col("c2dot").isNull, pcont)
-          val pL3 =
-            greatest(coalesce(col("c3"), lit(0L)).cast("double") - d3,
-                lit(0.0)) / col("c3dot") +
-              (d3 * col("nf23") / col("c3dot")) * pLow2
-          val pLow3 = when(col("c3dot").isNotNull && pLow2.isNotNull, pL3)
-            .otherwise(pLow2)
-          val pHi =
-            greatest(coalesce(col("c1234"), lit(0L)).cast("double") - d4,
-                lit(0.0)) / col("c123dot") +
-              (d4 * col("nf123") / col("c123dot")) * pLow3
-          val p = when(col("c123dot").isNotNull && pLow3.isNotNull, pHi)
-            .otherwise(pLow3) // unseen (w1,w2,w3): full fall-through; OOV stays null
-          grams
-            .join(c1234, Seq("w1", "w2", "w3", "w4"), "left")
-            .join(h123, Seq("w1", "w2", "w3"), "left")
-            .join(c3, Seq("w2", "w3", "w4"), "left")
-            .join(h23, Seq("w2", "w3"), "left")
-            .join(c2, Seq("w3", "w4"), "left")
-            .join(h3, Seq("w3"), "left")
-            .join(cont, Seq("w4"), "left")
-            .crossJoin(broadcast(tot4.crossJoin(totC3).crossJoin(totC2)))
-            .withColumn("lp", col("n") * log(p))
-            .groupBy("doc_id")
-            .agg(sum("n").as("n_quadgrams"),
-              coalesce(sum(when(col("lp").isNull, col("n"))), lit(0L))
-                .as("n_oov"),
-              coalesce(
-                round(sum("lp") /
-                  sum(when(col("lp").isNotNull, col("n"))), scale),
-                lit(0.0)).as("avg_lp"))
-            .localCheckpoint(true)
-        } finally { c2.unpersist(false); () }
-      } finally { c3.unpersist(false); () }
-    } finally { c1234.unpersist(false); () }
   }
 
   /** CCNet-style perplexity filter: score every document with

@@ -4798,13 +4798,13 @@ ORDER BY doc_id"""
         // probability, the per-doc average) from raw text. Self-scored
         // (train = corpus), the q106 convention.
         NgramLM.knLogLik(Tables.documents(s, d),
-            Tables.documents(s, d)).orderBy("doc_id"),
+            Tables.documents(s, d), 2).orderBy("doc_id"),
       Some(knOracleSql)),
 
     ("q202_kn_maintained",
       (s: SparkSession, d: String) => {
         // the MAINTAINED Kneser-Ney model under the gate: bigram counts
-        // folded incrementally by BigramStream (three residue folds
+        // folded incrementally by NgramCountStream (three residue folds
         // with a replayed batch, a mid-stream compaction, a replay at
         // the watermark), then the corpus scored against the
         // store-derived model must answer q201's full-recomputation
@@ -4812,8 +4812,9 @@ ORDER BY doc_id"""
         // additive sufficient statistic (continuation counts are NOT
         // additive, which is why the store keeps counts and derives the
         // distincts at read time).
-        val st = q202StoreBuild(s, d)
-        graft.streaming.BigramStream.knLogLik(s, st, Tables.documents(s, d))
+        val st = ngramStoreBuild(s, d, 2)
+        NgramLM.knLogLikFromCounts(Tables.documents(s, d),
+            graft.streaming.NgramCountStream.counts(s, st, 2))
           .orderBy("doc_id")
       },
       Some(knOracleSql)),
@@ -4830,15 +4831,15 @@ ORDER BY doc_id"""
         // two-level model (both discounts from count-of-counts, both
         // back-off weights, the continuation distribution) from raw
         // text. Self-scored, the q106/q201 convention.
-        NgramLM.kn3LogLik(Tables.documents(s, d),
-            Tables.documents(s, d)).orderBy("doc_id"),
-      Some(kn3OracleSql)),
+        NgramLM.knLogLik(Tables.documents(s, d),
+            Tables.documents(s, d), 3).orderBy("doc_id"),
+      Some(trigramKnOracleSql)),
 
     ("q204_kn3_maintained",
       (s: SparkSession, d: String) => {
         // the MAINTAINED trigram-KN model under the gate (VERDICT r13
         // roadmap #2): trigram counts folded incrementally by
-        // TrigramStream — three residue folds with a replayed batch, a
+        // NgramCountStream — three residue folds with a replayed batch, a
         // mid-stream compaction, a replay at the watermark — then the
         // corpus scored against the store-derived model must answer
         // q203's full-recomputation oracle VERBATIM: the trigram-count
@@ -4846,11 +4847,12 @@ ORDER BY doc_id"""
         // statistic (NO type-level quantity — ĉ, any N1+, n1/n2 — is
         // additive, so the store keeps counts and derives the type
         // table at read time, where it is trigram-vocabulary-sized).
-        val st = q204StoreBuild(s, d)
-        graft.streaming.TrigramStream.kn3LogLik(s, st, Tables.documents(s, d))
+        val st = ngramStoreBuild(s, d, 3)
+        NgramLM.knLogLikFromCounts(Tables.documents(s, d),
+            graft.streaming.NgramCountStream.counts(s, st, 3))
           .orderBy("doc_id")
       },
-      Some(kn3OracleSql)),
+      Some(trigramKnOracleSql)),
 
     ("q205_kn_pruned",
       (s: SparkSession, d: String) =>
@@ -4867,21 +4869,22 @@ ORDER BY doc_id"""
         // so no floating-point accumulation order can drift between
         // engines.
         NgramLM.knPrunedLogLik(Tables.documents(s, d),
-            Tables.documents(s, d), eps = Q205Eps).orderBy("doc_id"),
+            Tables.documents(s, d), 2, Q205Eps).orderBy("doc_id"),
       Some(knPrunedOracleSql)),
 
     ("q206_kn_pruned_maintained",
       (s: SparkSession, d: String) => {
         // the PRUNED model from the MAINTAINED store — the deployment
-        // composition: BigramStream's folded counts feed the Stolcke
+        // composition: the bigram store's folded counts feed the Stolcke
         // prune + γ renormalization, and because the pruned model is a
         // pure function of the additive count multiset exactly like the
         // full model, the maintained pruned scores answer q205's
         // one-shot oracle VERBATIM (same store as q202; the store is
         // built once and serves full and pruned reads alike).
-        val st = q202StoreBuild(s, d)
-        graft.streaming.BigramStream.knPrunedLogLik(s, st,
-          Tables.documents(s, d), eps = Q205Eps).orderBy("doc_id")
+        val st = ngramStoreBuild(s, d, 2)
+        NgramLM.knPrunedLogLikFromCounts(Tables.documents(s, d),
+            graft.streaming.NgramCountStream.counts(s, st, 2), Q205Eps)
+          .orderBy("doc_id")
       },
       Some(knPrunedOracleSql)),
 
@@ -4897,20 +4900,21 @@ ORDER BY doc_id"""
         // Self-scored; eps = 1e-4 per-token nats prunes a real split
         // of the trigram table at both gate SFs (9,408 of 16,245
         // types at sf0.01; 10,576 of 27,213 at sf0.1).
-        NgramLM.kn3PrunedLogLik(Tables.documents(s, d),
-            Tables.documents(s, d), eps = Q207Eps).orderBy("doc_id"),
-      Some(kn3PrunedOracleSql)),
+        NgramLM.knPrunedLogLik(Tables.documents(s, d),
+            Tables.documents(s, d), 3, Q207Eps).orderBy("doc_id"),
+      Some(trigramKnPrunedOracleSql)),
 
     ("q208_kn3_pruned_maintained",
       (s: SparkSession, d: String) => {
-        // q206's composition one order up: TrigramStream's folded
+        // q206's composition one order up: the trigram store's folded
         // counts feed the trigram prune + γ3 renormalization and must
         // answer q207's one-shot oracle verbatim (same store as q204).
-        val st = q204StoreBuild(s, d)
-        graft.streaming.TrigramStream.kn3PrunedLogLik(s, st,
-          Tables.documents(s, d), eps = Q207Eps).orderBy("doc_id")
+        val st = ngramStoreBuild(s, d, 3)
+        NgramLM.knPrunedLogLikFromCounts(Tables.documents(s, d),
+            graft.streaming.NgramCountStream.counts(s, st, 3), Q207Eps)
+          .orderBy("doc_id")
       },
-      Some(kn3PrunedOracleSql)),
+      Some(trigramKnPrunedOracleSql)),
 
     ("q209_kn_model_export",
       (s: SparkSession, d: String) => {
@@ -4922,7 +4926,7 @@ ORDER BY doc_id"""
         // parquet round-trips IEEE bits, so the loop must answer
         // q205's full-recomputation oracle VERBATIM: export, file
         // round-trip, and load-side arms all hash-gate.
-        val st = q209ModelBuild(s, d)
+        val st = knModelBuild(s, d, 2, Q205Eps)
         graft.ext.KnModel.score(s, st, Tables.documents(s, d))
           .orderBy("doc_id")
       },
@@ -4941,11 +4945,11 @@ ORDER BY doc_id"""
         // bow·pcont, and parquet round-trips IEEE bits, so the full
         // export → load → score loop answers q207's raw-text
         // full-recomputation oracle VERBATIM.
-        val st = q210ModelBuild(s, d)
-        graft.ext.KnModel.score3(s, st, Tables.documents(s, d))
+        val st = knModelBuild(s, d, 3, Q207Eps)
+        graft.ext.KnModel.score(s, st, Tables.documents(s, d))
           .orderBy("doc_id")
       },
-      Some(kn3PrunedOracleSql)),
+      Some(trigramKnPrunedOracleSql)),
 
     ("q211_kn4_loglik",
       (s: SparkSession, d: String) =>
@@ -4959,9 +4963,9 @@ ORDER BY doc_id"""
         // THREE-level model — all three discounts, both intermediate
         // continuation tables, the continuation distribution — from
         // raw text. Self-scored, the q201/q203 convention.
-        NgramLM.kn4LogLik(Tables.documents(s, d),
-            Tables.documents(s, d)).orderBy("doc_id"),
-      Some(kn4OracleSql)),
+        NgramLM.knLogLik(Tables.documents(s, d),
+            Tables.documents(s, d), 4).orderBy("doc_id"),
+      Some(quadgramKnOracleSql)),
 
     ("q212_soft_em_estep_fixed",
       (s: SparkSession, d: String) => {
@@ -4989,7 +4993,7 @@ ORDER BY doc_id"""
         // the FULL deployment composition, every seam under one hash:
         // the maintained trigram store (q204's folds/replay/compaction)
         // feeds the Stolcke prune and the serving export
-        // (KnModel.export3FromCounts over TrigramStream.trigramCounts),
+        // (KnModel.exportFromCounts over NgramCountStream.counts),
         // the artifact round-trips through parquet, loads, and scores
         // with no raw counts — store → prune → export → load → score
         // answering q207's one-shot raw-text oracle VERBATIM (the
@@ -4997,10 +5001,10 @@ ORDER BY doc_id"""
         // function of it, and the q210 fidelity contract covers the
         // file round-trip).
         val st = q213ModelBuild(s, d)
-        graft.ext.KnModel.score3(s, st, Tables.documents(s, d))
+        graft.ext.KnModel.score(s, st, Tables.documents(s, d))
           .orderBy("doc_id")
       },
-      Some(kn3PrunedOracleSql)),
+      Some(trigramKnPrunedOracleSql)),
 
     ("q214_soft_em_iteration_fixed",
       (s: SparkSession, d: String) => {
@@ -5025,7 +5029,7 @@ ORDER BY doc_id"""
       (s: SparkSession, d: String) => {
         // the MAINTAINED 4-gram-KN model under the gate — the q204
         // composition one order up: 4-gram counts folded incrementally
-        // by QuadgramStream (residue folds with a replayed batch, a
+        // by NgramCountStream (residue folds with a replayed batch, a
         // mid-stream compaction, a replay at the watermark), then the
         // corpus scored against the store-derived model answers q211's
         // full-recomputation oracle VERBATIM (the 4-gram count multiset
@@ -5033,11 +5037,12 @@ ORDER BY doc_id"""
         // type-level quantity — ĉ3, ĉ2, any N1+, any n1/n2 — is
         // additive, so the store keeps counts and derives the type
         // tables at read time).
-        val st = q215StoreBuild(s, d)
-        graft.streaming.QuadgramStream.kn4LogLik(s, st, Tables.documents(s, d))
+        val st = ngramStoreBuild(s, d, 4)
+        NgramLM.knLogLikFromCounts(Tables.documents(s, d),
+            graft.streaming.NgramCountStream.counts(s, st, 4))
           .orderBy("doc_id")
       },
-      Some(kn4OracleSql)),
+      Some(quadgramKnOracleSql)),
 
     ("q216_kn4_pruned",
       (s: SparkSession, d: String) =>
@@ -5050,20 +5055,21 @@ ORDER BY doc_id"""
         // table, the kept set, and γ4 with no fp-order anywhere.
         // Self-scored; eps = 3e-5 per-token nats prunes a real split
         // of the 4-gram table at both gate SFs.
-        NgramLM.kn4PrunedLogLik(Tables.documents(s, d),
-            Tables.documents(s, d), eps = Q216Eps).orderBy("doc_id"),
-      Some(kn4PrunedOracleSql)),
+        NgramLM.knPrunedLogLik(Tables.documents(s, d),
+            Tables.documents(s, d), 4, Q216Eps).orderBy("doc_id"),
+      Some(quadgramKnPrunedOracleSql)),
 
     ("q217_kn4_pruned_maintained",
       (s: SparkSession, d: String) => {
-        // q208's composition one order up: QuadgramStream's folded
+        // q208's composition one order up: the 4-gram store's folded
         // counts feed the 4-gram prune + γ4 renormalization and must
         // answer q216's one-shot oracle verbatim (same store as q215).
-        val st = q215StoreBuild(s, d)
-        graft.streaming.QuadgramStream.kn4PrunedLogLik(s, st,
-          Tables.documents(s, d), eps = Q216Eps).orderBy("doc_id")
+        val st = ngramStoreBuild(s, d, 4)
+        NgramLM.knPrunedLogLikFromCounts(Tables.documents(s, d),
+            graft.streaming.NgramCountStream.counts(s, st, 4), Q216Eps)
+          .orderBy("doc_id")
       },
-      Some(kn4PrunedOracleSql)),
+      Some(quadgramKnPrunedOracleSql)),
 
     ("q218_kn4_model_export",
       (s: SparkSession, d: String) => {
@@ -5077,11 +5083,11 @@ ORDER BY doc_id"""
         // in-memory scorer's values, every unseen arm reduces
         // bit-exactly to bow·lower, parquet round-trips IEEE bits, so
         // the loop answers q216's full-recomputation oracle VERBATIM.
-        val st = q218ModelBuild(s, d)
-        graft.ext.KnModel.score4(s, st, Tables.documents(s, d))
+        val st = knModelBuild(s, d, 4, Q216Eps)
+        graft.ext.KnModel.score(s, st, Tables.documents(s, d))
           .orderBy("doc_id")
       },
-      Some(kn4PrunedOracleSql)),
+      Some(quadgramKnPrunedOracleSql)),
 
     ("q219_kn_model_score_sql",
       (s: SparkSession, d: String) => {
@@ -5096,14 +5102,14 @@ ORDER BY doc_id"""
         // answer q207's full raw-text recomputation oracle (modulo
         // the order-agnostic n_grams alias) — the whole
         // export → load → SQL-score loop under one hash.
-        val st = q210ModelBuild(s, d)
+        val st = knModelBuild(s, d, 3, Q207Eps)
         Tables.documents(s, d).createOrReplaceTempView("q219_docs")
         s.sql(s"SELECT * FROM kn_model_score('q219_docs', '$st')")
           .orderBy("doc_id")
       },
       // q207/q210's oracle verbatim, with the scoreAny-normalized
       // gram-count alias (n_trigrams → n_grams)
-      Some(kn3PrunedOracleSql.replace("AS n_trigrams", "AS n_grams"))),
+      Some(trigramKnPrunedOracleSql.replace("AS n_trigrams", "AS n_grams"))),
 
     ("q220_soft_em_pruned_iteration",
       (s: SparkSession, d: String) => {
@@ -5133,7 +5139,7 @@ ORDER BY doc_id"""
     * inline as CASE expressions (the q201 pattern, one per level), with
     * the n1 = 0 discount floor ([[graft.ext.NgramLM.knLogLik]]'s
     * degenerate-discount guard, ADVICE r13). */
-  private def kn3OracleSql: String = {
+  private def trigramKnOracleSql: String = {
     val d3 = """(CASE WHEN t3.tn1 = 0 THEN 0.5
                |      ELSE CAST(t3.tn1 AS DOUBLE) / (t3.tn1 + 2 * t3.tn2) END)""".stripMargin
     val d2 = """(CASE WHEN th.hn1 = 0 THEN 0.5
@@ -5180,12 +5186,12 @@ ORDER BY doc_id"""
   }
 
   /** q211's oracle: the full THREE-level interpolated-KN replay —
-    * [[kn3OracleSql]] one order deeper. ĉ2 marginalizes the ĉ3 TYPE
+    * [[trigramKnOracleSql]] one order deeper. ĉ2 marginalizes the ĉ3 TYPE
     * table (not the raw counts), D4/D3/D2 inline as CASE expressions
     * with the n1 = 0 floor; self-scored ⇒ every join hits, so the
     * direct nested formula needs no fall-through arms and n_oov pins
-    * to 0 (the kn3 oracle convention). */
-  private def kn4OracleSql: String = {
+    * to 0 (the trigram KN oracle convention). */
+  private def quadgramKnOracleSql: String = {
     val d4 = """(CASE WHEN t4.qn1 = 0 THEN 0.5
                |      ELSE CAST(t4.qn1 AS DOUBLE) / (t4.qn1 + 2 * t4.qn2) END)""".stripMargin
     val d3 = """(CASE WHEN tr.rn1 = 0 THEN 0.5
@@ -5411,42 +5417,13 @@ ORDER BY doc_id"""
     * initialization-order constraint applies verbatim. */
   private final val Q216Eps = 3e-5
 
-  /** q215's maintained 4-gram store: the q204 build shape over
-    * [[graft.streaming.QuadgramStream]] — residue folds with a
-    * replayed batch, a mid-stream compaction, a replay at the
-    * watermark. */
-  private def q215StoreBuild(s: SparkSession, d: String): String =
-    graft.core.WorkDirs.ensureStore(s"quadgram_${Integer.toHexString(d.hashCode)}") { st =>
-      val docs = Tables.documents(s, d)
-      val cfg = graft.streaming.QuadgramStreamConfig(
-        s"$st/_in_unused", st, s"$st/_ck_unused", docs.schema)
-      graft.streaming.QuadgramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 0), 0L, cfg)
-      graft.streaming.QuadgramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 1), 1L, cfg)
-      graft.streaming.QuadgramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 1), 1L, cfg)
-      graft.streaming.QuadgramStream.compact(s, st, upToBatch = 1L)
-      graft.streaming.QuadgramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 0), 0L, cfg)
-      graft.streaming.QuadgramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 2), 2L, cfg)
-    }
-
-  /** q218's model artifact: export the pruned 4-GRAM model (at q216's
-    * eps) once per sf dir — the query scores from the LOADED artifact. */
-  private def q218ModelBuild(s: SparkSession, d: String): String =
-    graft.core.WorkDirs.ensureStore(s"kn4model_${Integer.toHexString(d.hashCode)}") { st =>
-      graft.ext.KnModel.export4(Tables.documents(s, d), Q216Eps, st)
-    }
-
   /** q216/q217's oracle: the full three-level interpolated-KN replay
-    * (the kn4 oracle) EXTENDED with the Stolcke prune — DuckDB
+    * (the 4-gram KN oracle) EXTENDED with the Stolcke prune — DuckDB
     * re-derives the loss table over explicit 4-gram entries, the kept
     * set at eps, every (w1,w2,w3) history's renormalized γ4 from the
     * same integer aggregates (k, Σc1234, Σĉ3, Σĉ2, Σnb), and scores.
     * Self-scored ⇒ the OOV arm is unreachable (n_oov pinned 0). */
-  private def kn4PrunedOracleSql: String = {
+  private def quadgramKnPrunedOracleSql: String = {
     val d4 = """(CASE WHEN t4.qn1 = 0 THEN 0.5
                |      ELSE CAST(t4.qn1 AS DOUBLE) / (t4.qn1 + 2 * t4.qn2) END)""".stripMargin
     val d3 = """(CASE WHEN tr.rn1 = 0 THEN 0.5
@@ -5593,27 +5570,6 @@ ORDER BY doc_id"""
       |FROM lp GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin
 
-  /** q204's maintained trigram store: the q202 build shape over
-    * [[graft.streaming.TrigramStream]] — residue folds with a replayed
-    * batch, a mid-stream compaction, and a replay at the watermark. */
-  private def q204StoreBuild(s: SparkSession, d: String): String =
-    graft.core.WorkDirs.ensureStore(s"trigram_${Integer.toHexString(d.hashCode)}") { st =>
-      val docs = Tables.documents(s, d)
-      val cfg = graft.streaming.TrigramStreamConfig(
-        s"$st/_in_unused", st, s"$st/_ck_unused", docs.schema)
-      graft.streaming.TrigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 0), 0L, cfg)
-      graft.streaming.TrigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 1), 1L, cfg)
-      graft.streaming.TrigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 1), 1L, cfg)
-      graft.streaming.TrigramStream.compact(s, st, upToBatch = 1L)
-      graft.streaming.TrigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 0), 0L, cfg)
-      graft.streaming.TrigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 2), 2L, cfg)
-    }
-
   /** q205's pruning threshold: PER-TOKEN log-likelihood nats an
     * explicit entry must be worth to survive ([[graft.ext.NgramLM
     * .knPruneEntries]] — normalized by training tokens, the SRILM
@@ -5701,12 +5657,12 @@ ORDER BY doc_id"""
   private final val Q207Eps = 1e-4
 
   /** q207/q208's oracle: the full two-level interpolated-KN replay
-    * (the kn3 oracle) EXTENDED with the Stolcke prune — DuckDB
+    * (the trigram KN oracle) EXTENDED with the Stolcke prune — DuckDB
     * re-derives the loss table over explicit trigram entries, the
     * kept set at eps, every (w1, w2) history's renormalized γ3 from
     * the same integer aggregates (k, Σc123, Σĉ, Σnb), and scores.
     * Self-scored ⇒ the OOV arm is unreachable (n_oov pinned 0). */
-  private def kn3PrunedOracleSql: String = {
+  private def trigramKnPrunedOracleSql: String = {
     val d3 = """(CASE WHEN t3.tn1 = 0 THEN 0.5
                |      ELSE CAST(t3.tn1 AS DOUBLE) / (t3.tn1 + 2 * t3.tn2) END)""".stripMargin
     val d2 = """(CASE WHEN th.hn1 = 0 THEN 0.5
@@ -5789,49 +5745,44 @@ ORDER BY doc_id"""
        |ORDER BY doc_id""".stripMargin
   }
 
-  /** q209's model artifact: export the pruned model (at q205's eps)
-    * once per sf dir — the query scores from the LOADED artifact. */
-  private def q209ModelBuild(s: SparkSession, d: String): String =
-    graft.core.WorkDirs.ensureStore(s"knmodel_${Integer.toHexString(d.hashCode)}") { st =>
-      graft.ext.KnModel.export(Tables.documents(s, d), Q205Eps, st)
-    }
-
-  /** q210's model artifact: export the pruned TRIGRAM model (at q207's
-    * eps) once per sf dir — the query scores from the LOADED artifact. */
-  private def q210ModelBuild(s: SparkSession, d: String): String =
-    graft.core.WorkDirs.ensureStore(s"kn3model_${Integer.toHexString(d.hashCode)}") { st =>
-      graft.ext.KnModel.export3(Tables.documents(s, d), Q207Eps, st)
+  /** The pruned KN model of `order` at `eps`, exported once per sf dir
+    * (q209/q210/q218/q219) — the queries score from the LOADED
+    * artifact. */
+  private def knModelBuild(s: SparkSession, d: String, order: Int,
+                           eps: Double): String =
+    graft.core.WorkDirs.ensureStore(s"knmodel${order}_${Integer.toHexString(d.hashCode)}") { st =>
+      graft.ext.KnModel.export(Tables.documents(s, d), order, eps, st)
     }
 
   /** q213's model artifact: the MAINTAINED trigram store (q204's
     * folds) feeds the pruned export — store counts → prune → serving
     * tables, once per sf dir. */
   private def q213ModelBuild(s: SparkSession, d: String): String = {
-    val store = q204StoreBuild(s, d)
+    val store = ngramStoreBuild(s, d, 3)
     graft.core.WorkDirs.ensureStore(s"kn3modelm_${Integer.toHexString(d.hashCode)}") { st =>
-      graft.ext.KnModel.export3FromCounts(
-        graft.streaming.TrigramStream.trigramCounts(s, store), Q207Eps, st)
+      graft.ext.KnModel.exportFromCounts(
+        graft.streaming.NgramCountStream.counts(s, store, 3), Q207Eps, st)
     }
   }
 
-  /** q202's maintained bigram store: the q194 build shape over
-    * [[graft.streaming.BigramStream]]. */
-  private def q202StoreBuild(s: SparkSession, d: String): String =
-    graft.core.WorkDirs.ensureStore(s"bigram_${Integer.toHexString(d.hashCode)}") { st =>
+  /** The maintained n-gram store of `order` behind q202/q204/q215 (and
+    * their pruned twins), the q194 build shape over
+    * [[graft.streaming.NgramCountStream]]: residue folds with a
+    * replayed batch, a mid-stream compaction, and a replay at the
+    * watermark. */
+  private def ngramStoreBuild(s: SparkSession, d: String, order: Int): String =
+    graft.core.WorkDirs.ensureStore(s"ngram${order}_${Integer.toHexString(d.hashCode)}") { st =>
       val docs = Tables.documents(s, d)
-      val cfg = graft.streaming.BigramStreamConfig(
-        s"$st/_in_unused", st, s"$st/_ck_unused", docs.schema)
-      graft.streaming.BigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 0), 0L, cfg)
-      graft.streaming.BigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 1), 1L, cfg)
-      graft.streaming.BigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 1), 1L, cfg)
-      graft.streaming.BigramStream.compact(s, st, upToBatch = 1L)
-      graft.streaming.BigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 0), 0L, cfg)
-      graft.streaming.BigramStream.processBatch(
-        docs.filter(col("doc_id") % 3 === 2), 2L, cfg)
+      val cfg = graft.streaming.NgramCountStreamConfig(
+        s"$st/_in_unused", st, s"$st/_ck_unused", docs.schema, order)
+      def fold(residue: Int, id: Long): Unit = graft.streaming.NgramCountStream
+        .processBatch(docs.filter(col("doc_id") % 3 === residue), id, cfg)
+      fold(0, 0L)
+      fold(1, 1L)
+      fold(1, 1L)
+      graft.streaming.NgramCountStream.compact(s, st, order, upToBatch = 1L)
+      fold(0, 0L)
+      fold(2, 2L)
     }
 
   /** Shared by q188 (one-shot encode) and q194 (maintained vocabulary
@@ -6227,17 +6178,17 @@ ORDER BY doc_id"""
     "q197_bpe_maintained" -> ((s, d) => q194StoreBuild(s, d): Unit),
     "q198_bpe_encode_maintained" -> ((s, d) => q194StoreBuild(s, d): Unit),
     "q200_gopher_drift_maintained" -> ((s, d) => q200StoreBuild(s, d): Unit),
-    "q202_kn_maintained" -> ((s, d) => q202StoreBuild(s, d): Unit),
-    "q204_kn3_maintained" -> ((s, d) => q204StoreBuild(s, d): Unit),
-    "q206_kn_pruned_maintained" -> ((s, d) => q202StoreBuild(s, d): Unit),
-    "q208_kn3_pruned_maintained" -> ((s, d) => q204StoreBuild(s, d): Unit),
-    "q209_kn_model_export" -> ((s, d) => q209ModelBuild(s, d): Unit),
-    "q210_kn3_model_export" -> ((s, d) => q210ModelBuild(s, d): Unit),
+    "q202_kn_maintained" -> ((s, d) => ngramStoreBuild(s, d, 2): Unit),
+    "q204_kn3_maintained" -> ((s, d) => ngramStoreBuild(s, d, 3): Unit),
+    "q206_kn_pruned_maintained" -> ((s, d) => ngramStoreBuild(s, d, 2): Unit),
+    "q208_kn3_pruned_maintained" -> ((s, d) => ngramStoreBuild(s, d, 3): Unit),
+    "q209_kn_model_export" -> ((s, d) => knModelBuild(s, d, 2, Q205Eps): Unit),
+    "q210_kn3_model_export" -> ((s, d) => knModelBuild(s, d, 3, Q207Eps): Unit),
     "q213_kn3_model_export_maintained" -> ((s, d) => q213ModelBuild(s, d): Unit),
-    "q215_kn4_maintained" -> ((s, d) => q215StoreBuild(s, d): Unit),
-    "q217_kn4_pruned_maintained" -> ((s, d) => q215StoreBuild(s, d): Unit),
-    "q218_kn4_model_export" -> ((s, d) => q218ModelBuild(s, d): Unit),
-    "q219_kn_model_score_sql" -> ((s, d) => q210ModelBuild(s, d): Unit))
+    "q215_kn4_maintained" -> ((s, d) => ngramStoreBuild(s, d, 4): Unit),
+    "q217_kn4_pruned_maintained" -> ((s, d) => ngramStoreBuild(s, d, 4): Unit),
+    "q218_kn4_model_export" -> ((s, d) => knModelBuild(s, d, 4, Q216Eps): Unit),
+    "q219_kn_model_score_sql" -> ((s, d) => knModelBuild(s, d, 3, Q207Eps): Unit))
 
   /** Memoized maintained-ANN store build for q179: the query ranks over
     * the store and the aux dump emits its candidate set — one build per

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -69,15 +69,14 @@ final case class CdcStreamConfig(
     trigger: Trigger = Trigger.AvailableNow(),
     /** Overrides `inputDir` when set (inputDir remains the common case). */
     source: Option[CdcSource] = None,
-    /** Registry JSON path to re-read every `registryRefreshEveryBatches`
-      * micro-batches: a table added to the registry file starts routing
+    /** Registry JSON path to re-read on every micro-batch: a table
+      * added to the registry file starts routing
       * WITHOUT a stream restart (the reference's per-record fetch applies
       * edits immediately but at catastrophic per-record cost — a per-batch
       * driver-side reload is the same operational knob for free).
       * Earlier dead-lettered records are recovered via
       * `Ingest.replayDeadLetter` once the table is registered. */
     registryPath: Option[String] = None,
-    registryRefreshEveryBatches: Int = 1,
     /** e.g. Some("1 hour"): drop duplicate (object, payload, event-time)
       * records within the watermark — protects against duplicate file
       * delivery from an at-least-once upstream. */
@@ -238,28 +237,25 @@ object CdcStream {
       .trigger(cfg.trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         cfg.registryPath.foreach { p =>
-          if (cfg.registryRefreshEveryBatches > 0 &&
-              batchId % cfg.registryRefreshEveryBatches == 0) {
-            // a refresh failure (mid-write truncated JSON, transient read
-            // error) must not kill the stream: keep routing with the last
-            // good registry and retry next interval
-            try {
-              val fresh = graft.cdc.Registry.load(p)
-              // type flips on existing columns would poison the physical
-              // table (mixed-type batch dirs): keep the old spec for the
-              // offending table, apply everything else
-              val (merged, rejected) =
-                graft.cdc.Registry.refreshCompatible(registry, fresh)
-              rejected.foreach(r => System.err.println(
-                s"[graft-cdc] registry refresh REJECTED type change for $r — " +
-                  "keeping the previous schema (a type flip would poison the " +
-                  "physical table with mixed-type batch dirs)"))
-              registry = merged
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                System.err.println(
-                  s"[graft-cdc] registry refresh failed (keeping previous): $e")
-            }
+          // a refresh failure (mid-write truncated JSON, transient read
+          // error) must not kill the stream: keep routing with the last
+          // good registry and retry next trigger
+          try {
+            val fresh = graft.cdc.Registry.load(p)
+            // type flips on existing columns would poison the physical
+            // table (mixed-type batch dirs): keep the old spec for the
+            // offending table, apply everything else
+            val (merged, rejected) =
+              graft.cdc.Registry.refreshCompatible(registry, fresh)
+            rejected.foreach(r => System.err.println(
+              s"[graft-cdc] registry refresh REJECTED type change for $r — " +
+                "keeping the previous schema (a type flip would poison the " +
+                "physical table with mixed-type batch dirs)"))
+            registry = merged
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              System.err.println(
+                s"[graft-cdc] registry refresh failed (keeping previous): $e")
           }
         }
         val df = batch.toDF()
@@ -314,37 +310,40 @@ object CdcStream {
             v.view, v.jk, side(v.tableA), side(v.tableB),
             snapshotBuckets = cfg.snapshotBuckets)
         }
-        if (cfg.compactEveryNBatches > 0 && batchId > 0 &&
-            batchId % cfg.compactEveryNBatches == 0) {
-          (registry.values.map(_.physicalName).toSeq :+ Ingest.UnknownTableDir)
-            .foreach { phys =>
-              Ingest.compactBatches(sess, cfg.warehouseDir, phys, batchId - 1)
-            }
-        }
-        if (cfg.expireEveryNBatches > 0 && batchId > 0 &&
-            batchId % cfg.expireEveryNBatches == 0) {
-          cfg.expire.foreach { case (table, pol) =>
+        def due(every: Int) = every > 0 && batchId > 0 && batchId % every == 0
+        // a table whose expire policy is due compacts WITH the expiry
+        // transform: one rewrite per table even when both schedules fall
+        // on this trigger (expiry IS a compacting rewrite)
+        val expiring: Map[String, DataFrame => DataFrame] =
+          if (!due(cfg.expireEveryNBatches)) Map.empty
+          else cfg.expire.flatMap { case (table, pol) =>
             registry.get(table) match {
-              case Some(spec) =>
-                Ingest.compactBatches(sess, cfg.warehouseDir, spec.physicalName,
-                  batchId - 1, transform = Some { merged =>
-                    // horizon from the DATA (newest event time − lag), not
-                    // the wall clock: deterministic under crash replay. A
-                    // timestamp-typed horizon compares correctly against
-                    // both registry update_date types (STRING is ISO-8601;
-                    // Spark casts the string side for the comparison).
-                    val mx = merged.agg(max(col("update_date").cast("timestamp"))).head()
-                    if (mx.isNullAt(0)) merged
-                    else graft.cdc.Retention.expireHistory(merged,
-                      lit(mx.getTimestamp(0)) - expr(s"INTERVAL ${pol.lag}"),
-                      pol.pk)
-                  })
+              case Some(spec) => Some(spec.physicalName -> { (merged: DataFrame) =>
+                // horizon from the DATA (newest event time − lag), not
+                // the wall clock: deterministic under crash replay. A
+                // timestamp-typed horizon compares correctly against
+                // both registry update_date types (STRING is ISO-8601;
+                // Spark casts the string side for the comparison).
+                val mx = merged.agg(max(col("update_date").cast("timestamp"))).head()
+                if (mx.isNullAt(0)) merged
+                else graft.cdc.Retention.expireHistory(merged,
+                  lit(mx.getTimestamp(0)) - expr(s"INTERVAL ${pol.lag}"),
+                  pol.pk)
+              })
               // only a refreshing registry gets here (start() rejects a
               // static one): the table may be registered by a later refresh
-              case None => System.err.println(
-                s"[graft-cdc] expire policy for table '$table' skipped: not registered yet")
+              case None =>
+                System.err.println(
+                  s"[graft-cdc] expire policy for table '$table' skipped: not registered yet")
+                None
             }
           }
+        val compacting =
+          if (!due(cfg.compactEveryNBatches)) Nil
+          else registry.values.map(_.physicalName).toSeq :+ Ingest.UnknownTableDir
+        (compacting ++ expiring.keys).distinct.foreach { phys =>
+          Ingest.compactBatches(sess, cfg.warehouseDir, phys, batchId - 1,
+            transform = expiring.get(phys))
         }
       }
       .start()

@@ -246,6 +246,29 @@ class AggMaintainerSpec extends SparkTestBase {
       "done" -> ((1L, new java.math.BigDecimal("0.00000007")))))
   }
 
+  test("a group whose live amounts are all NULL reads a NULL sum, not 0") {
+    val wh = "file:" + tmpDir("aggm-null-sum")
+    def b(rows: (Long, String, String, String, Option[Double])*): DataFrame =
+      rows.toDF("id", "action", "update_date", "status", "amount")
+    AggMaintainer.foldAndMaintain(spark, wh, "t", b(
+      (1L, "insert", "2026-01-01T10:00:00", "g", None)), pk, Seq(spec))
+    check(wh, "after a NULL-amount insert")
+    AggMaintainer.foldAndMaintain(spark, wh, "t", b(
+      (2L, "insert", "2026-01-01T11:00:00", "g", Some(5.0))), pk, Seq(spec))
+    check(wh, "after a non-NULL insert")
+    // +5 then −5 cancels the sum to 0, but no non-NULL value is left
+    AggMaintainer.foldAndMaintain(spark, wh, "t", b(
+      (2L, "delete", "2026-01-01T12:00:00", null, None)), pk, Seq(spec))
+    check(wh, "after deleting the only non-NULL amount")
+    assert(maintained(wh) == Map("g" -> ((1L, null))))
+    val cols = AggMaintainer.read(spark, wh, "t", "by_status").columns.toSeq
+    assert(cols == Seq("status", "n_rows", "sum_amount"), cols)
+    // rebuild writes the columns the maintained path reads
+    AggMaintainer.rebuild(spark, wh, "t", spec)
+    assert(maintained(wh) == Map("g" -> ((1L, null))))
+    assert(AggMaintainer.read(spark, wh, "t", "by_status").columns.toSeq == cols)
+  }
+
   test("multi-version batch: the pre-fold row is the stored row, never a batch row") {
     val wh = "file:" + tmpDir("aggm-multiversion")
     AggMaintainer.foldAndMaintain(spark, wh, "t", batchDf(

@@ -85,12 +85,15 @@ class PartitionedIngestSpec extends SparkTestBase {
     graft.streaming.CdcStream.runOnce(spark,
       graft.streaming.CdcStreamConfig(in, wh, ck, Fixtures.registry))
 
-    val before = Ingest.readTable(spark, wh, Fixtures.registry("products")).collect().toSet
-    assert(new java.io.File(s"$wh/${Fixtures.registry("products").physicalName}").listFiles().count(_.getName.startsWith("batch=")) == 2)
-    val n = Ingest.compact(spark, wh, Fixtures.registry("products").physicalName)
-    assert(n == before.size)
-    assert(new java.io.File(s"$wh/${Fixtures.registry("products").physicalName}").listFiles().count(_.getName.startsWith("batch=")) == 1)
-    assert(Ingest.readTable(spark, wh, Fixtures.registry("products")).collect().toSet == before)
+    val phys = Fixtures.registry("products").physicalName
+    def batchDirs = new java.io.File(s"$wh/$phys").listFiles()
+      .map(_.getName).filter(_.startsWith("batch=")).toSeq
+    val before = Ingest.readTable(spark, wh, Fixtures.registry("products")).collect()
+    assert(batchDirs.size == 2)
+    Ingest.compactBatches(spark, wh, phys, Long.MaxValue)
+    assert(batchDirs == Seq(s"batch=${Ingest.CompactedBatchId}"))
+    val after = Ingest.readTable(spark, wh, Fixtures.registry("products")).collect()
+    assert(after.length == before.length && after.toSet == before.toSet)
   }
   test("readTableAsOfBatch prunes batch partitions and replays history") {
     val in = tmpDir("aob-in"); val wh = tmpDir("aob-wh"); val ck = tmpDir("aob-ck")

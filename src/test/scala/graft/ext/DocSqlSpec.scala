@@ -468,16 +468,16 @@ class DocSqlSpec extends AnyFunSuite {
     docs
     // kn_score / kn3_score: the self-trained q201/q203 operators
     assert(sorted(spark.sql("SELECT * FROM kn_score('docs')")) ==
-      sorted(NgramLM.knLogLik(docs, docs)))
+      sorted(NgramLM.knLogLik(docs, docs, 2)))
     assert(sorted(spark.sql("SELECT * FROM kn3_score('docs')")) ==
-      sorted(NgramLM.kn3LogLik(docs, docs)))
+      sorted(NgramLM.knLogLik(docs, docs, 3)))
     // kn_pruned_score at eps 0: the pruned model with nothing pruned
     // must equal the unpruned scores (the γ = bow reduction), and a
     // prune-everything eps must move at least one score
     val p0 = spark.sql("SELECT * FROM kn_pruned_score('docs', 0.0)")
-    assert(sorted(p0) == sorted(NgramLM.knLogLik(docs, docs)))
+    assert(sorted(p0) == sorted(NgramLM.knLogLik(docs, docs, 2)))
     val pBig = spark.sql("SELECT * FROM kn_pruned_score('docs', 1000000.0)")
-    assert(sorted(pBig) == sorted(NgramLM.knPrunedLogLik(docs, docs, 1e6)))
+    assert(sorted(pBig) == sorted(NgramLM.knPrunedLogLik(docs, docs, 2, 1e6)))
     assert(sorted(pBig) != sorted(p0),
       "the prune-everything model must score differently")
   }
@@ -490,11 +490,7 @@ class DocSqlSpec extends AnyFunSuite {
     for ((order, eps) <- Seq((2, 1e-3), (3, 1e-4), (4, 3e-5))) {
       val dir = java.nio.file.Files
         .createTempDirectory(s"docsql-knm$order").toString
-      order match {
-        case 2 => KnModel.export(docs, eps, dir)
-        case 3 => KnModel.export3(docs, eps, dir)
-        case _ => KnModel.export4(docs, eps, dir)
-      }
+      KnModel.export(docs, order, eps, dir)
       val viaSql = spark.sql(s"SELECT * FROM kn_model_score('docs', '$dir')")
       assert(viaSql.columns.toSeq ==
         Seq("doc_id", "n_grams", "n_oov", "avg_lp"))

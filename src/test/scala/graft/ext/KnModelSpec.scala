@@ -20,19 +20,19 @@ class KnModelSpec extends SparkTestBase {
   test("export → load → score is bit-identical to the in-memory pruned scorer") {
     val dir = tmpDir("knm-a")
     val eps = 1e-3
-    KnModel.export(corpus, eps, dir)
+    KnModel.export(corpus, 2, eps, dir)
     assert(scores(KnModel.score(spark, dir, corpus)) ==
-      scores(NgramLM.knPrunedLogLik(corpus, corpus, eps)),
+      scores(NgramLM.knPrunedLogLik(corpus, corpus, 2, eps)),
       "the artifact loop must not move a single bit")
     // the artifact is the bounded deployment surface: entries = the
     // kept set, one backoff row per seen history, one cont row per
     // continuation word
-    val (e, b, c) = KnModel.sizes(spark, dir)
-    val ent = NgramLM.knPruneEntries(corpus, eps)
+    val Seq(e, b, c) = KnModel.sizes(spark, dir)
+    val ent = NgramLM.knPruneEntries(corpus, 2, eps)
       .select("kept").as[Boolean].collect()
     assert(e == ent.count(identity).toLong)
     assert(ent.exists(!_), "the fixture prune must bite")
-    val c12 = NgramLM.corpusBigrams(corpus)
+    val c12 = NgramLM.corpusNgrams(corpus, 2)
       .as[(String, String, Long)].collect()
     assert(b == c12.map(_._1).distinct.length.toLong)
     assert(c == c12.map(_._2).distinct.length.toLong)
@@ -40,9 +40,9 @@ class KnModelSpec extends SparkTestBase {
 
   test("eps = 0 artifact reproduces the UNpruned model's scores") {
     val dir = tmpDir("knm-0")
-    KnModel.export(corpus, 0.0, dir)
+    KnModel.export(corpus, 2, 0.0, dir)
     assert(scores(KnModel.score(spark, dir, corpus)) ==
-      scores(NgramLM.knLogLik(corpus, corpus)),
+      scores(NgramLM.knLogLik(corpus, corpus, 2)),
       "γ must reduce to the original back-off weight when nothing prunes")
   }
 
@@ -51,7 +51,7 @@ class KnModelSpec extends SparkTestBase {
     val train = Seq((1L, "a b"), (2L, "b a"), (3L, "a c"), (4L, "a b a c"))
       .toDF("doc_id", "text")
     val dir = tmpDir("knm-arms")
-    KnModel.export(train, 1e9, dir) // prune everything: γ = 1 everywhere
+    KnModel.export(train, 2, 1e9, dir) // prune everything: γ = 1 everywhere
     val probes = Seq(
       (1L, "a b"),  // seen history, pruned entry → γ·pcont = pcont
       (2L, "z a"),  // unseen history → pcont
@@ -60,7 +60,7 @@ class KnModelSpec extends SparkTestBase {
     val got = scores(KnModel.score(spark, dir, probes))
     def r4(x: Double) = BigDecimal(x).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
-    val cont = NgramLM.corpusBigrams(train)
+    val cont = NgramLM.corpusNgrams(train, 2)
       .as[(String, String, Long)].collect()
     val bTot = cont.size.toDouble
     def pcont(w: String) = cont.count(_._2 == w) / bTot
@@ -75,20 +75,20 @@ class KnModelSpec extends SparkTestBase {
   test("trigram export → load → score is bit-identical to the in-memory pruned scorer") {
     val dir = tmpDir("knm3-a")
     val eps = 1e-4
-    KnModel.export3(corpus, eps, dir)
-    assert(scores(KnModel.score3(spark, dir, corpus)) ==
-      scores(NgramLM.kn3PrunedLogLik(corpus, corpus, eps)),
+    KnModel.export(corpus, 3, eps, dir)
+    assert(scores(KnModel.score(spark, dir, corpus)) ==
+      scores(NgramLM.knPrunedLogLik(corpus, corpus, 3, eps)),
       "the trigram artifact loop must not move a single bit")
     // bounded sizes: entries = the kept set; one backoff12 row per seen
     // (w1,w2); mid/backoff2/cont are the continuation-bigram table and
     // its two margins
-    val (e, b12, m, b2, c) = KnModel.sizes3(spark, dir)
-    val ent = NgramLM.kn3PruneEntries(corpus, eps)
+    val Seq(e, b12, m, b2, c) = KnModel.sizes(spark, dir)
+    val ent = NgramLM.knPruneEntries(corpus, 3, eps)
       .select("kept").as[Boolean].collect()
     assert(e == ent.count(identity).toLong)
     assert(ent.exists(!_), "the fixture prune must bite at order 3")
     assert(ent.exists(identity), "the fixture prune must keep something")
-    val c123 = NgramLM.corpusTrigrams(corpus)
+    val c123 = NgramLM.corpusNgrams(corpus, 3)
       .as[(String, String, String, Long)].collect()
     assert(b12 == c123.map(t => (t._1, t._2)).distinct.length.toLong)
     assert(m == c123.map(t => (t._2, t._3)).distinct.length.toLong)
@@ -98,9 +98,9 @@ class KnModelSpec extends SparkTestBase {
 
   test("trigram eps = 0 artifact reproduces the UNpruned kn3 scores") {
     val dir = tmpDir("knm3-0")
-    KnModel.export3(corpus, 0.0, dir)
-    assert(scores(KnModel.score3(spark, dir, corpus)) ==
-      scores(NgramLM.kn3LogLik(corpus, corpus)),
+    KnModel.export(corpus, 3, 0.0, dir)
+    assert(scores(KnModel.score(spark, dir, corpus)) ==
+      scores(NgramLM.knLogLik(corpus, corpus, 3)),
       "γ3 must reduce to the original back-off weight when nothing prunes")
   }
 
@@ -114,7 +114,7 @@ class KnModelSpec extends SparkTestBase {
       (4L, "c a b c d"), (5L, "d a b")).toDF("doc_id", "text")
     for (eps <- Seq(1e-9, 1e-2, 1e9)) {
       val dir = tmpDir(s"knm3-arms-$eps")
-      KnModel.export3(train, eps, dir)
+      KnModel.export(train, 3, eps, dir)
       val probes = Seq(
         (1L, "a b c"),  // explicit entry (kept at small eps, pruned at 1e9)
         (2L, "z b c"),  // unseen (z,b) history, seen (b,c) continuation
@@ -122,8 +122,8 @@ class KnModelSpec extends SparkTestBase {
         (4L, "b c z"),  // z never a continuation → OOV
         (5L, "z z a")   // unseen mid-history w2 = z → pcont(a)
       ).toDF("doc_id", "text")
-      val got = scores(KnModel.score3(spark, dir, probes))
-      val want = scores(NgramLM.kn3PrunedLogLik(probes, train, eps))
+      val got = scores(KnModel.score(spark, dir, probes))
+      val want = scores(NgramLM.knPrunedLogLik(probes, train, 3, eps))
       assert(got == want, s"arm mismatch at eps=$eps: $got vs $want")
       assert(got.exists(_._3 > 0), "an OOV probe must exercise the null arm")
     }
@@ -132,16 +132,16 @@ class KnModelSpec extends SparkTestBase {
   test("scoreAny detects the artifact order and normalizes the schema") {
     val d2 = tmpDir("knm-any2"); val d3 = tmpDir("knm-any3")
     val d4 = tmpDir("knm-any4")
-    KnModel.export(corpus, 1e-3, d2)
-    KnModel.export3(corpus, 1e-4, d3)
-    KnModel.export4(corpus, 3e-5, d4)
+    KnModel.export(corpus, 2, 1e-3, d2)
+    KnModel.export(corpus, 3, 1e-4, d3)
+    KnModel.export(corpus, 4, 3e-5, d4)
     assert(KnModel.order(d2) == 2 && KnModel.order(d3) == 3 &&
       KnModel.order(d4) == 4)
     for (d <- Seq(d2, d3, d4))
       assert(KnModel.scoreAny(spark, d, corpus).columns.toSeq ==
         Seq("doc_id", "n_grams", "n_oov", "avg_lp"))
     assert(scores(KnModel.scoreAny(spark, d3, corpus)) ==
-      scores(NgramLM.kn3PrunedLogLik(corpus, corpus, 1e-4)))
+      scores(NgramLM.knPrunedLogLik(corpus, corpus, 3, 1e-4)))
   }
 
   test("order() raises a typed error on a dir carrying no entries table (r16)") {
@@ -155,7 +155,7 @@ class KnModelSpec extends SparkTestBase {
     assert(e.getMessage.contains("no KN model artifact"))
     // a scheme-qualified local URI resolves through the same FS API
     val d3 = tmpDir("knm-uri")
-    KnModel.export3(corpus, 1e-4, d3)
+    KnModel.export(corpus, 3, 1e-4, d3)
     assert(KnModel.order("file://" + d3) == 3)
   }
 
@@ -165,20 +165,20 @@ class KnModelSpec extends SparkTestBase {
     val dir = tmpDir("knm4-a")
     // prune at the corpus's median loss so BOTH arms are real on the
     // small fixture (a production eps keeps nearly everything here)
-    val losses = NgramLM.kn4PruneEntries(corpus, 0.0)
+    val losses = NgramLM.knPruneEntries(corpus, 4, 0.0)
       .select("loss").as[Double].collect().sorted
     val eps = losses(losses.length / 2)
-    KnModel.export4(corpus, eps, dir)
-    assert(scores(KnModel.score4(spark, dir, corpus)) ==
-      scores(NgramLM.kn4PrunedLogLik(corpus, corpus, eps)),
+    KnModel.export(corpus, 4, eps, dir)
+    assert(scores(KnModel.score(spark, dir, corpus)) ==
+      scores(NgramLM.knPrunedLogLik(corpus, corpus, 4, eps)),
       "the 4-gram artifact loop must not move a single bit")
-    val (e, b123, m3, b23, m2, b2, c) = KnModel.sizes4(spark, dir)
-    val ent = NgramLM.kn4PruneEntries(corpus, eps)
+    val Seq(e, b123, m3, b23, m2, b2, c) = KnModel.sizes(spark, dir)
+    val ent = NgramLM.knPruneEntries(corpus, 4, eps)
       .select("kept").as[Boolean].collect()
     assert(e == ent.count(identity).toLong)
     assert(ent.exists(!_) && ent.exists(identity),
       "the fixture prune must split")
-    val c1234 = NgramLM.corpusQuadgrams(corpus)
+    val c1234 = NgramLM.corpusNgrams(corpus, 4)
       .as[(String, String, String, String, Long)].collect()
     assert(b123 == c1234.map(t => (t._1, t._2, t._3)).distinct.length.toLong)
     assert(m3 == c1234.map(t => (t._2, t._3, t._4)).distinct.length.toLong)
@@ -190,9 +190,9 @@ class KnModelSpec extends SparkTestBase {
 
   test("4-gram eps = 0 artifact reproduces the UNpruned kn4 scores") {
     val dir = tmpDir("knm4-0")
-    KnModel.export4(corpus, 0.0, dir)
-    assert(scores(KnModel.score4(spark, dir, corpus)) ==
-      scores(NgramLM.kn4LogLik(corpus, corpus)),
+    KnModel.export(corpus, 4, 0.0, dir)
+    assert(scores(KnModel.score(spark, dir, corpus)) ==
+      scores(NgramLM.knLogLik(corpus, corpus, 4)),
       "γ4 must reduce to the original back-off weight when nothing prunes")
   }
 
@@ -201,7 +201,7 @@ class KnModelSpec extends SparkTestBase {
       (4L, "c a b c d e")).toDF("doc_id", "text")
     for (eps <- Seq(1e-9, 1e9)) {
       val dir = tmpDir(s"knm4-arms-$eps")
-      KnModel.export4(train, eps, dir)
+      KnModel.export(train, 4, eps, dir)
       val probes = Seq(
         (1L, "a b c d"),  // explicit entry (kept at tiny eps, pruned at 1e9)
         (2L, "z b c d"),  // unseen top history, seen (b,c,d) mid3
@@ -209,8 +209,8 @@ class KnModelSpec extends SparkTestBase {
         (4L, "z z z d"),  // unseen w3 — pcont path
         (5L, "a b c z")   // z never a continuation → OOV
       ).toDF("doc_id", "text")
-      val got = scores(KnModel.score4(spark, dir, probes))
-      val want = scores(NgramLM.kn4PrunedLogLik(probes, train, eps))
+      val got = scores(KnModel.score(spark, dir, probes))
+      val want = scores(NgramLM.knPrunedLogLik(probes, train, 4, eps))
       assert(got == want, s"arm mismatch at eps=$eps: $got vs $want")
       assert(got.exists(_._3 > 0), "an OOV probe must exercise the null arm")
     }

@@ -9,7 +9,7 @@ class NgramLMSpec extends SparkTestBase {
 
   test("docBigrams: adjacent pairs with counts; <2-token docs contribute nothing") {
     val docs = Seq((1L, "a b a b"), (2L, "x"), (3L, "")).toDF("doc_id", "text")
-    val got = NgramLM.docBigrams(docs)
+    val got = NgramLM.docNgrams(docs, 2)
       .as[(Long, String, String, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
     // "a b a b" -> (a,b) x2, (b,a) x1; "x" and "" have no bigrams
     assert(got == Seq((1L, "a", "b", 2L), (1L, "b", "a", 1L)))
@@ -79,7 +79,7 @@ class NgramLMSpec extends SparkTestBase {
     intercept[Exception] { NgramLM.dsirWeights(bad, bad).count() }
     // the try/finally must have unpersisted the intermediates: an
     // equivalent re-built plan finds no cache entry to attach to
-    assert(NgramLM.docBigrams(bad).storageLevel ==
+    assert(NgramLM.docNgrams(bad, 2).storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE,
       "failed bigramLogLik leaked its persisted gram frame")
     spark.catalog.clearCache()
@@ -97,7 +97,7 @@ class NgramLMSpec extends SparkTestBase {
   test("knLogLik: hand-computed interpolated-KN probabilities") {
     val docs = Seq((1L, "a b"), (2L, "b a"), (3L, "a c"), (4L, "a b a c"))
       .toDF("doc_id", "text")
-    val got = NgramLM.knLogLik(docs, knTrain)
+    val got = NgramLM.knLogLik(docs, knTrain, 2)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     val pAB = 0.6 + (0.2 * 2.0 / 3.0) * (1.0 / 3.0)
     val pBA = 0.9 + (0.2 * 1.0 / 2.0) * (1.0 / 3.0)
@@ -118,7 +118,7 @@ class NgramLMSpec extends SparkTestBase {
     // max-discounted mass (3−2D)/3 plus λ(a)·ΣP_cont = 2D/3 → exactly 1
     val probes = Seq((1L, "a a"), (2L, "a b"), (3L, "a c"))
       .toDF("doc_id", "text")
-    val lps = NgramLM.knLogLik(probes, knTrain, scale = 9)
+    val lps = NgramLM.knLogLik(probes, knTrain, 2, scale = 9)
       .as[(Long, Long, Long, Double)].collect().map(_._4)
     val total = lps.map(math.exp).sum
     assert(math.abs(total - 1.0) < 1e-6,
@@ -130,7 +130,7 @@ class NgramLMSpec extends SparkTestBase {
       (1L, "z a"), // history z unseen → P = P_cont(a) = 1/3
       (2L, "a z"), // w2 z never a continuation → OOV, excluded
       (3L, "z z z")).toDF("doc_id", "text") // all OOV → avg_lp 0.0
-    val got = NgramLM.knLogLik(docs, knTrain)
+    val got = NgramLM.knLogLik(docs, knTrain, 2)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     def r4(x: Double) = BigDecimal(x).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -149,11 +149,11 @@ class NgramLMSpec extends SparkTestBase {
   //   P̂(c|b) = (1−2/3)/2 + (2/3·2/2)(1/5) = 1/6 + 2/15 = 0.3
   //   P(c|a,b) = (2−5/7)/3 + (5/7·2/3)·0.3 = 3/7 + 1/7 = 0.571428…
   //   P(d|a,b) = (1−5/7)/3 + (10/21)·0.3  = 2/21 + 1/7 = 0.238095…
-  private val kn3Train = Seq((300L, "a b c a b d a b c")).toDF("doc_id", "text")
+  private val trigramTrain = Seq((300L, "a b c a b d a b c")).toDF("doc_id", "text")
 
   test("kn3LogLik: hand-computed two-level interpolated-KN probabilities") {
     val docs = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val got = NgramLM.kn3LogLik(docs, kn3Train)
+    val got = NgramLM.knLogLik(docs, trigramTrain, 3)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     def r4(x: Double) = BigDecimal(x).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -169,7 +169,7 @@ class NgramLMSpec extends SparkTestBase {
   test("kn3LogLik: both levels normalize to one over the continuation vocab") {
     val probes = Seq((1L, "a b a"), (2L, "a b b"), (3L, "a b c"),
       (4L, "a b d")).toDF("doc_id", "text")
-    val lps = NgramLM.kn3LogLik(probes, kn3Train, scale = 9)
+    val lps = NgramLM.knLogLik(probes, trigramTrain, 3, scale = 9)
       .as[(Long, Long, Long, Double)].collect().map(_._4)
     val total = lps.map(math.exp).sum
     assert(math.abs(total - 1.0) < 1e-6,
@@ -177,7 +177,7 @@ class NgramLMSpec extends SparkTestBase {
     // mid level alone (unseen (z,b) history falls through to P̂(·|b))
     val mid = Seq((1L, "z b a"), (2L, "z b b"), (3L, "z b c"),
       (4L, "z b d")).toDF("doc_id", "text")
-    val midTotal = NgramLM.kn3LogLik(mid, kn3Train, scale = 9)
+    val midTotal = NgramLM.knLogLik(mid, trigramTrain, 3, scale = 9)
       .as[(Long, Long, Long, Double)].collect().map(r => math.exp(r._4)).sum
     assert(math.abs(midTotal - 1.0) < 1e-6,
       s"the continuation-count middle order must normalize, got $midTotal")
@@ -188,7 +188,7 @@ class NgramLMSpec extends SparkTestBase {
       (1L, "z b c"), // (z,b) unseen → P̂(c|b) = 0.3
       (2L, "a z c"), // mid-history z unseen → P_cont(c) = 1/5
       (3L, "a b z")).toDF("doc_id", "text") // w3 unseen → OOV
-    val got = NgramLM.kn3LogLik(docs, kn3Train)
+    val got = NgramLM.knLogLik(docs, trigramTrain, 3)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     def r4(x: Double) = BigDecimal(x).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -206,7 +206,7 @@ class NgramLMSpec extends SparkTestBase {
     val train = Seq((400L, "x s f x s f x s f y s g z s g"))
       .toDF("doc_id", "text")
     val probes = Seq((1L, "q s f"), (2L, "q s g")).toDF("doc_id", "text")
-    val got = NgramLM.kn3LogLik(probes, train)
+    val got = NgramLM.knLogLik(probes, train, 3)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect()
     assert(got(1)._4 > got(0)._4,
       s"ĉ(s,g)=2 must beat ĉ(s,f)=1 despite c(s,f)=3 > c(s,g)=2: ${got.toSeq}")
@@ -214,7 +214,7 @@ class NgramLMSpec extends SparkTestBase {
 
   // ---- order 4 (q211): the recursion one level deeper ----
 
-  private lazy val kn4Train = Seq(
+  private lazy val quadgramTrain = Seq(
     (100L, "a b c d"), (101L, "a b c e"), (102L, "b b c d"),
     (103L, "c a b c d e")).toDF("doc_id", "text")
 
@@ -224,7 +224,7 @@ class NgramLMSpec extends SparkTestBase {
       val probes = Seq("c", "d", "e").zipWithIndex
         .map { case (w, i) => (i.toLong, s"$prefix $w") }
         .toDF("doc_id", "text")
-      NgramLM.kn4LogLik(probes, kn4Train, scale = 9)
+      NgramLM.knLogLik(probes, quadgramTrain, 4, scale = 9)
         .as[(Long, Long, Long, Double)].collect().map(r => math.exp(r._4)).sum
     }
     // seen top-level history; unseen (w1,w2,w3) → P̂3; unseen (w2,w3)
@@ -243,7 +243,7 @@ class NgramLMSpec extends SparkTestBase {
       (2L, "z b c d"),   // unseen top history → P̂3(d|b,c)
       (3L, "z z c d")    // unseen (w2,w3) too → P̂2(d|c)
     ).toDF("doc_id", "text")
-    val got = NgramLM.kn4LogLik(docs, kn4Train)
+    val got = NgramLM.knLogLik(docs, quadgramTrain, 4)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(got.head == ((1L, 1L, 1L, 0.0)), s"OOV row mismatch: $got")
     // the hat3 level has MORE signal for d after (b,c) (ĉ3(b,c,d) = 2
@@ -256,17 +256,17 @@ class NgramLMSpec extends SparkTestBase {
   test("kn4LogLik: the from-counts seam answers the raw-docs path verbatim") {
     val probes = Seq((1L, "a b c d"), (2L, "c a b c d e"), (3L, "z b c d"))
       .toDF("doc_id", "text")
-    val direct = NgramLM.kn4LogLik(probes, kn4Train)
+    val direct = NgramLM.knLogLik(probes, quadgramTrain, 4)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val fromCounts = NgramLM.kn4LogLikFromCounts(probes,
-        NgramLM.corpusQuadgrams(kn4Train))
+    val fromCounts = NgramLM.knLogLikFromCounts(probes,
+        NgramLM.corpusNgrams(quadgramTrain, 4))
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(direct == fromCounts,
       "the additive count multiset must force bit-identical order-4 scores")
     // and the corpus partial equals the per-doc frame aggregated
-    val a = NgramLM.corpusQuadgrams(kn4Train)
+    val a = NgramLM.corpusNgrams(quadgramTrain, 4)
       .as[(String, String, String, String, Long)].collect().toSet
-    val b = NgramLM.docQuadgrams(kn4Train)
+    val b = NgramLM.docNgrams(quadgramTrain, 4)
       .groupBy("w1", "w2", "w3", "w4").agg(sum("n").as("n"))
       .as[(String, String, String, String, Long)].collect().toSet
     assert(a == b)
@@ -275,9 +275,9 @@ class NgramLMSpec extends SparkTestBase {
   test("kn4PrunedLogLik: eps = 0 keeps every entry and equals kn4LogLik verbatim") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").limit(100)
-    val pruned = NgramLM.kn4PrunedLogLik(docs, docs, eps = 0.0)
+    val pruned = NgramLM.knPrunedLogLik(docs, docs, 4, eps = 0.0)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val full = NgramLM.kn4LogLik(docs, docs)
+    val full = NgramLM.knLogLik(docs, docs, 4)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(pruned == full,
       "γ4 must reduce to the original back-off weight when nothing prunes")
@@ -289,25 +289,25 @@ class NgramLMSpec extends SparkTestBase {
     // types), then check the pruned distribution still normalizes over
     // the continuation vocabulary for a seen history — the γ4
     // renormalization identity
-    val losses = NgramLM.kn4PruneEntries(kn4Train, 0.0)
+    val losses = NgramLM.knPruneEntries(quadgramTrain, 4, 0.0)
       .select("loss").as[Double].collect().sorted
     val eps = losses(losses.length / 2)
-    val ent = NgramLM.kn4PruneEntries(kn4Train, eps)
+    val ent = NgramLM.knPruneEntries(quadgramTrain, 4, eps)
       .select("kept").as[Boolean].collect()
     assert(ent.exists(!_) && ent.exists(identity),
       s"fixture must split at eps=$eps: ${ent.count(identity)}/${ent.length}")
     val probes = Seq("c", "d", "e").zipWithIndex
       .map { case (w, i) => (i.toLong, s"a b c $w") }
       .toDF("doc_id", "text")
-    val lps = NgramLM.kn4PrunedLogLik(probes, kn4Train, eps, scale = 9)
+    val lps = NgramLM.knPrunedLogLik(probes, quadgramTrain, 4, eps, scale = 9)
       .as[(Long, Long, Long, Double)].collect().map(r => math.exp(r._4))
     val total = lps.sum
     assert(math.abs(total - 1.0) < 1e-6,
       s"pruned 4-gram KN must still normalize per history, got $total")
     // and the pruned scores differ from the full model's (the γ4 arm fires)
-    val full = NgramLM.kn4LogLik(probes, kn4Train, scale = 9)
+    val full = NgramLM.knLogLik(probes, quadgramTrain, 4, scale = 9)
       .as[(Long, Long, Long, Double)].collect().map(_._4).toSeq
-    val pr = NgramLM.kn4PrunedLogLik(probes, kn4Train, eps, scale = 9)
+    val pr = NgramLM.knPrunedLogLik(probes, quadgramTrain, 4, eps, scale = 9)
       .as[(Long, Long, Long, Double)].collect().map(_._4).toSeq
     assert(full != pr, "the prune must move at least one probe score")
   }
@@ -315,9 +315,9 @@ class NgramLMSpec extends SparkTestBase {
   test("corpusBigrams: equals the per-doc frame aggregated (the store partial)") {
     val docs = Seq((1L, "a b a b"), (2L, "b a x"), (3L, null.asInstanceOf[String]),
       (4L, "x")).toDF("doc_id", "text")
-    val direct = NgramLM.corpusBigrams(docs)
+    val direct = NgramLM.corpusNgrams(docs, 2)
       .as[(String, String, Long)].collect().toSet
-    val viaDocs = NgramLM.docBigrams(docs).groupBy("w1", "w2")
+    val viaDocs = NgramLM.docNgrams(docs, 2).groupBy("w1", "w2")
       .agg(sum("n").as("n")).as[(String, String, Long)].collect().toSet
     assert(direct == viaDocs && direct.nonEmpty,
       "the doc-axis-free partial must count exactly the per-doc path's total")
@@ -330,7 +330,7 @@ class NgramLMSpec extends SparkTestBase {
     // floor keeps it on the documented back-off path.
     val train = Seq((1L, "a b a b a b")).toDF("doc_id", "text")
     val docs = Seq((9L, "b b")).toDF("doc_id", "text") // unseen gram, seen history
-    val r = NgramLM.knLogLik(docs, train).head()
+    val r = NgramLM.knLogLik(docs, train, 2).head()
     // D=0.5; p = 0 + (D*nf(b)/c1(b)) * pcont(b) = (0.5*1/2) * (1/2) = 0.125
     def r4(x: Double) = BigDecimal(x).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -344,9 +344,9 @@ class NgramLMSpec extends SparkTestBase {
   test("knPrunedLogLik: eps = 0 keeps every entry and equals knLogLik verbatim") {
     val docs = Seq((1L, "a b"), (2L, "b a"), (3L, "a c"), (4L, "a b a c"))
       .toDF("doc_id", "text")
-    val full = NgramLM.knLogLik(docs, knTrain)
+    val full = NgramLM.knLogLik(docs, knTrain, 2)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val pruned = NgramLM.knPrunedLogLik(docs, knTrain, eps = 0.0)
+    val pruned = NgramLM.knPrunedLogLik(docs, knTrain, 2, eps = 0.0)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(pruned == full,
       "with nothing pruned, γ must reduce to the original back-off weight")
@@ -360,18 +360,18 @@ class NgramLMSpec extends SparkTestBase {
       (1L, "the cat sat on the mat and the cat ran to the mat"),
       (2L, "a dog sat on a mat and a dog ran to a rug"),
       (3L, "the dog and the cat sat")).toDF("doc_id", "text")
-    val ent = NgramLM.knPruneEntries(train, eps = 0.0)
+    val ent = NgramLM.knPruneEntries(train, 2, eps = 0.0)
       .as[(String, String, Long, Long, Double, Boolean)].collect()
     val losses = ent.map(_._5).sorted
     val eps = losses(losses.length / 2)
-    val entAt = NgramLM.knPruneEntries(train, eps)
+    val entAt = NgramLM.knPruneEntries(train, 2, eps)
       .as[(String, String, Long, Long, Double, Boolean)].collect()
     assert(entAt.exists(_._6) && entAt.exists(!_._6),
       "the median threshold must split the entries")
     // scores move vs the unpruned model for at least one doc
-    val full = NgramLM.knLogLik(train, train)
+    val full = NgramLM.knLogLik(train, train, 2)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val pruned = NgramLM.knPrunedLogLik(train, train, eps)
+    val pruned = NgramLM.knPrunedLogLik(train, train, 2, eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(pruned != full, "pruning must actually move some score")
     assert(pruned.forall(_._3 == 0L), "self-scoring must never go OOV")
@@ -387,7 +387,7 @@ class NgramLMSpec extends SparkTestBase {
     } yield ((hi * 1000 + wi).toLong, s"$h $w", hi)).toSeq
       .toDF("doc_id", "text", "hist")
     val lps = NgramLM.knPrunedLogLik(probes.select("doc_id", "text"),
-        train, eps, scale = 9)
+        train, 2, eps, scale = 9)
       .join(probes.select(col("doc_id"), col("hist")), Seq("doc_id"))
       .select("hist", "avg_lp").as[(Int, Double)].collect()
     val byHist = lps.groupBy(_._1).view.mapValues(_.map(r => math.exp(r._2)).sum)
@@ -402,11 +402,11 @@ class NgramLMSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val probes = Seq((1L, "a b"), (2L, "b a"), (3L, "a c"))
       .toDF("doc_id", "text")
-    val got = NgramLM.knPrunedLogLik(probes, train, eps = 1e9)
+    val got = NgramLM.knPrunedLogLik(probes, train, 2, eps = 1e9)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     // every explicit entry gone: seen histories carry γ = 1 and each
     // gram scores its bare continuation probability
-    val cont = NgramLM.corpusBigrams(train)
+    val cont = NgramLM.corpusNgrams(train, 2)
       .as[(String, String, Long)].collect()
     val b = cont.size.toDouble
     def pcont(w: String) = cont.count(_._2 == w) / b
@@ -422,9 +422,9 @@ class NgramLMSpec extends SparkTestBase {
   test("kn3PrunedLogLik: eps = 0 keeps every entry and equals kn3LogLik verbatim") {
     val docs = Seq((1L, "a b c"), (2L, "a b d"), (3L, "a b c a b d"))
       .toDF("doc_id", "text")
-    val full = NgramLM.kn3LogLik(docs, kn3Train)
+    val full = NgramLM.knLogLik(docs, trigramTrain, 3)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val pruned = NgramLM.kn3PrunedLogLik(docs, kn3Train, eps = 0.0)
+    val pruned = NgramLM.knPrunedLogLik(docs, trigramTrain, 3, eps = 0.0)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(pruned == full,
       "with nothing pruned, γ3 must reduce to the original back-off weight")
@@ -433,9 +433,9 @@ class NgramLMSpec extends SparkTestBase {
   test("kn3PrunedLogLik: eps above every loss collapses to the mid-level model") {
     // every explicit trigram entry gone, every history's kept set empty
     // ⇒ γ3 = 1 and each gram scores P̂(w3|w2) — the continuation-count
-    // middle order alone; from the kn3Train hand model P̂(c|b) = 0.3
+    // middle order alone; from the trigramTrain hand model P̂(c|b) = 0.3
     val probes = Seq((1L, "a b c")).toDF("doc_id", "text")
-    val got = NgramLM.kn3PrunedLogLik(probes, kn3Train, eps = 1e9).head()
+    val got = NgramLM.knPrunedLogLik(probes, trigramTrain, 3, eps = 1e9).head()
     def r4(x: Double) = BigDecimal(x).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(got.getAs[Long]("n_oov") == 0L)
@@ -449,20 +449,20 @@ class NgramLMSpec extends SparkTestBase {
       (3L, "the dog and the cat sat on a rug")).toDF("doc_id", "text")
     // pick eps at the median engine-computed trigram loss so the kept
     // set is a strict, non-empty subset (the q205-spec discipline, one
-    // order up — kn3PruneEntries shares the loss definition with the
+    // order up — knPruneEntries shares the loss definition with the
     // scorer by construction)
-    val c123 = NgramLM.corpusTrigrams(train)
+    val c123 = NgramLM.corpusNgrams(train, 3)
       .as[(String, String, String, Long)].collect()
-    val losses = NgramLM.kn3PruneEntries(train, eps = 0.0)
+    val losses = NgramLM.knPruneEntries(train, 3, eps = 0.0)
       .select("loss").as[Double].collect().sorted
     val eps = losses(losses.length / 2)
-    val entAt = NgramLM.kn3PruneEntries(train, eps)
+    val entAt = NgramLM.knPruneEntries(train, 3, eps)
       .select("kept").as[Boolean].collect()
     assert(entAt.exists(identity) && entAt.exists(!_),
       "the median threshold must split the entries")
-    val pruned = NgramLM.kn3PrunedLogLik(train, train, eps)
+    val pruned = NgramLM.knPrunedLogLik(train, train, 3, eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    assert(pruned != NgramLM.kn3LogLik(train, train)
+    assert(pruned != NgramLM.knLogLik(train, train, 3)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq,
       "pruning must actually move some score")
     assert(pruned.forall(_._3 == 0L), "self-scoring must never go OOV")
@@ -475,8 +475,8 @@ class NgramLMSpec extends SparkTestBase {
       (w, wi) <- vocab.zipWithIndex
     } yield ((hi * 1000 + wi).toLong, s"$h1 $h2 $w", hi)).toSeq
       .toDF("doc_id", "text", "hist")
-    val lps = NgramLM.kn3PrunedLogLik(probes.select("doc_id", "text"),
-        train, eps, scale = 9)
+    val lps = NgramLM.knPrunedLogLik(probes.select("doc_id", "text"),
+        train, 3, eps, scale = 9)
       .join(probes.select(col("doc_id"), col("hist")), Seq("doc_id"))
       .select("hist", "avg_lp").as[(Int, Double)].collect()
     lps.groupBy(_._1).foreach { case (h, rows) =>
@@ -497,7 +497,7 @@ class NgramLMSpec extends SparkTestBase {
       (201L, "the cat sat and a cat ran")).toDF("doc_id", "text")
     val probes = Seq((1L, "ran francisco"), (2L, "ran cat"))
       .toDF("doc_id", "text") // "ran" is an unseen history → pure P_cont
-    val kn = NgramLM.knLogLik(probes, train)
+    val kn = NgramLM.knLogLik(probes, train, 2)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect()
     assert(kn(1)._4 > kn(0)._4,
       s"P_cont(cat) must beat P_cont(francisco): $kn")

@@ -496,11 +496,11 @@ class PlanShapeSpec extends SparkTestBase {
     // the LM) — the count-frame aggregation facts therefore live in the
     // PRE-checkpoint subplan, asserted here on the gram frame directly;
     // the declared queries keep the no-cartesian fact on their final plan
-    val grams = graft.ext.NgramLM.docBigrams(
-      graft.core.Tables.documents(spark, dir))
+    val grams = graft.ext.NgramLM.docNgrams(
+      graft.core.Tables.documents(spark, dir), 2)
     val gp = grams.queryExecution.executedPlan.toString
     assert(gp.contains("partial_count") || gp.contains("partial_sum"),
-      "docBigrams: per-doc gram counts must combine map-side before the shuffle")
+      "docNgrams: per-doc gram counts must combine map-side before the shuffle")
     for (q <- Seq("q106_perplexity_filter", "q107_dsir_weights")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"),
@@ -508,23 +508,18 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
-  // q201/q202/q203 — and the round-14 q204/q205 — (KN scoring): the
-  // scored frame eagerly checkpoints inside knScore/kn3Score/
-  // knPrunedLogLik (the q106 discipline), which collapses the executed
-  // plan to a LogicalRDD scan — a post-hoc guard here would be vacuous.
-  // Their shape facts are covered upstream: docBigrams' map-side
-  // partials (asserted above), the totals rows carry explicit
-  // broadcast() hints (BroadcastNestedLoopJoin by construction),
-  // docTrigrams mirrors docBigrams' bound-column transform, and q205's
-  // γ frame is one more vocabulary-sized hash aggregate over the kept
-  // filter of the type table (no new join shape).
+  // q201–q219 (KN scoring): the scored frame eagerly checkpoints inside
+  // NgramLM's per-document aggregation (the q106 discipline), which
+  // collapses the executed plan to a LogicalRDD scan — a post-hoc guard
+  // here would be vacuous. Their shape facts are covered upstream:
+  // docNgrams' map-side partials (asserted above, one bound-column
+  // transform at every order), the totals row carries an explicit
+  // broadcast() hint (BroadcastNestedLoopJoin by construction), and the
+  // pruned γ frame is one more vocabulary-sized hash aggregate over the
+  // kept filter of the type table (no new join shape). The serving
+  // joins (q209/q210/q213/q218) are 2n − 1 equi-joins of bounded frames,
+  // pinned by KnModelSpec's bounded-size assertions.
   //
-  // The round-15 KN members inherit the same boundary: q210/q213 score
-  // through kn3ScoreFromModel (checkpointed; the serving joins are five
-  // equi-joins of localCheckpoint'd bounded frames — broadcastable by
-  // size, pinned by KnModelSpec's bounded-size assertions), q211's
-  // kn4Score is kn3Score's shape one level up (docQuadgrams mirrors the
-  // bound-column transform; three broadcast count-of-counts rows), and
   // q214's second pass is q212's plan under a different θ (guarded
   // below on the live plan — the kernel path never checkpoints).
 

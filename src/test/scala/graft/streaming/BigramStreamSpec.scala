@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import graft.SparkTestBase
 import graft.ext.NgramLM
 
-/** The streaming bigram-statistics store: maintained (w1, w2) counts —
+/** The bigram [[NgramCountStream]]: maintained (w1, w2) counts —
   * and the Kneser-Ney scores derived from them — must be BIT-IDENTICAL
   * to the one-shot aggregation over everything ingested, under any
   * fold split, replays (before AND at the compaction watermark), a
@@ -21,33 +21,34 @@ class BigramStreamSpec extends SparkTestBase {
     .parquet("/root/testdata/sf0.001/documents.parquet")
     .select("doc_id", "text").limit(120).cache()
 
-  private def cfgFor(st: String) = BigramStreamConfig(
-    s"$st/_in_unused", st, s"$st/_ck_unused", schema)
+  private def cfgFor(st: String) = NgramCountStreamConfig(
+    s"$st/_in_unused", st, s"$st/_ck_unused", schema, 2)
 
   private def countsOf(st: String): Map[(String, String), Long] =
-    BigramStream.bigramCounts(spark, st).collect()
+    NgramCountStream.counts(spark, st, 2).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
 
   private def knOf(st: String): Seq[(Long, Long, Long, Double)] =
-    BigramStream.knLogLik(spark, st, corpus).orderBy("doc_id")
+    NgramLM.knLogLikFromCounts(corpus,
+      NgramCountStream.counts(spark, st, 2)).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
 
   test("folds + replays + compaction ≡ one-shot counts; maintained KN scores identical") {
-    val wantCounts = NgramLM.docBigrams(corpus)
+    val wantCounts = NgramLM.docNgrams(corpus, 2)
       .groupBy("w1", "w2").agg(sum("n").as("n")).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val wantKn = NgramLM.knLogLik(corpus, corpus).orderBy("doc_id")
+    val wantKn = NgramLM.knLogLik(corpus, corpus, 2).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
 
     val st = tmpDir("bgs-a")
     val cfg = cfgFor(st)
     def third(k: Int) = corpus.filter(col("doc_id") % 3 === k)
-    BigramStream.processBatch(third(0), 0L, cfg)
-    BigramStream.processBatch(third(1), 1L, cfg)
-    BigramStream.processBatch(third(1), 1L, cfg) // replay: must not double
-    BigramStream.compact(spark, st, upToBatch = 1L)
-    BigramStream.processBatch(third(0), 0L, cfg) // at watermark: skipped
-    BigramStream.processBatch(third(2), 2L, cfg)
+    NgramCountStream.processBatch(third(0), 0L, cfg)
+    NgramCountStream.processBatch(third(1), 1L, cfg)
+    NgramCountStream.processBatch(third(1), 1L, cfg) // replay: must not double
+    NgramCountStream.compact(spark, st, 2, upToBatch = 1L)
+    NgramCountStream.processBatch(third(0), 0L, cfg) // at watermark: skipped
+    NgramCountStream.processBatch(third(2), 2L, cfg)
     assert(countsOf(st) == wantCounts,
       "maintained bigram counts must equal the one-shot aggregation")
     assert(knOf(st) == wantKn,
@@ -56,8 +57,8 @@ class BigramStreamSpec extends SparkTestBase {
     // rebuild with a different split and order — arrival-order-free
     val st2 = tmpDir("bgs-b")
     val cfg2 = cfgFor(st2)
-    BigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 0L, cfg2)
-    BigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 1L, cfg2)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 0L, cfg2)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 1L, cfg2)
     assert(knOf(st2) == wantKn, "rebuilt store must derive identical scores")
   }
 
@@ -68,14 +69,14 @@ class BigramStreamSpec extends SparkTestBase {
     val st = tmpDir("bgs-grow")
     val cfg = cfgFor(st)
     val half = corpus.filter(col("doc_id") % 2 === 0)
-    BigramStream.processBatch(half, 0L, cfg)
+    NgramCountStream.processBatch(half, 0L, cfg)
     val scoresHalf = knOf(st)
     assert(scoresHalf == NgramLM.knLogLikFromCounts(corpus,
-        NgramLM.docBigrams(half).groupBy("w1", "w2").agg(sum("n").as("n")))
+        NgramLM.docNgrams(half, 2).groupBy("w1", "w2").agg(sum("n").as("n")))
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq)
-    BigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
     val scoresFull = knOf(st)
-    assert(scoresFull == NgramLM.knLogLik(corpus, corpus).orderBy("doc_id")
+    assert(scoresFull == NgramLM.knLogLik(corpus, corpus, 2).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq,
       "after the second shard the maintained model is the full-corpus model")
     assert(scoresHalf != scoresFull,
@@ -88,16 +89,17 @@ class BigramStreamSpec extends SparkTestBase {
     // equals pruning the one-shot aggregation — same kept set, same γ
     val st = tmpDir("bgs-prune")
     val cfg = cfgFor(st)
-    BigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 0L, cfg)
-    BigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 0L, cfg)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
     val eps = 1e-3
-    val got = BigramStream.knPrunedLogLik(spark, st, corpus, eps)
+    val got = NgramLM.knPrunedLogLikFromCounts(corpus,
+      NgramCountStream.counts(spark, st, 2), eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val want = NgramLM.knPrunedLogLik(corpus, corpus, eps)
+    val want = NgramLM.knPrunedLogLik(corpus, corpus, 2, eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(got == want)
     // and the prune actually bites on this fixture (γ arm exercised)
-    assert(want != NgramLM.knLogLik(corpus, corpus).orderBy("doc_id")
+    assert(want != NgramLM.knLogLik(corpus, corpus, 2).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq)
   }
 }

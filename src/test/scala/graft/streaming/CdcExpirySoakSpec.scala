@@ -70,6 +70,50 @@ class CdcExpirySoakSpec extends SparkTestBase {
     }
   }
 
+  test("compaction and expiry due on the same trigger: one rewrite, same answers") {
+    val in = tmpDir("expc-in")
+    val whE = tmpDir("expc-wh"); val ckE = tmpDir("expc-ck")
+    val whP = tmpDir("expc-wh-plain"); val ckP = tmpDir("expc-ck-plain")
+    (0 until 12).foreach(i =>
+      Fixtures.writeLines(in, f"log-$i%03d.jsonl", mkFile(i), gzip = false))
+
+    val base = CdcStreamConfig(in, whE, ckE, Fixtures.registry, maxFilesPerTrigger = 1)
+    // both schedules fire at batches 2, 4, …, 10; the last horizon is
+    // max(ts of batches <= 9) - 2h = 19:00 - 2h = 17:00
+    CdcStream.runOnce(spark, base.copy(compactEveryNBatches = 2,
+      expireEveryNBatches = 2,
+      expire = Map(
+        "users" -> ExpirePolicy("2 hours", Seq("user_id")),
+        "products" -> ExpirePolicy("2 hours", Seq("product_id")))))
+    CdcStream.runOnce(spark, base.copy(warehouseDir = whP, checkpointDir = ckP))
+
+    def changelog(wh: String, table: String) =
+      Ingest.readTable(spark, wh, Fixtures.registry(table))
+        .withColumn("update_date", col("update_date").cast("timestamp"))
+
+    for (table <- Seq("users", "products");
+         pk = if (table == "users") Seq("user_id") else Seq("product_id")) {
+      val dirs = new java.io.File(s"$whE/${Fixtures.registry(table).physicalName}")
+        .listFiles().toSeq.map(_.getName).filter(_.startsWith("batch=")).sorted
+      assert(dirs == Seq("batch=-1", "batch=10", "batch=11"),
+        s"$table: batches <= 9 must sit in batch=-1 after the last rewrite: $dirs")
+      val e = changelog(whE, table); val p = changelog(whP, table)
+      assert(e.count() < p.count(),
+        s"$table: expiry must actually collapse history (${e.count()} vs ${p.count()})")
+      for (h <- Seq("17:00:00", "18:30:00", "21:00:00")) {
+        val t = lit(s"2026-01-01T$h").cast("timestamp")
+        val a = Versioned.asOf(e, t, pk).orderBy(pk.map(col): _*).collect().toSeq
+        val b = Versioned.asOf(p, t, pk).orderBy(pk.map(col): _*).collect().toSeq
+        assert(a == b, s"$table: asOf($h) diverged")
+      }
+      val (t1, t2) = (lit("2026-01-01T17:00:00").cast("timestamp"),
+        lit("2026-01-01T21:00:00").cast("timestamp"))
+      val cE = Versioned.changesBetween(e, t1, t2).orderBy((pk :+ "update_date").map(col): _*)
+      val cP = Versioned.changesBetween(p, t1, t2).orderBy((pk :+ "update_date").map(col): _*)
+      assert(cE.collect().toSeq == cP.collect().toSeq, s"$table: changesBetween diverged")
+    }
+  }
+
   // ---- everything-on soak: folds + aggs + compaction + expiry, 200k envelopes ----
 
   private val SoakKeys = 5000

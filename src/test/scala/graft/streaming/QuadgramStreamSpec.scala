@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import graft.SparkTestBase
 import graft.ext.NgramLM
 
-/** The streaming 4-gram-statistics store ([[TrigramStream]]'s
+/** The 4-gram [[NgramCountStream]] (the trigram store's
   * discipline one order up): maintained (w1..w4) counts — and the
   * three-level interpolated-KN scores derived from them — must be
   * BIT-IDENTICAL to the one-shot aggregation over everything ingested,
@@ -22,51 +22,53 @@ class QuadgramStreamSpec extends SparkTestBase {
     .parquet("/root/testdata/sf0.001/documents.parquet")
     .select("doc_id", "text").limit(120).cache()
 
-  private def cfgFor(st: String) = QuadgramStreamConfig(
-    s"$st/_in_unused", st, s"$st/_ck_unused", schema)
+  private def cfgFor(st: String) = NgramCountStreamConfig(
+    s"$st/_in_unused", st, s"$st/_ck_unused", schema, 4)
 
-  private def kn4Of(st: String): Seq[(Long, Long, Long, Double)] =
-    QuadgramStream.kn4LogLik(spark, st, corpus).orderBy("doc_id")
+  private def knOf(st: String): Seq[(Long, Long, Long, Double)] =
+    NgramLM.knLogLikFromCounts(corpus,
+      NgramCountStream.counts(spark, st, 4)).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
 
   test("folds + replays + compaction ≡ one-shot counts; maintained KN4 scores identical") {
-    val wantCounts = NgramLM.docQuadgrams(corpus)
+    val wantCounts = NgramLM.docNgrams(corpus, 4)
       .groupBy("w1", "w2", "w3", "w4").agg(sum("n").as("n")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3)) -> r.getLong(4)).toMap
-    val wantKn = NgramLM.kn4LogLik(corpus, corpus).orderBy("doc_id")
+    val wantKn = NgramLM.knLogLik(corpus, corpus, 4).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
 
     val st = tmpDir("qgs-a")
     val cfg = cfgFor(st)
     def third(k: Int) = corpus.filter(col("doc_id") % 3 === k)
-    QuadgramStream.processBatch(third(0), 0L, cfg)
-    QuadgramStream.processBatch(third(1), 1L, cfg)
-    QuadgramStream.processBatch(third(1), 1L, cfg) // replay: must not double
-    QuadgramStream.compact(spark, st, upToBatch = 1L)
-    QuadgramStream.processBatch(third(0), 0L, cfg) // at watermark: skipped
-    QuadgramStream.processBatch(third(2), 2L, cfg)
-    val got = QuadgramStream.quadgramCounts(spark, st).collect()
+    NgramCountStream.processBatch(third(0), 0L, cfg)
+    NgramCountStream.processBatch(third(1), 1L, cfg)
+    NgramCountStream.processBatch(third(1), 1L, cfg) // replay: must not double
+    NgramCountStream.compact(spark, st, 4, upToBatch = 1L)
+    NgramCountStream.processBatch(third(0), 0L, cfg) // at watermark: skipped
+    NgramCountStream.processBatch(third(2), 2L, cfg)
+    val got = NgramCountStream.counts(spark, st, 4).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3)) -> r.getLong(4)).toMap
     assert(got == wantCounts,
       "maintained 4-gram counts must equal the one-shot aggregation")
-    assert(kn4Of(st) == wantKn,
+    assert(knOf(st) == wantKn,
       "the maintained 4-gram-KN model must score bit-identically to one-shot")
   }
 
   test("maintained PRUNED 4-gram model scores bit-identically to one-shot pruning") {
     val st = tmpDir("qgs-prune")
     val cfg = cfgFor(st)
-    QuadgramStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 0L, cfg)
-    QuadgramStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 0L, cfg)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
     val eps = 3e-5
-    val got = QuadgramStream.kn4PrunedLogLik(spark, st, corpus, eps)
+    val got = NgramLM.knPrunedLogLikFromCounts(corpus,
+      NgramCountStream.counts(spark, st, 4), eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val want = NgramLM.kn4PrunedLogLik(corpus, corpus, eps)
+    val want = NgramLM.knPrunedLogLik(corpus, corpus, 4, eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(got == want)
-    assert(want != NgramLM.kn4LogLik(corpus, corpus).orderBy("doc_id")
+    assert(want != NgramLM.knLogLik(corpus, corpus, 4).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq,
       "the fixture prune must actually bite")
   }

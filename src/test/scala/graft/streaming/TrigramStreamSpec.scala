@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import graft.SparkTestBase
 import graft.ext.NgramLM
 
-/** The streaming trigram-statistics store: maintained (w1, w2, w3)
+/** The trigram [[NgramCountStream]]: maintained (w1, w2, w3)
   * counts — and the trigram interpolated-KN scores derived from them —
   * must be BIT-IDENTICAL to the one-shot aggregation over everything
   * ingested, under any fold split, replays (before AND at the
@@ -21,51 +21,52 @@ class TrigramStreamSpec extends SparkTestBase {
     .parquet("/root/testdata/sf0.001/documents.parquet")
     .select("doc_id", "text").limit(120).cache()
 
-  private def cfgFor(st: String) = TrigramStreamConfig(
-    s"$st/_in_unused", st, s"$st/_ck_unused", schema)
+  private def cfgFor(st: String) = NgramCountStreamConfig(
+    s"$st/_in_unused", st, s"$st/_ck_unused", schema, 3)
 
   private def countsOf(st: String): Map[(String, String, String), Long] =
-    TrigramStream.trigramCounts(spark, st).collect()
+    NgramCountStream.counts(spark, st, 3).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
       .toMap
 
-  private def kn3Of(st: String): Seq[(Long, Long, Long, Double)] =
-    TrigramStream.kn3LogLik(spark, st, corpus).orderBy("doc_id")
+  private def knOf(st: String): Seq[(Long, Long, Long, Double)] =
+    NgramLM.knLogLikFromCounts(corpus,
+      NgramCountStream.counts(spark, st, 3)).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
 
   test("folds + replays + compaction ≡ one-shot counts; maintained KN3 scores identical") {
     // the one-shot truth, derived BOTH ways: the per-doc frame summed
-    // and the doc-axis-free partial must agree (pins corpusTrigrams)
-    val wantCounts = NgramLM.docTrigrams(corpus)
+    // and the doc-axis-free partial must agree (pins corpusNgrams at order 3)
+    val wantCounts = NgramLM.docNgrams(corpus, 3)
       .groupBy("w1", "w2", "w3").agg(sum("n").as("n")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
       .toMap
-    assert(NgramLM.corpusTrigrams(corpus)
+    assert(NgramLM.corpusNgrams(corpus, 3)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
         r.getLong(3)).toMap == wantCounts)
-    val wantKn = NgramLM.kn3LogLik(corpus, corpus).orderBy("doc_id")
+    val wantKn = NgramLM.knLogLik(corpus, corpus, 3).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
 
     val st = tmpDir("tgs-a")
     val cfg = cfgFor(st)
     def third(k: Int) = corpus.filter(col("doc_id") % 3 === k)
-    TrigramStream.processBatch(third(0), 0L, cfg)
-    TrigramStream.processBatch(third(1), 1L, cfg)
-    TrigramStream.processBatch(third(1), 1L, cfg) // replay: must not double
-    TrigramStream.compact(spark, st, upToBatch = 1L)
-    TrigramStream.processBatch(third(0), 0L, cfg) // at watermark: skipped
-    TrigramStream.processBatch(third(2), 2L, cfg)
+    NgramCountStream.processBatch(third(0), 0L, cfg)
+    NgramCountStream.processBatch(third(1), 1L, cfg)
+    NgramCountStream.processBatch(third(1), 1L, cfg) // replay: must not double
+    NgramCountStream.compact(spark, st, 3, upToBatch = 1L)
+    NgramCountStream.processBatch(third(0), 0L, cfg) // at watermark: skipped
+    NgramCountStream.processBatch(third(2), 2L, cfg)
     assert(countsOf(st) == wantCounts,
       "maintained trigram counts must equal the one-shot aggregation")
-    assert(kn3Of(st) == wantKn,
+    assert(knOf(st) == wantKn,
       "the maintained trigram-KN model must score bit-identically to one-shot")
 
     // rebuild with a different split and order — arrival-order-free
     val st2 = tmpDir("tgs-b")
     val cfg2 = cfgFor(st2)
-    TrigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 0L, cfg2)
-    TrigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 1L, cfg2)
-    assert(kn3Of(st2) == wantKn, "rebuilt store must derive identical scores")
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 0L, cfg2)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 1L, cfg2)
+    assert(knOf(st2) == wantKn, "rebuilt store must derive identical scores")
   }
 
   test("incremental model shift: new shards move the model, counts stay exact") {
@@ -75,14 +76,14 @@ class TrigramStreamSpec extends SparkTestBase {
     val st = tmpDir("tgs-grow")
     val cfg = cfgFor(st)
     val half = corpus.filter(col("doc_id") % 2 === 0)
-    TrigramStream.processBatch(half, 0L, cfg)
-    val scoresHalf = kn3Of(st)
-    assert(scoresHalf == NgramLM.kn3LogLikFromCounts(corpus,
-        NgramLM.corpusTrigrams(half))
+    NgramCountStream.processBatch(half, 0L, cfg)
+    val scoresHalf = knOf(st)
+    assert(scoresHalf == NgramLM.knLogLikFromCounts(corpus,
+        NgramLM.corpusNgrams(half, 3))
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq)
-    TrigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
-    val scoresFull = kn3Of(st)
-    assert(scoresFull == NgramLM.kn3LogLik(corpus, corpus).orderBy("doc_id")
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
+    val scoresFull = knOf(st)
+    assert(scoresFull == NgramLM.knLogLik(corpus, corpus, 3).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq,
       "after the second shard the maintained model is the full-corpus model")
     assert(scoresHalf != scoresFull,
@@ -95,15 +96,16 @@ class TrigramStreamSpec extends SparkTestBase {
     // and γ3 ⇒ identical scores
     val st = tmpDir("tgs-prune")
     val cfg = cfgFor(st)
-    TrigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 0L, cfg)
-    TrigramStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 0), 0L, cfg)
+    NgramCountStream.processBatch(corpus.filter(col("doc_id") % 2 === 1), 1L, cfg)
     val eps = 1e-4
-    val got = TrigramStream.kn3PrunedLogLik(spark, st, corpus, eps)
+    val got = NgramLM.knPrunedLogLikFromCounts(corpus,
+      NgramCountStream.counts(spark, st, 3), eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
-    val want = NgramLM.kn3PrunedLogLik(corpus, corpus, eps)
+    val want = NgramLM.knPrunedLogLik(corpus, corpus, 3, eps)
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(got == want)
-    assert(want != NgramLM.kn3LogLik(corpus, corpus).orderBy("doc_id")
+    assert(want != NgramLM.knLogLik(corpus, corpus, 3).orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq,
       "the fixture prune must actually bite")
   }

@@ -491,7 +491,7 @@ class CuratePipelineSpec extends SparkTestBase {
     // stand-in for the reference-corpus model CCNet actually ships),
     // exported once and handed to the pipeline as a path
     val dir = tmpDir("curate-knm")
-    graft.ext.KnModel.export3(docs, 1e-4, dir)
+    graft.ext.KnModel.export(docs, 3, 1e-4, dir)
     // the reference set: the pipeline's own heuristic-gate stage, then
     // STANDALONE scoring through the same artifact at the same quantile
     // — the docs the KN gate is allowed to pass through
@@ -532,7 +532,7 @@ class CuratePipelineSpec extends SparkTestBase {
     val trainTxt = "the quick brown fox jumps over the lazy dog again and again"
     val train = (1L to 8L).map(i => (i, trainTxt)).toDF("doc_id", "text")
     val dir = tmpDir("curate-knm-oov")
-    graft.ext.KnModel.export3(train, 1e-4, dir)
+    graft.ext.KnModel.export(train, 3, 1e-4, dir)
     val mk = (id: Long, text: String) =>
       (id, text, "en", "src", text.length.toLong)
     // distinct texts throughout — curateCorpus near-dedups at 0.5, so
