@@ -1,5 +1,8 @@
 package graft.cdc
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,6 +129,12 @@ object AggMaintainer {
     try {
       val touched = BucketStore.touchedBuckets(delta, BucketCol)
       if (touched.isEmpty) return
+      // a store written before the nn_ columns cannot be merged (its
+      // all-NULL groups and zero sums look alike): drop it, so the seed
+      // below rebuilds it from the snapshot — a crash in between leaves
+      // no store, which the replay seeds the same way
+      if (lacksNonNullCounts(spark, dir, spec))
+        new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()).delete(new Path(dir), true)
       // the post-fold snapshot already holds this batch: a seeded store
       // takes no delta
       if (!BucketStore.seedIfMissing(spark, dir,
@@ -144,6 +153,28 @@ object AggMaintainer {
     } finally delta.unpersist(false)
   }
 
+  /** True if the store at `dir` was written before the non-NULL counts:
+    * a `sum_<col>` without its `nn_<col>`. Reads the footer of the
+    * first parquet file found under the store on the driver (no Spark
+    * job); every bucket of a store shares its writer's columns. */
+  private def lacksNonNullCounts(spark: SparkSession, dir: String,
+                                 spec: AggSpec): Boolean = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    spec.sumCols.nonEmpty && fs.exists(root) &&
+      fs.listStatus(root).iterator.filter(_.isDirectory)
+        .flatMap(d => fs.listStatus(d.getPath).iterator.map(_.getPath))
+        .find(_.getName.endsWith(".parquet"))
+        .exists { f =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+          try {
+            val schema = reader.getFooter.getFileMetaData.getSchema
+            spec.sumCols.exists(c => !schema.containsField(s"nn_$c"))
+          } finally reader.close()
+        }
+  }
+
   /** The aggregate of the current snapshot, bucketed as stored. */
   private def bucketedTotals(spark: SparkSession, warehouseDir: String,
                              table: String, spec: AggSpec, actionCol: String,
@@ -160,7 +191,6 @@ object AggMaintainer {
     val stored = spark.read.parquet(aggDir(warehouseDir, table, name))
     val sums = stored.columns.toSeq.filter(_.startsWith("sum_"))
       .map(s => s -> ("nn_" + s.stripPrefix("sum_")))
-      .filter { case (_, nn) => stored.columns.contains(nn) }
     sums.foldLeft(stored) { case (df, (s, nn)) =>
       df.withColumn(s, when(col(nn) =!= 0L, col(s)))
     }.drop(BucketCol +: AllCol +: sums.map(_._2): _*)

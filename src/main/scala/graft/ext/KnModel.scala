@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-derivation — what a production deployment actually ships (KenLM
   * writes an ARPA/binary file; the columnar equivalent here is
   * vocabulary-sized frames a cluster can broadcast or hash-join). The
-  * tables, in [[NgramLM.knPrunedModelFrames]] order, per order:
+  * tables, in [[NgramLM.withKnPrunedModelFrames]] order, per order:
   *
   *   2: _kn_entries (w1, w2, p), _kn_backoff (w1, gamma), _kn_cont (w2, pcont)
   *   3: _kn3_entries, _kn3_backoff12, _kn3_mid (w2, w3, p),

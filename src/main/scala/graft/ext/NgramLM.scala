@@ -196,24 +196,20 @@ object NgramLM {
 
     val pcont: Column = col("nb").cast("double") / col("b")
 
-    /** P at level `from` and below: each level interpolates with the one
-      * beneath it, an unseen history falls through to the lower level,
-      * and a w_n never seen as a continuation leaves NULL (OOV). */
-    def prob(from: Int): Column = levels.drop(from).foldRight(pcont)(fallThrough)
-
-    private def fallThrough(lv: Level, lower: Column): Column =
-      when(col(lv.cdot).isNotNull && lower.isNotNull, lv.interp(lower)).otherwise(lower)
-
-    /** `df` with column `name` = [[prob]](`from`), one level per
-      * projection: each level is computed once per row instead of once
-      * per reference. */
+    /** `df` with column `name` = P at level `from` and below: each level
+      * interpolates with the one beneath it, an unseen history falls
+      * through to the lower level, and a w_n never seen as a
+      * continuation leaves NULL (OOV). One level per projection, so each
+      * level is computed once per row instead of once per reference. */
     def withProb(df: DataFrame, from: Int, name: String): DataFrame =
-      levels.drop(from).foldRight(df.withColumn(name, pcont))((lv, acc) =>
-        acc.withColumn(name, fallThrough(lv, col(name))))
+      levels.drop(from).foldRight(df.withColumn(name, pcont)) { (lv, acc) =>
+        val lower = col(name)
+        acc.withColumn(name,
+          when(col(lv.cdot).isNotNull && lower.isNotNull, lv.interp(lower)).otherwise(lower))
+      }
 
-    /** [[prob]] for a row that every level from `from` down has seen (an
-      * explicit entry): the same values without the fall-through arms,
-      * whose nested copies would grow the expression with the order. */
+    /** [[withProb]] for a row that every level from `from` down has seen
+      * (an explicit entry): the same values without the fall-through arms. */
     def seen(from: Int): Column =
       levels.drop(from).foldRight(pcont)((lv, lower) => lv.interp(lower, explicit = true))
 
@@ -369,8 +365,8 @@ object NgramLM {
 
   private def knScore(grams: DataFrame, counts: DataFrame, scale: Int): DataFrame =
     withModel(counts) { m =>
-      perDoc(m.below(grams, 0, "left").withColumn("lp", col("n") * log(m.prob(0))),
-        m.n, scale)
+      perDoc(m.withProb(m.below(grams, 0, "left"), 0, "__p")
+        .withColumn("lp", col("n") * log(col("__p"))), m.n, scale)
     }
 
   /** Average n-gram log-likelihood per document under an INTERPOLATED
@@ -468,7 +464,7 @@ object NgramLM {
     * pruned entry, which puts the renormalization under the hash gate.
     *
     * Scoring through the pruned model frames instead gives the same
-    * values (the [[knPrunedModelFrames]] fidelity contract) but is
+    * values (the [[withKnPrunedModelFrames]] fidelity contract) but is
     * slower — the trigram queries q207/q208 by about a third at sf0.1 —
     * because the frames re-join the lower levels this scorer joins once.
     *
@@ -512,20 +508,17 @@ object NgramLM {
     * (greatest(0 − D, 0) = +0.0 and +0.0 + x = x in IEEE), so scoring
     * the loaded artifact ([[knScoreFromModel]]) equals [[knPrunedLogLik]]
     * bit-for-bit — q209/q210/q218 drive export → load → score against
-    * the raw-text DuckDB oracles. */
-  def knPrunedModelFrames(counts: DataFrame, eps: Double): Seq[DataFrame] =
-    // bounded frames: materialize before the caches underneath go
-    withKnPrunedModelFrames(counts, eps)(_.map(_.localCheckpoint(true)))
-
-  /** Derive the pruned-model frames LAZILY and hand them to `use` while
-    * the caches underneath are alive — the export path writes them
+    * the raw-text DuckDB oracles.
+    *
+    * The frames are derived LAZILY and handed to `use` while the caches
+    * underneath are alive — [[KnModel.exportFromCounts]] writes them
     * straight to parquet (the write IS the materialization). */
   private[graft] def withKnPrunedModelFrames[T](counts: DataFrame, eps: Double)(
       use: Seq[DataFrame] => T): T =
     withModel(counts)(_.prunedFrames(eps)(use))
 
   /** Score documents against pruned-model frames in the
-    * [[knPrunedModelFrames]] layout (e.g. a LOADED artifact) — no raw
+    * [[withKnPrunedModelFrames]] layout (e.g. a LOADED artifact) — no raw
     * counts, no model derivation, 2n − 1 equi-joins against the bounded
     * frames. Arms, bottom up: P_1 = pcont, NULL = OOV; at each level a
     * stored p wins, else a stored back-off weight scales the level

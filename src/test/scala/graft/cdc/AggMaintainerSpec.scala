@@ -1,5 +1,6 @@
 package graft.cdc
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -267,6 +268,28 @@ class AggMaintainerSpec extends SparkTestBase {
     AggMaintainer.rebuild(spark, wh, "t", spec)
     assert(maintained(wh) == Map("g" -> ((1L, null))))
     assert(AggMaintainer.read(spark, wh, "t", "by_status").columns.toSeq == cols)
+  }
+
+  test("a store written without the nn_ columns is reseeded on its next fold") {
+    val wh = "file:" + tmpDir("aggm-old-store")
+    AggMaintainer.foldAndMaintain(spark, wh, "t", batchDf(
+      (1L, "insert", "2026-01-01T10:00:00", "g", 5.0),
+      (2L, "insert", "2026-01-01T10:00:00", "h", 3.0)), pk, Seq(spec))
+    // rewrite the store in the earlier layout: the same rows, no nn_amount
+    val dir = AggMaintainer.aggDir(wh, "t", spec.name)
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    spark.read.parquet(dir).drop("nn_amount")
+      .write.partitionBy("__gbucket").parquet(dir + "_old")
+    assert(fs.delete(new Path(dir), true) && fs.rename(new Path(dir + "_old"), new Path(dir)))
+    assert(!spark.read.parquet(dir).columns.contains("nn_amount"))
+    // an update inside one group: n_rows +0, sum +2, no non-NULL change
+    AggMaintainer.foldAndMaintain(spark, wh, "t", batchDf(
+      (1L, "update", "2026-01-01T11:00:00", "g", 7.0)), pk, Seq(spec))
+    check(wh, "after the first fold over the earlier layout")
+    assert(maintained(wh) == Map(
+      "g" -> ((1L, new java.math.BigDecimal("7.00000000"))),
+      "h" -> ((1L, new java.math.BigDecimal("3.00000000")))))
+    assert(spark.read.parquet(dir).columns.contains("nn_amount"))
   }
 
   test("multi-version batch: the pre-fold row is the stored row, never a batch row") {
