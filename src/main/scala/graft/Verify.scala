@@ -19,6 +19,7 @@ object Verify {
       // µs, not INT96: pyarrow reads INT96 as ns, breaking typed compares
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
       // the engine's full surface (native fns, TVFs, optimizer rules) —
       // the same extensions GraftSession loads, so the driver-contract
       // sessions run the plans a deployment would

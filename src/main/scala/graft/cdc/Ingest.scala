@@ -166,11 +166,6 @@ object Ingest {
       registry, warehouseDir, replayBatchId)
   }
 
-  /** Compact a versioned table's accumulated `batch=<id>` micro-batch
-    * directories into a single batch=0 layout (small-file mitigation for
-    * long-running streams; preserves the `_dt` partitioning if present).
-    * Not concurrency-safe with an active writer — run between stream
-    * restarts, like any storage maintenance job. */
   /** Reserved batch partition the IN-STREAM compactor merges history
     * into. Negative so it can never collide with a streaming batch id:
     * a replayed batch overwrites its own `batch=<id>` dir, and merging

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 import graft.functions.VectorFunctions
 
@@ -15,6 +16,17 @@ import graft.functions.VectorFunctions
   */
 object GraftSession {
 
+  /** Size of Spark's generated-class cache (default 100 entries, LRU).
+    * A fold trigger over snapshot, SCD2 and aggregate stores generates
+    * about 130 distinct classes and a whole streaming run about 280, so
+    * at the default every class is evicted before the next trigger needs
+    * it and each trigger recompiles its plans with Janino. The cache is a
+    * JVM-wide static, sized from the conf of the first session that
+    * generates code, so every session builder in the engine sets
+    * [[CodegenCacheConf]] to this value before its first query. */
+  val CodegenCacheMaxEntries: Long = 2000L
+  val CodegenCacheConf: String = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+
   def create(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
              appName: String = "graft",
              shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
@@ -25,6 +37,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(CodegenCacheConf, CodegenCacheMaxEntries)
       // scalar kernels AND the point-in-time TVFs (snapshot / as_of /
       // changes_between / scd2) — withExtensions only binds at session
       // construction, so it must happen here, not in enableSqlSurface

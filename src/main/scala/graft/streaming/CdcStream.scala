@@ -6,20 +6,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.{Envelope, Ingest, TableSpec}
 
-/** Structured Streaming CDC pipeline: watch a directory for (gzipped)
-  * JSONL Datastream logs, parse, route to per-table append sinks.
-  *
-  * Reference pipeline stages S1–S11 (SURVEY.md §3.1) collapse to:
-  * file source (its own new-file discovery subsumes the reference's
-  * Pub/Sub notification hop) → envelope parse → optional
-  * dedup-within-watermark → `foreachBatch` router.
-  *
-  * Delivery semantics: the file source + checkpoint give exactly-once
-  * *batch replay*; `Ingest.appendBatch` writes `batch=<id>` dirs with
-  * overwrite, so replays are idempotent — strictly stronger than the
-  * reference, whose per-record side pipelines double-write on retry
-  * (SURVEY.md §2.2 "streaming stateful ops").
-  */
 /** Where envelope lines come from (reference stage S1). */
 sealed trait CdcSource
 /** Directory of (gzipped) JSONL log files — the Datastream→bucket layout;
@@ -145,6 +131,20 @@ final case class CdcStreamConfig(
     /** logical table name → in-stream retention policy. */
     expire: Map[String, ExpirePolicy] = Map.empty)
 
+/** Structured Streaming CDC pipeline: watch a directory for (gzipped)
+  * JSONL Datastream logs, parse, route to per-table append sinks.
+  *
+  * Reference pipeline stages S1–S11 (SURVEY.md §3.1) collapse to:
+  * file source (its own new-file discovery subsumes the reference's
+  * Pub/Sub notification hop) → envelope parse → optional
+  * dedup-within-watermark → `foreachBatch` router.
+  *
+  * Delivery semantics: the file source + checkpoint give exactly-once
+  * *batch replay*; `Ingest.appendBatch` writes `batch=<id>` dirs with
+  * overwrite, so replays are idempotent — strictly stronger than the
+  * reference, whose per-record side pipelines double-write on retry
+  * (SURVEY.md §2.2 "streaming stateful ops").
+  */
 object CdcStream {
 
   private val nextStreamId = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -220,8 +220,8 @@ object CdcStream {
 
     // The registry is a driver-side value captured by the foreachBatch
     // closure and shipped to executors once per batch — never fetched per
-    // record. With `registryPath` set it refreshes from the file every N
-    // batches (a cheap driver-side read), so registry edits apply to a
+    // record. With `registryPath` set it is re-read from the file on every
+    // trigger (a cheap driver-side read), so registry edits apply to a
     // RUNNING stream: new tables start routing, everything else already
     // in flight is untouched.
     var registry =

@@ -20,6 +20,7 @@ object QueryBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
       // same surface as Bench/Verify — TVF-faced queries (q219) resolve
       .withExtensions(new graft.core.GraftExtensions)
       .getOrCreate()

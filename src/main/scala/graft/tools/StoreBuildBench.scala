@@ -21,6 +21,7 @@ object StoreBuildBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
       .withExtensions(new graft.core.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

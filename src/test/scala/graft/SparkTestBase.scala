@@ -35,6 +35,7 @@ object SparkTestBase {
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-test-wh").toString)
     .config("spark.ui.enabled", "false")
+    .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
     // the engine's full surface (native fns, TVFs, optimizer rules) —
     // the same extensions every driver-contract session (Bench, Verify,
     // GraftSession) loads. Required since q219 entered the contract: its

@@ -20,6 +20,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .appName("graft-ext-test")
         .config("spark.sql.shuffle.partitions", "2")
         .config("spark.ui.enabled", "false")
+        .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheMaxEntries)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       val d = spark.sql(

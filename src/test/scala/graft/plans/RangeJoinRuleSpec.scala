@@ -20,6 +20,7 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
   }

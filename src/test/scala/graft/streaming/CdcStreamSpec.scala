@@ -689,4 +689,107 @@ class CdcStreamSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDecimal(2).longValue()))
       .toSet == aggWant)
   }
+
+  test("steady fold triggers reuse their generated classes: no recompiles after the second") {
+    // the maintained-store set of a fold-heavy deployment: snapshots of
+    // three tables, SCD2 of one, a sum aggregate over another. Each
+    // trigger has the same shape (inserts, an update and a delete per
+    // table), so from the third trigger on every generated class should
+    // come out of Spark's code cache. With the cache at Spark's default
+    // 100 entries, one trigger's classes do not fit and each trigger
+    // recompiles them all (see GraftSession.CodegenCacheMaxEntries).
+    val (in, wh, ck) = freshDirs()
+    val reg = graft.cdc.Registry.fromJson(
+      """{
+        |  "orders": {
+        |    "table_name": "warehouse.orders_cdc",
+        |    "schema": { "fields": [
+        |      {"name": "o_orderkey", "type": "INT64"},
+        |      {"name": "o_custkey", "type": "INT64"},
+        |      {"name": "o_totalprice", "type": "FLOAT"},
+        |      {"name": "o_orderstatus", "type": "STRING"},
+        |      {"name": "action", "type": "STRING"},
+        |      {"name": "update_date", "type": "TIMESTAMP"}
+        |    ]}
+        |  },
+        |  "customer": {
+        |    "table_name": "warehouse.customer_cdc",
+        |    "schema": { "fields": [
+        |      {"name": "c_custkey", "type": "INT64"},
+        |      {"name": "c_name", "type": "STRING"},
+        |      {"name": "c_acctbal", "type": "FLOAT"},
+        |      {"name": "action", "type": "STRING"},
+        |      {"name": "update_date", "type": "TIMESTAMP"}
+        |    ]}
+        |  },
+        |  "part": {
+        |    "table_name": "warehouse.part_cdc",
+        |    "schema": { "fields": [
+        |      {"name": "p_partkey", "type": "INT64"},
+        |      {"name": "p_brand", "type": "STRING"},
+        |      {"name": "p_retailprice", "type": "FLOAT"},
+        |      {"name": "action", "type": "STRING"},
+        |      {"name": "update_date", "type": "TIMESTAMP"}
+        |    ]}
+        |  }
+        |}""".stripMargin)
+    val cfg = CdcStreamConfig(in, wh, ck, reg,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
+      snapshotKeys = Map("orders" -> Seq("o_orderkey"),
+        "customer" -> Seq("c_custkey"), "part" -> Seq("p_partkey")),
+      scd2Keys = Map("orders" -> Seq("o_orderkey")),
+      aggSpecs = Map("part" -> Seq(graft.cdc.AggMaintainer.AggSpec(
+        "by_brand", Seq("p_brand"), Seq("p_retailprice")))),
+      snapshotBuckets = 8)
+    // trigger k: four inserts per table, an update of one of trigger
+    // k-1's keys and a delete of another (absent keys on trigger 0)
+    def trigger(k: Int): Seq[String] = {
+      val ts = f"2026-01-01T${k % 24}%02d:00:00.000Z"
+      def env(obj: String, ct: String, payload: String) =
+        Fixtures.envelope(obj, ts, ct, payload)
+      val keys = (0 until 4).map(i => k * 10L + i)
+      val (upd, del) = (k * 10L - 10, k * 10L - 9)
+      keys.flatMap { key =>
+        Seq(env("orders", "insert",
+            s"""{"o_orderkey":$key,"o_custkey":${key % 7},"o_totalprice":${key * 1.5},"o_orderstatus":"O"}"""),
+          env("customer", "insert",
+            s"""{"c_custkey":$key,"c_name":"c$key","c_acctbal":${key * 2.5}}"""),
+          env("part", "insert",
+            s"""{"p_partkey":$key,"p_brand":"b${key % 3}","p_retailprice":${key + 0.25}}"""))
+      } ++ Seq(
+        env("orders", "update",
+          s"""{"o_orderkey":$upd,"o_custkey":1,"o_totalprice":9.5,"o_orderstatus":"F"}"""),
+        env("customer", "update", s"""{"c_custkey":$upd,"c_name":"u$k","c_acctbal":1.5}"""),
+        env("part", "update", s"""{"p_partkey":$upd,"p_brand":"b1","p_retailprice":3.5}"""),
+        env("orders", "delete", s"""{"o_orderkey":$del}"""),
+        env("customer", "delete", s"""{"c_custkey":$del}"""),
+        env("part", "delete", s"""{"p_partkey":$del}"""))
+    }
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val q = CdcStream.start(spark, cfg)
+    try {
+      def run(k: Int): Unit = {
+        Fixtures.writeLines(in, f"log-$k%03d.jsonl.gz", trigger(k), gzip = true)
+        q.processAllAvailable()
+      }
+      val perTrigger = (0 until 5).map { k =>
+        val before = compiles()
+        run(k)
+        compiles() - before
+      }
+      assert(perTrigger.drop(2).forall(_ == 0),
+        s"classes compiled per trigger: ${perTrigger.mkString(", ")}")
+    } finally q.stop()
+
+    // the triggers folded: the aggregate matches a GROUP BY over the
+    // maintained snapshot
+    def byBrand(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getDecimal(2))).toSet
+    val agg = byBrand(graft.cdc.AggMaintainer.read(spark, wh, "part", "by_brand")
+      .select("p_brand", "n_rows", "sum_p_retailprice"))
+    assert(agg.nonEmpty && agg == byBrand(graft.cdc.SnapshotMaintainer.read(spark, wh, "part")
+      .groupBy("p_brand")
+      .agg(count(lit(1)), sum(col("p_retailprice").cast("decimal(38,8)")))))
+  }
 }
