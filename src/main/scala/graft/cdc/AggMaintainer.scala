@@ -19,13 +19,20 @@ import org.apache.spark.sql.functions._
   *     before and after from the fold itself
   *     ([[SnapshotMaintainer.foldWithLiveRows]]: only their pk buckets
   *     are listed, and read once);
-  *  2. the per-group DELTA is the post rows as +1/+x united with the pre
-  *     rows as -1/-x, summed per group (zero deltas dropped); it is
-  *     merged into the aggregate store — itself hash-bucketed by group,
-  *     so only the buckets of touched groups are read and swapped — as
-  *     (store rows ∪ delta) summed per group, keeping groups with rows.
-  *     `groupBy` groups NULL keys together, so a nullable group column
-  *     needs no null-safe join condition.
+  *  2. the pks whose live row changed in the spec's columns contribute
+  *     their post rows as +1/+x and their pre rows as -1/-x; the
+  *     aggregate store — itself hash-bucketed by group — reads only the
+  *     buckets of the groups those rows name, and each touched bucket is
+  *     re-derived as (store rows ∪ contributions) summed per group,
+  *     keeping groups with rows. That sum is bucket-local: the one
+  *     shuffle clusters its input by group bucket, and the staged write
+  *     keeps that clustering. `groupBy` groups NULL keys together, so a
+  *     nullable group column needs no null-safe join condition.
+  *
+  * Jobs: the snapshot fold's touched set comes from the stream's routing
+  * write ([[Ingest.appendBatch]]), or from one
+  * [[BucketStore.touchedBuckets]] job for a direct call; the group
+  * buckets come from one more job over the fold's checkpointed rows.
   *
   * A pk whose UPDATE moves it between groups contributes -1/-x to its
   * old group and +1/+x to the new one; deletes contribute only the
@@ -104,53 +111,69 @@ object AggMaintainer {
                       versionCol: String = "update_date",
                       actionCol: String = "action",
                       snapshotBuckets: Int = SnapshotMaintainer.DefaultBuckets,
-                      aggBuckets: Int = DefaultBuckets): Unit = {
+                      aggBuckets: Int = DefaultBuckets): Unit =
+    foldAndMaintainTouched(spark, warehouseDir, table, batch, pk, specs,
+      BucketStore.touchedBy(batch, pk, snapshotBuckets),
+      versionCol, actionCol, snapshotBuckets, aggBuckets)
+
+  /** [[foldAndMaintain]] given the batch's touched snapshot buckets — the
+    * set [[Ingest.appendBatch]] observed while routing it, or
+    * [[BucketStore.touchedBuckets]]. */
+  private[graft] def foldAndMaintainTouched(spark: SparkSession, warehouseDir: String,
+                                            table: String, batch: DataFrame,
+                                            pk: Seq[String], specs: Seq[AggSpec],
+                                            touched: Seq[Int],
+                                            versionCol: String = "update_date",
+                                            actionCol: String = "action",
+                                            snapshotBuckets: Int = SnapshotMaintainer.DefaultBuckets,
+                                            aggBuckets: Int = DefaultBuckets): Unit = {
     val live = SnapshotMaintainer.foldWithLiveRows(spark, warehouseDir, table,
-      batch, pk, versionCol, actionCol, snapshotBuckets)
-    specs.foreach(spec => applyDelta(spark, warehouseDir, table, spec,
-      live.pre, live.post, actionCol, aggBuckets))
+      batch, pk, touched, versionCol, actionCol, snapshotBuckets)
+    specs.foreach(spec => applyDelta(spark, warehouseDir, table, spec, live,
+      actionCol, aggBuckets))
   }
 
   private def applyDelta(spark: SparkSession, warehouseDir: String,
                          table: String, spec: AggSpec,
-                         pre: DataFrame, post: DataFrame, actionCol: String,
+                         live: SnapshotMaintainer.LiveRows, actionCol: String,
                          aggBuckets: Int): Unit = {
     val gcols = effCols(spec)
-    val nonZero = counted(spec).map(c => col(c) =!= 0).reduce(_ || _)
-    // persist, not eager checkpoint: the touched collect right below
-    // materializes it, and its lineage (projections of the fold's
-    // checkpoint) recomputes correctly if evicted
-    val delta = BucketStore.bucketed(
-      summed(signed(post, spec, 1L).unionByName(signed(pre, spec, -1L)), spec, gcols)
-        .filter(nonZero),
-      gcols, aggBuckets, BucketCol).persist()
-
+    // only the pks whose live row changed in the spec's columns
+    // contribute: every other pk's +x and −x cancel exactly
+    val (pre, post) = live.changed(spec.groupCols ++ spec.sumCols)
+    val contrib = BucketStore.bucketed(
+      signed(post, spec, 1L).unionByName(signed(pre, spec, -1L)),
+      gcols, aggBuckets, BucketCol)
+    // the groups those pks leave or enter: one job over the fold's
+    // checkpointed rows. A replayed batch changes no pk and touches none.
+    val touched = BucketStore.touchedBuckets(contrib, BucketCol)
+    if (touched.isEmpty) return
     val dir = aggDir(warehouseDir, table, spec.name)
-    try {
-      val touched = BucketStore.touchedBuckets(delta, BucketCol)
-      if (touched.isEmpty) return
-      // a store written before the nn_ columns cannot be merged (its
-      // all-NULL groups and zero sums look alike): drop it, so the seed
-      // below rebuilds it from the snapshot — a crash in between leaves
-      // no store, which the replay seeds the same way
-      if (lacksNonNullCounts(spark, dir, spec))
-        new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()).delete(new Path(dir), true)
-      // the post-fold snapshot already holds this batch: a seeded store
-      // takes no delta
-      if (!BucketStore.seedIfMissing(spark, dir,
-            bucketedTotals(spark, warehouseDir, table, spec, actionCol, aggBuckets),
-            BucketCol)) {
-        val current = BucketStore.readTouched(spark, dir, touched, BucketCol,
-          schema = Some(delta.schema))
-        val merged = summed(current.fold(delta)(_.unionByName(delta)), spec,
-          gcols :+ BucketCol).filter(col("n_rows") > 0L)
-        // shared stage + per-bucket swap (rename-aside, crash-recoverable,
-        // and the load-bearing pre-write bucket repartition); a bucket
-        // whose groups all cancelled to zero is DELETED, not left stale
-        BucketStore.stageAndSwap(spark, dir, merged, touched,
-          deleteMissingTouched = true, bucketCol = BucketCol)
-      }
-    } finally delta.unpersist(false)
+    // a store written before the nn_ columns cannot be merged (its
+    // all-NULL groups and zero sums look alike): drop it, so the seed
+    // below rebuilds it from the snapshot — a crash in between leaves
+    // no store, which the replay seeds the same way
+    if (lacksNonNullCounts(spark, dir, spec))
+      new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()).delete(new Path(dir), true)
+    // the post-fold snapshot already holds this batch: a seeded store
+    // takes no delta
+    if (!BucketStore.seedIfMissing(spark, dir,
+          bucketedTotals(spark, warehouseDir, table, spec, actionCol, aggBuckets),
+          BucketCol)) {
+      val current = BucketStore.readTouched(spark, dir, touched, BucketCol,
+        schema = Some(contrib.schema))
+      // store rows and signed contributions summed per group in ONE
+      // bucket-local aggregate: the bucket clustering is the only
+      // shuffle, and the staged write keeps it
+      val merged = summed(BucketStore.clustered(
+          current.fold(contrib)(_.unionByName(contrib)), BucketCol), spec,
+        gcols :+ BucketCol).filter(col("n_rows") > 0L)
+      // shared stage + per-bucket swap (rename-aside, crash-recoverable);
+      // a bucket whose groups all cancelled to zero is DELETED, not
+      // left stale
+      BucketStore.stageAndSwap(spark, dir, merged, touched,
+        deleteMissingTouched = true, bucketCol = BucketCol)
+    }
   }
 
   /** True if the store at `dir` was written before the non-NULL counts:

@@ -1,7 +1,7 @@
 package graft.cdc
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types.StructType
 
@@ -15,6 +15,20 @@ import org.apache.spark.sql.types.StructType
   * are never listed, read, or rewritten, so per-trigger cost is
   * O(touched + batch) regardless of store size.
   *
+  * Where the touched set comes from: inside a CDC stream, the routing
+  * write itself observes it ([[Ingest.appendBatch]] attaches a
+  * `collect_set` of [[bucketOf]] to each maintained table's append), so
+  * the fold learns it without a Spark job of its own; every other
+  * caller takes [[touchedBuckets]] over its keyed batch (one job, no
+  * shuffle).
+  *
+  * A fold is BUCKET-LOCAL: its input (the touched store rows plus the
+  * keyed batch) is [[clustered]] by bucket once, and every per-key step
+  * groups by (bucket, key…), which that clustering already satisfies.
+  * The staged write's bucket repartition in [[stageAndSwap]] then
+  * matches its child's partitioning and Spark drops it, so a fold
+  * shuffles its store once.
+  *
   * All directory manipulation goes through the Hadoop FileSystem API
   * (file:/, HDFS, object stores alike), and any fix to the protocol —
   * the staging layout, the swap ordering, rename failure handling —
@@ -23,22 +37,47 @@ object BucketStore {
 
   val BucketCol = "__bucket"
 
-  /** `df` with `bucketCol = pmod(hash(cols), n)` — THE bucket function of
-    * every store laid out here (the snapshot and SCD2 pk buckets, the
-    * join-key buckets, the aggregate group buckets). Bucket ids are a
-    * storage format: a touched set computed any other way would stage
-    * rows into buckets the swap never publishes. */
+  /** THE bucket function of every store laid out here (the snapshot and
+    * SCD2 pk buckets, the join-key buckets, the aggregate group
+    * buckets): `pmod(hash(cols), n)`. Bucket ids are a storage format: a
+    * touched set computed any other way would stage rows into buckets
+    * the swap never publishes. */
+  def bucketOf(cols: Seq[String], n: Int): Column = {
+    require(n > 0, s"bucket count must be positive: $n")
+    pmod(hash(cols.map(col): _*), lit(n))
+  }
+
+  /** `df` with `bucketCol` = [[bucketOf]]`(cols, n)`. */
   def bucketed(df: DataFrame, cols: Seq[String], n: Int,
                bucketCol: String = BucketCol): DataFrame =
-    df.withColumn(bucketCol, pmod(hash(cols.map(col): _*), lit(n)))
+    df.withColumn(bucketCol, bucketOf(cols, n))
 
-  /** The distinct bucket ids a keyed batch touches — ≤ the bucket
-    * count by construction, so the collect is driver-bounded. `keyed`
+  /** One maintained store's bucketing of a routed table: the store's
+    * key columns and bucket count. [[Ingest.appendBatch]] observes one
+    * touched set per distinct bucketing. */
+  final case class Bucketing(table: String, key: Seq[String], buckets: Int)
+
+  /** The distinct bucket ids a keyed batch touches, sorted: one Spark
+    * job with no shuffle (each task returns its partition's set, the
+    * driver merges them; a set never exceeds the bucket count). `keyed`
     * must carry an Int [[BucketCol]]. */
   def touchedBuckets(keyed: DataFrame,
                      bucketCol: String = BucketCol): Seq[Int] =
-    keyed.select(bucketCol).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
+    keyed.select(col(bucketCol)).rdd
+      .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+      .collect().reduceOption(_ ++ _).getOrElse(Set.empty[Int]).toSeq.sorted
+
+  /** The buckets `batch` touches under [[bucketOf]]`(key, n)`: one Spark
+    * job with no shuffle. */
+  def touchedBy(batch: DataFrame, key: Seq[String], n: Int): Seq[Int] =
+    touchedBuckets(bucketed(batch, key, n))
+
+  /** `df` hash-partitioned by its bucket column: the ONE shuffle of a
+    * bucket-local fold. Grouping or windowing by (bucket, key…)
+    * downstream needs no further exchange, and [[stageAndSwap]]'s
+    * repartition becomes a no-op. */
+  def clustered(df: DataFrame, bucketCol: String = BucketCol): DataFrame =
+    df.repartition(col(bucketCol))
 
   private def asidePath(dir: String, b: Int) = new Path(s"$dir/.__swap_$b")
 
@@ -87,11 +126,12 @@ object BucketStore {
   /** Stage `folded` (which must carry [[BucketCol]]) and swap ONLY the
     * `touched` buckets into the store. The pre-write repartition on the
     * bucket column is load-bearing: partitionBy writes one file per
-    * (task × bucket-value) pair, so writing straight out of the fold's
-    * shuffle creates up to tasks×buckets tiny files per trigger — and
-    * the NEXT trigger's touched-bucket read pays for all of them;
-    * clustering by bucket first bounds the layout at one file per
-    * touched bucket. */
+    * (task × bucket-value) pair, so writing straight out of an
+    * unclustered shuffle creates up to tasks×buckets tiny files per
+    * trigger — and the NEXT trigger's touched-bucket read pays for all
+    * of them; clustering by bucket first bounds the layout at one file
+    * per touched bucket. For a [[clustered]] fold the child is already
+    * partitioned that way and Spark removes the repartition. */
   def stageAndSwap(spark: SparkSession, dir: String, folded: DataFrame,
                    touched: Seq[Int],
                    deleteMissingTouched: Boolean = false,

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch CDC ingest: parse a directory of (gzipped) JSONL envelope logs,
@@ -47,15 +47,26 @@ object Ingest {
   /** Route one parsed batch: per registry table an append, unknown objects
     * to the dead letter (reference drops-with-a-log at
     * `dataflow-cdc-stream.py:96-97`; we keep the data instead of stdout).
-    */
+    *
+    * Returns the bucket ids each `touched` bucketing's table holds in
+    * this batch: the routed write of a table named there carries an
+    * observed `collect_set` of [[BucketStore.bucketOf]] over the
+    * bucketing's key, so the sets come out of the writes themselves, with
+    * no Spark job of their own. A bucketing whose table the registry
+    * lacks gets no entry (nothing is routed to it). */
   def appendBatch(parsed: DataFrame, registry: Map[String, TableSpec],
                   warehouseDir: String, batchId: Long,
-                  partitionByDate: Boolean = false): Unit = {
+                  partitionByDate: Boolean = false,
+                  touched: Seq[BucketStore.Bucketing] = Nil)
+      : Map[BucketStore.Bucketing, Seq[Int]] = {
     // the compacted partition holds MERGED history — an idempotent
     // batch overwrite targeting it would replace all of it with one
     // batch's rows; no legitimate caller appends at this id
     require(batchId != CompactedBatchId,
       s"batch id $batchId is reserved for compacted history")
+    // one observation per routed table, one set per distinct bucketing
+    val observed = touched.distinct.filter(b => registry.contains(b.table))
+      .groupBy(_.table).map { case (t, bs) => t -> (Observation(), bs) }
     val cached = parsed.cache()
     try {
       // Materialize the cache at full parallelism ONCE and learn the
@@ -80,10 +91,15 @@ object Ingest {
       // materialization compute-once) — overlap them so each table's
       // small write back-fills the cores the others leave idle (guide
       // §2.6); Par.all settles every write before the cache releases
-      val tableWrites: Seq[() => Unit] = registry.values.toSeq.map { spec =>
+      val tableWrites: Seq[() => Unit] = registry.toSeq.map { case (table, spec) =>
         () => {
           val projected = Envelope.project(cached, spec, withDatePartition = partitionByDate)
-          val writer = projected.coalesce(nFiles).write.mode("overwrite")
+          val routed = observed.get(table).fold(projected) { case (obs, bs) =>
+            val exprs = bs.indices.map(i =>
+              collect_set(BucketStore.bucketOf(bs(i).key, bs(i).buckets)).as(s"b$i"))
+            projected.observe(obs, exprs.head, exprs.tail: _*)
+          }
+          val writer = routed.coalesce(nFiles).write.mode("overwrite")
           // event-time date partitioning: asOf/changesBetween prune whole
           // directories before any shuffle at cluster scale
           // physical destination: the registry's `table_name` mapping
@@ -104,6 +120,13 @@ object Ingest {
       }
       graft.core.Par.all(tableWrites :+ deadWrite)
     } finally cached.unpersist()
+    // read only once every write has returned: a failed write raised
+    // above, so no read waits on an observation that never completes
+    observed.values.flatMap { case (obs, bs) =>
+      val sets = obs.get
+      bs.indices.map(i =>
+        bs(i) -> sets(s"b$i").asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted)
+    }.toMap
   }
 
   /** One-shot batch ingest of a directory. */

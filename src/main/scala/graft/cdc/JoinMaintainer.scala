@@ -76,7 +76,8 @@ object JoinMaintainer {
     def foldSide(s: Side): Option[(SnapshotMaintainer.LiveRows, Seq[Int])] =
       s.batch.map { batch =>
         val live = SnapshotMaintainer.foldWithLiveRows(spark, warehouseDir,
-          s.table, batch, s.pk, versionCol, actionCol, snapshotBuckets)
+          s.table, batch, s.pk, BucketStore.touchedBy(batch, s.pk, snapshotBuckets),
+          versionCol, actionCol, snapshotBuckets)
         (live, BucketStore.touchedBuckets(jkBucketed(
           live.pre.select(col(jk)).unionByName(live.post.select(col(jk)))),
           BucketCol))
@@ -111,12 +112,13 @@ object JoinMaintainer {
       if (!seeded) folded.foreach { case (live, _) =>
         val fresh = jkBucketed(live.post)
         // allowMissingColumns: after a registry column add/remove the
-        // stored buckets can be narrower or wider than the fresh rows
+        // stored buckets can be narrower or wider than the fresh rows.
+        // Clustered by bucket once, so the staged write adds no shuffle.
         val kept = BucketStore.readTouched(spark, dir, touched, BucketCol)
           .fold(fresh)(_.join(live.keys, s.pk, "left_anti")
             .unionByName(fresh, allowMissingColumns = true))
-        BucketStore.stageAndSwap(spark, dir, kept, touched,
-          deleteMissingTouched = true, bucketCol = BucketCol)
+        BucketStore.stageAndSwap(spark, dir, BucketStore.clustered(kept, BucketCol),
+          touched, deleteMissingTouched = true, bucketCol = BucketCol)
       }
       seeded
     }
@@ -127,9 +129,12 @@ object JoinMaintainer {
     // a seeded side may hold rows in any bucket
     val viewTouched = if (seededA || seededB) 0 until joinBuckets else touched
 
-    // re-join the touched bucket pairs — bucket-local by construction
+    // re-join the touched bucket pairs — bucket-local by construction:
+    // each side is clustered by bucket once and the join key leads with
+    // the bucket, so the join and the staged write need no other shuffle
     def sideRows(name: String) = BucketStore.readTouched(spark,
       sideDir(warehouseDir, view, name), viewTouched, BucketCol)
+      .map(BucketStore.clustered(_, BucketCol))
     val vdir = viewDir(warehouseDir, view)
     (sideRows("a"), sideRows("b")) match {
       case (Some(l), Some(r)) => BucketStore.stageAndSwap(spark, vdir,
@@ -159,6 +164,6 @@ object JoinMaintainer {
       df.columns.foldLeft(df) { (d, c) =>
         if (c == jk || c == BucketCol) d else d.withColumnRenamed(c, s"${p}_$c")
       }
-    prefixed(l, "a").join(prefixed(r, "b").drop(BucketCol), jk)
+    prefixed(l, "a").join(prefixed(r, "b"), Seq(jk, BucketCol))
   }
 }

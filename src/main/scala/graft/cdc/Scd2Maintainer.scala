@@ -24,8 +24,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale shape — [[SnapshotMaintainer]]'s discipline: the store is
   * partitioned by the pk's `__bucket` ([[BucketStore.bucketed]]); a micro-batch
   * folds ONLY its touched buckets (per-trigger cost O(touched keys'
-  * versions + batch), never O(table)); staged writes swap per-bucket
-  * through the Hadoop FileSystem API (file:/, HDFS, object stores). */
+  * versions + batch), never O(table)), which a CDC stream learns from
+  * its routing write and every other caller from one
+  * [[BucketStore.touchedBuckets]] job. The fold is bucket-local: the
+  * touched versions and the batch are clustered by bucket once, and the
+  * duplicate collapse, the interval window and the staged write all run
+  * inside that one shuffle. Staged writes swap per-bucket through the
+  * Hadoop FileSystem API (file:/, HDFS, object stores). */
 object Scd2Maintainer {
 
   val DefaultBuckets: Int = SnapshotMaintainer.DefaultBuckets
@@ -43,28 +48,38 @@ object Scd2Maintainer {
              batch: DataFrame, pk: Seq[String],
              versionCol: String = "update_date",
              actionCol: String = "action",
-             buckets: Int = DefaultBuckets): Unit = {
+             buckets: Int = DefaultBuckets): Unit =
+    updateTouched(spark, warehouseDir, table, batch, pk,
+      BucketStore.touchedBy(batch, pk, buckets), versionCol, actionCol, buckets)
+
+  /** [[update]] given the batch's touched buckets — the set
+    * [[Ingest.appendBatch]] observed while routing it, or
+    * [[BucketStore.touchedBuckets]]. */
+  private[graft] def updateTouched(spark: SparkSession, warehouseDir: String,
+                                   table: String, batch: DataFrame,
+                                   pk: Seq[String], touched: Seq[Int],
+                                   versionCol: String = "update_date",
+                                   actionCol: String = "action",
+                                   buckets: Int = DefaultBuckets): Unit = {
     require(buckets > 0)
+    if (touched.isEmpty) return
     val dir = scd2Dir(warehouseDir, table)
-    val keyed = BucketStore.bucketed(batch, pk, buckets).persist()
-    try {
-      val touched = BucketStore.touchedBuckets(keyed)
-      if (touched.isEmpty) return
+    val keyed = BucketStore.bucketed(batch, pk, buckets)
+    val currentTouched = BucketStore.readTouched(spark, dir, touched)
+      // strip the derived interval columns: what remains IS the
+      // changelog-version grain the batch arrives at
+      .map(_.drop(Derived: _*))
 
-      val currentTouched = BucketStore.readTouched(spark, dir, touched)
-        // strip the derived interval columns: what remains IS the
-        // changelog-version grain the batch arrives at
-        .map(_.drop(Derived: _*))
-
-      // exact-duplicate versions collapse here — this is what makes a
-      // replayed batch a no-op fold
-      val versions = currentTouched
-        .map(_.unionByName(keyed, allowMissingColumns = true))
-        .getOrElse(keyed)
-        .distinct()
-      val folded = Versioned.scd2(versions, pk, versionCol, actionCol)
-      BucketStore.stageAndSwap(spark, dir, folded, touched)
-    } finally keyed.unpersist(false)
+    // exact-duplicate versions collapse here — this is what makes a
+    // replayed batch a no-op fold. The bucket leads the window's
+    // partition key, so the distinct and the window both run inside the
+    // one bucket clustering.
+    val versions = BucketStore.clustered(currentTouched
+      .map(_.unionByName(keyed, allowMissingColumns = true))
+      .getOrElse(keyed))
+      .distinct()
+    val folded = Versioned.scd2(versions, BucketCol +: pk, versionCol, actionCol)
+    BucketStore.stageAndSwap(spark, dir, folded, touched)
   }
 
   /** Read the maintained SCD2 table — the same frame

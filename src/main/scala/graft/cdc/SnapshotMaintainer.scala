@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained "current state" tables.
@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   *    |batch|), not O(|snapshot|).
   *    A 10⁹-key table with a 10⁴-row trigger rewrites ≤10⁴ buckets of
   *    ~10⁵ keys each — bounded regardless of total snapshot size.
+  *  - the touched buckets come from the stream's routing write
+  *    ([[Ingest.appendBatch]]), or from one [[BucketStore.touchedBuckets]]
+  *    job for a direct [[update]]; the fold is bucket-local, so the store
+  *    shuffles once per trigger ([[BucketStore.clustered]]).
   *  - all directory manipulation goes through the Hadoop FileSystem API,
   *    so the same code runs on file:/, HDFS, and object stores —
   *    `java.io.File` + `renameTo` silently break anywhere but a local
@@ -25,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * Idempotent under batch replay: re-folding rows the snapshot already
   * reflects reproduces the identical bucket contents (last-writer-wins is
-  * a fold; duplicates collapse in the rank-1 window). Tombstones stay IN
+  * a fold; duplicates collapse in the per-key argmax). Tombstones stay IN
   * the stored state so a replayed old batch cannot resurrect deleted keys;
   * readers filter them via [[read]].
   */
@@ -48,63 +52,92 @@ object SnapshotMaintainer {
              batch: DataFrame, pk: Seq[String],
              versionCol: String = "update_date",
              actionCol: String = "action",
-             buckets: Int = DefaultBuckets): Unit = {
+             buckets: Int = DefaultBuckets): Unit =
+    updateTouched(spark, warehouseDir, table, batch, pk,
+      BucketStore.touchedBy(batch, pk, buckets), versionCol, actionCol, buckets)
+
+  /** [[update]] given the batch's touched buckets — the set
+    * [[Ingest.appendBatch]] observed while routing it, or
+    * [[BucketStore.touchedBuckets]]. */
+  private[graft] def updateTouched(spark: SparkSession, warehouseDir: String,
+                                   table: String, batch: DataFrame,
+                                   pk: Seq[String], touched: Seq[Int],
+                                   versionCol: String = "update_date",
+                                   actionCol: String = "action",
+                                   buckets: Int = DefaultBuckets): Unit = {
     require(buckets > 0)
-    val tsBatch = keyed(batch, pk, versionCol, buckets).persist()
-    try {
-      val touched = BucketStore.touchedBuckets(tsBatch)
-      if (touched.isEmpty) return
-      val dir = snapshotDir(warehouseDir, table)
-      BucketStore.stageAndSwap(spark, dir,
-        stored(fold(spark, dir, tsBatch, touched, pk, versionCol, actionCol),
-          tsBatch, pk, "__best"), touched)
-    } finally tsBatch.unpersist(false)
+    if (touched.isEmpty) return
+    val tsBatch = keyed(batch, pk, versionCol, buckets)
+    val dir = snapshotDir(warehouseDir, table)
+    BucketStore.stageAndSwap(spark, dir,
+      stored(fold(spark, dir, tsBatch, touched, pk, versionCol, actionCol),
+        tsBatch, pk, "__best"), touched)
   }
 
   /** The batch's distinct pks and their LIVE (non-tombstone) snapshot
     * rows before and after one fold — what the composed maintainers
-    * (Agg/Join) derive their deltas from. All three are projections of
-    * one checkpoint of the fold's batch-pk rows. */
-  private[cdc] final case class LiveRows(keys: DataFrame, pre: DataFrame,
-                                         post: DataFrame)
+    * (Agg/Join) derive their deltas from. Everything here is a
+    * projection of one checkpoint of the fold's batch-pk rows, `hits`:
+    * one row per batch pk with the stored row (`__pre`) next to the
+    * winning one (`__best`). */
+  private[cdc] final class LiveRows(hits: DataFrame, cols: Seq[String],
+                                    pk: Seq[String], actionCol: String) {
+    private def isLive(row: String): Column = coalesce(col(row).isNotNull &&
+      col(s"$row.$actionCol") =!= Versioned.DeleteAction, lit(false))
+    private def field(row: String, c: String): Column =
+      if (pk.contains(c)) col(c) else col(s"$row.$c")
+    private def rows(row: String, keep: Column): DataFrame =
+      hits.filter(isLive(row) && keep).select(cols.map(c => field(row, c).as(c)): _*)
 
-  /** [[update]], returning the batch pks' live rows around the fold.
-    * The touched buckets are read ONCE (guide §5: the fold path is
-    * barrier-latency-bound at micro-batch sizes): the fold's own
+    val keys: DataFrame = hits.select(pk.map(col): _*)
+    def pre: DataFrame = rows("__pre", lit(true))
+    def post: DataFrame = rows("__best", lit(true))
+
+    /** [[pre]] and [[post]] of the pks whose live row changed in `on`
+      * (a row that turns live or stops being live counts as changed):
+      * the other pks contribute nothing to a view over `on`. */
+    def changed(on: Seq[String]): (DataFrame, DataFrame) = {
+      def image(row: String) = struct(isLive(row).as("live") +:
+        on.map(c => when(isLive(row), field(row, c)).as(c)): _*)
+      val moved = !(image("__pre") <=> image("__best"))
+      (rows("__pre", moved), rows("__best", moved))
+    }
+  }
+
+  /** [[updateTouched]], returning the batch pks' live rows around the
+    * fold. The touched buckets are read ONCE (guide §5: the fold path
+    * is barrier-latency-bound at micro-batch sizes): the fold's own
     * per-pk aggregate carries the stored row (`__pre`) next to the
-    * winning one (`__best`), so the pre- and post-fold rows need no read
-    * of their own. The read goes through [[BucketStore.readTouched]], so
-    * a bucket a crashed swap left aside is recovered BEFORE the pre-fold
-    * state is taken from it. */
+    * winning one (`__best`), so the pre- and post-fold rows need no
+    * read of their own. The read goes through [[BucketStore.readTouched]],
+    * so a bucket a crashed swap left aside is recovered BEFORE the
+    * pre-fold state is taken from it. */
   private[cdc] def foldWithLiveRows(spark: SparkSession, warehouseDir: String,
                                     table: String, batch: DataFrame,
-                                    pk: Seq[String], versionCol: String,
-                                    actionCol: String, buckets: Int): LiveRows = {
+                                    pk: Seq[String], touched: Seq[Int],
+                                    versionCol: String, actionCol: String,
+                                    buckets: Int): LiveRows = {
     require(buckets > 0)
     val dir = snapshotDir(warehouseDir, table)
-    val tsBatch = keyed(batch, pk, versionCol, buckets).persist()
-    try {
-      val touched = BucketStore.touchedBuckets(tsBatch)
-      val folded = fold(spark, dir, tsBatch, touched, pk, versionCol, actionCol)
-      val hits =
-        if (touched.isEmpty) folded.limit(0)
-        else {
-          folded.persist()
-          try {
-            // MUST materialize before the swap overwrites the buckets the
-            // fold read (the persisted fold alone could be evicted and
-            // recompute from the post-swap store)
-            val h = folded.filter(col("__hit")).localCheckpoint(true)
-            BucketStore.stageAndSwap(spark, dir,
-              stored(folded, tsBatch, pk, "__best"), touched)
-            h
-          } finally folded.unpersist(false)
-        }
-      def live(row: String) = stored(
-        hits.filter(col(s"$row.$actionCol") =!= Versioned.DeleteAction),
-        tsBatch, pk, row).drop(BucketCol)
-      LiveRows(hits.select(pk.map(col): _*), live("__pre"), live("__best"))
-    } finally tsBatch.unpersist(false)
+    val tsBatch = keyed(batch, pk, versionCol, buckets)
+    val folded = fold(spark, dir, tsBatch, touched, pk, versionCol, actionCol)
+    val hits =
+      if (touched.isEmpty) folded.limit(0)
+      else {
+        // persisted, not checkpointed whole: a checkpoint's scan loses the
+        // bucket clustering, so the staged write would shuffle again
+        folded.persist()
+        try {
+          // MUST materialize before the swap overwrites the buckets the
+          // fold read (the persisted fold alone could be evicted and
+          // recompute from the post-swap store)
+          val h = folded.filter(col("__hit")).localCheckpoint(true)
+          BucketStore.stageAndSwap(spark, dir,
+            stored(folded, tsBatch, pk, "__best"), touched)
+          h
+        } finally folded.unpersist(false)
+      }
+    new LiveRows(hits, tsBatch.drop("__v", BucketCol).columns.toIndexedSeq, pk, actionCol)
   }
 
   private def keyed(batch: DataFrame, pk: Seq[String], versionCol: String,
@@ -116,12 +149,12 @@ object SnapshotMaintainer {
   private def stored(folded: DataFrame, tsBatch: DataFrame, pk: Seq[String],
                      row: String): DataFrame =
     folded.select(tsBatch.drop("__v").columns.toIndexedSeq.map(c =>
-      if (pk.contains(c)) col(c) else col(s"$row.$c").as(c)): _*)
+      if (c == BucketCol || pk.contains(c)) col(c) else col(s"$row.$c").as(c)): _*)
 
   /** The fold of `tsBatch` over the touched buckets: one row per pk with
-    * `__best` (the payload the snapshot stores next), `__pre` (the
-    * stored payload before this batch; null if none) and `__hit` (the
-    * batch carries the pk). */
+    * its [[BucketCol]], `__best` (the payload the snapshot stores next),
+    * `__pre` (the stored payload before this batch; null if none) and
+    * `__hit` (the batch carries the pk). */
   private def fold(spark: SparkSession, dir: String, tsBatch: DataFrame,
                    touched: Seq[Int], pk: Seq[String],
                    versionCol: String, actionCol: String): DataFrame = {
@@ -130,7 +163,7 @@ object SnapshotMaintainer {
     // anyway, and one it added reads as null — exactly what an old row
     // knows about a new column. No footer-merging schema job runs.
     val schema = tsBatch.drop("__v").schema
-    val outCols = schema.fieldNames
+    val keys = BucketCol +: pk
     val fresh = tsBatch.withColumn("__in", lit(true))
     val unioned = BucketStore.readTouched(spark, dir, touched, schema = Some(schema))
       .map(_.withColumn("__v", col(versionCol).cast("timestamp"))
@@ -139,17 +172,18 @@ object SnapshotMaintainer {
 
     // Fold = argmax per key over (__v, action) — same pick as
     // latestSnapshotWithTombstones' row_number window (desc on both),
-    // but expressed as groupBy + max_by so the aggregate PARTIALLY
-    // COMBINES map-side: a micro-batch with many versions per key
-    // collapses to one row per key per map task BEFORE the shuffle,
-    // where the window form shuffles every input row to sort it.
+    // expressed as groupBy + max_by. The input is clustered by bucket
+    // once, and the group key leads with the bucket, so the partial and
+    // final aggregates both run after that single shuffle, with no
+    // exchange of their own, and the staged write keeps the clustering.
     // (Exact ties on (version, action) pick an arbitrary row under
     // both forms.) `__pre` orders batch rows as null, which max_by
     // skips: it is the stored row, never a batch row. [[update]] reads
     // only `__best`; column pruning drops the other two aggregates.
-    val payload = struct(outCols.filterNot(pk.contains).toIndexedSeq.map(col): _*)
+    val payload = struct(schema.fieldNames.filterNot(keys.contains)
+      .toIndexedSeq.map(col): _*)
     val order = struct(col("__v"), col(actionCol))
-    unioned.groupBy(pk.map(col): _*).agg(
+    BucketStore.clustered(unioned).groupBy(keys.map(col): _*).agg(
       max_by(payload, order).as("__best"),
       max_by(payload, when(!col("__in"), order)).as("__pre"),
       max(col("__in")).as("__hit"))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.cdc.{Envelope, Ingest, TableSpec}
+import graft.cdc.{AggMaintainer, BucketStore, Envelope, Ingest, Scd2Maintainer,
+  SnapshotMaintainer, TableSpec}
 
 /** Where envelope lines come from (reference stage S1). */
 sealed trait CdcSource
@@ -259,8 +260,18 @@ object CdcStream {
           }
         }
         val df = batch.toDF()
-        Ingest.appendBatch(df, registry, cfg.warehouseDir, batchId,
-          partitionByDate = cfg.partitionByDate)
+        val joinTables = cfg.joinViews
+          .flatMap(v => Seq(v.tableA, v.tableB)).toSet
+        // the bucketing of every store the snapshot, Agg and SCD2 folds
+        // below maintain: the routing write observes each one's touched
+        // buckets, so no fold runs a Spark job to find them (a join-view
+        // member folds inside its view's maintainer, which finds its own)
+        def bucketing(table: String, pk: Seq[String]) =
+          BucketStore.Bucketing(table, pk, cfg.snapshotBuckets)
+        val touched = Ingest.appendBatch(df, registry, cfg.warehouseDir, batchId,
+          partitionByDate = cfg.partitionByDate,
+          touched = (cfg.snapshotKeys.toSeq.filterNot(kv => joinTables(kv._1)) ++
+            cfg.scd2Keys.toSeq).map { case (t, pk) => bucketing(t, pk) })
         val sess = df.sparkSession
         // each maintained table's batch dir, read ONCE per trigger with the
         // schema the registry declares (what Envelope.project wrote) — every
@@ -275,26 +286,25 @@ object CdcStream {
               .parquet(s"${cfg.warehouseDir}/${spec.physicalName}/batch=$batchId")
               .drop(Envelope.DtCol)))
           .toMap
-        val joinTables = cfg.joinViews
-          .flatMap(v => Seq(v.tableA, v.tableB)).toSet
         def snapshotFolds(): Unit = cfg.snapshotKeys.foreach { case (table, pk) =>
           // a join-view member folds inside its view's maintainer
           if (!joinTables(table)) appended.get(table).foreach { batch =>
+            val set = touched(bucketing(table, pk))
             cfg.aggSpecs.get(table) match {
               case Some(specs) if specs.nonEmpty =>
                 // fold + per-group aggregate deltas in one coupled pass
-                graft.cdc.AggMaintainer.foldAndMaintain(sess, cfg.warehouseDir,
-                  table, batch, pk, specs, snapshotBuckets = cfg.snapshotBuckets)
+                AggMaintainer.foldAndMaintainTouched(sess, cfg.warehouseDir,
+                  table, batch, pk, specs, set, snapshotBuckets = cfg.snapshotBuckets)
               case _ =>
-                graft.cdc.SnapshotMaintainer.update(sess, cfg.warehouseDir,
-                  table, batch, pk, buckets = cfg.snapshotBuckets)
+                SnapshotMaintainer.updateTouched(sess, cfg.warehouseDir,
+                  table, batch, pk, set, buckets = cfg.snapshotBuckets)
             }
           }
         }
         def scd2Folds(): Unit = cfg.scd2Keys.foreach { case (table, pk) =>
           appended.get(table).foreach(batch =>
-            graft.cdc.Scd2Maintainer.update(sess, cfg.warehouseDir, table,
-              batch, pk, buckets = cfg.snapshotBuckets))
+            Scd2Maintainer.updateTouched(sess, cfg.warehouseDir, table,
+              batch, pk, touched(bucketing(table, pk)), buckets = cfg.snapshotBuckets))
         }
         // the snapshot/agg folds and the SCD2 folds are independent
         // maintainers over DISJOINT store dirs that both read only the

@@ -68,29 +68,31 @@ object DedupStream {
                    cfg: DedupStreamConfig): Unit = {
     val spark = batch.sparkSession
     require(cfg.buckets > 0)
-    // within-batch collapse BEFORE anything touches the store: one
-    // map-side-combinable min per hash, then the bucket assignment
-    val folded0 = batch
+    // the batch's (hash, id) pairs with their bucket; persisted because
+    // the touched-bucket job and the fold both read it
+    val keyed = batch
       .select(xxhash64(col(cfg.textCol)).as("text_hash"),
         col(cfg.idCol).cast("long").as("rep_id"))
-      .groupBy("text_hash").agg(min("rep_id").as("rep_id"))
       // int, matching what partition-directory inference reads back
       .withColumn(BucketCol, pmod(col("text_hash"), lit(cfg.buckets)).cast("int"))
       .persist()
     try {
-      val touched = graft.cdc.BucketStore.touchedBuckets(folded0)
+      val touched = graft.cdc.BucketStore.touchedBuckets(keyed)
       if (touched.isEmpty) return
 
       val dir = indexDir(cfg.storeDir)
       val currentTouched = graft.cdc.BucketStore.readTouched(spark, dir, touched)
       val unioned = currentTouched
-        .map(_.select("text_hash", "rep_id", BucketCol).unionByName(folded0))
-        .getOrElse(folded0)
-      val folded = unioned
-        .groupBy("text_hash")
+        .map(_.select("text_hash", "rep_id", BucketCol).unionByName(keyed))
+        .getOrElse(keyed)
+      // bucket-local: one clustering shuffle, then the min per
+      // (bucket, hash) — the bucket is a function of the hash, so this
+      // is the min per hash — and a staged write that keeps the
+      // clustering
+      val folded = graft.cdc.BucketStore.clustered(unioned)
+        .groupBy(BucketCol, "text_hash")
         .agg(min("rep_id").as("rep_id"))
-        .withColumn(BucketCol, pmod(col("text_hash"), lit(cfg.buckets)).cast("int"))
       graft.cdc.BucketStore.stageAndSwap(spark, dir, folded, touched)
-    } finally folded0.unpersist(false)
+    } finally keyed.unpersist(false)
   }
 }

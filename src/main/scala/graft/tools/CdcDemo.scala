@@ -28,6 +28,8 @@ object CdcDemo {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.CodegenCacheConf,
+        graft.core.GraftSession.CodegenCacheMaxEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

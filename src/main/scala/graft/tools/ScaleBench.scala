@@ -730,6 +730,8 @@ object ScaleBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.GraftSession.CodegenCacheConf,
+        graft.core.GraftSession.CodegenCacheMaxEntries)
       .withExtensions(new graft.core.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

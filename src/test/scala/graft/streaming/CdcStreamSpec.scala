@@ -690,15 +690,9 @@ class CdcStreamSpec extends SparkTestBase {
       .toSet == aggWant)
   }
 
-  test("steady fold triggers reuse their generated classes: no recompiles after the second") {
-    // the maintained-store set of a fold-heavy deployment: snapshots of
-    // three tables, SCD2 of one, a sum aggregate over another. Each
-    // trigger has the same shape (inserts, an update and a delete per
-    // table), so from the third trigger on every generated class should
-    // come out of Spark's code cache. With the cache at Spark's default
-    // 100 entries, one trigger's classes do not fit and each trigger
-    // recompiles them all (see GraftSession.CodegenCacheMaxEntries).
-    val (in, wh, ck) = freshDirs()
+  /** The maintained-store set of a fold-heavy deployment: snapshots of
+    * three tables, SCD2 of one, a sum aggregate over another, 8 buckets. */
+  private def foldHeavy(in: String, wh: String, ck: String): CdcStreamConfig = {
     val reg = graft.cdc.Registry.fromJson(
       """{
         |  "orders": {
@@ -733,7 +727,7 @@ class CdcStreamSpec extends SparkTestBase {
         |    ]}
         |  }
         |}""".stripMargin)
-    val cfg = CdcStreamConfig(in, wh, ck, reg,
+    CdcStreamConfig(in, wh, ck, reg,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
       snapshotKeys = Map("orders" -> Seq("o_orderkey"),
         "customer" -> Seq("c_custkey"), "part" -> Seq("p_partkey")),
@@ -741,36 +735,47 @@ class CdcStreamSpec extends SparkTestBase {
       aggSpecs = Map("part" -> Seq(graft.cdc.AggMaintainer.AggSpec(
         "by_brand", Seq("p_brand"), Seq("p_retailprice")))),
       snapshotBuckets = 8)
-    // trigger k: four inserts per table, an update of one of trigger
-    // k-1's keys and a delete of another (absent keys on trigger 0)
-    def trigger(k: Int): Seq[String] = {
-      val ts = f"2026-01-01T${k % 24}%02d:00:00.000Z"
-      def env(obj: String, ct: String, payload: String) =
-        Fixtures.envelope(obj, ts, ct, payload)
-      val keys = (0 until 4).map(i => k * 10L + i)
-      val (upd, del) = (k * 10L - 10, k * 10L - 9)
-      keys.flatMap { key =>
-        Seq(env("orders", "insert",
-            s"""{"o_orderkey":$key,"o_custkey":${key % 7},"o_totalprice":${key * 1.5},"o_orderstatus":"O"}"""),
-          env("customer", "insert",
-            s"""{"c_custkey":$key,"c_name":"c$key","c_acctbal":${key * 2.5}}"""),
-          env("part", "insert",
-            s"""{"p_partkey":$key,"p_brand":"b${key % 3}","p_retailprice":${key + 0.25}}"""))
-      } ++ Seq(
-        env("orders", "update",
-          s"""{"o_orderkey":$upd,"o_custkey":1,"o_totalprice":9.5,"o_orderstatus":"F"}"""),
-        env("customer", "update", s"""{"c_custkey":$upd,"c_name":"u$k","c_acctbal":1.5}"""),
-        env("part", "update", s"""{"p_partkey":$upd,"p_brand":"b1","p_retailprice":3.5}"""),
-        env("orders", "delete", s"""{"o_orderkey":$del}"""),
-        env("customer", "delete", s"""{"c_custkey":$del}"""),
-        env("part", "delete", s"""{"p_partkey":$del}"""))
-    }
+  }
+
+  /** [[foldHeavy]]'s trigger k: four inserts per table, an update of one
+    * of trigger k-1's keys and a delete of another (absent keys on
+    * trigger 0). Every trigger has the same shape. */
+  private def foldHeavyTrigger(k: Int): Seq[String] = {
+    val ts = f"2026-01-01T${k % 24}%02d:00:00.000Z"
+    def env(obj: String, ct: String, payload: String) =
+      Fixtures.envelope(obj, ts, ct, payload)
+    val keys = (0 until 4).map(i => k * 10L + i)
+    val (upd, del) = (k * 10L - 10, k * 10L - 9)
+    keys.flatMap { key =>
+      Seq(env("orders", "insert",
+          s"""{"o_orderkey":$key,"o_custkey":${key % 7},"o_totalprice":${key * 1.5},"o_orderstatus":"O"}"""),
+        env("customer", "insert",
+          s"""{"c_custkey":$key,"c_name":"c$key","c_acctbal":${key * 2.5}}"""),
+        env("part", "insert",
+          s"""{"p_partkey":$key,"p_brand":"b${key % 3}","p_retailprice":${key + 0.25}}"""))
+    } ++ Seq(
+      env("orders", "update",
+        s"""{"o_orderkey":$upd,"o_custkey":1,"o_totalprice":9.5,"o_orderstatus":"F"}"""),
+      env("customer", "update", s"""{"c_custkey":$upd,"c_name":"u$k","c_acctbal":1.5}"""),
+      env("part", "update", s"""{"p_partkey":$upd,"p_brand":"b1","p_retailprice":3.5}"""),
+      env("orders", "delete", s"""{"o_orderkey":$del}"""),
+      env("customer", "delete", s"""{"c_custkey":$del}"""),
+      env("part", "delete", s"""{"p_partkey":$del}"""))
+  }
+
+  test("steady fold triggers reuse their generated classes: no recompiles after the second") {
+    // from the third trigger on every generated class should come out of
+    // Spark's code cache. With the cache at Spark's default 100 entries,
+    // one trigger's classes do not fit and each trigger recompiles them
+    // all (see GraftSession.CodegenCacheMaxEntries).
+    val (in, wh, ck) = freshDirs()
+    val cfg = foldHeavy(in, wh, ck)
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val q = CdcStream.start(spark, cfg)
     try {
       def run(k: Int): Unit = {
-        Fixtures.writeLines(in, f"log-$k%03d.jsonl.gz", trigger(k), gzip = true)
+        Fixtures.writeLines(in, f"log-$k%03d.jsonl.gz", foldHeavyTrigger(k), gzip = true)
         q.processAllAvailable()
       }
       val perTrigger = (0 until 5).map { k =>
@@ -791,5 +796,53 @@ class CdcStreamSpec extends SparkTestBase {
     assert(agg.nonEmpty && agg == byBrand(graft.cdc.SnapshotMaintainer.read(spark, wh, "part")
       .groupBy("p_brand")
       .agg(count(lit(1)), sum(col("p_retailprice").cast("decimal(38,8)")))))
+  }
+
+  test("a steady fold trigger runs within its Spark-job budget") {
+    // the same stores as above. The routing write observes each store's
+    // touched buckets, and every fold shuffles its store once, so a
+    // trigger runs the appends, one clustering shuffle and one staged
+    // write per store, the aggregate's group-bucket job and the stream's
+    // own bookkeeping. A fold that finds its touched buckets with a job
+    // of its own, or a second shuffle per store, lands above the budget.
+    val (in, wh, ck) = freshDirs()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = s"fold-jobs-marker-${System.nanoTime()}"
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerSeen = true
+        else jobs.incrementAndGet(): Unit
+    }
+    // the listener bus is asynchronous: a marker job run after the
+    // trigger shows up after every job of the trigger
+    def settle(): Unit = {
+      markerSeen = false
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(markerSeen, "listener bus did not deliver the marker job")
+    }
+    val q = CdcStream.start(spark, foldHeavy(in, wh, ck))
+    sc.addSparkListener(listener)
+    val perTrigger = try {
+      (0 until 5).map { k =>
+        settle()
+        jobs.set(0)
+        Fixtures.writeLines(in, f"log-$k%03d.jsonl.gz", foldHeavyTrigger(k), gzip = true)
+        q.processAllAvailable()
+        settle()
+        jobs.get()
+      }
+    } finally {
+      q.stop()
+      sc.removeSparkListener(listener)
+    }
+    info(s"Spark jobs per trigger: ${perTrigger.mkString(", ")}")
+    assert(perTrigger.drop(2).forall(_ <= 21),
+      s"Spark jobs per trigger: ${perTrigger.mkString(", ")}")
   }
 }
