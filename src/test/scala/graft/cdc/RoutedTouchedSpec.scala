@@ -100,6 +100,13 @@ class RoutedTouchedSpec extends SparkTestBase {
     }
   }
 
+  test("an empty batch observes an empty set for every bucketing") {
+    // a no-data micro-batch (e.g. one that only advances a watermark)
+    val observed = Ingest.appendBatch(parsed(Nil), reg, tmpDir("routed-empty"), 0L,
+      touched = bucketings)
+    assert(observed.keySet == bucketings.toSet && observed.values.forall(_.isEmpty))
+  }
+
   test("touchedBuckets is the set of distinct bucket ids for Int, Long, String and composite keys") {
     val df = (1 to 40).map(i => (i, i.toLong * 7919L, s"k${i % 13}", i % 3)).toDF("i", "l", "s", "m")
     for (key <- Seq(Seq("i"), Seq("l"), Seq("s"), Seq("s", "m"), Seq("i", "s"))) {
