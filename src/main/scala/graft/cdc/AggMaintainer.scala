@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   *     nullable group column needs no null-safe join condition.
   *
   * Jobs: the snapshot fold's touched set comes from the stream's routing
-  * write ([[Ingest.appendBatch]]), or from one
-  * [[BucketStore.touchedBuckets]] job for a direct call; the group
+  * write ([[Ingest.appendBatch]]), or for a direct call from one job
+  * over the persisted keyed batch ([[BucketStore.withTouched]]); the group
   * buckets come from one more job over the fold's checkpointed rows.
   *
   * A pk whose UPDATE moves it between groups contributes -1/-x to its
@@ -112,9 +112,10 @@ object AggMaintainer {
                       actionCol: String = "action",
                       snapshotBuckets: Int = SnapshotMaintainer.DefaultBuckets,
                       aggBuckets: Int = DefaultBuckets): Unit =
-    foldAndMaintainTouched(spark, warehouseDir, table, batch, pk, specs,
-      BucketStore.touchedBy(batch, pk, snapshotBuckets),
-      versionCol, actionCol, snapshotBuckets, aggBuckets)
+    BucketStore.withTouched(batch, pk, snapshotBuckets) { (keyed, touched) =>
+      foldAndMaintainTouched(spark, warehouseDir, table, keyed, pk, specs,
+        touched, versionCol, actionCol, snapshotBuckets, aggBuckets)
+    }
 
   /** [[foldAndMaintain]] given the batch's touched snapshot buckets — the
     * set [[Ingest.appendBatch]] observed while routing it, or

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.StructType
   * write itself observes it ([[Ingest.appendBatch]] attaches a
   * `collect_set` of [[bucketOf]] to each maintained table's append), so
   * the fold learns it without a Spark job of its own; every other
-  * caller takes [[touchedBuckets]] over its keyed batch (one job, no
-  * shuffle).
+  * caller goes through [[withTouched]] ([[touchedBuckets]] over its
+  * persisted keyed batch: one job, no shuffle).
   *
   * A fold is BUCKET-LOCAL: its input (the touched store rows plus the
   * keyed batch) is [[clustered]] by bucket once, and every per-key step
@@ -67,15 +67,25 @@ object BucketStore {
       .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
       .collect().reduceOption(_ ++ _).getOrElse(Set.empty[Int]).toSeq.sorted
 
-  /** The buckets `batch` touches under [[bucketOf]]`(key, n)`: one Spark
-    * job with no shuffle. */
-  def touchedBy(batch: DataFrame, key: Seq[String], n: Int): Seq[Int] =
-    touchedBuckets(bucketed(batch, key, n))
+  /** `fold` over `batch` keyed by [[bucketOf]]`(key, n)` and the buckets
+    * it touches: the entry point of a direct (non-stream) fold, whose
+    * touched set costs one Spark job with no shuffle. The keyed batch is
+    * persisted across that job and the fold, so a caller's batch with
+    * costly lineage (a union of scans, a filter) is computed once; the
+    * fold may re-derive [[BucketCol]] over it, which reads the cache. */
+  def withTouched[A](batch: DataFrame, key: Seq[String], n: Int)
+                    (fold: (DataFrame, Seq[Int]) => A): A = {
+    val keyed = bucketed(batch, key, n).persist()
+    try fold(keyed, touchedBuckets(keyed)) finally keyed.unpersist(false)
+  }
 
   /** `df` hash-partitioned by its bucket column: the ONE shuffle of a
-    * bucket-local fold. Grouping or windowing by (bucket, key…)
-    * downstream needs no further exchange, and [[stageAndSwap]]'s
-    * repartition becomes a no-op. */
+    * bucket-local fold, and the one definition of the clustering every
+    * staged write takes ([[stageAndSwap]], [[seedIfMissing]]). Grouping
+    * or windowing by (bucket, key…) downstream needs no further
+    * exchange, and the staged write's own clustering of an already
+    * clustered fold is semantically equal to its child's, so Spark
+    * drops it. */
   def clustered(df: DataFrame, bucketCol: String = BucketCol): DataFrame =
     df.repartition(col(bucketCol))
 
@@ -140,7 +150,7 @@ object BucketStore {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(s"$dir/.__fold_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    folded.repartition(col(bucketCol))
+    clustered(folded, bucketCol)
       .write.mode("overwrite").partitionBy(bucketCol).parquet(tmp.toString)
     touched.foreach { b =>
       val src = new Path(tmp, s"$bucketCol=$b")
@@ -175,7 +185,7 @@ object BucketStore {
     if (fs.exists(root)) false
     else {
       val staged = new Path(root.getParent, s".__seed_${root.getName}")
-      rows.repartition(col(bucketCol))
+      clustered(rows, bucketCol)
         .write.mode("overwrite").partitionBy(bucketCol).parquet(staged.toString)
       require(fs.rename(staged, root), s"store seed failed: $root")
       true

@@ -75,9 +75,11 @@ object JoinMaintainer {
     // so a jk-moving update leaves no stale row in its old bucket
     def foldSide(s: Side): Option[(SnapshotMaintainer.LiveRows, Seq[Int])] =
       s.batch.map { batch =>
-        val live = SnapshotMaintainer.foldWithLiveRows(spark, warehouseDir,
-          s.table, batch, s.pk, BucketStore.touchedBy(batch, s.pk, snapshotBuckets),
-          versionCol, actionCol, snapshotBuckets)
+        val live = BucketStore.withTouched(batch, s.pk, snapshotBuckets) {
+          (keyed, touched) => SnapshotMaintainer.foldWithLiveRows(spark,
+            warehouseDir, s.table, keyed, s.pk, touched, versionCol,
+            actionCol, snapshotBuckets)
+        }
         (live, BucketStore.touchedBuckets(jkBucketed(
           live.pre.select(col(jk)).unionByName(live.post.select(col(jk)))),
           BucketCol))

@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partitioned by the pk's `__bucket` ([[BucketStore.bucketed]]); a micro-batch
   * folds ONLY its touched buckets (per-trigger cost O(touched keys'
   * versions + batch), never O(table)), which a CDC stream learns from
-  * its routing write and every other caller from one
-  * [[BucketStore.touchedBuckets]] job. The fold is bucket-local: the
+  * its routing write and every other caller from one job over the
+  * persisted keyed batch ([[BucketStore.withTouched]]). The fold is bucket-local: the
   * touched versions and the batch are clustered by bucket once, and the
   * duplicate collapse, the interval window and the staged write all run
   * inside that one shuffle. Staged writes swap per-bucket through the
@@ -49,8 +49,10 @@ object Scd2Maintainer {
              versionCol: String = "update_date",
              actionCol: String = "action",
              buckets: Int = DefaultBuckets): Unit =
-    updateTouched(spark, warehouseDir, table, batch, pk,
-      BucketStore.touchedBy(batch, pk, buckets), versionCol, actionCol, buckets)
+    BucketStore.withTouched(batch, pk, buckets) { (keyed, touched) =>
+      updateTouched(spark, warehouseDir, table, keyed, pk, touched,
+        versionCol, actionCol, buckets)
+    }
 
   /** [[update]] given the batch's touched buckets — the set
     * [[Ingest.appendBatch]] observed while routing it, or

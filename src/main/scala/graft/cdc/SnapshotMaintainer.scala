@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *    A 10⁹-key table with a 10⁴-row trigger rewrites ≤10⁴ buckets of
   *    ~10⁵ keys each — bounded regardless of total snapshot size.
   *  - the touched buckets come from the stream's routing write
-  *    ([[Ingest.appendBatch]]), or from one [[BucketStore.touchedBuckets]]
-  *    job for a direct [[update]]; the fold is bucket-local, so the store
-  *    shuffles once per trigger ([[BucketStore.clustered]]).
+  *    ([[Ingest.appendBatch]]), or for a direct [[update]] from one job
+  *    over the persisted keyed batch ([[BucketStore.withTouched]]); the
+  *    fold is bucket-local, so the store shuffles once per trigger
+  *    ([[BucketStore.clustered]]).
   *  - all directory manipulation goes through the Hadoop FileSystem API,
   *    so the same code runs on file:/, HDFS, and object stores —
   *    `java.io.File` + `renameTo` silently break anywhere but a local
@@ -53,8 +54,10 @@ object SnapshotMaintainer {
              versionCol: String = "update_date",
              actionCol: String = "action",
              buckets: Int = DefaultBuckets): Unit =
-    updateTouched(spark, warehouseDir, table, batch, pk,
-      BucketStore.touchedBy(batch, pk, buckets), versionCol, actionCol, buckets)
+    BucketStore.withTouched(batch, pk, buckets) { (keyed, touched) =>
+      updateTouched(spark, warehouseDir, table, keyed, pk, touched,
+        versionCol, actionCol, buckets)
+    }
 
   /** [[update]] given the batch's touched buckets — the set
     * [[Ingest.appendBatch]] observed while routing it, or

@@ -10,7 +10,8 @@ import graft.streaming.{CdcStream, CdcStreamConfig}
   * ([[Ingest.appendBatch]]'s observed sets): they must be exactly what
   * [[BucketStore.touchedBuckets]] finds in the written batch, per (table,
   * key, bucket count), and the stores folded from them must equal their
-  * batch recomputation. */
+  * batch recomputation. A direct fold, which finds its own set, must
+  * still compute its caller's batch once. */
 class RoutedTouchedSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -116,6 +117,35 @@ class RoutedTouchedSpec extends SparkTestBase {
       assert(BucketStore.touchedBuckets(keyed) == want, key.toString)
     }
     assert(BucketStore.touchedBuckets(BucketStore.bucketed(df.limit(0), Seq("i"), buckets)).isEmpty)
+  }
+
+  test("a direct fold computes its caller's batch lineage once") {
+    // the public entry points find their touched set with a job of their
+    // own; a batch with lineage (here a filter) must not run again for
+    // the fold
+    val wh = tmpDir("direct-once")
+    val src = s"${tmpDir("direct-src")}/rows"
+    (1 to 12).map(i => (i.toLong, "insert", "2026-01-01T10:00:00", 100L + i % 3, s"n$i"))
+      .toDF("id", "action", "update_date", "jk", "note").write.parquet(src)
+    val evaluated = spark.sparkContext.longAccumulator("batch-rows")
+    val counted = udf { (_: Long) => evaluated.add(1); true }.asNondeterministic()
+    def batch = spark.read.parquet(src).filter(counted(col("id")))
+    def once(name: String, rows: Long = 12L)(fold: => Unit): Unit = {
+      evaluated.reset()
+      fold
+      assert(evaluated.value == rows, s"$name evaluated ${evaluated.value} batch rows")
+    }
+    once("snapshot")(SnapshotMaintainer.update(spark, wh, "s", batch, Seq("id"),
+      buckets = buckets))
+    once("scd2")(Scd2Maintainer.update(spark, wh, "s", batch, Seq("id"), buckets = buckets))
+    once("agg")(AggMaintainer.foldAndMaintain(spark, wh, "a", batch, Seq("id"),
+      Seq(AggMaintainer.AggSpec("by_jk", Seq("jk"))), snapshotBuckets = buckets))
+    // two join sides over (differently planned) frames of the batch,
+    // each computed once
+    once("join", 24L)(JoinMaintainer.foldAndMaintain(spark, wh, "v", "jk",
+      JoinMaintainer.Side("ja", Seq("id"), Some(batch)),
+      JoinMaintainer.Side("jb", Seq("id"), Some(batch.filter(col("id") =!= 0L))),
+      snapshotBuckets = buckets))
   }
 
   test("stores folded from the observed sets equal their recomputation") {
