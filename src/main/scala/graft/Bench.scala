@@ -3,7 +3,6 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
@@ -111,9 +110,6 @@ object Bench {
     // child stderr (Spark log noise) is discarded — reading it serially
     // after stdout would deadlock once its 64K pipe buffer fills
     pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-    pb.environment().put("SPARK_GRAFT_CPUS",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString))
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8)
@@ -238,25 +234,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // JIT refuses methods > 8KB bytecode (DontCompileHugeMethods), so a
-      // giant generated stage runs as INTERPRETED BYTECODE — measurably
-      // slower than Spark's interpreted expressions. Fall back to
-      // expression interpretation beyond that size instead.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
-      // the engine's full surface (native fns, TVFs, optimizer rules) —
-      // the same extensions GraftSession loads, so the driver-contract
-      // sessions run the plans a deployment would
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.core.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
 
     // Maintained-store queries (q167–q180): the store build (fold

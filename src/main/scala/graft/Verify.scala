@@ -1,30 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // JIT refuses methods > 8KB bytecode (DontCompileHugeMethods), so a
-      // giant generated stage runs as INTERPRETED BYTECODE — measurably
-      // slower than Spark's interpreted expressions. Fall back to
-      // expression interpretation beyond that size instead.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // µs, not INT96: pyarrow reads INT96 as ns, breaking typed compares
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
-      // the engine's full surface (native fns, TVFs, optimizer rules) —
-      // the same extensions GraftSession loads, so the driver-contract
-      // sessions run the plans a deployment would
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.core.GraftSession.create()
+    // µs, not INT96: pyarrow reads INT96 as ns, breaking typed compares
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q69,q70 dumps just those queries

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.cdc.{Ingest, Registry, Versioned}
+import graft.core.GraftSession
 import graft.streaming.{CdcStream, CdcStreamConfig}
 
 /** CLI usage example: stream a directory of Datastream-style JSONL change
@@ -22,15 +22,8 @@ object CdcDemo {
     val Array(registryPath, inputDir, warehouseDir, checkpointDir, rest @ _*) = args: @unchecked
     val pkCol = rest.headOption
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cdc-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.GraftSession.CodegenCacheConf,
-        graft.core.GraftSession.CodegenCacheMaxEntries)
-      .getOrCreate()
+    val spark = GraftSession.create(
+      sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.localCpus}]"), "graft-cdc-demo")
     spark.sparkContext.setLogLevel("WARN")
 
     val registry = Registry.load(registryPath)

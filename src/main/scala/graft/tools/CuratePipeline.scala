@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession
 import graft.ext.{Dedup, NaiveBayes, NgramLM, Sharding, TextAnalysis}
 
 /** End-to-end training-corpus curation CLI — the pipeline a data team
@@ -416,13 +417,8 @@ object CuratePipeline {
     val budget = if (args.length > 4) args(4).toLong else 1 << 20
     val cap = if (args.length > 5) args(5).toInt else 1000000
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(
+      sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.localCpus}]"), "graft-curate")
     spark.sparkContext.setLogLevel("WARN")
 
     val out = run(spark, spark.read.parquet(docsPath), minQuality, langs, budget, cap)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Fold-only benchmark entry point, meant to run in its OWN fresh JVM.
   *
@@ -22,15 +22,7 @@ object IngestFoldMain {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val replicate = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_INGEST_REPLICATE", "4")).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.GraftSession.CodegenCacheConf, graft.core.GraftSession.CodegenCacheMaxEntries)
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     val r = IngestBench.streamWithFolds(spark, sfDir, replicate)
     // mid-fold sentinel distribution + per-phase wall split (r16;

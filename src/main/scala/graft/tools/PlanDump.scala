@@ -2,9 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.core.GraftSession
 
 /** Dev tool: dump the FORMATTED physical plan of every SQL execution a
   * query performs — not just the final action. Several engine stages end
@@ -24,16 +25,7 @@ object PlanDump {
     val outDir = args.head
     val queries = args.tail
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val sink = new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path]()

@@ -721,19 +721,7 @@ object ScaleBench {
     val names = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.GraftSession.CodegenCacheConf,
-        graft.core.GraftSession.CodegenCacheMaxEntries)
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.core.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
 
     val work = java.nio.file.Files.createTempDirectory("graft-scale").toString

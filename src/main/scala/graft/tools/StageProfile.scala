@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.core.GraftSession
 
 /** Dev tool: run one query and print a per-stage wall/task-time profile
   * (top stages by wall), so "where do the seconds go" is answerable
@@ -14,21 +15,15 @@ object StageProfile {
     val q = args.head
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.core.GraftExtensions)
-    // A/B experiments: SPARK_GRAFT_CONF="k=v;k=v" overrides any of the above
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b = b.config(k.trim, v.trim)
-    })
-    val spark = b.getOrCreate()
+    // A/B experiments: SPARK_GRAFT_CONF="k=v;k=v" overrides runtime SQL confs
+    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(";")).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k.trim -> v.trim
+        case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
+      }
+    }
+    val spark = GraftSession.create()
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/region.parquet")
       .write.format("noop").mode("overwrite").save()
