@@ -169,11 +169,10 @@ object AggMaintainer {
       val merged = summed(BucketStore.clustered(
           current.fold(contrib)(_.unionByName(contrib)), BucketCol), spec,
         gcols :+ BucketCol).filter(col("n_rows") > 0L)
-      // shared stage + per-bucket swap (rename-aside, crash-recoverable);
-      // a bucket whose groups all cancelled to zero is DELETED, not
-      // left stale
-      BucketStore.stageAndSwap(spark, dir, merged, touched,
-        deleteMissingTouched = true, bucketCol = BucketCol)
+      // shared stage + per-bucket rename-aside swap; a touched bucket
+      // whose groups all cancelled to zero stages no rows, so the swap
+      // removes it rather than leaving it stale
+      BucketStore.stageAndSwap(spark, dir, merged, touched, BucketCol)
     }
   }
 

@@ -1,7 +1,9 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types.StructType
 
@@ -28,6 +30,17 @@ import org.apache.spark.sql.types.StructType
   * The staged write's bucket repartition in [[stageAndSwap]] then
   * matches its child's partitioning and Spark drops it, so a fold
   * shuffles its store once.
+  *
+  * Publishing: every store directory the repo replaces in place goes
+  * through ONE rename-aside [[swap]] and its [[recover]]: each touched
+  * bucket of a fold ([[stageAndSwap]], [[deleteTouched]]), a new store's
+  * whole dir ([[seedIfMissing]]), and the whole-dir stores of
+  * [[graft.streaming.SampleStream]] and [[graft.streaming.DriftStream]].
+  * Recovery runs on the writer path only, before the state a fold
+  * starts from is read ([[readTouched]] per touched bucket; the two
+  * whole-dir writers before their read); readers of a whole-dir store
+  * read a crashed swap's aside in place ([[readable]]). The one commit
+  * file write, [[writeAtomic]], lives here too.
   *
   * All directory manipulation goes through the Hadoop FileSystem API
   * (file:/, HDFS, object stores alike), and any fix to the protocol —
@@ -89,30 +102,59 @@ object BucketStore {
   def clustered(df: DataFrame, bucketCol: String = BucketCol): DataFrame =
     df.repartition(col(bucketCol))
 
-  private def asidePath(dir: String, b: Int) = new Path(s"$dir/.__swap_$b")
-
-  /** Restore a bucket whose previous swap crashed between the
-    * rename-aside and the rename-in: if the bucket dir is missing but
-    * its `.__swap_<b>` sibling exists, the sibling IS the pre-swap
-    * state — rename it back. Idempotent; called on every touched-bucket
-    * read so a fold can never observe (and bake in) a half-swapped
-    * store. */
-  private def recoverBucket(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: String, b: Int,
-                            bucketCol: String): Unit = {
-    val dst = new Path(s"$dir/$bucketCol=$b")
-    val aside = asidePath(dir, b)
-    if (!fs.exists(dst) && fs.exists(aside))
-      require(fs.rename(aside, dst), s"bucket recovery failed: $dst")
+  /** Replace the directory `target` with `staged` — or remove it, when
+    * nothing is staged — through the rename-aside `aside`: rename the
+    * live dir aside, rename the staged dir in, delete the aside. Never
+    * delete-then-rename: a crash between the two would lose the
+    * pre-swap state, and the replay would rebuild the dir from its batch
+    * alone. Every crash point leaves the pre-swap state (the live dir, or
+    * its aside, which [[recover]] puts back) or the post-swap one (plus
+    * a stale aside, which the next swap deletes). A crashed swap's aside
+    * is put back first, so it is never taken for a stale one. */
+  def swap(fs: FileSystem, target: Path, staged: Option[Path], aside: Path): Unit = {
+    recover(fs, target, aside)
+    fs.delete(aside, true)
+    if (fs.exists(target))
+      require(fs.rename(target, aside), s"rename-aside failed: $target")
+    staged.foreach(s => require(fs.rename(s, target), s"swap failed: $target"))
+    fs.delete(aside, true): Unit
   }
+
+  /** Put back the aside copy of a [[swap]] that crashed between its
+    * rename-aside and its rename-in: with `target` missing, `aside` IS
+    * the pre-swap state. Idempotent. Writers run it before they read
+    * the state they fold; readers use [[readable]] instead, which
+    * renames nothing, so a read cannot race a live swap's rename-in. */
+  def recover(fs: FileSystem, target: Path, aside: Path): Unit =
+    if (!fs.exists(target) && fs.exists(aside))
+      require(fs.rename(aside, target), s"swap recovery failed: $target")
+
+  /** The aside of a whole-dir store: `<parent>/.__swap_<name>`. */
+  def dirAside(target: Path): Path =
+    new Path(target.getParent, s".__swap_${target.getName}")
+
+  /** The dir a reader of the whole-dir store `target` reads: `target`,
+    * or inside a swap's window (or after a crash in it) the aside copy,
+    * read in place. */
+  def readable(fs: FileSystem, target: Path): Path = {
+    val aside = dirAside(target)
+    if (!fs.exists(target) && fs.exists(aside)) aside else target
+  }
+
+  private def bucketPath(dir: String, b: Int, bucketCol: String) =
+    new Path(dir, s"$bucketCol=$b")
+
+  /** A bucket's aside: `<dir>/.__swap_<b>`. */
+  private def bucketAside(dir: String, b: Int) = new Path(s"$dir/.__swap_$b")
 
   /** Current contents of the touched buckets, if the store has any —
     * read through `basePath` so [[BucketCol]] comes back as a column.
-    * Runs crash recovery per touched bucket first. With a declared
-    * `schema` the files are read as that schema (a column a bucket lacks
-    * reads as null); without one the bucket footers are merged
-    * (`mergeSchema`, one extra Spark job), for a fold that must keep
-    * stored columns its batch lacks. */
+    * Each touched bucket is [[recover]]ed first, so a fold never reads
+    * (and bakes in) a half-swapped store. With a declared `schema` the
+    * files are read as that schema (a column a bucket lacks reads as
+    * null); without one the bucket footers are merged (`mergeSchema`,
+    * one extra Spark job), for a fold that must keep stored columns its
+    * batch lacks. */
   def readTouched(spark: SparkSession, dir: String,
                   touched: Seq[Int],
                   bucketCol: String = BucketCol,
@@ -121,20 +163,20 @@ object BucketStore {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) None
     else {
-      touched.foreach(b => recoverBucket(fs, dir, b, bucketCol))
-      val dirs = touched.map(b => s"$dir/$bucketCol=$b")
-        .filter(p => fs.exists(new Path(p)))
+      touched.foreach(b => recover(fs, bucketPath(dir, b, bucketCol), bucketAside(dir, b)))
+      val dirs = touched.map(bucketPath(dir, _, bucketCol)).filter(fs.exists)
       if (dirs.isEmpty) None
       // after a registry column add/remove the buckets can legitimately
       // carry different schemas (the fold rewrites only touched buckets)
       // — a strict single-footer read would fail the micro-batch
       else Some(schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
-        .option("basePath", dir).parquet(dirs.toIndexedSeq: _*))
+        .option("basePath", dir).parquet(dirs.map(_.toString).toIndexedSeq: _*))
     }
   }
 
-  /** Stage `folded` (which must carry [[BucketCol]]) and swap ONLY the
-    * `touched` buckets into the store. The pre-write repartition on the
+  /** Stage `folded` (which must carry [[BucketCol]]) and [[swap]] ONLY
+    * the `touched` buckets into the store; a touched bucket the fold
+    * emitted no rows for is removed. The pre-write repartition on the
     * bucket column is load-bearing: partitionBy writes one file per
     * (task × bucket-value) pair, so writing straight out of an
     * unclustered shuffle creates up to tasks×buckets tiny files per
@@ -144,40 +186,33 @@ object BucketStore {
     * partitioned that way and Spark removes the repartition. */
   def stageAndSwap(spark: SparkSession, dir: String, folded: DataFrame,
                    touched: Seq[Int],
-                   deleteMissingTouched: Boolean = false,
                    bucketCol: String = BucketCol): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(s"$dir/.__fold_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     clustered(folded, bucketCol)
       .write.mode("overwrite").partitionBy(bucketCol).parquet(tmp.toString)
-    touched.foreach { b =>
-      val src = new Path(tmp, s"$bucketCol=$b")
-      val dst = new Path(root, s"$bucketCol=$b")
-      // RENAME-ASIDE, never delete-then-rename: a crash between a
-      // delete and a rename would lose the bucket's pre-swap state,
-      // and the replayed fold would rebuild it from the batch alone —
-      // silently dropping every other key in the bucket. The aside
-      // copy makes every crash point recoverable ([[recoverBucket]]);
-      // the stale aside from a COMPLETED swap is deleted here first.
-      val aside = asidePath(dir, b)
-      if (fs.exists(src)) {
-        if (fs.exists(aside)) fs.delete(aside, true)
-        if (fs.exists(dst))
-          require(fs.rename(dst, aside), s"bucket rename-aside failed: $dst")
-        require(fs.rename(src, dst), s"bucket swap failed: $dst")
-        fs.delete(aside, true)
-      } else if (deleteMissingTouched) deleteBucket(fs, dir, b, bucketCol)
-    }
-    fs.delete(tmp, true)
+    swapTouched(fs, dir, touched, bucketCol,
+      b => Some(new Path(tmp, s"$bucketCol=$b")).filter(fs.exists))
+    fs.delete(tmp, true): Unit
   }
+
+  /** Remove the `touched` buckets: the swap of a fold that emitted no
+    * rows for any of them. */
+  def deleteTouched(spark: SparkSession, dir: String, touched: Seq[Int],
+                    bucketCol: String = BucketCol): Unit =
+    swapTouched(new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
+      dir, touched, bucketCol, _ => None)
+
+  private def swapTouched(fs: FileSystem, dir: String, touched: Seq[Int],
+                          bucketCol: String, staged: Int => Option[Path]): Unit =
+    touched.foreach(b =>
+      swap(fs, bucketPath(dir, b, bucketCol), staged(b), bucketAside(dir, b)))
 
   /** Create the store at `dir` from `rows` (which must carry
     * `bucketCol`) if it does not exist yet; true if it did. The rows are
-    * staged in a sibling dir and renamed in whole: a crash leaves either
-    * no store (the replay seeds again) or the complete one, never a
-    * partial store that a later fold would read as complete. */
+    * staged in a sibling dir and [[swap]]ped in whole: a crash leaves
+    * either no store (the replay seeds again) or the complete one, never
+    * a partial store that a later fold would read as complete. */
   def seedIfMissing(spark: SparkSession, dir: String, rows: => DataFrame,
                     bucketCol: String = BucketCol): Boolean = {
     val root = new Path(dir)
@@ -187,55 +222,22 @@ object BucketStore {
       val staged = new Path(root.getParent, s".__seed_${root.getName}")
       clustered(rows, bucketCol)
         .write.mode("overwrite").partitionBy(bucketCol).parquet(staged.toString)
-      require(fs.rename(staged, root), s"store seed failed: $root")
+      swap(fs, root, Some(staged), dirAside(root))
       true
     }
   }
 
-  /** Delete the `touched` buckets: the swap of a fold that emitted no
-    * rows for any of them. */
-  def deleteTouched(spark: SparkSession, dir: String, touched: Seq[Int],
-                    bucketCol: String = BucketCol): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    touched.foreach(b => deleteBucket(fs, dir, b, bucketCol))
-  }
-
-  /** A touched bucket the fold emitted NO rows for (every group went to
-    * zero / the join went empty) is deleted — through the same aside so
-    * a crash mid-delete stays recoverable; a replay re-derives the empty
-    * fold and deletes again (idempotent). */
-  private def deleteBucket(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                           b: Int, bucketCol: String): Unit = {
-    val dst = new Path(dir, s"$bucketCol=$b")
-    val aside = asidePath(dir, b)
-    if (fs.exists(dst)) {
-      if (fs.exists(aside)) fs.delete(aside, true)
-      require(fs.rename(dst, aside), s"bucket rename-aside failed: $dst")
-      fs.delete(aside, true)
-    }
-  }
-
-  /** Crash-safe single-directory replace for non-bucketed stores (the
-    * SampleStream reservoir, the DriftStream reference): rename the
-    * live dir aside, rename the staged dir in, delete the aside — with
-    * [[recoverDir]] restoring the aside if a crash hits the window.
-    * delete-then-rename (the naive form) silently resets the store to
-    * the next batch's contents on a mistimed crash. */
-  def swapDir(fs: org.apache.hadoop.fs.FileSystem, target: Path,
-              staged: Path): Unit = {
-    val aside = new Path(target.getParent, s".__swap_${target.getName}")
-    if (fs.exists(aside)) fs.delete(aside, true)
-    if (fs.exists(target))
-      require(fs.rename(target, aside), s"rename-aside failed: $target")
-    require(fs.rename(staged, target), s"dir swap failed: $target")
-    fs.delete(aside, true): Unit
-  }
-
-  /** Restore `target` from its aside copy if a previous [[swapDir]]
-    * crashed mid-window; call before every read of the store. */
-  def recoverDir(fs: org.apache.hadoop.fs.FileSystem, target: Path): Unit = {
-    val aside = new Path(target.getParent, s".__swap_${target.getName}")
-    if (!fs.exists(target) && fs.exists(aside))
-      require(fs.rename(aside, target), s"dir recovery failed: $target")
+  /** Write `text` as the file `path` through
+    * [[CheckpointFileManager.createAtomic]]: a hidden temp file renamed
+    * over `path`, so a reader never finds a torn file, and a failed
+    * write or rename leaves the previous one. The write of every commit
+    * file. (On HDFS the overwrite is one atomic rename; Hadoop's local
+    * file system deletes the old file just before it renames.) */
+  def writeAtomic(conf: Configuration, path: Path, text: String): Unit = {
+    val out = CheckpointFileManager.create(path.getParent, conf)
+      .createAtomic(path, overwriteIfPossible = true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
   }
 }

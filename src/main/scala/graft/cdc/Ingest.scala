@@ -29,14 +29,10 @@ object Ingest {
 
   /** Target rows per output file for routed batch appends (guide §6:
     * aim for ~100 MB-band files; CDC envelope rows parquet to a few
-    * hundred bytes, so 2M rows ≈ a few hundred MB). Overridable per
-    * deployment via `spark.graft.ingest.recordsPerFile` — a CONF, not a
-    * local-mode constant: at sf0.1 triggers it coalesces KB-sized
-    * splits to one file, at cluster-scale triggers rows/perFile keeps
-    * the write as wide as the data warrants. */
-  private def recordsPerFile(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.ingest.recordsPerFile")
-      .map(_.toLong).getOrElse(2000000L)
+    * hundred bytes, so 2M rows ≈ a few hundred MB): at sf0.1 triggers it
+    * coalesces KB-sized splits to one file, at cluster-scale triggers
+    * rows/RecordsPerFile keeps the write as wide as the data warrants. */
+  private val RecordsPerFile = 2000000L
 
   def readLines(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.text(inputDir) // .gz handled transparently by the text source
@@ -77,14 +73,13 @@ object Ingest {
       // small triggers the old layout wrote dozens of KB-sized part
       // files per table per trigger, each costing a create+flush+rename
       // on the latency-bound commit path; at large triggers
-      // rows/recordsPerFile keeps the write wide. The count is not an
+      // rows/RecordsPerFile keeps the write wide. The count is not an
       // extra pass — it IS the cache materialization the first write
       // paid before.
       val rows = cached.count()
       val srcParts = math.max(1, cached.rdd.getNumPartitions)
-      val perFile = recordsPerFile(parsed.sparkSession)
       val nFiles = math.max(1L, math.min(srcParts.toLong,
-        (rows + perFile - 1) / perFile)).toInt
+        (rows + RecordsPerFile - 1) / RecordsPerFile)).toInt
       // the per-table routed appends and the dead-letter append are
       // independent jobs to disjoint `batch=` dirs over ONE cached
       // parsed frame (block-level locks make a racing first
@@ -281,14 +276,10 @@ object Ingest {
     val writer = out.write.mode("overwrite")
     (if (hasDt) writer.partitionBy(Envelope.DtCol) else writer).parquet(tmp.toString)
     // commit point: manifest names the dirs the tmp copy supersedes;
-    // written via create+rename so a torn write can never look committed
-    val mtmp = new org.apache.hadoop.fs.Path(tmp, CompactManifest + ".inprogress")
-    val os = fs.create(mtmp, true)
-    try os.write(mergeDirs.map(_.getName).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    require(fs.rename(mtmp, new org.apache.hadoop.fs.Path(tmp, CompactManifest)),
-      s"compact manifest commit failed under $tmp")
+    // written atomically so a torn write can never look committed
+    BucketStore.writeAtomic(spark.sessionState.newHadoopConf(),
+      new org.apache.hadoop.fs.Path(tmp, CompactManifest),
+      mergeDirs.map(_.getName).mkString("\n"))
     finishCompaction(fs, dir, tmp)
   }
 

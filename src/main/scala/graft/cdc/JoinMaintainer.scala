@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   *     side-store bucket as (current rows minus the batch's pks) ∪ the
   *     batch pks' post-fold live rows;
   *  3. re-join the touched bucket pairs and swap the view buckets
-  *     (staged `_tmp` + per-bucket rename; a bucket whose join went
-  *     empty is deleted, not left stale).
+  *     ([[BucketStore.stageAndSwap]]; a touched bucket whose join went
+  *     empty stages no rows, so the swap removes it).
   *
   * A side store that does not exist yet (a view added over snapshots
   * that already hold rows) is seeded from its post-fold snapshot
@@ -120,7 +120,7 @@ object JoinMaintainer {
           .fold(fresh)(_.join(live.keys, s.pk, "left_anti")
             .unionByName(fresh, allowMissingColumns = true))
         BucketStore.stageAndSwap(spark, dir, BucketStore.clustered(kept, BucketCol),
-          touched, deleteMissingTouched = true, bucketCol = BucketCol)
+          touched, BucketCol)
       }
       seeded
     }
@@ -140,8 +140,7 @@ object JoinMaintainer {
     val vdir = viewDir(warehouseDir, view)
     (sideRows("a"), sideRows("b")) match {
       case (Some(l), Some(r)) => BucketStore.stageAndSwap(spark, vdir,
-        joinSides(l, r, jk), viewTouched, deleteMissingTouched = true,
-        bucketCol = BucketCol)
+        joinSides(l, r, jk), viewTouched, BucketCol)
       // a side with no rows there leaves every touched view bucket empty
       case _ => BucketStore.deleteTouched(spark, vdir, viewTouched, BucketCol)
     }

@@ -49,9 +49,9 @@ object DriftStream {
   /** The accumulated reference histogram: (bucket, n). */
   def readReference(spark: SparkSession, monitorDir: String): DataFrame = {
     val ref = new Path(refDir(monitorDir))
-    graft.cdc.BucketStore.recoverDir(
-      ref.getFileSystem(spark.sessionState.newHadoopConf()), ref)
-    spark.read.parquet(refDir(monitorDir)).select("bucket", "n")
+    spark.read.parquet(graft.cdc.BucketStore.readable(
+        ref.getFileSystem(spark.sessionState.newHadoopConf()), ref).toString)
+      .select("bucket", "n")
   }
 
   def start(spark: SparkSession, cfg: DriftStreamConfig): StreamingQuery =
@@ -81,7 +81,7 @@ object DriftStream {
     if (nDocs == 0L) return // nothing arrived: no log row, no fold
     val ref = new Path(refDir(cfg.monitorDir))
     val fs = ref.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.cdc.BucketStore.recoverDir(fs, ref) // a crashed swap's aside copy
+    graft.cdc.BucketStore.recover(fs, ref, graft.cdc.BucketStore.dirAside(ref))
     val current: Option[(DataFrame, Long)] =
       if (!fs.exists(ref)) None
       else {
@@ -119,13 +119,12 @@ object DriftStream {
             .groupBy("bucket").agg(sum(col("n")).as("n"))
       }
       val tmp = new Path(s"${cfg.monitorDir}/.__ref_tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
       merged.withColumn("__last_batch", lit(batchId))
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      // rename-aside swap: a crash can no longer reset the reference
-      // to one batch's histogram (every later PSI would then compare
-      // against a near-empty reference)
-      graft.cdc.BucketStore.swapDir(fs, ref, tmp)
+      // rename-aside swap: a crash can never reset the reference to one
+      // batch's histogram (every later PSI would then compare against a
+      // near-empty reference)
+      graft.cdc.BucketStore.swap(fs, ref, Some(tmp), graft.cdc.BucketStore.dirAside(ref))
     }
   }
 }

@@ -193,16 +193,11 @@ object GenerationStore {
       folded.write.mode("overwrite").parquet(s"${frame.dir}/compacted=$newWm")
     }
     // COMMIT: the watermark flips readers and the replay guard to the
-    // new generation; created via create+rename so a torn write can
-    // never look committed
-    val wm = watermarkPath(storeDir)
-    val tmp = new Path(wm.getParent, wm.getName + ".inprogress")
-    val out = fs.create(tmp, true)
-    try out.write(s"$newWm\n$wm0".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(wm, false)
-    require(fs.rename(tmp, wm), s"watermark commit failed: $wm")
+    // new generation; written atomically, so it is never torn, and a
+    // failed commit keeps the old one (with none, readers would select
+    // no generation at all)
+    graft.cdc.BucketStore.writeAtomic(spark.sessionState.newHadoopConf(),
+      watermarkPath(storeDir), s"$newWm\n$wm0")
     // delayed GC: sweep what the OLD watermark superseded; dirs this
     // commit superseded (gen wm0 + batches ≤ newWm) survive until the
     // next compaction so concurrent readers' resolved paths stay valid

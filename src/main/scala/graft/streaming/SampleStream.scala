@@ -45,11 +45,10 @@ object SampleStream {
     * derived on read (the frame is O(strata × k) rows). */
   def readSample(spark: SparkSession, storeDir: String): DataFrame = {
     val res = new Path(resDir(storeDir))
-    graft.cdc.BucketStore.recoverDir(
-      res.getFileSystem(spark.sessionState.newHadoopConf()), res)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("stratum").orderBy(col("e_units"), col("id"))
-    spark.read.parquet(resDir(storeDir))
+    spark.read.parquet(graft.cdc.BucketStore.readable(
+        res.getFileSystem(spark.sessionState.newHadoopConf()), res).toString)
       .select(col("stratum"), col("id"), col("e_units"))
       .withColumn("rank", row_number().over(w).cast("long"))
   }
@@ -77,7 +76,7 @@ object SampleStream {
 
     val res = new Path(resDir(cfg.storeDir))
     val fs = res.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.cdc.BucketStore.recoverDir(fs, res) // a crashed swap's aside copy
+    graft.cdc.BucketStore.recover(fs, res, graft.cdc.BucketStore.dirAside(res))
     val current: Option[(DataFrame, Long)] =
       if (!fs.exists(res)) None
       else {
@@ -99,11 +98,10 @@ object SampleStream {
       .select("stratum", "id", "e_units")
 
     val tmp = new Path(s"${cfg.storeDir}/.__res_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     folded.withColumn("__last_batch", lit(batchId))
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    // rename-aside swap: a crash can no longer reset the reservoir to
-    // one batch's sample (BucketStore.swapDir + the recoverDir calls)
-    graft.cdc.BucketStore.swapDir(fs, res, tmp)
+    // rename-aside swap: a crash can never reset the reservoir to one
+    // batch's sample
+    graft.cdc.BucketStore.swap(fs, res, Some(tmp), graft.cdc.BucketStore.dirAside(res))
   }
 }

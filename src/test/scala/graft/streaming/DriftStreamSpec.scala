@@ -92,4 +92,18 @@ class DriftStreamSpec extends SparkTestBase {
       .agg(sum(col("psi_micro8"))).head().getLong(0)
     assert(logged == expected, s"streaming $logged != batch $expected")
   }
+
+  test("a read inside a swap's rename-aside window renames nothing and reads the pre-swap reference") {
+    val (in, mon, ck) = (tmpDir("drift3-in"), tmpDir("drift3-mon"), tmpDir("drift3-ck"))
+    DriftStream.processBatch((1L to 40L).map(doc(_, 20)).toDF("doc_id", "text"), 0L,
+      cfgFor(in, mon, ck))
+    val before = DriftStream.readReference(spark, mon).collect().toSet
+    // the writer's swap between its rename-aside and its rename-in
+    val monitor = new java.io.File(mon)
+    assert(new java.io.File(monitor, "_ref").renameTo(new java.io.File(monitor, ".__swap__ref")))
+    val listing = monitor.list().toSet
+    assert(DriftStream.readReference(spark, mon).collect().toSet == before)
+    assert(monitor.list().toSet == listing,
+      "a reader must leave the rename-in to the writer")
+  }
 }

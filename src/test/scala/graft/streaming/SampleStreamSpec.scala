@@ -101,4 +101,20 @@ class SampleStreamSpec extends SparkTestBase {
     assert(before.diff(after.map(_._2).toSet).size == 1,
       "exactly one incumbent is displaced")
   }
+
+  test("a read inside a swap's rename-aside window renames nothing and reads the pre-swap sample") {
+    val (in, st, ck) = (tmpDir("smp4-in"), tmpDir("smp4-st"), tmpDir("smp4-ck"))
+    val cfg = cfgFor(in, st, ck, k = 3)
+    SampleStream.processBatch(
+      rows(0 until 20, _ => "en").toDF("doc_id", "lang", "weight"), 0L, cfg)
+    val before = SampleStream.readSample(spark, st).collect().toSet
+    // the writer's swap between its rename-aside and its rename-in
+    val store = new java.io.File(st)
+    assert(new java.io.File(store, "_reservoir")
+      .renameTo(new java.io.File(store, ".__swap__reservoir")))
+    val listing = store.list().toSet
+    assert(SampleStream.readSample(spark, st).collect().toSet == before)
+    assert(store.list().toSet == listing,
+      "a reader must leave the rename-in to the writer")
+  }
 }
