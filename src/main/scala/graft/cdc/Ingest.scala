@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch CDC ingest: parse a directory of (gzipped) JSONL envelope logs,
   * route every record to its registry table, append.
@@ -73,11 +74,8 @@ object Ingest {
       // small triggers the old layout wrote dozens of KB-sized part
       // files per table per trigger, each costing a create+flush+rename
       // on the latency-bound commit path; at large triggers
-      // rows/RecordsPerFile keeps the write wide. The count is not an
-      // extra pass — it IS the cache materialization the first write
-      // paid before.
-      val rows = cached.count()
-      val srcParts = math.max(1, cached.rdd.getNumPartitions)
+      // rows/RecordsPerFile keeps the write wide.
+      val (rows, srcParts) = materializeCounting(cached)
       val nFiles = math.max(1L, math.min(srcParts.toLong,
         (rows + RecordsPerFile - 1) / RecordsPerFile)).toInt
       // the per-table routed appends and the dead-letter append are
@@ -124,6 +122,19 @@ object Ingest {
     }.toMap
   }
 
+  /** Materialize a cached frame with ONE Spark job at full parallelism
+    * and return its row count and partition count; the count is final
+    * when the job returns. The job scans the cached relation with no
+    * columns, so the cache is built whole but no row is decoded.
+    * `Dataset.count()` costs three jobs here under AQE (the cached
+    * relation as a stage of its own, then the aggregate's shuffle-map
+    * and result jobs), and an `Observation` would make the caller wait
+    * on an asynchronous listener event. */
+  private[cdc] def materializeCounting(cached: DataFrame): (Long, Int) = {
+    val rdd = cached.select(lit(1)).queryExecution.toRdd
+    (rdd.count(), math.max(1, rdd.getNumPartitions))
+  }
+
   /** One-shot batch ingest of a directory. */
   def ingestDir(spark: SparkSession, inputDir: String,
                 registry: Map[String, TableSpec], warehouseDir: String,
@@ -137,9 +148,9 @@ object Ingest {
     *
     * `mergeSchema` defaults ON: batch dirs written BEFORE a registry
     * schema change carry the narrower schema; the union schema (old rows
-    * NULL in new columns) is the CDC warehouse contract. Cost is one
-    * footer read per file at planning — acceptable for versioned tables;
-    * pass false for hot paths on schema-stable tables. */
+    * NULL in new columns) is the CDC warehouse contract. Cost is a Spark
+    * job per read that reads every file's footer before the query's own
+    * jobs run; pass false for hot paths on schema-stable tables. */
   def readTable(spark: SparkSession, warehouseDir: String, physicalName: String,
                 keepPartitionCols: Boolean = false,
                 mergeSchema: Boolean = true): DataFrame = {
@@ -215,7 +226,14 @@ object Ingest {
     * ever replays the last uncommitted batch, so merging ids strictly
     * below the in-flight one can never race a replay overwrite).
     * Preserves the `_dt` partitioning and the union schema across batch
-    * dirs (mergeSchema, the CDC warehouse contract).
+    * dirs (the CDC warehouse contract). Every file of a `batch=` dir
+    * comes from one Spark write, so the listing that finds the dirs also
+    * gives the schema: one footer per data dir, read on the driver and
+    * merged in batch-id order the way a `mergeSchema` scan merges them
+    * (a type conflict fails the same way), with no Spark job of its own.
+    * The merged copy is written as one file per
+    * `spark.sql.files.maxPartitionBytes` of listed input (per `_dt`
+    * value), not one per input split.
     *
     * Crash-safe: the write lands in `.__compact_tmp`, then a manifest of
     * the merged source dirs is committed inside it (the commit point),
@@ -242,38 +260,48 @@ object Ingest {
     if (!fs.exists(root)) return
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/.__compact_tmp")
     recoverCompaction(fs, dir, tmp)
-    val mergeDirs = fs.listStatus(root).map(_.getPath).filter { p =>
-      p.getName.startsWith("batch=") &&
-        scala.util.Try(p.getName.stripPrefix("batch=").toLong)
-          .toOption.exists(_ <= upToBatch)
-    }
-    // a batch dir can hold ZERO data files (e.g. a dead-letter batch with
-    // no dead records: the overwrite still creates the dir + _SUCCESS) —
-    // schema-less dirs can't be read, but they still fold away: excluded
-    // from the merge read, included in the manifest's delete list
-    def hasData(p: org.apache.hadoop.fs.Path): Boolean = {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val n = it.next().getPath.getName
-        found = !n.startsWith("_") && !n.startsWith(".")
+    // in batch-id order: the merged schema's column order is the order
+    // in which the dirs introduced the columns
+    val mergeDirs = fs.listStatus(root).toSeq.flatMap { s =>
+      val p = s.getPath
+      if (!p.getName.startsWith("batch=")) None
+      else scala.util.Try(p.getName.stripPrefix("batch=").toLong).toOption
+        .filter(_ <= upToBatch).map(_ -> p)
+    }.sortBy(_._1).map(_._2)
+    // the files a scan of the dir reads (Spark's own rule: skip `.x` and
+    // `_x` names, but not `_dt=` partition dirs). A batch dir can hold
+    // ZERO data files (e.g. a dead-letter batch with no dead records: the
+    // overwrite still creates the dir + _SUCCESS) — schema-less dirs can't
+    // be read, but they still fold away: excluded from the merge read,
+    // included in the manifest's delete list
+    def dataFiles(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { s =>
+        val n = s.getPath.getName
+        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("="))) Nil
+        else if (s.isDirectory) dataFiles(s.getPath)
+        else Seq(s)
       }
-      found
-    }
-    val (dataDirs, emptyDirs) = mergeDirs.partition(hasData)
+    val dataDirs = mergeDirs.map(p => p -> dataFiles(p)).filter(_._2.nonEmpty)
     if (dataDirs.isEmpty) {
       // nothing readable to merge: just drop the empty husks (idempotent,
       // no manifest needed — deleting an empty dir can lose nothing)
-      emptyDirs.foreach(p => fs.delete(p, true))
+      mergeDirs.foreach(p => fs.delete(p, true))
       return
     }
     if (mergeDirs.length <= 1 && transform.isEmpty)
       return // already compact (and no rewrite requested)
-    val merged = spark.read.option("basePath", dir).option("mergeSchema", true)
-      .parquet(dataDirs.map(_.toString).toIndexedSeq: _*)
+    val merged = spark.read
+      .schema(mergedSchema(spark, dataDirs.map { case (_, files) => files.head }))
+      .option("basePath", dir)
+      .parquet(dataDirs.map { case (p, _) => p.toString }: _*)
+    // one output file per maxPartitionBytes of input (per `_dt` value),
+    // not one per input split
+    val inputBytes = dataDirs.flatMap { case (_, files) => files.map(_.getLen) }.sum
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val nFiles = math.max(1L, (inputBytes + maxBytes - 1) / maxBytes)
     val hasDt = merged.columns.contains(Envelope.DtCol)
     val out = transform.foldLeft(merged.drop("batch"))((df, t) => t(df))
-    val writer = out.write.mode("overwrite")
+    val writer = out.coalesce(nFiles.toInt).write.mode("overwrite")
     (if (hasDt) writer.partitionBy(Envelope.DtCol) else writer).parquet(tmp.toString)
     // commit point: manifest names the dirs the tmp copy supersedes;
     // written atomically so a torn write can never look committed
@@ -281,6 +309,28 @@ object Ingest {
       new org.apache.hadoop.fs.Path(tmp, CompactManifest),
       mergeDirs.map(_.getName).mkString("\n"))
     finishCompaction(fs, dir, tmp)
+  }
+
+  /** The union schema of parquet files that each stand for one Spark
+    * write (a `batch=` dir), merged in the given order the way a
+    * `mergeSchema` scan merges every file's: the footers are read on the
+    * driver, with no Spark job, and a type conflict fails the same way. */
+  private def mergedSchema(spark: SparkSession,
+                           files: Seq[org.apache.hadoop.fs.FileStatus]): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(conf)
+    val schemas = files.map { f =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf),
+        SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+    }
+    schemas.reduce(org.apache.spark.sql.graftbridge.Bridge.merge(_, _, conf.caseSensitiveAnalysis))
   }
 
   /** Publish step, idempotent: delete every source dir named in the tmp

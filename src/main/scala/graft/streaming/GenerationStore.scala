@@ -49,12 +49,25 @@ object GenerationStore {
   private def readWatermarks(spark: SparkSession, storeDir: String): (Long, Long) = {
     val p = watermarkPath(storeDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) (-1L, -1L)
-    else {
-      val in = fs.open(p)
-      val lines = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\n")
-      finally in.close()
+    // on a local (checksummed) file system the commit's overwrite is not
+    // one step: the old file is deleted, then the data file and its
+    // `.crc` are renamed in one at a time. A read inside that window
+    // finds no file, or new data against the old checksum: read again.
+    def read(attempt: Int): Option[Array[String]] =
+      try {
+        if (!fs.exists(p)) None
+        else {
+          val in = fs.open(p)
+          try Some(new String(in.readAllBytes(),
+            java.nio.charset.StandardCharsets.UTF_8).trim.split("\n"))
+          finally in.close()
+        }
+      } catch {
+        case _: org.apache.hadoop.fs.ChecksumException | _: java.io.FileNotFoundException
+            if attempt < 100 =>
+          Thread.sleep(5); read(attempt + 1)
+      }
+    read(0).fold((-1L, -1L)) { lines =>
       (lines(0).trim.toLong,
         if (lines.length > 1) lines(1).trim.toLong else -1L)
     }

@@ -22,4 +22,11 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The union of two schemas as a `mergeSchema` scan takes it
+    * (`StructType.merge` is `private[sql]`): `a`'s fields first, then
+    * `b`'s new ones; a type conflict throws. */
+  def merge(a: org.apache.spark.sql.types.StructType, b: org.apache.spark.sql.types.StructType,
+            caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
 }

@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkJobs, SparkTestBase}
 import graft.streaming.{CdcStream, CdcStreamConfig}
 
 /** The touched buckets a CDC stream's folds take from the routing write
@@ -99,6 +99,40 @@ class RoutedTouchedSpec extends SparkTestBase {
         touched = bucketings.filter(_.table == "acct"))
       assert(acctSets.values.toSet.size == 2, acctSets.toString)
     }
+  }
+
+  /** The three triggers as three text files: one source split each. */
+  private def inputDir(): String = {
+    val in = tmpDir("routed-in")
+    triggers.zipWithIndex.foreach { case (lines, i) =>
+      Fixtures.writeLines(in, f"log-$i%03d.jsonl", lines, gzip = false)
+    }
+    in
+  }
+
+  for (byDate <- Seq(false, true)) {
+    test(s"routing to N tables runs N + 2 Spark jobs (partitionByDate = $byDate)") {
+      // one job materializes and counts the cached batch, then one write
+      // per registry table and one for the dead letter; the observed
+      // touched sets add none
+      val parsed = Ingest.parse(spark, inputDir())
+      val (observed, jobs) = SparkJobs.count(spark) {
+        Ingest.appendBatch(parsed, reg, tmpDir("routed-jobs"), 0L,
+          partitionByDate = byDate, touched = bucketings)
+      }
+      assert(observed.keySet == bucketings.toSet)
+      assert(jobs == reg.size + 2, s"appendBatch ran $jobs Spark jobs for ${reg.size} tables")
+    }
+  }
+
+  test("one job materializes the cached batch and counts its rows") {
+    val cached = Ingest.parse(spark, inputDir()).cache()
+    try {
+      val ((rows, parts), jobs) = SparkJobs.count(spark)(Ingest.materializeCounting(cached))
+      // the count is the job's result: final when the job returns
+      assert(jobs == 1 && rows == triggers.map(_.size).sum && parts == triggers.size,
+        s"$jobs jobs, $rows rows, $parts partitions")
+    } finally cached.unpersist()
   }
 
   test("an empty batch observes an empty set for every bucketing") {

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
-import graft.cdc.{Fixtures, Ingest, SnapshotMaintainer, Versioned}
+import graft.{SparkJobs, SparkTestBase}
+import graft.cdc.{Envelope, Fixtures, Ingest, Registry, SnapshotMaintainer, Versioned}
 
 /** In-stream compaction (CdcStreamConfig.compactEveryNBatches): a long
   * stream must keep its directory count bounded WITHOUT changing anything
@@ -158,5 +158,84 @@ class CdcCompactionSpec extends SparkTestBase {
     val dirsC = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).toSeq
     assert(dirsC == Seq("batch=-1"))
+  }
+
+  /** `products` over four batches across two days, with a registry
+    * refresh after the second: `color` is added, `weight_g` removed. */
+  private def evolvingTable(byDate: Boolean): (String, String) = {
+    import spark.implicits._
+    def reg(cols: String*) = Registry.fromJson(
+      s"""{"products": {"table_name": "wh.products", "schema": {"fields": [
+         |${(cols ++ Seq("action", "update_date")).map(c =>
+               s"""{"name": "$c", "type": "${if (c == "weight_g") "FLOAT" else "STRING"}"}""")
+             .mkString(", ")}]}}}""".stripMargin)
+    val before = reg("product_id", "category", "weight_g")
+    val after = Registry.refreshCompatible(before,
+      reg("product_id", "category", "color"))._1
+    def env(day: Int, ct: String, payload: String) =
+      Fixtures.envelope("products", s"2026-01-0${day}T10:00:00.000Z", ct, payload)
+    val batches = Seq(
+      before -> Seq(env(1, "insert", """{"product_id":"p1","category":"a","weight_g":1.5}"""),
+        env(1, "insert", """{"product_id":"p2","category":"b","weight_g":2.5}""")),
+      before -> Seq(env(1, "update", """{"product_id":"p1","category":"c","weight_g":3.5}""")),
+      after -> Seq(env(2, "update", """{"product_id":"p2","category":"d","color":"red"}"""),
+        env(2, "insert", """{"product_id":"p3","color":"blue","weight_g":9.0}""")),
+      after -> Seq(env(2, "delete", """{"product_id":"p1"}""")))
+    val wh = tmpDir("cc-evolve")
+    batches.zipWithIndex.foreach { case ((r, lines), b) =>
+      Ingest.appendBatch(Envelope.parse(lines.toDF("value")), r, wh, b.toLong,
+        partitionByDate = byDate)
+    }
+    (wh, "wh.products")
+  }
+
+  for (byDate <- Seq(false, true)) {
+    test(s"compaction across a registry refresh keeps the union schema (partitionByDate = $byDate)") {
+      val (wh, phys) = evolvingTable(byDate)
+      def read() = Ingest.readTable(spark, wh, phys, keepPartitionCols = true).drop("batch")
+      val before = read()
+      val cols = before.columns.sorted.toSeq
+      assert(cols.contains("color") && cols.contains("weight_g") &&
+        cols.contains(Envelope.DtCol) == byDate, cols.toString)
+      val want = before.select(cols.map(col): _*).cache()
+      assert(want.count() == 6)
+      Ingest.compactBatches(spark, wh, phys, Long.MaxValue)
+      val after = read()
+      assert(after.columns.sorted.toSeq == cols)
+      val got = after.select(cols.map(col): _*)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+      // the removed column's old values survive, the added one's new ones
+      assert(got.filter(col("weight_g").isNotNull).count() == 3)
+      assert(got.filter(col("color").isNotNull).collect().map(_.getAs[String]("color"))
+        .sorted.toSeq == Seq("blue", "red"))
+      want.unpersist()
+    }
+
+    test(s"compaction writes one file per table (per _dt) in one Spark job (partitionByDate = $byDate)") {
+      val (wh, phys) = evolvingTable(byDate)
+      val (_, jobs) = SparkJobs.count(spark)(Ingest.compactBatches(spark, wh, phys, Long.MaxValue))
+      def parquetFiles(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) parquetFiles(f) else Seq(f).filter(_.getName.endsWith(".parquet"))
+      }
+      val compacted = new java.io.File(s"$wh/$phys/batch=${Ingest.CompactedBatchId}")
+      val perDir = parquetFiles(compacted).groupBy(_.getParentFile.getName).map {
+        case (d, fs) => d -> fs.size
+      }
+      val dirs = if (byDate) Set(s"${Envelope.DtCol}=2026-01-01", s"${Envelope.DtCol}=2026-01-02")
+        else Set(compacted.getName)
+      assert(perDir == dirs.map(_ -> 1).toMap, perDir.toString)
+      assert(jobs == 1, s"compaction ran $jobs Spark jobs")
+    }
+  }
+
+  test("compaction across a type conflict fails loudly and keeps every source") {
+    import spark.implicits._
+    val wh = tmpDir("cc-conflict")
+    Seq((1L, "a")).toDF("id", "x").write.parquet(s"$wh/t/batch=0")
+    Seq((2L, 7L)).toDF("id", "x").write.parquet(s"$wh/t/batch=1")
+    val e = intercept[org.apache.spark.SparkException](
+      Ingest.compactBatches(spark, wh, "t", Long.MaxValue))
+    assert(e.getMessage.toUpperCase.contains("MERGE"), e.getMessage)
+    assert(new java.io.File(s"$wh/t").list().toSet == Set("batch=0", "batch=1"))
   }
 }

@@ -801,48 +801,24 @@ class CdcStreamSpec extends SparkTestBase {
   test("a steady fold trigger runs within its Spark-job budget") {
     // the same stores as above. The routing write observes each store's
     // touched buckets, and every fold shuffles its store once, so a
-    // trigger runs the appends, one clustering shuffle and one staged
-    // write per store, the aggregate's group-bucket job and the stream's
-    // own bookkeeping. A fold that finds its touched buckets with a job
-    // of its own, or a second shuffle per store, lands above the budget.
+    // trigger runs one job that materializes and counts the batch, the
+    // appends, one clustering shuffle and one staged write per store, the
+    // aggregate's group-bucket job and the stream's own bookkeeping. A
+    // fold that finds its touched buckets with a job of its own, a second
+    // shuffle per store, or a batch count that runs an aggregate lands
+    // above the budget.
     val (in, wh, ck) = freshDirs()
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = s"fold-jobs-marker-${System.nanoTime()}"
-    @volatile var markerSeen = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerSeen = true
-        else jobs.incrementAndGet(): Unit
-    }
-    // the listener bus is asynchronous: a marker job run after the
-    // trigger shows up after every job of the trigger
-    def settle(): Unit = {
-      markerSeen = false
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener bus did not deliver the marker job")
-    }
     val q = CdcStream.start(spark, foldHeavy(in, wh, ck))
-    sc.addSparkListener(listener)
     val perTrigger = try {
       (0 until 5).map { k =>
-        settle()
-        jobs.set(0)
-        Fixtures.writeLines(in, f"log-$k%03d.jsonl.gz", foldHeavyTrigger(k), gzip = true)
-        q.processAllAvailable()
-        settle()
-        jobs.get()
+        graft.SparkJobs.count(spark) {
+          Fixtures.writeLines(in, f"log-$k%03d.jsonl.gz", foldHeavyTrigger(k), gzip = true)
+          q.processAllAvailable()
+        }._2
       }
-    } finally {
-      q.stop()
-      sc.removeSparkListener(listener)
-    }
+    } finally q.stop()
     info(s"Spark jobs per trigger: ${perTrigger.mkString(", ")}")
-    assert(perTrigger.drop(2).forall(_ <= 21),
+    assert(perTrigger.drop(2).forall(_ <= 19),
       s"Spark jobs per trigger: ${perTrigger.mkString(", ")}")
   }
 }
